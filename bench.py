@@ -10,7 +10,7 @@ operators being measured (a bare ``count()`` would let EliminateSorts +
 ColumnPruning reduce a window query to a metadata-only scan).
 
 Run-time ``WindowExec: No Partition Defined`` warnings in the log are the
-22 allowlisted bounded windows of tests/test_plan_quality.py (each runs over
+allowlisted bounded windows of tests/test_plan_quality.py (each runs over
 a tiny-by-construction frame — chunk counts, day grids, value lattices —
 never over data-sized input); they are expected, not scale-killers.
 """

@@ -751,31 +751,12 @@ class MdioDataset:
     ) -> DataFrame | None:
         """Fused single-scan alignment when every requested variable shares
         one chunk grid; None → caller takes the join route."""
-        from mdio_cpp_spark.sources.reader import scan_arrays
+        from mdio_cpp_spark.sources.reader import fused_outputs, scan_arrays
 
-        metas = []
-        for key in value_cols:
-            vname = key.split(".", 1)[0] if "." in key else key
-            if vname not in self._metas:
-                return None
-            meta = self._metas[vname]
-            if meta.np_dtype.kind == "c":
-                return None  # complex emits two columns; join route handles it
-            if "." in key:
-                field = key.split(".", 1)[1]
-                if not meta.is_struct or field not in (meta.np_dtype.names or ()):
-                    return None
-            elif meta.is_struct:
-                return None  # whole-struct selection keeps the join route
-            metas.append(meta)
-        first = metas[0]
-        for m in metas[1:]:
-            if (
-                m.shape != first.shape
-                or m.chunks != first.chunks
-                or tuple(m.dims) != tuple(first.dims)
-            ):
-                return None
+        try:
+            first = fused_outputs(self._metas.__getitem__, value_cols.items())[0][0]
+        except (KeyError, ValueError):
+            return None
         combos = self.var(first.name)._range_combos()
         if not combos:
             combos = [{first.dims[0]: (0, 0)}]

@@ -1,20 +1,22 @@
 """`spark.read.format("mdio")` — a PySpark Python Data Source for Zarr/MDIO.
 
 The most idiomatic packaging of the scan path (SURVEY §2.1 IO1/IO4): the
-reader participates in Catalyst planning directly —
+reader participates in Catalyst planning directly, and plans and decodes
+through the same chunk-scan core as ``scan_array`` (sources/reader.py) —
 
   * ``schema()`` — driver-side metadata read → long-form schema
     ``(dims…, value)`` (one consolidated-metadata read, zarr_v2.h:467-482).
   * ``pushFilters()`` — Catalyst hands the reader its predicates; filters on
-    DIMENSION columns (=, <, <=, >, >=) are CONSUMED and become half-open
-    index ranges that drive chunk pruning — the custom piece Catalyst can't
-    do itself (SURVEY §4). Filters on the value column are returned
-    unconsumed (Spark re-applies them; numpy and Spark disagree on NaN
-    comparison semantics, so consuming them would be subtly wrong —
-    ``scan_array(value_filter=…)`` exists for callers who accept numpy
-    semantics).
-  * ``partitions()`` — one InputPartition per pruned chunk; Spark schedules
-    them like any other source's splits.
+    DIMENSION columns (=, <, <=, >, >=, IN) are CONSUMED and become the
+    box and member lists that drive chunk pruning — the custom piece
+    Catalyst can't do itself (SURVEY §4). Value-column comparisons, IN and
+    IS [NOT] NULL are consumed too: the decoder masks them exactly (NaN
+    cells surface as NULL, which no comparison satisfies) and zone maps
+    skip incompatible chunks.
+  * ``partitions()`` — the core's pruned grid split by its task-count rule
+    into ranges of linear chunk ids (explicit survivor ids after
+    driver-tier zone pruning); Spark schedules them like any other source's
+    splits.
   * ``read()`` — executors decode chunks to Arrow RecordBatches (zero
     Python-object rows on the hot path); absent chunks synthesize fill.
 
@@ -28,6 +30,7 @@ Usage:
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 from typing import Any, Iterator
 
@@ -57,10 +60,18 @@ from pyspark.sql.types import StructType
 
 from mdio_cpp_spark.sources import zonemap as _zonemap
 from mdio_cpp_spark.sources.reader import (
-    _VALUE_OPS,
-    _decode_chunk_to_pdf,
+    CHUNKS_PER_TASK,
     _dim_names,
+    _picks,
+    chunk_coords,
+    cluster_parallelism,
+    decode_frames,
+    frame_schema,
+    fused_outputs,
+    grid_size,
+    plan_grid,
     scan_schema,
+    task_count,
 )
 from mdio_cpp_spark.sources.zarr_store import CHUNK_STATS_ATTR, ZarrStore, _clamped_box, zone_of
 
@@ -88,26 +99,11 @@ class MdioChunkPartition(InputPartition):
         self.dim_chunks = dim_chunks
 
     def coords_iter(self):
-        linears = self.ids if self.ids is not None else range(self.start, self.end)
-        if self.dim_chunks is not None:
-            lens = [len(c) for c in self.dim_chunks]
-            for linear in linears:
-                rem, idx = linear, []
-                for length in reversed(lens):
-                    idx.append(rem % length)
-                    rem //= length
-                yield tuple(
-                    self.dim_chunks[d][c] for d, c in enumerate(reversed(idx))
-                )
-            return
-        for linear in linears:
-            rem, coords = linear, []
-            for length in reversed(self.grid_lens):
-                coords.append(rem % length)
-                rem //= length
-            yield tuple(
-                self.grid_starts[d] + c for d, c in enumerate(reversed(coords))
-            )
+        per_dim = self.dim_chunks or [
+            range(s, s + n) for s, n in zip(self.grid_starts, self.grid_lens)
+        ]
+        for linear in self.ids if self.ids is not None else range(self.start, self.end):
+            yield chunk_coords(linear, per_dim)
 
 
 class MdioDataSource(DataSource):
@@ -118,6 +114,9 @@ class MdioDataSource(DataSource):
     variable's chunk at the same coords; no join, no shuffle). Output
     columns are the field name for 'var.field' entries, else the variable
     name; all listed variables must share dims/shape/chunks."""
+
+    # the registering session's defaultParallelism (see ``register``)
+    parallelism: int | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -134,28 +133,27 @@ class MdioDataSource(DataSource):
         return path
 
     def _aligned_specs(self):
-        """[(var, field|None, out_col)] from the ``variables`` option, or
-        None when the option is absent."""
+        """[(entry, out_col)] from the ``variables`` option, or None when
+        the option is absent."""
         raw = self.options.get("variables")
         if not raw:
             return None
-        specs = []
-        for entry in raw.split(","):
-            entry = entry.strip()
-            if "." in entry:
-                vname, field = entry.split(".", 1)
-                specs.append((vname, field, field))
-            else:
-                specs.append((entry, None, entry))
-        return specs
+        entries = [e.strip() for e in raw.split(",")]
+        return [(e, e.partition(".")[2] or e) for e in entries]
+
+    def _fused(self, store):
+        """Outputs of the fused ``variables`` scan; None for one variable."""
+        specs = self._aligned_specs()
+        if not specs or self.options.get("variable"):
+            return None
+        return fused_outputs(store.array_meta, specs)
 
     def _meta(self):
         path = self._parse_path()
         var = self.options.get("variable")
-        specs = self._aligned_specs()
-        if path and specs and not var:
+        if path and not var and self._aligned_specs():
             store = ZarrStore.open(path)
-            return store, store.array_meta(specs[0][0])
+            return store, self._fused(store)[0][0]
         if not path or not var:
             raise ValueError(
                 "format('mdio') requires .option('path', …) and "
@@ -170,32 +168,9 @@ class MdioDataSource(DataSource):
 
     def schema(self) -> StructType:
         store, meta = self._meta()
-        specs = self._aligned_specs()
-        if specs and not self.options.get("variable"):
-            from pyspark.sql.types import LongType, StructField
-
-            from mdio_cpp_spark.sources.reader import _scalar_spark_type
-
-            out = [StructField(d, LongType(), False) for d in _dim_names(meta)]
-            for vname, field, out_col in specs:
-                m = store.array_meta(vname)
-                if m.np_dtype.kind == "c":
-                    raise ValueError(f"complex variable {vname!r} is not fusable")
-                if field is None and m.is_struct:
-                    raise ValueError(
-                        f"struct variable {vname!r} needs '{vname}.<field>'"
-                    )
-                if (m.shape, m.chunks, tuple(m.dims)) != (
-                    meta.shape, meta.chunks, tuple(meta.dims)
-                ):
-                    raise ValueError(
-                        f"variables must share one grid: {vname!r} has "
-                        f"{m.shape}/{m.chunks}/{m.dims}, expected "
-                        f"{meta.shape}/{meta.chunks}/{meta.dims}"
-                    )
-                dt = m.np_dtype.fields[field][0] if field else m.np_dtype
-                out.append(StructField(out_col, _scalar_spark_type(dt), True))
-            return StructType(out)
+        outputs = self._fused(store)
+        if outputs:
+            return frame_schema(_dim_names(meta), outputs)
         fields = self.options.get("fields")
         return scan_schema(
             meta,
@@ -205,10 +180,10 @@ class MdioDataSource(DataSource):
 
     def reader(self, schema: StructType) -> "MdioReader":
         store, meta = self._meta()
-        specs = self._aligned_specs()
-        if specs and not self.options.get("variable"):
-            return MdioAlignedReader(store, specs, self.options)
-        return MdioReader(store, meta, self.options)
+        outputs = self._fused(store)
+        if outputs:
+            return MdioAlignedReader(store, outputs, self.options, self.parallelism)
+        return MdioReader(store, meta, self.options, self.parallelism)
 
     def writer(self, schema: StructType, overwrite: bool) -> "MdioArrowWriter":
         if self._aligned_specs() and not self.options.get("variable"):
@@ -243,15 +218,14 @@ class MdioDataSource(DataSource):
 
 
 class MdioReader(DataSourceReader):
-    def __init__(self, store: ZarrStore, meta, options):
+    def __init__(self, store: ZarrStore, meta, options, parallelism: int | None = None):
         self.root = store.root
         self.version = store.version
         self.meta = meta
         self.value_col = options.get("value_col", "value")
         fields = options.get("fields")
-        self.fields = fields.split(",") if fields else (
-            list(meta.np_dtype.names) if meta.is_struct else None
-        )
+        self.outputs = [(meta, _picks(meta, fields.split(",") if fields else None, self.value_col))]
+        self.parallelism = parallelism or cluster_parallelism()
         self.dim_names = _dim_names(meta)
         # accumulated half-open bounds per dim, refined by pushFilters
         self._bounds: dict[str, list[int]] = {
@@ -381,152 +355,42 @@ class MdioReader(DataSourceReader):
 
     # ------------------------------------------------------------- planning
 
-    def partitions(self, chunks_per_task: int = 4, max_tasks: int | None = None) -> list[MdioChunkPartition]:
-        # scale the split cap with the cluster (same rule as reader.py's
-        # scan cap): 64 tasks per core keeps a petascale array's task count
-        # bounded WITHOUT capping a 1000-executor cluster at a constant —
-        # planning runs on the driver, so the active session is available
-        from pyspark.sql import SparkSession
-
-        active = SparkSession.getActiveSession()
-        par = max(1, active.sparkContext.defaultParallelism if active else 64)
-        if max_tasks is None:
-            max_tasks = 64 * par
-        box = self._box()
-        if any(hi <= lo for lo, hi in box):
+    def partitions(self) -> list[MdioChunkPartition]:
+        members = {self.dim_names.index(d): m for d, m in self._dim_in.items()}
+        per_dim = plan_grid(self.meta, self._box(), members)
+        ids = _zonemap.driver_survivors(per_dim, self._zone_keeper())
+        n = grid_size(per_dim) if ids is None else len(ids)
+        if n == 0:
             return []
-        per_dim: list = []
-        irregular = False
-        for d in range(self.meta.ndim):
-            name = self.dim_names[d]
-            lo, hi = box[d]
-            if name in self._dim_in:
-                # scattered-index selection: only chunks containing a member
-                # (bounded by the In list's length, never the grid's)
-                members = [v for v in self._dim_in[name] if lo <= v < hi]
-                if not members:
-                    return []
-                per_dim.append(tuple(sorted({v // self.meta.chunks[d] for v in members})))
-                irregular = True
-            else:
-                per_dim.append(
-                    range(lo // self.meta.chunks[d], (hi - 1) // self.meta.chunks[d] + 1)
-                )
-        grid_starts = tuple(r.start if isinstance(r, range) else 0 for r in per_dim)
-        grid_lens = tuple(len(r) for r in per_dim)
-        dim_chunks = tuple(tuple(r) for r in per_dim) if irregular else None
-        n_chunks = 1
-        for length in grid_lens:
-            n_chunks *= length
-        # driver-tier zone pruning: with pushed value filters and an
-        # enumerable grid, survivors ship as an explicit id list so skipped
-        # chunks never even become work (reader.py's same two-tier rule;
-        # past the enumeration cap the executor-side skip in read() does
-        # the identical check without a driver loop)
-        zk = self._zone_keeper()
-        if zk is not None and n_chunks <= _zonemap.MAX_DRIVER_ENUM:
-            import itertools
-
-            survivors = tuple(
-                i for i, coords in enumerate(itertools.product(*per_dim))
-                if zk(coords)
-            )
-            if not survivors:
-                return []
-            n_parts = max(1, -(-len(survivors) // chunks_per_task))
-            n_parts = min(max(n_parts, min(len(survivors), par)), max_tasks)
-            per_part = -(-len(survivors) // n_parts)
-            return [
-                MdioChunkPartition(
-                    0, 0, grid_starts, grid_lens,
-                    ids=survivors[s : s + per_part],
-                    dim_chunks=dim_chunks,
-                )
-                for s in range(0, len(survivors), per_part)
-            ]
-        # never fewer tasks than cores while chunks remain (small scans
-        # should still use the whole cluster)
-        n_parts = max(1, -(-n_chunks // chunks_per_task))
-        n_parts = min(max(n_parts, min(n_chunks, par)), max_tasks)
-        per_part = -(-n_chunks // n_parts)
-        return [
-            MdioChunkPartition(s, min(s + per_part, n_chunks), grid_starts, grid_lens,
-                               dim_chunks=dim_chunks)
-            for s in range(0, n_chunks, per_part)
-        ]
+        starts = tuple(r.start if isinstance(r, range) else 0 for r in per_dim)
+        lens = tuple(len(r) for r in per_dim)
+        dim_chunks = tuple(tuple(r) for r in per_dim) if members else None
+        k = task_count(n, CHUNKS_PER_TASK, self.parallelism)
+        spans = [(i * n // k, (i + 1) * n // k) for i in range(k)]
+        if ids is not None:
+            return [MdioChunkPartition(0, 0, starts, lens, ids=ids[lo:hi], dim_chunks=dim_chunks)
+                    for lo, hi in spans]
+        return [MdioChunkPartition(lo, hi, starts, lens, dim_chunks=dim_chunks)
+                for lo, hi in spans]
 
     def _zone_keeper(self):
         """callable(chunk_coords) -> keep?, from the pushed value filters and
-        the array's zone stats (attr manifest or sidecar); None when there is
-        nothing to prune with. Built lazily on whichever side calls it — the
-        driver for enumeration, each executor for the streamed skip."""
-        if not self._value_filters:
-            return None
-        zone_src = _zonemap.open_zones(self.meta, self.root)
-        if zone_src is None:
-            return None
-        try:
-            fill = self.meta.fill_scalar()
-        except Exception:
-            fill = None
-        float_kind = self.meta.np_dtype.kind == "f"
-        vfs = list(self._value_filters)
-
-        def keep(coords: tuple[int, ...]) -> bool:
-            for op, lit in vfs:
-                if op == "in":
-                    # a chunk survives if ANY member could live in its zone;
-                    # big lists skip the per-member walk (keep — sound)
-                    if len(lit) <= 64 and not any(
-                        _zonemap.zone_keep(zone_src, coords, "==", v, fill, float_kind)
-                        for v in lit
-                    ):
-                        return False
-                elif op in ("isnull", "notnull"):
-                    continue  # zones track [min,max], not NaN presence
-                elif not _zonemap.zone_keep(zone_src, coords, op, lit, fill, float_kind):
-                    return False
-            return True
-
-        return keep
+        the array's zone stats; None when there is nothing to prune with."""
+        return _zonemap.zone_keeper(self.meta, self.root, self._value_filters)
 
     # -------------------------------------------------------------- execute
 
     def read(self, partition: MdioChunkPartition) -> Iterator[pa.RecordBatch]:
         if partition is None:  # empty selection: partitions() returned []
             return
-        store = ZarrStore(self.root, self.version)
-        box = self._box()
-        steps = tuple(1 for _ in self.dim_names)
-        zk = self._zone_keeper()
-        for coords in partition.coords_iter():
-            if zk is not None and not zk(coords):
-                continue  # zone-incompatible: no GET, no decompress, no decode
-            pdf = _decode_chunk_to_pdf(
-                store, self.meta, coords, box, steps,
-                self.dim_names, self.fields, self.value_col,
-            )
-            for dim, members in self._dim_in.items():
-                if len(pdf) == 0:
-                    break
-                pdf = pdf[np.isin(pdf[dim].to_numpy(), members)]
-            for op, lit in self._value_filters:
-                if len(pdf) == 0:
-                    break
-                # numpy semantics ARE the consumed-predicate semantics: NaN
-                # cells surface as SQL NULL at the Arrow boundary (engine
-                # convention), and NULL satisfies no comparison — exactly
-                # numpy's False for every NaN comparison (and isin's)
-                v = pdf[self.value_col].to_numpy()
-                if op == "in":
-                    mask = np.isin(v, lit)
-                elif op == "notnull":
-                    mask = ~np.isnan(v) if v.dtype.kind == "f" else np.ones(len(v), bool)
-                elif op == "isnull":
-                    mask = np.isnan(v) if v.dtype.kind == "f" else np.zeros(len(v), bool)
-                else:
-                    mask = _VALUE_OPS[op](v, lit)
-                pdf = pdf[mask]
+        # survivor ids were zone-checked on the driver; a range partition
+        # skips zone-incompatible chunks here, before any byte read
+        keep = self._zone_keeper() if partition.ids is None else None
+        for pdf in decode_frames(
+            ZarrStore(self.root, self.version), self.outputs, self._box(),
+            (1,) * self.meta.ndim, partition.coords_iter(), keep,
+            self.value_col, self._value_filters, self._dim_in,
+        ):
             yield pa.RecordBatch.from_pandas(pdf, preserve_index=False)
 
 
@@ -539,48 +403,25 @@ class MdioAlignedReader(MdioReader):
     unchanged; value-column predicates stay with Spark (the columns are
     per-variable, not the single pushable ``value`` column)."""
 
-    def __init__(self, store: ZarrStore, specs, options):
-        super().__init__(store, store.array_meta(specs[0][0]), options)
-        self.specs = list(specs)
+    def __init__(self, store: ZarrStore, outputs, options, parallelism: int | None = None):
+        super().__init__(store, outputs[0][0], options, parallelism)
+        self.outputs = outputs
         # the inherited pushFilters consumes predicates on `self.value_col`,
-        # but THIS reader's read() has no single value column to apply them
-        # to — a variable literally named "value" would silently lose its
+        # but THIS reader has no single value column to apply them to — a
+        # variable literally named "value" would silently lose its
         # predicate. Disable value consumption entirely (None never equals
         # a column name); dim bounds/In consumption still applies.
         self.value_col = None
 
-    def read(self, partition: MdioChunkPartition) -> Iterator[pa.RecordBatch]:
-        if partition is None:
-            return
-        store = ZarrStore(self.root, self.version)
-        box = self._box()
-        steps = tuple(1 for _ in self.dim_names)
-        metas = {v: store.array_meta(v) for v, _, _ in self.specs}
-        for coords in partition.coords_iter():
-            out = None
-            for vname, field, out_col in self.specs:
-                pdf = _decode_chunk_to_pdf(
-                    store, metas[vname], coords, box, steps, self.dim_names,
-                    [field] if field else None, out_col,
-                )
-                if field and field != out_col:
-                    pdf = pdf.rename(columns={field: out_col})
-                if out is None:
-                    out = pdf
-                else:
-                    # same coords + same grid ⇒ identical row order by
-                    # construction: a column move, not a join
-                    out[out_col] = pdf[out_col].to_numpy()
-            for dim, members in self._dim_in.items():
-                if len(out) == 0:
-                    break
-                out = out[np.isin(out[dim].to_numpy(), members)]
-            yield pa.RecordBatch.from_pandas(out, preserve_index=False)
-
 
 def register(spark) -> None:
-    """Register the mdio format on a session (idempotent)."""
-    spark.dataSource.register(MdioDataSource)
+    """Register the mdio format on a session (idempotent). Spark plans a
+    Python data source's partitions in a separate worker process with no
+    active session, so the registered class carries this session's
+    defaultParallelism for the task-count rule."""
+    spark.dataSource.register(
+        type("MdioDataSource", (MdioDataSource,), {"parallelism": cluster_parallelism(spark)})
+    )
 
 
 # ---------------------------------------------------------------- write path
@@ -833,9 +674,7 @@ class MdioStreamReader(DataSourceStreamReader):
             )
         self.axis = self.dims.index(append_dim)
         fields = options.get("fields")
-        self.fields = fields.split(",") if fields else (
-            list(meta.np_dtype.names) if meta.is_struct else None
-        )
+        self.fields = fields.split(",") if fields else None
         self.dim = append_dim
         self.chunk = int(meta.chunks[self.axis])
         self.start_latest = options.get("starting_offset", "earliest") == "latest"
@@ -892,8 +731,6 @@ class MdioStreamReader(DataSourceStreamReader):
     def read(self, partition: MdioTailPartition) -> Iterator[pa.RecordBatch]:
         if partition.hi <= partition.lo:
             return
-        import itertools
-
         store = ZarrStore(self.root, self.version)
         meta = store.array_meta(self.var)
         # box: the new append-dim slab crossed with every other dim's full
@@ -903,18 +740,11 @@ class MdioStreamReader(DataSourceStreamReader):
             else (0, int(meta.shape[d]))
             for d in range(meta.ndim)
         )
-        ranges = [
-            range(b[0] // meta.chunks[d], (b[1] - 1) // meta.chunks[d] + 1)
-            for d, b in enumerate(box)
-        ]
-        steps = (1,) * meta.ndim
-        for coords in itertools.product(*ranges):
-            pdf = _decode_chunk_to_pdf(
-                store, meta, coords, box, steps, self.dims, self.fields,
-                self.value_col,
-            )
-            if len(pdf):
-                yield pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+        for pdf in decode_frames(
+            store, [(meta, _picks(meta, self.fields, self.value_col))], box,
+            (1,) * meta.ndim, itertools.product(*plan_grid(meta, box)),
+        ):
+            yield pa.RecordBatch.from_pandas(pdf, preserve_index=False)
 
     def commit(self, end: dict) -> None:
         self._last_end = int(end["cell"])

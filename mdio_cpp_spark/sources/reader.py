@@ -1,24 +1,31 @@
-"""Spark scan over a Zarr array: chunk-pruned, fill-synthesizing, long-form.
+"""The chunk-scan core, and its mapInPandas front end (scan_array, scan_arrays).
 
 The Dataset::Open → isel → Read() pipeline (reference dataset.h:941-1118,
-variable.h:1079-1103) re-expressed for Spark's execution model:
+variable.h:1079-1103) re-expressed for Spark's execution model. Every Spark
+read path — ``scan_array``/``scan_arrays`` here, ``format("mdio")`` batch,
+fused and stream reads (sources/datasource.py), and
+``zonemap.pruning_report`` — runs the same pieces:
 
   * ALL metadata I/O happens once on the driver (consolidated .zmetadata /
     zarr.json walk — zarr_v2.h:467-482).
-  * **Chunk pruning** (SURVEY §4 — "THE key custom piece"): the driver
-    intersects the requested per-dimension index ranges with the chunk grid
-    and plans only the overlapping chunks. A `sel`/`isel` predicate therefore
-    never touches non-overlapping chunks — the Zarr analog of parquet
-    partition pruning.
-  * The chunk manifest is never materialized on the driver: the plan is
-    ``spark.range(n_pruned_chunks)`` and each task unravels its linear ids
-    into chunk coordinates. At 100 TB (~12M chunks of 8 MiB) the manifest
-    stays a lazy range — no driver memory, no createDataFrame of millions of
-    rows.
-  * Executors decode chunks via the pure-Python store (codecs.py) into
-    vectorized numpy, emitted through Arrow batches (mapInPandas). Absent
-    chunks synthesize the fill value (dataset_factory.h:500-545 semantics)
-    without reading anything.
+  * **Chunk pruning** (SURVEY §4 — "THE key custom piece"): ``plan_grid``
+    intersects the clamped per-dimension box (and any per-dim member lists)
+    with the chunk grid, so a ``sel``/``isel`` predicate never touches
+    non-overlapping chunks — the Zarr analog of parquet partition pruning.
+    Value predicates prune further on zone maps (sources/zonemap.py):
+    ``zone_keeper`` judges a chunk, ``driver_survivors`` enumerates the
+    surviving linear ids on the driver when the grid is small enough.
+  * The chunk manifest is never materialized on the driver: work is a list
+    of linear ids within the pruned grid (a ``spark.range`` here, id ranges
+    in DSv2 partitions) and each task unravels its ids with ``chunk_coords``.
+    At 100 TB (~12M chunks of 8 MiB) the manifest stays a lazy range.
+    ``task_count`` sizes the task list for every front end.
+  * Executors run ``decode_frames``: chunk bytes prefetch in bounded order
+    (sharded arrays by partial shard read), each chunk becomes one
+    long-form frame for 1..N variables on the grid (``chunk_frame``), and
+    row masks (value predicates, dim member lists) apply in numpy before
+    the Arrow boundary. Absent chunks synthesize the fill value
+    (dataset_factory.h:500-545 semantics) without reading anything.
   * Output is long/tidy form: one row per cell, dimension-index columns
     (int64) + value column(s). Struct dtypes emit one column per (selected)
     field — nested-field pruning happens at decode time, replacing the
@@ -28,8 +35,7 @@ variable.h:1079-1103) re-expressed for Spark's execution model:
 from __future__ import annotations
 
 import math
-from decimal import Decimal
-from typing import Any, Iterator
+from typing import Any, Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -38,7 +44,7 @@ from pyspark.sql import types as T
 
 from mdio_cpp_spark.schema.types import SCALAR_TYPES
 from mdio_cpp_spark.sources import zonemap as _zonemap
-from mdio_cpp_spark.sources.zarr_store import ZarrArrayMeta, ZarrStore, _clamped_box
+from mdio_cpp_spark.sources.zarr_store import ZarrArrayMeta, ZarrStore, _clamped_box, chunk_ranges
 
 __all__ = ["scan_array", "scan_arrays", "plan_chunks", "scan_schema"]
 
@@ -92,44 +98,126 @@ def _dim_names(meta: ZarrArrayMeta) -> list[str]:
     return [meta.dims[d] if d < len(meta.dims) and meta.dims[d] else f"dim_{d}" for d in range(meta.ndim)]
 
 
+# A scan's OUTPUTS: [(meta, picks)], one entry per emitted variable, all on
+# one chunk grid. picks = ((field | None, column), ...): a struct field or
+# the whole scalar value, and the output column it lands in (a complex value
+# lands in <column>_re / <column>_im).
+Outputs = Sequence[tuple[ZarrArrayMeta, tuple[tuple[str | None, str], ...]]]
+
+
+def _picks(meta: ZarrArrayMeta, fields: list[str] | None, value_col: str) -> tuple:
+    if meta.is_struct:
+        return tuple((f, f) for f in fields or meta.np_dtype.names)
+    return ((None, value_col),)
+
+
+def frame_schema(dim_names: list[str], outputs: Outputs) -> T.StructType:
+    """Spark schema of the long-form frames ``chunk_frame`` builds."""
+    out = [T.StructField(d, T.LongType(), False) for d in dim_names]
+    for meta, picks in outputs:
+        for field, col in picks:
+            dt = meta.np_dtype.fields[field][0] if field else meta.np_dtype
+            if dt.kind == "c":
+                base = T.FloatType() if dt.itemsize == 8 else T.DoubleType()
+                out += [T.StructField(f"{col}_re", base, True), T.StructField(f"{col}_im", base, True)]
+            else:
+                out.append(T.StructField(col, _scalar_spark_type(dt), True))
+    return T.StructType(out)
+
+
 def scan_schema(meta: ZarrArrayMeta, fields: list[str] | None = None, value_col: str = "value") -> T.StructType:
     """Spark schema of the long-form scan output."""
-    out = [T.StructField(d, T.LongType(), False) for d in _dim_names(meta)]
-    if meta.is_struct:
-        names = fields or list(meta.np_dtype.names)
-        for n in names:
-            out.append(T.StructField(n, _scalar_spark_type(meta.np_dtype.fields[n][0]), True))
-    elif meta.np_dtype.kind == "c":
-        base = T.FloatType() if meta.np_dtype.itemsize == 8 else T.DoubleType()
-        out.append(T.StructField(f"{value_col}_re", base, True))
-        out.append(T.StructField(f"{value_col}_im", base, True))
-    else:
-        out.append(T.StructField(value_col, _scalar_spark_type(meta.np_dtype), True))
-    return T.StructType(out)
+    return frame_schema(_dim_names(meta), [(meta, _picks(meta, fields, value_col))])
+
+
+def fused_outputs(
+    lookup: Callable[[str], ZarrArrayMeta], entries: Iterable[tuple[str, str]]
+) -> list:
+    """Outputs of a FUSED aligned scan from ``(key, column)`` entries, key
+    'var' or 'var.field'; ``lookup`` maps a variable name to its meta.
+
+    Raises ValueError (KeyError for an unknown variable or field) unless
+    there is at least one entry, no entry is empty, no variable is complex
+    (two output columns — use to_df/join), a struct variable is named
+    through one field, and every variable shares dims, shape and chunks."""
+    entries = list(entries)
+    if not entries:
+        raise ValueError("a fused scan needs at least one variable")
+    outputs = []
+    for pos, (key, col) in enumerate(entries):
+        vname, dot, field = key.partition(".")
+        if not vname or (dot and not field):
+            raise ValueError(
+                f"fused-scan entry {pos} of {[k for k, _ in entries]} names "
+                f"no variable or field: {key!r}"
+            )
+        meta = lookup(vname)
+        if meta.np_dtype.kind == "c":
+            raise ValueError(f"complex variable {vname!r} is not fusable; use to_df")
+        if field and field not in (meta.np_dtype.names or ()):
+            raise KeyError(f"no field {field!r} in variable {vname!r}")
+        if not field and meta.is_struct:
+            raise ValueError(
+                f"struct variable {vname!r} needs an explicit field ('{vname}.<field>')"
+            )
+        outputs.append((meta, ((field or None, col),)))
+    first = outputs[0][0]
+    for meta, _ in outputs[1:]:
+        if (meta.shape, meta.chunks, tuple(meta.dims)) != (first.shape, first.chunks, tuple(first.dims)):
+            raise ValueError(
+                f"fused variables must share one grid: {meta.name!r} has "
+                f"shape={meta.shape} chunks={meta.chunks} dims={meta.dims}, "
+                f"expected {first.shape}/{first.chunks}/{first.dims}"
+            )
+    return outputs
+
+
+# ------------------------------------------------------------------ planning
 
 
 def _normalize_ranges(
     meta: ZarrArrayMeta, ranges: dict[str, tuple] | None
-) -> tuple[tuple[tuple[int, int], ...], tuple[int, ...], tuple[int, ...]]:
-    """→ (clamped half-open box, per-dim step, per-dim stride origin)."""
+) -> tuple[tuple[tuple[int, int], ...], tuple[int, ...]]:
+    """→ (clamped half-open box, per-dim step)."""
     box2: dict[str, tuple[int, int]] = {}
     steps: dict[str, int] = {}
-    if ranges:
-        for k, v in ranges.items():
-            if len(v) == 3:
-                lo, hi, st = v
-            else:
-                lo, hi = v
-                st = 1
-            if st < 1:
-                raise ValueError(f"step must be >= 1 for {k!r}")
-            box2[k] = (lo, hi)
-            steps[k] = int(st)
-    box = _clamped_box(meta, box2)
-    names = _dim_names(meta)
-    step_t = tuple(steps.get(n, 1) for n in names)
-    origin_t = tuple(box[d][0] for d in range(meta.ndim))
-    return box, step_t, origin_t
+    for k, v in (ranges or {}).items():
+        lo, hi, st = v if len(v) == 3 else (*v, 1)
+        if st < 1:
+            raise ValueError(f"step must be >= 1 for {k!r}")
+        box2[k] = (lo, hi)
+        steps[k] = int(st)
+    return _clamped_box(meta, box2), tuple(steps.get(n, 1) for n in _dim_names(meta))
+
+
+def plan_grid(
+    meta: ZarrArrayMeta,
+    box: tuple[tuple[int, int], ...],
+    members: dict[int, Sequence[int]] | None = None,
+) -> list[Sequence[int]]:
+    """The pruned chunk grid of a clamped box: per dim, the indices of the
+    chunks the box overlaps. A dim in ``members`` (dim index → selected
+    cell indices, e.g. a pushed IN-list) keeps only chunks holding a member
+    inside the box — bounded by the list's length, never the grid's. An
+    empty selection has an empty dim."""
+    per_dim: list[Sequence[int]] = chunk_ranges(meta, box)
+    for d, vals in (members or {}).items():
+        lo, hi = box[d]
+        per_dim[d] = tuple(sorted({v // meta.chunks[d] for v in vals if lo <= v < hi}))
+    return per_dim
+
+
+def grid_size(per_dim: Sequence[Sequence[int]]) -> int:
+    return math.prod(len(r) for r in per_dim) if per_dim else 0
+
+
+def chunk_coords(linear: int, per_dim: Sequence[Sequence[int]]) -> tuple[int, ...]:
+    """Linear id (C order within the pruned grid) → chunk coordinates."""
+    rel = []
+    for idx in reversed(per_dim):
+        linear, r = divmod(linear, len(idx))
+        rel.append(idx[r])
+    return tuple(reversed(rel))
 
 
 def plan_chunks(
@@ -137,17 +225,33 @@ def plan_chunks(
 ) -> tuple[list[range], int]:
     """Pruned chunk grid: per-dim chunk-index ranges + total pruned count.
     Pure driver-side planning — this is what the pruning tests assert on."""
-    box, _, _ = _normalize_ranges(meta, ranges)
-    if any(hi <= lo for lo, hi in box):
-        return [range(0) for _ in range(meta.ndim)], 0
-    per_dim = [
-        range(box[d][0] // meta.chunks[d], (box[d][1] - 1) // meta.chunks[d] + 1)
-        for d in range(meta.ndim)
-    ]
-    return per_dim, int(np.prod([len(r) for r in per_dim])) if per_dim else 0
+    per_dim = plan_grid(meta, _normalize_ranges(meta, ranges)[0])
+    return per_dim, grid_size(per_dim)
 
 
-# in-flight chunk byte fetches per scan task (see decode() in scan_array)
+def cluster_parallelism(spark: SparkSession | None = None) -> int:
+    """Default parallelism of ``spark``, else of the active session, else 1."""
+    spark = spark or SparkSession.getActiveSession()
+    return max(1, spark.sparkContext.defaultParallelism) if spark else 1
+
+
+CHUNKS_PER_TASK = 4
+
+
+def task_count(n_chunks: int, chunks_per_task: int, par: int) -> int:
+    """Tasks for a scan of ``n_chunks``: ~chunks_per_task chunks each, but
+    never fewer tasks than cores while chunks remain (small scans should
+    still use the whole cluster), and capped at 64× the cluster parallelism
+    — a petascale array (~12M chunks) must not become millions of scheduler
+    tasks; beyond the cap, tasks simply decode more chunks sequentially (the
+    cap scales with the cluster, so a 1000-executor cluster still fans out)."""
+    n = max(1, -(-n_chunks // max(1, chunks_per_task)))
+    return min(max(n, min(n_chunks, par)), 64 * par)
+
+
+# ------------------------------------------------------------------- execute
+
+# in-flight chunk byte fetches per scan task (see _fetch_blocks)
 _PREFETCH_DEPTH = 4
 
 # value predicates pushable into the decoder: op name → numpy comparator
@@ -161,6 +265,182 @@ _VALUE_OPS = {
 }
 
 
+def value_mask(v: np.ndarray, op: str, lit: Any) -> np.ndarray:
+    """Rows of ``v`` satisfying ``op lit``: the comparisons in _VALUE_OPS,
+    "in" (tuple literal), "isnull"/"notnull". NaN cells surface as SQL NULL
+    at the Arrow boundary (engine convention), and NULL satisfies no
+    comparison — exactly numpy's False for every NaN comparison (and
+    isin's), so these numpy semantics ARE a consumed predicate's."""
+    if op == "in":
+        return np.isin(v, lit)
+    if op in ("isnull", "notnull"):
+        nan = np.isnan(v) if v.dtype.kind == "f" else np.zeros(len(v), bool)
+        return nan if op == "isnull" else ~nan
+    return np.asarray(_VALUE_OPS[op](v, lit), dtype=bool)
+
+
+def chunk_frame(
+    coords: tuple[int, ...],
+    box: tuple[tuple[int, int], ...],
+    steps: tuple[int, ...],
+    dim_names: list[str],
+    outputs: Outputs,
+    blocks: dict[str, np.ndarray | None],
+) -> pd.DataFrame:
+    """One chunk's long-form frame, fully vectorized: per-dim global index
+    arrays → meshgrid → ravel, built once however many variables the frame
+    carries; each variable's cells come from its decoded block, or its fill
+    value when the chunk is absent (no I/O)."""
+    m0 = outputs[0][0]
+    origin = tuple(c * s for c, s in zip(coords, m0.chunks))
+    gsel: list[np.ndarray] = []
+    lsel: list[np.ndarray] = []
+    for d in range(m0.ndim):
+        lo = max(box[d][0], origin[d])
+        hi = min(box[d][1], origin[d] + m0.chunks[d], m0.shape[d])
+        g = np.arange(lo, hi, dtype=np.int64)
+        if steps[d] > 1:
+            g = g[(g - box[d][0]) % steps[d] == 0]
+        gsel.append(g)
+        lsel.append(g - origin[d])
+    n = math.prod(len(g) for g in gsel)
+    mesh = np.meshgrid(*gsel, indexing="ij") if m0.ndim > 1 else gsel
+    cols: dict[str, Any] = {name: m.ravel() for name, m in zip(dim_names, mesh)}
+    cells: dict[str, np.ndarray] = {}
+    for meta, picks in outputs:
+        if meta.name not in cells:
+            block = blocks[meta.name]
+            cells[meta.name] = (
+                np.full(n, meta.fill_scalar(), dtype=meta.np_dtype) if block is None
+                else block[np.ix_(*lsel)].ravel() if meta.ndim > 1
+                else block[lsel[0]]
+            )
+        for field, col in picks:
+            vals = cells[meta.name]
+            if field is not None:
+                vals = np.ascontiguousarray(vals[field])
+            if vals.dtype.kind == "c":
+                cols[f"{col}_re"], cols[f"{col}_im"] = np.real(vals), np.imag(vals)
+            else:
+                cols[col] = _convert_values(vals)
+    return pd.DataFrame(cols)
+
+
+def _fetch_blocks(
+    store: ZarrStore,
+    metas: list[ZarrArrayMeta],
+    box: tuple[tuple[int, int], ...],
+    coords_iter: Iterable[tuple[int, ...]],
+) -> Iterator[tuple[tuple[int, ...], dict[str, np.ndarray | None]]]:
+    """(coords, {variable: decoded block, None if absent}) per chunk, in
+    input order. Byte fetches run _PREFETCH_DEPTH chunks ahead of the decode
+    on a small thread pool — on local disk this is noise, but at
+    object-store latency it overlaps the GET round-trips with
+    decompress/decode, which is the difference between latency-bound and
+    bandwidth-bound scans. Decodes stay in submission order, so output is
+    deterministic and memory is bounded by _PREFETCH_DEPTH raw chunks.
+    Sharded arrays fetch by box-aware PARTIAL shard read (index + touched
+    inner chunks via range reads), which also decodes."""
+    # imported here, in the executor: the driver-only engine import skips them
+    from collections import deque
+    from concurrent.futures import ThreadPoolExecutor
+
+    def fetch(meta, coords):
+        if meta.shard is not None:
+            return store.decode_chunk_box(meta, coords, box)
+        return store.read_bytes(meta.chunk_key(coords))
+
+    def done(coords, futs):
+        return coords, {
+            m.name: f.result() if m.shard is not None else store.decode_raw(m, f.result())
+            for m, f in zip(metas, futs)
+        }
+
+    window = max(1, _PREFETCH_DEPTH // len(metas))
+    with ThreadPoolExecutor(max_workers=_PREFETCH_DEPTH) as pool:
+        pending = deque()
+        for coords in coords_iter:
+            pending.append((coords, [pool.submit(fetch, m, coords) for m in metas]))
+            if len(pending) >= window:
+                yield done(*pending.popleft())
+        while pending:
+            yield done(*pending.popleft())
+
+
+def decode_frames(
+    store: ZarrStore,
+    outputs: Outputs,
+    box: tuple[tuple[int, int], ...],
+    steps: tuple[int, ...],
+    coords: Iterable[tuple[int, ...]],
+    keep: Callable[[tuple[int, ...]], bool] | None = None,
+    value_col: str | None = None,
+    value_filters: Sequence[tuple[str, Any]] = (),
+    dim_in: dict[str, Sequence[int]] | None = None,
+) -> Iterator[pd.DataFrame]:
+    """The executor half of every scan: the non-empty long-form frames of
+    the chunks at ``coords``. ``keep`` is the executor-tier zone skip (no
+    GET, no decompress, no decode for a rejected chunk); ``value_filters``
+    mask the ``value_col`` cells and ``dim_in`` (dim → member indices) the
+    rows, in numpy before the Arrow boundary."""
+    metas = list({m.name: m for m, _ in outputs}.values())
+    dim_names = _dim_names(metas[0])
+    if keep is not None:
+        coords = (c for c in coords if keep(c))
+    for c, blocks in _fetch_blocks(store, metas, box, coords):
+        pdf = chunk_frame(c, box, steps, dim_names, outputs, blocks)
+        if len(pdf) and (value_filters or dim_in):
+            mask = np.ones(len(pdf), bool)
+            for dim, members in (dim_in or {}).items():
+                mask &= np.isin(pdf[dim].to_numpy(), members)
+            for op, lit in value_filters:
+                mask &= value_mask(pdf[value_col].to_numpy(), op, lit)
+            pdf = pdf[mask]
+        if len(pdf):
+            yield pdf
+
+
+# ------------------------------------------------------------- front end
+
+
+def _scan(
+    spark: SparkSession,
+    store: ZarrStore,
+    outputs: Outputs,
+    box: tuple[tuple[int, int], ...],
+    steps: tuple[int, ...],
+    chunks_per_task: int,
+    value_col: str | None = None,
+    value_filters: Sequence[tuple[str, Any]] = (),
+) -> DataFrame:
+    """Plan on the driver, decode in ``spark.range(n).mapInPandas`` tasks.
+    With zone-map survivors enumerated on the driver, the ids ride the task
+    closure; otherwise each task applies the zone keeper itself."""
+    meta = outputs[0][0]
+    schema = frame_schema(_dim_names(meta), outputs)
+    per_dim = plan_grid(meta, box)
+    keep = _zonemap.zone_keeper(meta, store.root, value_filters)
+    ids = _zonemap.driver_survivors(per_dim, keep)
+    n = grid_size(per_dim) if ids is None else len(ids)
+    if n == 0:
+        return spark.createDataFrame([], schema)
+    root, version = store.root, store.version
+    task_keep = keep if ids is None else None
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        coords = (
+            chunk_coords(int(i) if ids is None else ids[i], per_dim)
+            for pdf in batches for i in pdf["id"].to_numpy()
+        )
+        yield from decode_frames(
+            ZarrStore(root, version), outputs, box, steps, coords,
+            task_keep, value_col, value_filters,
+        )
+
+    n_parts = task_count(n, chunks_per_task, cluster_parallelism(spark))
+    return spark.range(0, n, numPartitions=n_parts).mapInPandas(decode, schema=schema)
+
+
 def scan_array(
     spark: SparkSession,
     root: str,
@@ -168,7 +448,7 @@ def scan_array(
     ranges: dict[str, tuple] | None = None,
     fields: list[str] | None = None,
     value_col: str = "value",
-    chunks_per_task: int = 4,
+    chunks_per_task: int = CHUNKS_PER_TASK,
     value_filter: tuple[str, Any] | None = None,
 ) -> DataFrame:
     """Scan one Zarr array into a long-form DataFrame with chunk pruning.
@@ -179,148 +459,24 @@ def scan_array(
     ``value_filter`` = (op, literal) with op in >=,>,<=,<,==,!= — applied to
     the VALUE inside the decoder (numpy, before the Arrow boundary), so
     non-matching cells never ship to the JVM. The Catalyst analog of filter
-    pushdown, extended past the Python worker; a whole-chunk skip falls out
-    for fill-only chunks whose fill fails the predicate.
+    pushdown, extended past the Python worker; with zone maps, incompatible
+    chunks are skipped before any byte read, and a whole-chunk skip falls
+    out for fill-only chunks whose fill fails the predicate.
     """
     store = ZarrStore.open(root)
     meta = store.array_meta(var)
     if meta.header_only and meta.np_dtype.fields is None and meta.np_dtype.kind in "OV":
         raise TypeError(f"array {var!r} is metadata-only (dtype {meta.np_dtype})")
-    box, steps, _ = _normalize_ranges(meta, ranges)
-    per_dim, n_chunks = plan_chunks(meta, ranges)
-    out_schema = scan_schema(meta, fields, value_col)
-    dim_names = _dim_names(meta)
-
-    if n_chunks == 0:
-        return spark.createDataFrame([], out_schema)
-
-    grid_lens = [len(r) for r in per_dim]
-    grid_starts = [r.start for r in per_dim]
-    root_path, version = store.root, store.version
-    sel_fields = list(fields) if fields else (list(meta.np_dtype.names) if meta.is_struct else None)
     if value_filter is not None:
         if meta.is_struct or meta.np_dtype.kind == "c":
             raise ValueError("value_filter applies to scalar arrays only")
         if value_filter[0] not in _VALUE_OPS:
             raise ValueError(f"unsupported value_filter op {value_filter[0]!r}")
-
-    # zone maps: per-chunk [min,max] stats (sources/zonemap.py — attr
-    # manifest or sidecar arrays) prune value-filtered scans BEFORE any
-    # chunk bytes are read — driver-side when the surviving grid is
-    # enumerable, executor-side otherwise (the attr manifest rides the meta
-    # closure; the sidecar reader lazily fetches ~256 KiB stats chunks per
-    # task; either way the skip removes the kvstore GET, the decompress,
-    # and the decode for incompatible chunks).
-    zone_src = None
-    fill_lit = None
-    if value_filter is not None:
-        zone_src = _zonemap.open_zones(meta, store.root)
-        if zone_src is not None:
-            try:
-                fill_lit = meta.fill_scalar()
-            except Exception:
-                fill_lit = None
-
-    def _zone_keep(coords: tuple[int, ...]) -> bool:
-        return _zonemap.zone_keep(
-            zone_src, coords, value_filter[0], value_filter[1], fill_lit,
-            float_kind=meta.np_dtype.kind == "f",
-        ) if zone_src is not None else True
-
-    def _iter_coords(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            for linear in pdf["id"].to_numpy():
-                # unravel linear id → chunk coords within the pruned grid
-                coords = []
-                rem = int(linear)
-                for L in reversed(grid_lens):
-                    coords.append(rem % L)
-                    rem //= L
-                coords = tuple(
-                    grid_starts[d] + c for d, c in enumerate(reversed(coords))
-                )
-                if _zone_keep(coords):
-                    yield coords
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # executor-side: open the store lazily once per task. Chunk BYTE
-        # fetches run _PREFETCH_DEPTH ahead of the decode on a small thread
-        # pool — on local disk this is noise, but at object-store latency it
-        # overlaps the GET round-trips with decompress/decode, which is the
-        # difference between latency-bound and bandwidth-bound scans.
-        # Decodes stay in submission order (deque), so output is
-        # deterministic and memory is bounded by _PREFETCH_DEPTH raw chunks.
-        from collections import deque
-        from concurrent.futures import ThreadPoolExecutor
-
-        task_store = ZarrStore(root_path, version)
-
-        def emit(coords, raw):
-            out = _decode_chunk_to_pdf(
-                task_store, meta, coords, box, steps, dim_names, sel_fields,
-                value_col, raw=raw,
-            )
-            if value_filter is not None and len(out):
-                mask = _VALUE_OPS[value_filter[0]](
-                    out[value_col].to_numpy(), value_filter[1]
-                )
-                out = out[mask]
-            return out
-
-        if meta.shard is not None:
-            # sharded arrays: the prefetch unit is the box-aware PARTIAL
-            # shard read (index + touched inner chunks via range reads);
-            # raw-bytes prefetch would pull whole shard objects
-            def _fetch(coords):
-                return task_store.decode_chunk_box(meta, coords, box)
-        else:
-            def _fetch(coords):
-                return task_store.read_bytes(meta.chunk_key(coords))
-
-        with ThreadPoolExecutor(max_workers=_PREFETCH_DEPTH) as pool:
-            pending = deque()
-            for coords in _iter_coords(batches):
-                pending.append(
-                    (coords, pool.submit(_fetch, coords))
-                )
-                if len(pending) >= _PREFETCH_DEPTH:
-                    c, fut = pending.popleft()
-                    yield emit(c, fut.result())
-            while pending:
-                c, fut = pending.popleft()
-                yield emit(c, fut.result())
-
-    # partition count: ~chunks_per_task chunks each, but never fewer tasks
-    # than cores while chunks remain (small scans should still use the whole
-    # cluster), and capped at 64× the cluster parallelism — a petascale
-    # array (~12M chunks) must not become millions of scheduler tasks;
-    # beyond the cap, tasks simply decode more chunks sequentially (the cap
-    # scales with the cluster, so a 1000-executor cluster still fans out)
-    par = max(1, spark.sparkContext.defaultParallelism)
-    cap = 64 * par
-    if zone_src is not None and n_chunks <= _zonemap.MAX_DRIVER_ENUM:
-        # driver-side exact pruning: enumerate the (range-pruned) grid and
-        # ship only zone-compatible linear ids as the task list
-        import itertools
-
-        survivors = [
-            i
-            for i, coords in enumerate(itertools.product(*per_dim))
-            if _zone_keep(coords)
-        ]
-        if not survivors:
-            return spark.createDataFrame([], out_schema)
-        n_parts = max(1, math.ceil(len(survivors) / max(1, chunks_per_task)))
-        n_parts = min(max(n_parts, min(len(survivors), par)), cap)
-        manifest = spark.createDataFrame(
-            [(i,) for i in survivors], "id long"
-        ).repartition(n_parts)
-        return manifest.mapInPandas(decode, schema=out_schema)
-
-    n_parts = max(1, math.ceil(n_chunks / max(1, chunks_per_task)))
-    n_parts = min(max(n_parts, min(n_chunks, par)), cap)
-    manifest = spark.range(0, n_chunks, numPartitions=n_parts)
-    return manifest.mapInPandas(decode, schema=out_schema)
+    box, steps = _normalize_ranges(meta, ranges)
+    return _scan(
+        spark, store, [(meta, _picks(meta, fields, value_col))], box, steps,
+        chunks_per_task, value_col, [value_filter] if value_filter else (),
+    )
 
 
 def scan_arrays(
@@ -328,7 +484,7 @@ def scan_arrays(
     root: str,
     specs: dict[str, str],
     ranges: dict[str, tuple] | None = None,
-    chunks_per_task: int = 4,
+    chunks_per_task: int = CHUNKS_PER_TASK,
 ) -> DataFrame:
     """FUSED aligned scan: decode N variables sharing one chunk grid in a
     single pass — one task reads every variable's chunk at the same coords
@@ -341,230 +497,10 @@ def scan_arrays(
     per-chunk array index, so the join collapses into the scan. Different
     grids (subset dims, different chunking) still take the join route.
 
-    ``specs`` maps 'var' or 'var.field' (struct field) → output column name.
-    All referenced variables must share dims, shape, and chunks; complex
-    dtypes are not fusable (two output columns per var — use to_df/join).
+    ``specs`` maps 'var' or 'var.field' (struct field) → output column name;
+    ``fused_outputs`` states what is fusable.
     """
     store = ZarrStore.open(root)
-    parsed: list[tuple[ZarrArrayMeta, str | None, str]] = []
-    for key, out_col in specs.items():
-        if "." in key:
-            vname, field = key.split(".", 1)
-        else:
-            vname, field = key, None
-        meta = store.array_meta(vname)
-        if meta.np_dtype.kind == "c":
-            raise ValueError(f"complex variable {vname!r} is not fusable; use to_df")
-        if field is not None and (not meta.is_struct or field not in (meta.np_dtype.names or ())):
-            raise KeyError(f"no field {field!r} in variable {vname!r}")
-        if field is None and meta.is_struct:
-            raise ValueError(
-                f"struct variable {vname!r} needs an explicit field ('{vname}.<field>')"
-            )
-        parsed.append((meta, field, out_col))
-    first = parsed[0][0]
-    for meta, _, _ in parsed[1:]:
-        if (
-            meta.shape != first.shape
-            or meta.chunks != first.chunks
-            or tuple(meta.dims) != tuple(first.dims)
-        ):
-            raise ValueError(
-                f"scan_arrays needs one shared grid: {meta.name!r} has "
-                f"shape={meta.shape} chunks={meta.chunks} dims={meta.dims}, "
-                f"expected {first.shape}/{first.chunks}/{first.dims}"
-            )
-
-    box, steps, _ = _normalize_ranges(first, ranges)
-    per_dim, n_chunks = plan_chunks(first, ranges)
-    dim_names = _dim_names(first)
-    fields_out = [
-        T.StructField(d, T.LongType(), False) for d in dim_names
-    ] + [
-        T.StructField(
-            out_col,
-            _scalar_spark_type(
-                meta.np_dtype.fields[field][0] if field else meta.np_dtype
-            ),
-            True,
-        )
-        for meta, field, out_col in parsed
-    ]
-    out_schema = T.StructType(fields_out)
-    if n_chunks == 0:
-        return spark.createDataFrame([], out_schema)
-
-    grid_lens = [len(r) for r in per_dim]
-    grid_starts = [r.start for r in per_dim]
-    root_path, version = store.root, store.version
-    spec_list = [(m.name, field, out_col) for m, field, out_col in parsed]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one store handle per task; chunk bytes for ALL variables of the
-        # next chunks prefetch concurrently (same latency-hiding argument as
-        # scan_array, but the pool spans variables too)
-        from collections import deque
-        from concurrent.futures import ThreadPoolExecutor
-
-        task_store = ZarrStore(root_path, version)
-        metas = {name: task_store.array_meta(name) for name, _, _ in spec_list}
-
-        def emit(coords, futs):
-            m0 = metas[spec_list[0][0]]
-            origin = tuple(c * s for c, s in zip(coords, m0.chunks))
-            gsel, lsel = [], []
-            for d in range(m0.ndim):
-                lo = max(box[d][0], origin[d])
-                hi = min(box[d][1], origin[d] + m0.chunks[d], m0.shape[d])
-                g = np.arange(lo, hi, dtype=np.int64)
-                if steps[d] > 1:
-                    g = g[(g - box[d][0]) % steps[d] == 0]
-                gsel.append(g)
-                lsel.append(g - origin[d])
-            n = int(np.prod([len(g) for g in gsel])) if gsel else 0
-            cols: dict[str, Any] = {}
-            if n == 0:
-                cols = {d: np.empty(0, dtype=np.int64) for d in dim_names}
-                for (name, field, out_col), _ in zip(spec_list, futs):
-                    m = metas[name]
-                    dt = m.np_dtype.fields[field][0] if field else m.np_dtype
-                    cols[out_col] = _empty_scalar_col(dt)
-                return pd.DataFrame(cols)
-            mesh = np.meshgrid(*gsel, indexing="ij") if m0.ndim > 1 else [gsel[0]]
-            for d, mgrid in zip(dim_names, mesh):
-                cols[d] = mgrid.ravel()
-            for (name, field, out_col), fut in zip(spec_list, futs):
-                m = metas[name]
-                block = task_store.decode_raw(m, fut.result())
-                if block is None:
-                    vals = np.full(n, m.fill_scalar(), dtype=m.np_dtype)
-                else:
-                    vals = block[np.ix_(*lsel)].ravel() if m.ndim > 1 else block[lsel[0]]
-                if field is not None:
-                    vals = np.ascontiguousarray(vals[field])
-                cols[out_col] = _convert_values(vals)
-            return pd.DataFrame(cols)
-
-        with ThreadPoolExecutor(max_workers=_PREFETCH_DEPTH) as pool:
-            pending = deque()
-            for pdf in batches:
-                for linear in pdf["id"].to_numpy():
-                    rem, rel = int(linear), []
-                    for length in reversed(grid_lens):
-                        rel.append(rem % length)
-                        rem //= length
-                    coords = tuple(
-                        grid_starts[d] + c for d, c in enumerate(reversed(rel))
-                    )
-                    futs = [
-                        pool.submit(
-                            task_store.read_bytes,
-                            metas[name].chunk_key(coords),
-                        )
-                        for name, _, _ in spec_list
-                    ]
-                    pending.append((coords, futs))
-                    if len(pending) >= max(1, _PREFETCH_DEPTH // max(1, len(spec_list))):
-                        c, fs = pending.popleft()
-                        yield emit(c, fs)
-            while pending:
-                c, fs = pending.popleft()
-                yield emit(c, fs)
-
-    par = max(1, spark.sparkContext.defaultParallelism)
-    cap = 64 * par
-    n_parts = max(1, math.ceil(n_chunks / max(1, chunks_per_task)))
-    n_parts = min(max(n_parts, min(n_chunks, par)), cap)
-    manifest = spark.range(0, n_chunks, numPartitions=n_parts)
-    return manifest.mapInPandas(decode, schema=out_schema)
-
-
-_RAW_UNSET = object()  # sentinel: fetch bytes inside (raw=None means absent)
-
-
-def _decode_chunk_to_pdf(
-    store: ZarrStore,
-    meta: ZarrArrayMeta,
-    coords: tuple[int, ...],
-    box: tuple[tuple[int, int], ...],
-    steps: tuple[int, ...],
-    dim_names: list[str],
-    sel_fields: list[str] | None,
-    value_col: str,
-    raw: object = _RAW_UNSET,
-) -> pd.DataFrame:
-    """Decode one chunk (or synthesize fill) into the long-form pandas frame,
-    fully vectorized: per-dim global index arrays → meshgrid → ravel."""
-    origin = tuple(c * s for c, s in zip(coords, meta.chunks))
-    gsel: list[np.ndarray] = []
-    lsel: list[np.ndarray] = []
-    for d in range(meta.ndim):
-        lo = max(box[d][0], origin[d])
-        hi = min(box[d][1], origin[d] + meta.chunks[d], meta.shape[d])
-        g = np.arange(lo, hi, dtype=np.int64)
-        if steps[d] > 1:
-            g = g[(g - box[d][0]) % steps[d] == 0]
-        gsel.append(g)
-        lsel.append(g - origin[d])
-    n = int(np.prod([len(g) for g in gsel])) if gsel else 0
-    cols: dict[str, Any] = {}
-    if n == 0:
-        empty = {name: np.empty(0, dtype=np.int64) for name in dim_names}
-        return pd.DataFrame(empty | _empty_value_cols(meta, sel_fields, value_col))
-    mesh = np.meshgrid(*gsel, indexing="ij") if meta.ndim > 1 else [gsel[0]]
-    for name, m in zip(dim_names, mesh):
-        cols[name] = m.ravel()
-
-    if raw is _RAW_UNSET:
-        # box-aware path: sharded arrays range-read only the index + the
-        # inner chunks the box touches (sources/zarr_store.decode_chunk_box)
-        block = (
-            store.decode_chunk_box(meta, coords, box)
-            if meta.shard is not None
-            else store.decode_chunk(meta, coords)
-        )
-    elif isinstance(raw, np.ndarray):
-        block = raw  # prefetcher already produced the decoded block
-    else:
-        block = store.decode_raw(meta, raw)  # prefetched bytes (or absent=None)
-    if block is None:
-        # fill synthesis: unwritten chunk, no I/O (dataset_factory.h:500-545)
-        vals = np.full(n, meta.fill_scalar(), dtype=meta.np_dtype)
-    else:
-        vals = block[np.ix_(*lsel)].ravel() if meta.ndim > 1 else block[lsel[0]]
-
-    if meta.is_struct:
-        for f in sel_fields or []:
-            cols[f] = _convert_values(np.ascontiguousarray(vals[f]))
-    elif meta.np_dtype.kind == "c":
-        cols[f"{value_col}_re"] = np.real(vals)
-        cols[f"{value_col}_im"] = np.imag(vals)
-    else:
-        cols[value_col] = _convert_values(vals)
-    return pd.DataFrame(cols)
-
-
-def _empty_scalar_col(dt: np.dtype):
-    """Zero-row pandas column with the Spark-facing dtype for one scalar."""
-    if dt.name == "uint64" or dt.kind in "SU":
-        return pd.Series(dtype=object)
-    if dt.kind == "M":
-        return pd.Series(dtype="datetime64[us]")
-    np_out = _NUMPY_TO_SPARK_CAST.get(dt.name, (dt.name,))[0]
-    return np.empty(0, dtype=np_out)
-
-
-def _empty_value_cols(meta: ZarrArrayMeta, sel_fields: list[str] | None, value_col: str) -> dict:
-    if meta.is_struct:
-        return {f: np.empty(0, dtype=meta.np_dtype.fields[f][0]) for f in sel_fields or []}
-    if meta.np_dtype.kind == "c":
-        base = np.float32 if meta.np_dtype.itemsize == 8 else np.float64
-        return {f"{value_col}_re": np.empty(0, base), f"{value_col}_im": np.empty(0, base)}
-    if meta.np_dtype.name == "uint64":
-        return {value_col: pd.Series(dtype=object)}
-    if meta.np_dtype.kind in "SU":
-        return {value_col: pd.Series(dtype=object)}
-    if meta.np_dtype.kind == "M":
-        return {value_col: pd.Series(dtype="datetime64[us]")}
-    np_out = _NUMPY_TO_SPARK_CAST.get(meta.np_dtype.name, (meta.np_dtype.name,))[0]
-    return {value_col: np.empty(0, dtype=np_out)}
+    outputs = fused_outputs(store.array_meta, specs.items())
+    box, steps = _normalize_ranges(outputs[0][0], ranges)
+    return _scan(spark, store, outputs, box, steps, chunks_per_task)

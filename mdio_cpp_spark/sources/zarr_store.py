@@ -1342,18 +1342,22 @@ def _clamped_box(
     return tuple(sel)
 
 
+def chunk_ranges(
+    meta: ZarrArrayMeta, box: tuple[tuple[int, int], ...]
+) -> list[range]:
+    """Per-dim chunk-index ranges intersecting a half-open box (all empty
+    for an empty box) — the chunk-pruning primitive (SURVEY §4: dim-range
+    predicate → chunk-id list)."""
+    if any(hi <= lo for lo, hi in box):
+        return [range(0)] * meta.ndim
+    return [range(lo // c, (hi - 1) // c + 1) for (lo, hi), c in zip(box, meta.chunks)]
+
+
 def chunks_overlapping(
     meta: ZarrArrayMeta, box: tuple[tuple[int, int], ...]
 ) -> Iterator[tuple[int, ...]]:
-    """Chunk coordinates intersecting a half-open box — the chunk-pruning
-    primitive (SURVEY §4: dim-range predicate → chunk-id list)."""
-    if any(hi <= lo for lo, hi in box):
-        return
-    per_dim = []
-    for d in range(meta.ndim):
-        lo, hi = box[d]
-        per_dim.append(range(lo // meta.chunks[d], (hi - 1) // meta.chunks[d] + 1))
-    yield from itertools.product(*per_dim)
+    """Chunk coordinates intersecting a half-open box."""
+    return itertools.product(*chunk_ranges(meta, box))
 
 
 def _json_default(obj: Any):

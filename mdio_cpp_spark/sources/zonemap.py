@@ -27,9 +27,9 @@ existing fill-vs-predicate logic handles them.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
-
+import itertools
 import math
+from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -121,8 +121,6 @@ def compute_chunk_stats(
     grid = meta.grid_shape()
     shape, chunks = meta.shape, meta.chunks
     root_path, version = store.root, store.version
-    import math
-
     par = max(1, spark.sparkContext.defaultParallelism)
     n_parts = min(max(1, math.ceil(meta.nchunks() / max(1, chunks_per_task))), 64 * par)
 
@@ -455,6 +453,55 @@ def build_sidecar_stats(
     return info
 
 
+def zone_keeper(
+    meta: ZarrArrayMeta, store_root: str, value_filters
+) -> Callable[[tuple[int, ...]], bool] | None:
+    """callable(chunk_coords) -> keep?, for the value predicates
+    ``[(op, lit)]`` — the comparisons, "in" (tuple literal), "isnull" /
+    "notnull" — over the array's zone stats (attr manifest or sidecar);
+    None when there is nothing to prune with. Cheap to build and picklable,
+    so it is built wherever it runs: the driver for enumeration, each task
+    for the streamed skip."""
+    if not value_filters:
+        return None
+    zone_src = open_zones(meta, store_root)
+    if zone_src is None:
+        return None
+    try:
+        fill = meta.fill_scalar()
+    except Exception:
+        fill = None
+    float_kind = meta.np_dtype.kind == "f"
+    vfs = list(value_filters)
+
+    def keep(coords: tuple[int, ...]) -> bool:
+        for op, lit in vfs:
+            if op == "in":
+                # a chunk survives if ANY member could live in its zone;
+                # big lists skip the per-member walk (keep — sound)
+                if len(lit) <= 64 and not any(
+                    zone_keep(zone_src, coords, "==", v, fill, float_kind) for v in lit
+                ):
+                    return False
+            elif op in ("isnull", "notnull"):
+                continue  # zones track [min,max], not NaN presence
+            elif not zone_keep(zone_src, coords, op, lit, fill, float_kind):
+                return False
+        return True
+
+    return keep
+
+
+def driver_survivors(per_dim, keep) -> tuple[int, ...] | None:
+    """Driver-tier exact pruning: the linear ids (C order within the pruned
+    grid ``per_dim``) of the chunks ``keep`` admits, so skipped chunks never
+    even become work. None when there is no keeper or the grid is past
+    MAX_DRIVER_ENUM — each task then applies ``keep`` itself."""
+    if keep is None or math.prod(len(r) for r in per_dim) > MAX_DRIVER_ENUM:
+        return None
+    return tuple(i for i, coords in enumerate(itertools.product(*per_dim)) if keep(coords))
+
+
 def pruning_report(
     root: str,
     var: str,
@@ -468,52 +515,27 @@ def pruning_report(
     the number a 100-TB operator wants BEFORE paying for a scan. Driver
     enumeration for grids ≤ MAX_DRIVER_ENUM; a distributed judge pass
     beyond (requires ``spark``; one tiny row per chunk, nothing decoded)."""
-    from mdio_cpp_spark.sources.reader import plan_chunks
+    from mdio_cpp_spark.sources.reader import chunk_coords, plan_chunks
 
     store = ZarrStore.open(root)
     meta = store.array_meta(var)
     per_dim, n = plan_chunks(meta, ranges)
-    zone_src = open_zones(meta, store.root)
-    if zone_src is None or n == 0:
+    keep = zone_keeper(meta, store.root, [value_filter])
+    if keep is None or n == 0:
         return {"planned": n, "kept": n, "pruned": 0, "source": None}
-    source = zone_src[0] if zone_src[0] != "dict" else "attr"
-    source = "sidecar" if source == "side" else source
-    try:
-        fill = meta.fill_scalar()
-    except Exception:
-        fill = None
-    op, lit = value_filter
-    fk = meta.np_dtype.kind == "f"
-    if n <= MAX_DRIVER_ENUM:
-        import itertools
-
-        kept = sum(
-            1
-            for coords in itertools.product(*per_dim)
-            if zone_keep(zone_src, coords, op, lit, fill, fk)
-        )
-        return {"planned": n, "kept": kept, "pruned": n - kept, "source": source}
+    source = "attr" if load_stats(meta) is not None else "sidecar"
+    ids = driver_survivors(per_dim, keep)
+    if ids is not None:
+        return {"planned": n, "kept": len(ids), "pruned": n - len(ids), "source": source}
     if spark is None:
         raise ValueError(
             f"{n} chunks exceeds the driver enumeration cap; pass a "
             "SparkSession for the distributed judge pass"
         )
-    grid_lens = [len(r) for r in per_dim]
-    grid_starts = [r.start for r in per_dim]
 
     def judge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            kept = 0
-            for linear in pdf["id"].to_numpy():
-                rem, rel = int(linear), []
-                for length in reversed(grid_lens):
-                    rel.append(rem % length)
-                    rem //= length
-                coords = tuple(
-                    grid_starts[d] + c for d, c in enumerate(reversed(rel))
-                )
-                if zone_keep(zone_src, coords, op, lit, fill, fk):
-                    kept += 1
+            kept = sum(keep(chunk_coords(int(i), per_dim)) for i in pdf["id"].to_numpy())
             yield pd.DataFrame({"kept": [kept]})
 
     par = max(1, spark.sparkContext.defaultParallelism)

@@ -508,3 +508,55 @@ def test_dsv2_dim_in_2d_mixed_with_range(spark, tmp_path):
         (rr, cc, float(vals[rr, cc])) for rr in (3, 25) for cc in range(35, 40)
     )
     assert got == expect
+
+
+def _batch_scan_partitions(df) -> list[int]:
+    """Input-partition count of each BatchScanExec in df's executed plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            node = node.plan()
+        if node.getClass().getSimpleName() == "BatchScanExec":
+            out.append(node.inputPartitions().size())
+        kids = node.children().iterator()
+        while kids.hasNext():
+            todo.append(kids.next())
+    return out
+
+
+def test_dsv2_task_count_follows_cluster(spark, tmp_path):
+    """format('mdio') plans its partitions in Spark's Python planning worker,
+    which has no active session: the task count must still follow the
+    scan_array rule with THIS cluster's parallelism (16 chunks on local[4]
+    → 4 tasks, not one per chunk)."""
+    from mdio_cpp_spark.sources.reader import task_count
+
+    register(spark)
+    root = _vf_store(tmp_path, "tc", [float(x) for x in range(1600)], chunk=100)
+    par = spark.sparkContext.defaultParallelism
+    df = spark.read.format("mdio").option("path", root).option("variable", "v").load()
+    assert _batch_scan_partitions(df) == [task_count(16, 4, par)]
+    fused = spark.read.format("mdio").option("path", root).option("variables", "v").load()
+    assert _batch_scan_partitions(fused.filter("i < 800")) == [task_count(8, 4, par)]
+    assert df.count() == 1600
+
+
+def test_fused_scan_rejects_empty_entries(spark, tmp_path):
+    """An empty fused-scan spec or entry is a ValueError naming the entry,
+    on both the scan_arrays and the option('variables') route."""
+    from mdio_cpp_spark.sources.reader import scan_arrays
+
+    register(spark)
+    root = _vf_store(tmp_path, "fe", [1.0, 2.0])
+    with pytest.raises(ValueError, match="at least one variable"):
+        scan_arrays(spark, root, {})
+    with pytest.raises(ValueError, match="entry 1 .* names no variable"):
+        scan_arrays(spark, root, {"v": "a", "": "b"})
+    for raw, pos in (("v,,v", 1), ("v,v,", 2), ("v.", 0)):
+        with pytest.raises(Exception, match=f"entry {pos} .* names no variable or field"):
+            spark.read.format("mdio").option("path", root).option("variables", raw).load()

@@ -241,6 +241,39 @@ def test_partial_shard_read_over_http_uses_ranged_gets(tmp_path):
     assert np.array_equal(got[300:380], vals[1024 + 300:1024 + 380])
 
 
+def test_fused_scan_partial_shard_reads_over_http(tmp_path, spark):
+    """A fused scan of two sharded v3 arrays with a box inside ONE inner
+    chunk fetches, per array, the shard index and that inner chunk —
+    ranged GETs only — through scan_arrays and option("variables") alike."""
+    from mdio_cpp_spark.sources.datasource import register
+    from mdio_cpp_spark.sources.reader import scan_arrays
+
+    local = str(tmp_path / "fused.zarr")
+    st = ZarrStore.create(local, version=3)
+    vals = np.arange(4096, dtype="f8")
+    for name, scale in (("a", 1.0), ("b", -2.0)):
+        st.create_array(name, shape=(4096,), chunks=(256,), shards=(1024,),
+                        dtype="float64", dims=("i",))
+        st.write_array_numpy(name, vals * scale)
+    st.consolidate()
+    want = [(i, float(i), -2.0 * i) for i in range(1324, 1340)]
+    register(spark)
+    with LoopbackHttpServer(str(tmp_path)) as srv:
+        root = f"{srv.url}/fused.zarr"
+        dsv2 = (spark.read.format("mdio").option("path", root)
+                .option("variables", "a,b").load())
+        for df in (scan_arrays(spark, root, {"a": "a", "b": "b"}, ranges={"i": (1324, 1340)}),
+                   dsv2.filter("i >= 1324 AND i < 1340")):
+            srv.clear_log()
+            assert sorted(tuple(r) for r in df.collect()) == want
+            for name in ("a", "b"):
+                shard = [r for r in srv.requests
+                         if r[0] == "GET" and r[1].endswith(f"/fused.zarr/{name}/c/1")]
+                # one suffix-range index read + one inner-chunk range read
+                assert len(shard) == 2, shard
+                assert all(r[2] is not None and r[3] == 206 for r in shard), shard
+
+
 def test_zonemap_prunes_chunk_gets_over_http(tmp_path, spark):
     """The full object-store read discipline in one test: zone-map pruning
     must prevent the chunk GET entirely over HTTP — the request log shows

@@ -369,6 +369,24 @@ def test_value_filter_pushdown(spark):
         scan_array(spark, root, "v", value_filter=("~", 1.0))
 
 
+def test_value_filter_validated_before_planning(spark):
+    """A bad value_filter raises even when the selection is empty: the
+    check runs before the empty-selection early return."""
+    root = _fresh("sp5b")
+    st = ZarrStore.create(root, version=2)
+    st.create_array("v", shape=(100,), chunks=(10,), dtype="float64", dims=("x",))
+    st.create_array("c", shape=(100,), chunks=(10,), dtype="complex64", dims=("x",))
+    st.create_array("h", shape=(100,), chunks=(10,), dtype={"fields": [
+        {"name": "a", "format": "int32"}]}, dims=("x",))
+    st.consolidate()
+    empty = {"x": (0, 0)}
+    with pytest.raises(ValueError, match="unsupported value_filter op"):
+        scan_array(spark, root, "v", ranges=empty, value_filter=("~", 1))
+    for var in ("c", "h"):
+        with pytest.raises(ValueError, match="scalar arrays only"):
+            scan_array(spark, root, var, ranges=empty, value_filter=(">", 1))
+
+
 def test_plan_chunks_empty_selection():
     root = _fresh("sp3")
     st = ZarrStore.create(root, version=2)

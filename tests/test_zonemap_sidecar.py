@@ -293,6 +293,49 @@ def test_pruning_report_driver_and_distributed(spark, tmp_path, monkeypatch):
     with _pt.raises(ValueError, match="SparkSession"):
         zonemap.pruning_report(root, "v", (">=", 750.0))
     monkeypatch.undo()
+    # box + value filter: the report, scan_array and format("mdio") plan
+    # and keep the same chunks (one planner, one keeper) and agree on rows
+    import pickle
+    import re
+
+    from mdio_cpp_spark.sources.datasource import register
+    from mdio_cpp_spark.sources.reader import plan_chunks
+
+    box, vf = {"i": (250, 950)}, (">=", 650.0)
+    rep_box = zonemap.pruning_report(root, "v", vf, ranges=box)
+    assert rep_box == {"planned": 8, "kept": 3, "pruned": 5, "source": "sidecar"}
+    sa = scan_array(spark, root, "v", ranges=box, value_filter=vf)
+    sa_plan = sa._jdf.queryExecution().optimizedPlan().toString()
+    sa_kept = int(re.search(r"Range \(0, (\d+),", sa_plan).group(1))
+    sa_planned = plan_chunks(ZarrStore.open(root).array_meta("v"), box)[1]
+    register(spark)
+    ds = (spark.read.format("mdio").option("path", root).option("variable", "v")
+          .load().filter("i >= 250 AND i < 950 AND value >= 650.0"))
+    ds_rows = sorted(ds.collect())
+    ds_planned = ds_kept = 0
+    todo = [ds._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        while True:  # unwrap adaptive plans and their query stages
+            kind = node.getClass().getSimpleName()
+            if kind == "AdaptiveSparkPlanExec":
+                node = node.executedPlan()
+            elif kind.endswith("QueryStageExec"):
+                node = node.plan()
+            else:
+                break
+        if node.getClass().getSimpleName() == "BatchScanExec":
+            parts = node.inputPartitions().iterator()
+            while parts.hasNext():
+                p = pickle.loads(bytes(parts.next().pickedPartition()))
+                ds_planned = int(np.prod(p.grid_lens))
+                ds_kept += len(p.ids) if p.ids is not None else p.end - p.start
+        kids = node.children().iterator()
+        while kids.hasNext():
+            todo.append(kids.next())
+    assert (sa_planned, sa_kept) == (ds_planned, ds_kept) == (8, 3)
+    assert sorted(sa.collect()) == ds_rows
+    assert [r["i"] for r in ds_rows] == list(range(650, 900))
     # no stats → nothing prunable
     root2, _ = _mk_store(tmp_path / "nostats")
     rep3 = zonemap.pruning_report(root2, "v", (">=", 750.0))
@@ -404,3 +447,14 @@ def test_sidecar_build_end_to_end_on_sharded_store(spark, tmp_path):
     assert got == list(range(4500, 5000))  # rows with 2i+1 >= 9000
     rep = zonemap.pruning_report(root, "v", (">=", 9000.0))
     assert rep == {"planned": 4, "kept": 1, "pruned": 3, "source": "sidecar"}
+
+
+def test_zone_pruned_scan_array_plans_no_exchange(spark, tmp_path):
+    """Driver-tier survivors ride the scan's task closure: the plan is the
+    same spark.range → mapInPandas as an unpruned scan, with no exchange."""
+    root, _ = _mk_store(tmp_path)
+    zonemap.build_sidecar_stats(spark, root, "v")
+    df = scan_array(spark, root, "v", value_filter=(">=", 750.0))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Range (0, 2," in plan
+    assert sorted(r["i"] for r in df.collect()) == list(range(750, 900))
