@@ -20,12 +20,14 @@ fused and stream reads (sources/datasource.py), and
     in DSv2 partitions) and each task unravels its ids with ``chunk_coords``.
     At 100 TB (~12M chunks of 8 MiB) the manifest stays a lazy range.
     ``task_count`` sizes the task list for every front end.
-  * Executors run ``decode_frames``: chunk bytes prefetch in bounded order
-    (sharded arrays by partial shard read), each chunk becomes one
-    long-form frame for 1..N variables on the grid (``chunk_frame``), and
-    row masks (value predicates, dim member lists) apply in numpy before
-    the Arrow boundary. Absent chunks synthesize the fill value
-    (dataset_factory.h:500-545 semantics) without reading anything.
+  * Executors run ``decode_frames``: chunks fetch and decode concurrently
+    on ``zarr_store.map_chunks``, the bounded in-order pool the driver's
+    ``read_array`` and ``write_array_numpy`` also use (sharded arrays by
+    partial shard read); each chunk becomes one long-form frame for 1..N
+    variables on the grid (``chunk_frame``), and row masks (value
+    predicates, dim member lists) apply in numpy before the Arrow boundary.
+    Absent chunks synthesize the fill value (dataset_factory.h:500-545
+    semantics) without reading anything.
   * Output is long/tidy form: one row per cell, dimension-index columns
     (int64) + value column(s). Struct dtypes emit one column per (selected)
     field — nested-field pruning happens at decode time, replacing the
@@ -44,7 +46,13 @@ from pyspark.sql import types as T
 
 from mdio_cpp_spark.schema.types import SCALAR_TYPES
 from mdio_cpp_spark.sources import zonemap as _zonemap
-from mdio_cpp_spark.sources.zarr_store import ZarrArrayMeta, ZarrStore, _clamped_box, chunk_ranges
+from mdio_cpp_spark.sources.zarr_store import (
+    ZarrArrayMeta,
+    ZarrStore,
+    _clamped_box,
+    chunk_ranges,
+    map_chunks,
+)
 
 __all__ = ["scan_array", "scan_arrays", "plan_chunks", "scan_schema"]
 
@@ -251,9 +259,6 @@ def task_count(n_chunks: int, chunks_per_task: int, par: int) -> int:
 
 # ------------------------------------------------------------------- execute
 
-# in-flight chunk byte fetches per scan task (see _fetch_blocks)
-_PREFETCH_DEPTH = 4
-
 # value predicates pushable into the decoder: op name → numpy comparator
 _VALUE_OPS = {
     ">=": lambda v, x: v >= x,
@@ -333,38 +338,16 @@ def _fetch_blocks(
     coords_iter: Iterable[tuple[int, ...]],
 ) -> Iterator[tuple[tuple[int, ...], dict[str, np.ndarray | None]]]:
     """(coords, {variable: decoded block, None if absent}) per chunk, in
-    input order. Byte fetches run _PREFETCH_DEPTH chunks ahead of the decode
-    on a small thread pool — on local disk this is noise, but at
-    object-store latency it overlaps the GET round-trips with
-    decompress/decode, which is the difference between latency-bound and
-    bandwidth-bound scans. Decodes stay in submission order, so output is
-    deterministic and memory is bounded by _PREFETCH_DEPTH raw chunks.
-    Sharded arrays fetch by box-aware PARTIAL shard read (index + touched
-    inner chunks via range reads), which also decodes."""
-    # imported here, in the executor: the driver-only engine import skips them
-    from collections import deque
-    from concurrent.futures import ThreadPoolExecutor
-
-    def fetch(meta, coords):
-        if meta.shard is not None:
-            return store.decode_chunk_box(meta, coords, box)
-        return store.read_bytes(meta.chunk_key(coords))
-
-    def done(coords, futs):
-        return coords, {
-            m.name: f.result() if m.shard is not None else store.decode_raw(m, f.result())
-            for m, f in zip(metas, futs)
-        }
-
-    window = max(1, _PREFETCH_DEPTH // len(metas))
-    with ThreadPoolExecutor(max_workers=_PREFETCH_DEPTH) as pool:
-        pending = deque()
-        for coords in coords_iter:
-            pending.append((coords, [pool.submit(fetch, m, coords) for m in metas]))
-            if len(pending) >= window:
-                yield done(*pending.popleft())
-        while pending:
-            yield done(*pending.popleft())
+    input order. Each chunk's fetch and decode run on ``map_chunks``'s
+    bounded pool: at object-store latency the GET round-trips overlap, and
+    the GIL-releasing decoders (zlib, gzip) overlap too. At most
+    ``_PREFETCH_DEPTH`` chunks are in flight, each holding one block per
+    variable. Sharded arrays fetch by box-aware PARTIAL shard read (index +
+    touched inner chunks via range reads)."""
+    return map_chunks(
+        lambda c: {m.name: store.decode_chunk_box(m, c, box) for m in metas},
+        coords_iter,
+    )
 
 
 def decode_frames(

@@ -29,7 +29,7 @@ import itertools
 import json
 import math
 from dataclasses import dataclass, field
-from typing import Any, Iterator
+from typing import Any, Callable, Iterable, Iterator
 
 import numpy as np
 
@@ -54,6 +54,11 @@ from mdio_cpp_spark.schema.types import (
 # attrs key of the per-chunk [min,max] zone-map manifest (sources/zonemap.py
 # builds/publishes it; both writers keep it coherent on chunk writes)
 CHUNK_STATS_ATTR = "mdio:chunk_stats"
+
+# chunks in flight per map_chunks call (fetched bytes + decoded block each):
+# the bound on a read's, write's or scan task's extra memory, and its thread
+# count
+_PREFETCH_DEPTH = 4
 
 
 class ConsolidatedMetadataConflict(RuntimeError):
@@ -1057,10 +1062,9 @@ class ZarrStore:
 
     # ------------------------------------------------------------- chunk I/O
 
-    def decode_raw(self, meta: ZarrArrayMeta, raw: bytes | None) -> np.ndarray | None:
-        """Decode already-fetched chunk bytes; None stays None (absent chunk,
-        fill semantics upstream). Split from decode_chunk so the scan's
-        prefetcher can overlap byte fetches with decodes."""
+    def decode_chunk(self, meta: ZarrArrayMeta, coords: tuple[int, ...]) -> np.ndarray | None:
+        """Read+decode one chunk; None if absent (fill semantics upstream)."""
+        raw = self.read_bytes(meta.chunk_key(coords))
         if raw is None:
             return None
         if meta.zarr_version == 2:
@@ -1076,10 +1080,6 @@ class ZarrStore:
         if meta.stored_dtype is not None:
             arr = arr.astype(meta.np_dtype)  # byteswap big-endian → native
         return arr.reshape(meta.chunks, order=meta.order)
-
-    def decode_chunk(self, meta: ZarrArrayMeta, coords: tuple[int, ...]) -> np.ndarray | None:
-        """Read+decode one chunk; None if absent (fill semantics upstream)."""
-        return self.decode_raw(meta, self.read_bytes(meta.chunk_key(coords)))
 
     def decode_chunk_box(
         self,
@@ -1210,20 +1210,25 @@ class ZarrStore:
     # ----------------------------------------------- driver-side array reads
 
     def read_array(self, name: str, ranges: dict[str, tuple[int, int]] | None = None) -> np.ndarray:
-        """Materialize an array (or a half-open sliced box of it) on the
-        driver — the Variable::Read analog for SMALL arrays (dimension
-        coordinates, header variables). Large-array scans go through the
-        Spark reader instead."""
+        """Materialize an array, or a half-open sliced box of it, on the
+        driver — the Variable::Read analog: ``MdioVariable.read`` slices,
+        dimension coordinates, header variables and the SEG-Y export tasks.
+        The touched chunks fetch and decode concurrently (``map_chunks``),
+        and the caller copies each block into the result in chunk order.
+        Whole-volume scans go through the Spark reader instead."""
         meta = self.array_meta(name)
         sel = _clamped_box(meta, ranges)
         out_shape = tuple(hi - lo for lo, hi in sel)
         out = np.full(out_shape, meta.fill_scalar(), dtype=meta.np_dtype)
-        for coords in chunks_overlapping(meta, sel):
-            # box-aware: a window read of a SHARDED array fetches the shard
-            # index + only the intersecting inner chunks (ranged GETs on
-            # object stores), never the whole shard object; plain chunks
-            # fall through to the whole-object path inside decode_chunk_box
-            block = self.decode_chunk_box(meta, coords, sel)
+        # box-aware: a window read of a SHARDED array fetches the shard
+        # index + only the intersecting inner chunks (ranged GETs on object
+        # stores), never the whole shard object; plain chunks fall through
+        # to the whole-object path inside decode_chunk_box
+        for coords, block in map_chunks(
+            lambda c: self.decode_chunk_box(meta, c, sel), chunks_overlapping(meta, sel)
+        ):
+            if block is None:
+                continue  # already fill-initialized
             origin = tuple(c * s for c, s in zip(coords, meta.chunks))
             src_sel, dst_sel = [], []
             for d in range(meta.ndim):
@@ -1231,20 +1236,29 @@ class ZarrStore:
                 hi = min(sel[d][1], origin[d] + meta.chunks[d])
                 src_sel.append(slice(lo - origin[d], hi - origin[d]))
                 dst_sel.append(slice(lo - sel[d][0], hi - sel[d][0]))
-            if block is None:
-                continue  # already fill-initialized
             out[tuple(dst_sel)] = block[tuple(src_sel)]
         return out
 
     def write_array_numpy(self, name: str, arr: np.ndarray, origin: tuple[int, ...] | None = None) -> None:
-        """Driver-side chunk-aligned write of a (sub-)array. Used for small
-        arrays (dimension coordinates) and tests; the Spark writer handles
-        scale. Unaligned origins do read-modify-write per touched chunk —
-        single-writer only (the reference flags concurrent unaligned writes
-        as UB, USER_GUIDE 'Write')."""
+        """Driver-side write of a (sub-)array at ``origin`` (default: all
+        zeros). Used for small arrays (dimension coordinates), patch writes
+        and tests; the Spark writer handles scale. Each touched chunk is a
+        read-modify-write (decode, patch, encode, put), run concurrently by
+        ``map_chunks`` — single-writer only (the reference flags concurrent
+        unaligned writes as UB, USER_GUIDE 'Write'). A box outside the
+        array's domain raises ValueError before any chunk is touched."""
         meta = self.array_meta(name)
-        origin = origin or tuple(0 for _ in meta.shape)
-        box = tuple((o, o + s) for o, s in zip(origin, arr.shape))
+        origin = tuple(origin) if origin is not None else (0,) * meta.ndim
+        box = tuple((int(o), int(o) + s) for o, s in zip(origin, arr.shape))
+        if (
+            arr.ndim != meta.ndim
+            or len(origin) != meta.ndim
+            or any(lo < 0 or hi > n for (lo, hi), n in zip(box, meta.shape))
+        ):
+            raise ValueError(
+                f"write to {name!r} out of range: origin {origin} + block "
+                f"shape {arr.shape} does not fit the array's shape {meta.shape}"
+            )
         zone_eligible = not meta.is_struct and meta.np_dtype.kind in "biuf"
         manifest = (
             dict(meta.attrs[CHUNK_STATS_ATTR])
@@ -1257,7 +1271,9 @@ class ZarrStore:
 
             if _zm.sidecar_info(meta) is not None:
                 side_zones = {}
-        for coords in chunks_overlapping(meta, box):
+        zones = manifest if manifest is not None else side_zones
+
+        def rewrite(coords: tuple[int, ...]) -> list[float] | None:
             corigin = tuple(c * s for c, s in zip(coords, meta.chunks))
             block = self.decode_chunk(meta, coords)
             if block is None:
@@ -1272,20 +1288,20 @@ class ZarrStore:
                 src_sel.append(slice(lo - box[d][0], hi - box[d][0]))
             block[tuple(dst_sel)] = arr[tuple(src_sel)]
             self.write_chunk(meta, coords, block)
-            if manifest is not None or side_zones is not None:
-                # zone-map coherence for the driver-side writer (mirrors the
-                # Spark writer): refresh the touched chunk's [min,max] over
-                # its valid extent so stale stats can never wrongly prune
-                valid = tuple(
-                    slice(0, min(meta.chunks[d], meta.shape[d] - corigin[d]))
-                    for d in range(meta.ndim)
-                )
-                v = block[valid]
-                key = ",".join(str(c) for c in coords)
-                if manifest is not None:
-                    manifest[key] = zone_of(v)
-                else:
-                    side_zones[key] = zone_of(v)
+            if zones is None:
+                return None
+            # zone-map coherence for the driver-side writer (mirrors the
+            # Spark writer): refresh the touched chunk's [min,max] over its
+            # valid extent so stale stats can never wrongly prune
+            valid = tuple(
+                slice(0, min(meta.chunks[d], meta.shape[d] - corigin[d]))
+                for d in range(meta.ndim)
+            )
+            return zone_of(block[valid])
+
+        for coords, zone in map_chunks(rewrite, chunks_overlapping(meta, box)):
+            if zones is not None:
+                zones[",".join(str(c) for c in coords)] = zone
         if manifest is not None:
             self.update_array_attrs(name, {**meta.attrs, CHUNK_STATS_ATTR: manifest})
             self.consolidate()
@@ -1293,6 +1309,40 @@ class ZarrStore:
             from mdio_cpp_spark.sources import zonemap as _zm
 
             _zm.apply_zone_updates(self.root, name, side_zones)
+
+
+def map_chunks(
+    job: Callable[[Any], Any], items: Iterable[Any], depth: int = _PREFETCH_DEPTH
+) -> Iterator[tuple[Any, Any]]:
+    """``(item, job(item))`` for each item, in input order, with the jobs
+    run on a per-call pool of ``depth`` threads — the one chunk pipeline
+    behind driver reads, driver writes and executor scans. At most ``depth``
+    jobs are in flight, so memory stays bounded by ``depth`` chunks and the
+    output is deterministic. ``items`` is consumed lazily on the calling
+    thread. Byte fetches (and the zlib/gzip decoders, which release the GIL)
+    overlap across chunks; on object stores this hides the GET round-trips.
+
+    A job's exception re-raises here, in item order. When the caller stops
+    (an exception, or closing the generator), jobs not yet started are
+    cancelled and the pool's threads are joined before control returns, so
+    no job outlives the call and nothing past the in-flight window runs."""
+    # imported here: the driver-only engine import skips them
+    from collections import deque
+    from concurrent.futures import ThreadPoolExecutor
+
+    pool = ThreadPoolExecutor(max_workers=depth)
+    try:
+        pending: deque = deque()
+        for item in items:
+            pending.append((item, pool.submit(job, item)))
+            if len(pending) >= depth:
+                item, fut = pending.popleft()
+                yield item, fut.result()
+        while pending:
+            item, fut = pending.popleft()
+            yield item, fut.result()
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
 
 
 def zone_of(v: "np.ndarray") -> list[float] | None:

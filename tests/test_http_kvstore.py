@@ -512,3 +512,67 @@ def test_read_array_window_on_sharded_store_uses_ranged_gets(tmp_path):
         gets = [r for r in srv.requests if r[0] == "GET" and "/c/" in r[1]]
         assert gets and all(r[2] is not None for r in gets), gets
         assert all(r[3] == 206 for r in gets)
+        # a multi-chunk box across two shards: the last inner chunk of
+        # shard 0 and the first of shard 1, each by index + one ranged GET
+        srv.clear_log()
+        got = st2.read_array("x", ranges={"i": (16_300, 16_500)})
+        assert np.array_equal(got, vals[16_300:16_500])
+        gets = [r for r in srv.requests if r[0] == "GET" and "/c/" in r[1]]
+        assert sorted(r[1].rsplit("/", 1)[-1] for r in gets) == ["0", "0", "1", "1"]
+        assert all(r[2] is not None and r[3] == 206 for r in gets), gets
+
+
+def test_read_array_fetches_each_chunk_once_with_bounded_concurrency(tmp_path):
+    """A 16-chunk read_array over HTTP GETs the consolidated metadata and
+    each of its 16 chunk objects exactly once, and nothing else, while more
+    than one but at most _PREFETCH_DEPTH fetches are in flight at a time."""
+    import threading
+    import time
+    from collections import Counter
+
+    from mdio_cpp_spark.sources.zarr_store import _PREFETCH_DEPTH
+
+    local = str(tmp_path / "grid.zarr")
+    st = ZarrStore.create(local, version=2)
+    st.create_array("v", shape=(64, 64), chunks=(8, 8), dtype="float32",
+                    dims=("a", "b"))
+    vals = np.arange(64 * 64, dtype="f4").reshape(64, 64)
+    st.write_array_numpy("v", vals)
+    st.consolidate()
+
+    class Gauge:
+        """Counts concurrent reads through a kvstore; each read is slowed
+        so overlapping fetches actually overlap."""
+
+        def __init__(self, inner):
+            self.inner, self.now, self.peak = inner, 0, 0
+            self.lock = threading.Lock()
+
+        def read(self, key):
+            with self.lock:
+                self.now += 1
+                self.peak = max(self.peak, self.now)
+            try:
+                time.sleep(0.02)
+                return self.inner.read(key)
+            finally:
+                with self.lock:
+                    self.now -= 1
+
+        def __getattr__(self, name):
+            return getattr(self.inner, name)
+
+    with LoopbackHttpServer(str(tmp_path)) as srv:
+        st2 = ZarrStore.open(f"{srv.url}/grid.zarr")
+        st2.array_meta("v")
+        st2._kv = gauge = Gauge(st2._kv)
+        srv.clear_log()
+        # rows 8..40 x cols 20..44: chunk rows 1-4 x chunk cols 2-5
+        got = st2.read_array("v", ranges={"a": (8, 40), "b": (20, 44)})
+        assert np.array_equal(got, vals[8:40, 20:44])
+        gets = Counter(r[1].split("/grid.zarr/", 1)[1] for r in srv.requests
+                       if r[0] == "GET")
+        want = Counter([".zmetadata"] + [f"v/{i}.{j}" for i in range(1, 5)
+                                         for j in range(2, 6)])
+        assert gets == want
+        assert 1 < gauge.peak <= _PREFETCH_DEPTH, gauge.peak

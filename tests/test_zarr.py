@@ -163,6 +163,8 @@ def test_store_roundtrip_versions(version):
     st2 = ZarrStore.open(root)
     assert st2.version == version
     assert np.array_equal(st2.read_array("a"), arr)
+    # a multi-chunk box: chunks 0-4, clipped at both ends
+    assert np.array_equal(st2.read_array("a", ranges={"i": (50, 290)}), arr[50:290])
     # partial chunk at the edge: 300 = 4*64 + 44 → last chunk padded
     assert st2.array_meta("a").grid_shape() == (5,)
 
@@ -178,6 +180,10 @@ def test_unwritten_chunks_read_fill():
     assert (got[:40] == 2**32 - 1).all()
     assert np.array_equal(got[40:50], np.arange(10))
     assert (got[50:] == 2**32 - 1).all()
+    # a multi-chunk box over absent, written, absent chunks (3, 4, 5)
+    box = st.read_array("u", ranges={"i": (35, 55)})
+    assert np.array_equal(box, got[35:55])
+    assert (box[:5] == 2**32 - 1).all() and (box[15:] == 2**32 - 1).all()
 
 
 # ------------------------------------------------------------ dataset model
@@ -476,6 +482,126 @@ def test_partial_write_preserves_existing_cells(spark):
     assert np.array_equal(got, exp)
 
 
+def _store_listing(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def test_write_outside_domain_raises_before_any_chunk():
+    """A driver-side write whose box leaves the array's domain (a negative
+    or too-large origin, a block running past the edge) or whose rank does
+    not match raises ValueError naming the array, the box and the shape —
+    and touches no chunk (TensorStore's OutOfRange)."""
+    root = _fresh("oob")
+    st = ZarrStore.create(root, version=2)
+    st.create_array("a", shape=(70, 70), chunks=(32, 32), dtype="float32",
+                    dims=("x", "y"))
+    st.write_array_numpy("a", np.ones((70, 70), dtype="f4"))
+    before = _store_listing(root)
+    cases = [
+        (np.zeros((8, 8), "f4"), (-2, 0)),   # would create chunk -1.0
+        (np.zeros((8, 8), "f4"), (100, 0)),  # would create chunk 3.0
+        (np.zeros((16, 8), "f4"), (60, 0)),  # past the edge: into padding
+        (np.zeros(8, "f4"), (0, 0)),         # arr.ndim mismatch
+        (np.zeros((8, 8), "f4"), (0,)),      # len(origin) mismatch
+    ]
+    for arr, origin in cases:
+        with pytest.raises(ValueError, match=r"'a'.*\(70, 70\)"):
+            st.write_array_numpy("a", arr, origin=origin)
+        assert _store_listing(root) == before, origin
+    # the whole domain, edge to edge, still writes
+    st.write_array_numpy("a", np.zeros((6, 6), "f4"), origin=(64, 64))
+    assert (st.read_array("a")[64:, 64:] == 0).all()
+
+
+def test_chunk_map_failure_semantics():
+    """A truncated zlib stream in one of a 16-chunk slice's chunks: the
+    read raises the codec's own error; a write over it raises too, leaves
+    no pool thread running, and writes nothing past the in-flight window."""
+    import threading
+    import zlib
+
+    from mdio_cpp_spark.sources.zarr_store import _PREFETCH_DEPTH
+
+    root = _fresh("trunc")
+    st = ZarrStore.create(root, version=2)
+    st.create_array("v", shape=(160,), chunks=(10,), dtype="float64", dims=("i",),
+                    compressor={"id": "zlib", "level": 5})
+    vals = np.arange(160, dtype="f8")
+    st.write_array_numpy("v", vals)
+    bad = 2
+    path = os.path.join(root, "v", str(bad))
+    with open(path, "rb") as f:
+        raw = f.read()
+    with open(path, "wb") as f:
+        f.write(raw[: len(raw) // 2])
+    before = _store_listing(root)
+    threads = set(threading.enumerate())
+
+    def new_pool_threads():
+        return [t for t in threading.enumerate()
+                if t not in threads and t.name.startswith("ThreadPoolExecutor")]
+
+    with pytest.raises(zlib.error):
+        st.read_array("v")
+    assert new_pool_threads() == []
+    with pytest.raises(zlib.error):
+        st.write_array_numpy("v", vals + 1000.0)
+    assert new_pool_threads() == []
+    after = _store_listing(root)
+    for k in range(16):
+        key = os.path.join("v", str(k))
+        if k < bad:  # finished before the failing chunk was collected
+            assert after[key] != before[key], k
+        elif k >= bad + _PREFETCH_DEPTH:  # never submitted
+            assert after[key] == before[key], k
+    assert after[os.path.join("v", str(bad))] == before[os.path.join("v", str(bad))]
+
+
+def test_map_chunks_order_and_bound_under_switching():
+    """More jobs in flight than cores, jobs finishing out of order, a short
+    GIL switch interval: results still come back in input order, each job
+    runs once, and in-flight jobs never exceed the depth."""
+    import random
+    import sys
+    import threading
+    import time
+
+    from mdio_cpp_spark.sources.zarr_store import map_chunks
+
+    depth = 2 * (os.cpu_count() or 1)
+    lock = threading.Lock()
+    state = {"now": 0, "peak": 0, "runs": 0}
+    rng = random.Random(7)
+    delays = [rng.uniform(0, 0.004) for _ in range(200)]
+
+    def job(i):
+        with lock:
+            state["now"] += 1
+            state["runs"] += 1
+            state["peak"] = max(state["peak"], state["now"])
+        time.sleep(delays[i])
+        with lock:
+            state["now"] -= 1
+        return i * i
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        t0 = time.monotonic()
+        got = list(map_chunks(job, range(200), depth))
+        assert time.monotonic() - t0 < 30
+    finally:
+        sys.setswitchinterval(old)
+    assert got == [(i, i * i) for i in range(200)]
+    assert state["runs"] == 200 and state["now"] == 0
+    assert 1 < state["peak"] <= depth
+
+
 def test_unlabeled_dim_ranges_apply():
     # regression: fallback label mismatch ('0' vs 'dim_0') silently dropped
     # range filters for arrays without dimension labels
@@ -659,6 +785,18 @@ def test_big_endian_external_store_reads(spark):
     assert np.array_equal(st.read_array("v"), np.arange(10))
     pdf = scan_array(spark, root, "v").orderBy("dim_0").toPandas()
     assert list(pdf["value"]) == list(range(10))
+    # a multi-chunk box: the same >i4 values in chunks of 4 (three chunks,
+    # the last one padded)
+    os.makedirs(os.path.join(root, "m"), exist_ok=True)
+    with open(os.path.join(root, "m", ".zarray"), "w") as f:
+        json.dump({**zarray, "chunks": [4], "fill_value": -1}, f)
+    for k in range(3):
+        chunk = np.full(4, -1, dtype=">i4")
+        chunk[: len(vals[4 * k:4 * k + 4])] = vals[4 * k:4 * k + 4]
+        with open(os.path.join(root, "m", str(k)), "wb") as f:
+            f.write(zlib.compress(chunk.tobytes()))
+    got = ZarrStore.open(root).read_array("m", ranges={"dim_0": (2, 10)})
+    assert got.dtype == np.dtype("int32") and got.tolist() == list(range(2, 10))
 
 
 def _write_v2_single_chunk(tag: str, zarray: dict, chunk: bytes) -> str:
@@ -852,6 +990,16 @@ def test_v2_big_endian_struct_fields(spark):
     assert got["a"].tolist() == [1, -40, 7, 2**30]
     assert got["b"].tolist() == [2.5, 1e9, -0.125, 0.0]
     assert got["c"].tolist() == [3, -2, 9, 0]
+    # a multi-chunk box: the same records in chunks of 1 (four chunks)
+    with open(os.path.join(root, "v", ".zarray")) as f:
+        zarray = json.load(f)
+    with open(os.path.join(root, "v", ".zarray"), "w") as f:
+        json.dump({**zarray, "chunks": [1]}, f)
+    for k in range(4):
+        with open(os.path.join(root, "v", str(k)), "wb") as f:
+            f.write(zlib.compress(vals[k:k + 1].tobytes()))
+    box = ZarrStore.open(root).read_array("v", ranges={"dim_0": (1, 4)})
+    assert box.tolist() == got[1:4].tolist()
     pdf = scan_array(spark, root, "v", fields=["a", "c"]).orderBy("dim_0").toPandas()
     assert list(pdf["a"]) == [1, -40, 7, 2**30]
     assert list(pdf["c"]) == [3, -2, 9, 0]
