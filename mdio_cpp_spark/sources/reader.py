@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from mdio_cpp_spark.schema.types import SCALAR_TYPES
 from mdio_cpp_spark.sources import zonemap as _zonemap
 from mdio_cpp_spark.sources.zarr_store import (
+    _PREFETCH_DEPTH,
     ZarrArrayMeta,
     ZarrStore,
     _clamped_box,
@@ -340,13 +341,16 @@ def _fetch_blocks(
     """(coords, {variable: decoded block, None if absent}) per chunk, in
     input order. Each chunk's fetch and decode run on ``map_chunks``'s
     bounded pool: at object-store latency the GET round-trips overlap, and
-    the GIL-releasing decoders (zlib, gzip) overlap too. At most
-    ``_PREFETCH_DEPTH`` chunks are in flight, each holding one block per
-    variable. Sharded arrays fetch by box-aware PARTIAL shard read (index +
-    touched inner chunks via range reads)."""
+    the GIL-releasing decoders (zlib, gzip) overlap too. Each chunk in
+    flight holds one block per variable, so a fused scan of N variables
+    keeps ``max(1, _PREFETCH_DEPTH // N)`` chunks in flight: about
+    ``_PREFETCH_DEPTH`` blocks per task whatever N is. Sharded arrays fetch
+    by box-aware PARTIAL shard read (index + touched inner chunks via range
+    reads)."""
     return map_chunks(
         lambda c: {m.name: store.decode_chunk_box(m, c, box) for m in metas},
         coords_iter,
+        max(1, _PREFETCH_DEPTH // len(metas)),
     )
 
 

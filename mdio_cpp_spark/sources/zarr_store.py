@@ -55,9 +55,10 @@ from mdio_cpp_spark.schema.types import (
 # builds/publishes it; both writers keep it coherent on chunk writes)
 CHUNK_STATS_ATTR = "mdio:chunk_stats"
 
-# chunks in flight per map_chunks call (fetched bytes + decoded block each):
-# the bound on a read's, write's or scan task's extra memory, and its thread
-# count
+# chunk jobs in flight per map_chunks call, and its thread count: the bound
+# on a driver read's or write's extra memory (fetched bytes + decoded block
+# each). A fused scan of N variables runs max(1, 4 // N) chunks at once, so a
+# scan task also holds about 4 decoded blocks
 _PREFETCH_DEPTH = 4
 
 
@@ -1246,7 +1247,9 @@ class ZarrStore:
         read-modify-write (decode, patch, encode, put), run concurrently by
         ``map_chunks`` — single-writer only (the reference flags concurrent
         unaligned writes as UB, USER_GUIDE 'Write'). A box outside the
-        array's domain raises ValueError before any chunk is touched."""
+        array's domain raises ValueError before any chunk is touched. If a
+        chunk's job raises, the chunks already rewritten (also those the
+        pool finished after the failure) still get their zone stats."""
         meta = self.array_meta(name)
         origin = tuple(origin) if origin is not None else (0,) * meta.ndim
         box = tuple((int(o), int(o) + s) for o, s in zip(origin, arr.shape))
@@ -1273,7 +1276,9 @@ class ZarrStore:
                 side_zones = {}
         zones = manifest if manifest is not None else side_zones
 
-        def rewrite(coords: tuple[int, ...]) -> list[float] | None:
+        rewritten: dict[tuple[int, ...], list[float] | None] = {}
+
+        def rewrite(coords: tuple[int, ...]) -> None:
             corigin = tuple(c * s for c, s in zip(coords, meta.chunks))
             block = self.decode_chunk(meta, coords)
             if block is None:
@@ -1289,26 +1294,32 @@ class ZarrStore:
             block[tuple(dst_sel)] = arr[tuple(src_sel)]
             self.write_chunk(meta, coords, block)
             if zones is None:
-                return None
+                return
             # zone-map coherence for the driver-side writer (mirrors the
             # Spark writer): refresh the touched chunk's [min,max] over its
-            # valid extent so stale stats can never wrongly prune
+            # valid extent so stale stats can never wrongly prune. The job
+            # records it, so a chunk that finishes after another chunk's
+            # job raised is not left with its old stats
             valid = tuple(
                 slice(0, min(meta.chunks[d], meta.shape[d] - corigin[d]))
                 for d in range(meta.ndim)
             )
-            return zone_of(block[valid])
+            rewritten[coords] = zone_of(block[valid])
 
-        for coords, zone in map_chunks(rewrite, chunks_overlapping(meta, box)):
-            if zones is not None:
-                zones[",".join(str(c) for c in coords)] = zone
-        if manifest is not None:
-            self.update_array_attrs(name, {**meta.attrs, CHUNK_STATS_ATTR: manifest})
-            self.consolidate()
-        elif side_zones:
-            from mdio_cpp_spark.sources import zonemap as _zm
+        try:
+            for _ in map_chunks(rewrite, chunks_overlapping(meta, box)):
+                pass
+        finally:
+            # map_chunks has joined its threads by now; apply in chunk order
+            for coords in sorted(rewritten):
+                zones[",".join(str(c) for c in coords)] = rewritten[coords]
+            if rewritten and manifest is not None:
+                self.update_array_attrs(name, {**meta.attrs, CHUNK_STATS_ATTR: manifest})
+                self.consolidate()
+            elif rewritten:
+                from mdio_cpp_spark.sources import zonemap as _zm
 
-            _zm.apply_zone_updates(self.root, name, side_zones)
+                _zm.apply_zone_updates(self.root, name, side_zones)
 
 
 def map_chunks(

@@ -521,11 +521,12 @@ def test_write_outside_domain_raises_before_any_chunk():
 def test_chunk_map_failure_semantics():
     """A truncated zlib stream in one of a 16-chunk slice's chunks: the
     read raises the codec's own error; a write over it raises too, leaves
-    no pool thread running, and writes nothing past the in-flight window."""
+    no pool thread running, writes nothing past the in-flight window, and
+    leaves every rewritten chunk with its new zone stats."""
     import threading
     import zlib
 
-    from mdio_cpp_spark.sources.zarr_store import _PREFETCH_DEPTH
+    from mdio_cpp_spark.sources.zarr_store import CHUNK_STATS_ATTR, _PREFETCH_DEPTH, zone_of
 
     root = _fresh("trunc")
     st = ZarrStore.create(root, version=2)
@@ -533,6 +534,8 @@ def test_chunk_map_failure_semantics():
                     compressor={"id": "zlib", "level": 5})
     vals = np.arange(160, dtype="f8")
     st.write_array_numpy("v", vals)
+    st.update_array_attrs("v", {**st.array_meta("v").attrs, CHUNK_STATS_ATTR: {
+        str(k): zone_of(vals[10 * k: 10 * k + 10]) for k in range(16)}})
     bad = 2
     path = os.path.join(root, "v", str(bad))
     with open(path, "rb") as f:
@@ -560,6 +563,56 @@ def test_chunk_map_failure_semantics():
         elif k >= bad + _PREFETCH_DEPTH:  # never submitted
             assert after[key] == before[key], k
     assert after[os.path.join("v", str(bad))] == before[os.path.join("v", str(bad))]
+    zones = ZarrStore.open(root).array_meta("v").attrs[CHUNK_STATS_ATTR]
+    for k in range(16):
+        key = os.path.join("v", str(k))
+        new = vals[10 * k: 10 * k + 10] + (1000.0 if after[key] != before[key] else 0.0)
+        assert zones[str(k)] == zone_of(new), k
+
+
+def test_fused_scan_bounds_blocks_in_flight():
+    """An executor scan of N variables keeps max(1, depth // N) chunks in
+    flight, so a task holds about _PREFETCH_DEPTH decoded blocks whatever
+    N is; one variable still overlaps several chunks."""
+    import threading
+    import time
+
+    from mdio_cpp_spark.sources.reader import _fetch_blocks
+    from mdio_cpp_spark.sources.zarr_store import _PREFETCH_DEPTH
+
+    root = _fresh("fusedcap")
+    st = ZarrStore.create(root, version=2)
+    names = [f"v{i}" for i in range(4)]
+    for n in names:
+        st.create_array(n, shape=(160,), chunks=(10,), dtype="float32", dims=("i",))
+        st.write_array_numpy(n, np.arange(160, dtype="f4"))
+    lock = threading.Lock()
+    state = {"now": 0, "peak": 0}
+    decode = st.decode_chunk_box
+
+    def gauged(meta, coords, box):
+        with lock:
+            state["now"] += 1
+            state["peak"] = max(state["peak"], state["now"])
+        time.sleep(0.005)
+        try:
+            return decode(meta, coords, box)
+        finally:
+            with lock:
+                state["now"] -= 1
+
+    st.decode_chunk_box = gauged
+    box = ((0, 160),)
+    for n_vars in (1, 2, 4):
+        state["peak"] = 0
+        metas = [st.array_meta(n) for n in names[:n_vars]]
+        got = list(_fetch_blocks(st, metas, box, [(k,) for k in range(16)]))
+        assert [c for c, _ in got] == [(k,) for k in range(16)]
+        assert all(set(b) == set(names[:n_vars]) for _, b in got)
+        cap = max(1, _PREFETCH_DEPTH // n_vars)
+        assert state["peak"] <= cap, (n_vars, state["peak"])
+        if n_vars == 1:
+            assert state["peak"] > 1
 
 
 def test_map_chunks_order_and_bound_under_switching():
