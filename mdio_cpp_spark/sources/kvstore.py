@@ -119,11 +119,24 @@ class LocalKVStore(KVStore):
         return os.path.join(self.root, key) if key else self.root
 
     def read(self, key: str) -> bytes | None:
-        path = self._path(key)
-        if not os.path.exists(path):
+        # four system calls (open, fstat, read, close) and no buffered file
+        # object: each call drops and retakes the GIL, which the chunk
+        # pool's threads contend for
+        try:
+            fd = os.open(self._path(key), os.O_RDONLY)
+        except (FileNotFoundError, NotADirectoryError):
             return None
-        with open(path, "rb") as f:
-            return f.read()
+        try:
+            size = os.fstat(fd).st_size
+            data = os.read(fd, size)
+            while len(data) < size:  # one read returns at most ~2 GiB
+                more = os.read(fd, size - len(data))
+                if not more:
+                    break
+                data += more
+            return data
+        finally:
+            os.close(fd)
 
     def size(self, key: str) -> int | None:
         path = self._path(key)

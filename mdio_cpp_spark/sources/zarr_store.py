@@ -28,6 +28,8 @@ from __future__ import annotations
 import itertools
 import json
 import math
+import os
+import threading
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Iterator
 
@@ -55,11 +57,17 @@ from mdio_cpp_spark.schema.types import (
 # builds/publishes it; both writers keep it coherent on chunk writes)
 CHUNK_STATS_ATTR = "mdio:chunk_stats"
 
-# chunk jobs in flight per map_chunks call, and its thread count: the bound
-# on a driver read's or write's extra memory (fetched bytes + decoded block
-# each). A fused scan of N variables runs max(1, 4 // N) chunks at once, so a
-# scan task also holds about 4 decoded blocks
+# chunk jobs in flight per map_chunks call: the bound on a driver read's or
+# write's extra memory (fetched bytes + decoded block each). A fused scan of
+# N variables runs max(1, 4 // N) chunks at once, so a scan task also holds
+# about 4 decoded blocks
 _PREFETCH_DEPTH = 4
+
+# kept threads of the process's chunk pool; the thread that calls map_chunks
+# runs jobs too, so a call works on two threads. A further thread adds speed
+# only while the host has a free core for it, so on a shared host it makes a
+# read's time swing with the neighbours' load
+_POOL_THREADS = 1
 
 
 class ConsolidatedMetadataConflict(RuntimeError):
@@ -1310,7 +1318,7 @@ class ZarrStore:
             for _ in map_chunks(rewrite, chunks_overlapping(meta, box)):
                 pass
         finally:
-            # map_chunks has joined its threads by now; apply in chunk order
+            # map_chunks has waited for its running jobs; apply in chunk order
             for coords in sorted(rewritten):
                 zones[",".join(str(c) for c in coords)] = rewritten[coords]
             if rewritten and manifest is not None:
@@ -1322,38 +1330,94 @@ class ZarrStore:
                 _zm.apply_zone_updates(self.root, name, side_zones)
 
 
+# the process's chunk pool: (pid, executor), made on first use (see _chunk_pool)
+_POOL: tuple[int, Any] | None = None
+_POOL_LOCK = threading.Lock()
+
+
+def _chunk_pool() -> Any:
+    """The one chunk pool of this process: ``_POOL_THREADS`` threads, made
+    on first use and kept. Keeping them saves each read the start-up
+    handshake and join of new threads, whose cost on a shared host varies
+    from one call to the next. A forked child (Spark forks its Python
+    workers from a daemon) has none of its parent's threads, so it makes
+    its own pool."""
+    global _POOL
+    with _POOL_LOCK:
+        if _POOL is None or _POOL[0] != os.getpid():
+            from concurrent.futures import ThreadPoolExecutor  # lazy: driver import skips it
+
+            _POOL = (os.getpid(), ThreadPoolExecutor(
+                max_workers=_POOL_THREADS, thread_name_prefix="mdio-chunk"))
+        return _POOL[1]
+
+
 def map_chunks(
     job: Callable[[Any], Any], items: Iterable[Any], depth: int = _PREFETCH_DEPTH
 ) -> Iterator[tuple[Any, Any]]:
-    """``(item, job(item))`` for each item, in input order, with the jobs
-    run on a per-call pool of ``depth`` threads — the one chunk pipeline
-    behind driver reads, driver writes and executor scans. At most ``depth``
-    jobs are in flight, so memory stays bounded by ``depth`` chunks and the
-    output is deterministic. ``items`` is consumed lazily on the calling
-    thread. Byte fetches (and the zlib/gzip decoders, which release the GIL)
-    overlap across chunks; on object stores this hides the GET round-trips.
+    """``(item, job(item))`` for each item, in input order — the one chunk
+    pipeline behind driver reads, driver writes and executor scans. At
+    most ``depth`` jobs are in flight, so memory stays bounded by ``depth``
+    chunks and the output is deterministic. ``items`` is consumed lazily
+    on the calling thread. Jobs run on the process's chunk pool and on the
+    calling thread: while the next result is not ready, the caller runs the
+    earliest job in the window that no pool thread has started, and waits
+    only when all of them have started. So a call never idles behind a
+    pool thread the host has not scheduled yet. Byte fetches (and the
+    zlib/gzip decoders, which release the GIL) overlap across chunks; on
+    object stores this hides the GET round-trips.
 
     A job's exception re-raises here, in item order. When the caller stops
     (an exception, or closing the generator), jobs not yet started are
-    cancelled and the pool's threads are joined before control returns, so
-    no job outlives the call and nothing past the in-flight window runs."""
-    # imported here: the driver-only engine import skips them
+    cancelled and the running ones are waited for before control returns,
+    so no job outlives the call and nothing past the in-flight window
+    runs."""
     from collections import deque
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import wait
 
-    pool = ThreadPoolExecutor(max_workers=depth)
+    pool = _chunk_pool()
+    # (item, future, slot): a job the caller takes over cancels its future
+    # and leaves (result, error) in its slot
+    window: deque = deque()
+
+    def run_here(item: Any, slot: list) -> None:
+        try:
+            slot.append((job(item), None))
+        except Exception as e:  # re-raised in item order by collect
+            slot.append((None, e))
+
+    def collect() -> tuple[Any, Any]:
+        item, fut, slot = window[0]
+        if not slot and fut.cancel():
+            run_here(item, slot)
+        while not slot and not fut.done():
+            # the head runs on a pool thread: run a later job no pool
+            # thread has started instead of waiting
+            for later, lfut, lslot in itertools.islice(window, 1, None):
+                if not lslot and lfut.cancel():
+                    run_here(later, lslot)
+                    break
+            else:
+                wait([fut])
+        window.popleft()
+        if not slot:
+            return item, fut.result()
+        value, err = slot[0]
+        if err is not None:
+            raise err
+        return item, value
+
     try:
-        pending: deque = deque()
         for item in items:
-            pending.append((item, pool.submit(job, item)))
-            if len(pending) >= depth:
-                item, fut = pending.popleft()
-                yield item, fut.result()
-        while pending:
-            item, fut = pending.popleft()
-            yield item, fut.result()
+            window.append((item, pool.submit(job, item), []))
+            if len(window) >= depth:
+                yield collect()
+        while window:
+            yield collect()
     finally:
-        pool.shutdown(wait=True, cancel_futures=True)
+        for _, fut, _ in window:
+            fut.cancel()
+        wait([fut for _, fut, _ in window])
 
 
 def zone_of(v: "np.ndarray") -> list[float] | None:

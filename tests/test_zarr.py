@@ -520,13 +520,21 @@ def test_write_outside_domain_raises_before_any_chunk():
 
 def test_chunk_map_failure_semantics():
     """A truncated zlib stream in one of a 16-chunk slice's chunks: the
-    read raises the codec's own error; a write over it raises too, leaves
-    no pool thread running, writes nothing past the in-flight window, and
-    leaves every rewritten chunk with its new zone stats."""
+    read raises the codec's own error; a write over it raises too; neither
+    leaves a chunk job running when it returns (the chunk pool's threads
+    are kept, idle, and never more than _POOL_THREADS); the write
+    writes nothing past the in-flight window and leaves every rewritten
+    chunk with its new zone stats."""
     import threading
+    import time
     import zlib
 
-    from mdio_cpp_spark.sources.zarr_store import CHUNK_STATS_ATTR, _PREFETCH_DEPTH, zone_of
+    from mdio_cpp_spark.sources.zarr_store import (
+        _POOL_THREADS,
+        _PREFETCH_DEPTH,
+        CHUNK_STATS_ATTR,
+        zone_of,
+    )
 
     root = _fresh("trunc")
     st = ZarrStore.create(root, version=2)
@@ -544,17 +552,38 @@ def test_chunk_map_failure_semantics():
         f.write(raw[: len(raw) // 2])
     before = _store_listing(root)
     threads = set(threading.enumerate())
+    lock = threading.Lock()
+    busy = {"now": 0}
 
-    def new_pool_threads():
-        return [t for t in threading.enumerate()
-                if t not in threads and t.name.startswith("ThreadPoolExecutor")]
+    def gauged(fn):
+        """Counts calls in progress; each is slowed, so the jobs after the
+        failing chunk are still running when its error surfaces."""
+        def call(*args):
+            with lock:
+                busy["now"] += 1
+            try:
+                time.sleep(0.005)
+                return fn(*args)
+            finally:
+                with lock:
+                    busy["now"] -= 1
+        return call
+
+    st.decode_chunk = gauged(st.decode_chunk)
+    st.write_chunk = gauged(st.write_chunk)
+
+    def new_threads():
+        return [t for t in threading.enumerate() if t not in threads]
 
     with pytest.raises(zlib.error):
         st.read_array("v")
-    assert new_pool_threads() == []
+    assert busy["now"] == 0
     with pytest.raises(zlib.error):
         st.write_array_numpy("v", vals + 1000.0)
-    assert new_pool_threads() == []
+    assert busy["now"] == 0
+    assert all(t.name.startswith("mdio-chunk") for t in new_threads())
+    assert len([t for t in threading.enumerate()
+                if t.name.startswith("mdio-chunk")]) <= _POOL_THREADS
     after = _store_listing(root)
     for k in range(16):
         key = os.path.join("v", str(k))
@@ -653,6 +682,42 @@ def test_map_chunks_order_and_bound_under_switching():
     assert got == [(i, i * i) for i in range(200)]
     assert state["runs"] == 200 and state["now"] == 0
     assert 1 < state["peak"] <= depth
+
+
+def test_map_chunks_in_forked_child():
+    """A child forked after the chunk pool exists (Spark forks its Python
+    workers) gets a pool of its own: its jobs run on more than one thread,
+    in order, and the call returns."""
+    import threading
+    import time
+
+    from mdio_cpp_spark.sources.zarr_store import map_chunks
+
+    def job(i):
+        time.sleep(0.01)
+        return i, threading.get_ident()
+
+    assert [r for _, (r, _) in map_chunks(job, range(8))] == list(range(8))
+    pid = os.fork()
+    if pid == 0:  # child: report through the exit code only
+        ok = False
+        try:
+            got = list(map_chunks(job, range(8)))
+            ok = ([r for _, (r, _) in got] == list(range(8))
+                  and len({t for _, (_, t) in got}) > 1)
+        finally:
+            os._exit(0 if ok else 1)
+    deadline = time.monotonic() + 30
+    while True:
+        done, status = os.waitpid(pid, os.WNOHANG)
+        if done:
+            break
+        if time.monotonic() > deadline:
+            os.kill(pid, 9)
+            os.waitpid(pid, 0)
+            pytest.fail("map_chunks hung in a forked child")
+        time.sleep(0.05)
+    assert os.waitstatus_to_exitcode(status) == 0
 
 
 def test_unlabeled_dim_ranges_apply():

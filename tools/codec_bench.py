@@ -33,7 +33,7 @@ import numpy as np
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mdio_cpp_spark.sources import codecs  # noqa: E402
-from mdio_cpp_spark.sources.zarr_store import _PREFETCH_DEPTH, map_chunks  # noqa: E402
+from mdio_cpp_spark.sources.zarr_store import _POOL_THREADS, map_chunks  # noqa: E402
 
 CODECS = {
     "zlib": {"id": "zlib", "level": 5},
@@ -132,7 +132,8 @@ def main(argv: list[str] | None = None) -> None:
         ap.error(f"unknown codec(s): {sorted(unknown)}")
     raws = synthetic_chunks(args.chunks, args.chunk_kib)
     print(f"{args.chunks} float32 chunks of {args.chunk_kib} KiB, median of {args.reps}; "
-          f"map = map_chunks with {_PREFETCH_DEPTH} threads; {os.cpu_count()} CPUs; "
+          f"map = map_chunks on {_POOL_THREADS} pool thread(s) plus the caller; "
+          f"{os.cpu_count()} CPUs; "
           f"GIL-free reference (SHA-256) map/serial "
           f"{host_parallelism(raws, args.reps):.2f}×\n")
     print("| codec | compressed/raw | decode serial MB/s | decode map MB/s | decode map/serial "
