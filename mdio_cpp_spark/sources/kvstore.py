@@ -73,6 +73,16 @@ class KVStore:
         raise NotImplementedError(
             f"{type(self).__name__} has no conditional-write support")
 
+    def generation(self, key: str):
+        """A cheap stamp of the key's current version, comparable with
+        ``==``, or None. A stamp that differs from an earlier one means the
+        value may have changed; None means the key is absent or this
+        backend has no stamp, and tells ``ZarrStore.decode_chunk`` never to
+        cache the key. Only ``LocalKVStore`` stamps: HTTP, memory and
+        fsspec stores return None, so their reads are the same as without
+        a cache."""
+        return None
+
     def size(self, key: str) -> int | None:
         """Value size in bytes; None if absent. Object stores answer this
         with a HEAD request — no byte transfer."""
@@ -138,6 +148,20 @@ class LocalKVStore(KVStore):
         finally:
             os.close(fd)
 
+    def generation(self, key: str):
+        """``os.stat`` → (device, inode, size, mtime_ns, ctime_ns), the
+        kind of stamp TensorStore's file kvstore uses as its storage
+        generation. ``write`` publishes by rename, so a write through this
+        class gives the key a new inode; a rewrite in place moves mtime and
+        ctime. What the stamp cannot see is a change that keeps the size,
+        lands within one file-timestamp tick of the stamped version and
+        keeps (or reuses) its inode number."""
+        try:
+            st = os.stat(self._path(key))
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+        return st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns
+
     def size(self, key: str) -> int | None:
         path = self._path(key)
         try:
@@ -161,7 +185,9 @@ class LocalKVStore(KVStore):
                 else:
                     f.seek(start, os.SEEK_SET)
                 return f.read(length)
-        except OSError:
+        except (FileNotFoundError, NotADirectoryError):
+            # absent, as in read(); any other OSError (a directory at the
+            # key, EIO, EACCES) raises rather than reading as fill
             return None
 
     def write(self, key: str, data: bytes) -> None:
@@ -753,6 +779,9 @@ class RetryingKVStore(KVStore):
 
     def read_range(self, key: str, start: int, length: int) -> bytes | None:
         return self._retry(lambda: self.inner.read_range(key, start, length), key)
+
+    def generation(self, key: str):
+        return self._retry(lambda: self.inner.generation(key), key)
 
     def write(self, key: str, data: bytes) -> None:
         return self._retry(lambda: self.inner.write(key, data), key)

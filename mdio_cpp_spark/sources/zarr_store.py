@@ -30,6 +30,7 @@ import json
 import math
 import os
 import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Iterator
 
@@ -68,6 +69,9 @@ _PREFETCH_DEPTH = 4
 # only while the host has a free core for it, so on a shared host it makes a
 # read's time swing with the neighbours' load
 _POOL_THREADS = 1
+
+# decoded bytes the process's chunk cache keeps (see _DecodedCache)
+_CACHE_BYTES = 64 << 20
 
 
 class ConsolidatedMetadataConflict(RuntimeError):
@@ -628,7 +632,10 @@ class ZarrStore:
     def delete(self) -> None:
         """Validate-then-delete the whole store (utils/delete.h:38-81)."""
         self.probe_version(self.root)  # raises if not a store
-        self._kv.delete_all()
+        try:
+            self._kv.delete_all()
+        finally:
+            _decoded_cache().drop_root(self._kv.root)
 
     # ------------------------------------------------------------- raw kv I/O
 
@@ -678,7 +685,10 @@ class ZarrStore:
         return self._kv.read(key)
 
     def write_bytes(self, key: str, data: bytes) -> None:
-        self._kv.write(key, data)  # atomic publish per chunk (kvstore layer)
+        try:
+            self._kv.write(key, data)  # atomic publish per chunk (kvstore layer)
+        finally:
+            _decoded_cache().drop((self._kv.root, key))
 
     def _read_root_attrs(self) -> dict:
         if self.version == 2:
@@ -1072,23 +1082,49 @@ class ZarrStore:
     # ------------------------------------------------------------- chunk I/O
 
     def decode_chunk(self, meta: ZarrArrayMeta, coords: tuple[int, ...]) -> np.ndarray | None:
-        """Read+decode one chunk; None if absent (fill semantics upstream)."""
-        raw = self.read_bytes(meta.chunk_key(coords))
+        """Read+decode one chunk as a READ-ONLY block; None if absent (fill
+        semantics upstream). Callers that patch a block copy it first.
+
+        Served from the process's decoded-chunk cache (``_DecodedCache``)
+        when the chunk object's ``KVStore.generation`` stamp and the
+        array's decode signature both match the cached entry. The stamp is
+        taken BEFORE the read, and a miss stores the block under that
+        stamp, so an object replaced between the stamp and the read is
+        re-read at its next use: a stale block is never returned. Stores
+        with no stamp (HTTP, memory, fsspec) read and decode on every
+        call, as do absent chunks and blocks over the cache's cap."""
+        key = meta.chunk_key(coords)
+        stamp = self._kv.generation(key)
+        cache = _decoded_cache()
+        ckey = (self._kv.root, key)
+        if stamp is None:
+            cache.drop(ckey)
+            return self._decode(meta, key)
+        sig = _decode_signature(meta)
+        block = cache.get(ckey, stamp, sig)
+        if block is None:
+            block = self._decode(meta, key)
+            if block is not None:
+                cache.put(ckey, stamp, sig, block)
+        return block
+
+    def _decode(self, meta: ZarrArrayMeta, key: str) -> np.ndarray | None:
+        """Read and decode one whole chunk object, read-only; None if absent."""
+        raw = self.read_bytes(key)
         if raw is None:
             return None
-        if meta.zarr_version == 2:
-            raw = _codecs.decompress_v2(raw, meta.compressor)
-            if meta.filters:
-                raw = _codecs.decode_v2_filters(raw, meta.filters)
-        elif meta.shard is not None:
-            return _decode_shard(meta, raw)
+        if meta.shard is not None:
+            block = _decode_shard(meta, raw)
         else:
-            raw = _codecs.decompress_v3(raw, meta.v3_codecs)
-            return _block_from_raw(meta, raw, meta.chunks)
-        arr = np.frombuffer(raw, dtype=meta.stored_dtype or meta.np_dtype)
-        if meta.stored_dtype is not None:
-            arr = arr.astype(meta.np_dtype)  # byteswap big-endian → native
-        return arr.reshape(meta.chunks, order=meta.order)
+            if meta.zarr_version == 2:
+                raw = _codecs.decompress_v2(raw, meta.compressor)
+                if meta.filters:
+                    raw = _codecs.decode_v2_filters(raw, meta.filters)
+            else:
+                raw = _codecs.decompress_v3(raw, meta.v3_codecs)
+            block = _block_from_raw(meta, raw, meta.chunks)
+        block.flags.writeable = False
+        return block
 
     def decode_chunk_box(
         self,
@@ -1102,8 +1138,9 @@ class ZarrStore:
         global extent intersects ``box`` — at object-store latency a scan
         touching one inner chunk of a 2 GiB shard transfers ~index + one
         inner chunk, not the shard. Cells outside ``box`` come back as
-        fill (callers slice the box out anyway). Plain chunks and full-box
-        reads fall through to the whole-object path."""
+        fill (callers slice the box out anyway); this partial path is not
+        cached. Plain chunks and full-box reads fall through to the
+        whole-object path, ``decode_chunk``, and its cache."""
         if meta.shard is None or box is None:
             return self.decode_chunk(meta, coords)
         inner = meta.shard["chunk_shape"]
@@ -1224,7 +1261,11 @@ class ZarrStore:
         dimension coordinates, header variables and the SEG-Y export tasks.
         The touched chunks fetch and decode concurrently (``map_chunks``),
         and the caller copies each block into the result in chunk order.
-        Whole-volume scans go through the Spark reader instead."""
+        A chunk decoded earlier in this process and unchanged since (same
+        ``KVStore.generation`` stamp) comes from the decoded-chunk cache
+        without a fetch or a decode (``decode_chunk``); the result is
+        always a fresh, writable array. Whole-volume scans go through the
+        Spark reader instead."""
         meta = self.array_meta(name)
         sel = _clamped_box(meta, ranges)
         out_shape = tuple(hi - lo for lo, hi in sel)
@@ -1350,6 +1391,83 @@ def _chunk_pool() -> Any:
             _POOL = (os.getpid(), ThreadPoolExecutor(
                 max_workers=_POOL_THREADS, thread_name_prefix="mdio-chunk"))
         return _POOL[1]
+
+
+class _DecodedCache:
+    """Decoded chunk blocks of this process, least recently used first,
+    at most ``_CACHE_BYTES`` of them in all. An entry maps (kvstore root,
+    chunk key) to (stamp, decode signature, read-only block) and is served
+    only while both still match, the way TensorStore's chunk cache
+    revalidates an entry against the kvstore's storage generation. One
+    lock guards it; ``ZarrStore.decode_chunk`` is its only reader."""
+
+    def __init__(self) -> None:
+        self.pid = os.getpid()
+        self.lock = threading.Lock()
+        self.entries: OrderedDict = OrderedDict()
+        self.nbytes = 0
+
+    def get(self, key: tuple, stamp: Any, sig: tuple) -> np.ndarray | None:
+        with self.lock:
+            entry = self.entries.get(key)
+            if entry is None or entry[0] != stamp or entry[1] != sig:
+                return None
+            self.entries.move_to_end(key)
+            return entry[2]
+
+    def put(self, key: tuple, stamp: Any, sig: tuple, block: np.ndarray) -> None:
+        with self.lock:
+            self._pop(key)
+            if block.nbytes > _CACHE_BYTES:
+                return
+            self.entries[key] = (stamp, sig, block)
+            self.nbytes += block.nbytes
+            while self.nbytes > _CACHE_BYTES:
+                self._pop(next(iter(self.entries)))
+
+    def drop(self, key: tuple) -> None:
+        with self.lock:
+            self._pop(key)
+
+    def drop_root(self, root: str) -> None:
+        with self.lock:
+            for key in [k for k in self.entries if k[0] == root]:
+                self._pop(key)
+
+    def _pop(self, key: tuple) -> None:
+        entry = self.entries.pop(key, None)
+        if entry is not None:
+            self.nbytes -= entry[2].nbytes
+
+
+_CACHE: _DecodedCache | None = None
+
+
+def _decoded_cache() -> _DecodedCache:
+    """The decoded-chunk cache of this process. A forked child (Spark forks
+    its Python workers) starts with an empty cache and a fresh lock, since
+    the parent's lock may have been held by a thread the child lacks."""
+    global _CACHE
+    cache = _CACHE
+    if cache is None or cache.pid != os.getpid():
+        cache = _CACHE = _DecodedCache()
+    return cache
+
+
+def _decode_signature(meta: ZarrArrayMeta) -> tuple:
+    """Everything the decoded block of a chunk object depends on besides
+    its bytes, so an array re-created over the same objects with other
+    metadata never reuses a block. Dtypes compare by ``descr``: numpy
+    takes ``None`` for float64 in ``==``."""
+    return (
+        meta.zarr_version, meta.np_dtype.descr,
+        None if meta.stored_dtype is None else meta.stored_dtype.descr,
+        meta.chunks, meta.order, meta.compressor, meta.filters,
+        meta.v3_codecs, meta.transpose, meta.shard,
+        # a shard's missing inner chunks decode to the fill
+        None if meta.shard is None
+        else np.asarray(meta.fill_scalar(), meta.np_dtype).tobytes(),
+    )
 
 
 def map_chunks(

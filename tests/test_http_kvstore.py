@@ -525,7 +525,8 @@ def test_read_array_window_on_sharded_store_uses_ranged_gets(tmp_path):
 def test_read_array_fetches_each_chunk_once_with_bounded_concurrency(tmp_path):
     """A 16-chunk read_array over HTTP GETs the consolidated metadata and
     each of its 16 chunk objects exactly once, and nothing else, while more
-    than one but at most _PREFETCH_DEPTH fetches are in flight at a time."""
+    than one but at most _PREFETCH_DEPTH fetches are in flight at a time.
+    Repeating the read repeats the same GETs."""
     import threading
     import time
     from collections import Counter
@@ -576,3 +577,11 @@ def test_read_array_fetches_each_chunk_once_with_bounded_concurrency(tmp_path):
                                          for j in range(2, 6)])
         assert gets == want
         assert 1 < gauge.peak <= _PREFETCH_DEPTH, gauge.peak
+        # an HTTP store has no generation stamp, so the decoded-chunk cache
+        # keeps nothing: the same read again issues the same GETs again
+        srv.clear_log()
+        again = st2.read_array("v", ranges={"a": (8, 40), "b": (20, 44)})
+        assert np.array_equal(again, vals[8:40, 20:44])
+        gets = Counter(r[1].split("/grid.zarr/", 1)[1] for r in srv.requests
+                       if r[0] == "GET")
+        assert gets == want

@@ -5,6 +5,8 @@ here without any cloud SDK (zarr_driver.h:225-274 is the routing analog)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -338,3 +340,28 @@ def test_local_read_range_suffix_clamps_to_object_size(tmp_path):
     assert kv.read_range("short", 10, 4) == b""
     # missing object: None
     assert kv.read_range("missing", -16, 16) is None
+    # absent only when the key is absent: any other error raises, as read does
+    assert kv.read_range("short/below", 0, 4) is None
+    os.mkdir(os.path.join(str(tmp_path), "adir"))
+    with pytest.raises(IsADirectoryError):
+        kv.read_range("adir", 0, 4)
+    with pytest.raises(IsADirectoryError):
+        kv.read("adir")
+
+
+def test_generation_stamps_local_keys_only(tmp_path):
+    """Only the local store stamps a key's version; a rewrite changes the
+    stamp, an absent key has none, the retry wrapper passes it through,
+    and the memory store (like HTTP and fsspec) has none at all."""
+    kv = LocalKVStore(str(tmp_path))
+    assert kv.generation("k") is None
+    kv.write("k", b"one")
+    stamp = kv.generation("k")
+    assert stamp is not None and kv.generation("k") == stamp
+    kv.write("k", b"two")
+    assert kv.generation("k") != stamp
+    wrapped = open_kvstore(str(tmp_path), retries=2)
+    assert wrapped.generation("k") == kv.generation("k")
+    mem = MemoryKVStore("memory://generation-test")
+    mem.write("k", b"one")
+    assert mem.generation("k") is None

@@ -349,6 +349,26 @@ def test_partial_shard_read_uses_range_gets():
     assert len(ckv.full_reads) == 1 and ckv.range_reads == []
 
 
+def test_unreadable_shard_raises_on_both_read_paths():
+    """A shard object the store cannot read (here a directory at its key)
+    raises from the whole-shard read AND from a window read, whose ranged
+    index fetch must not take the error for "absent" and return fill."""
+    root = _fresh("unreadable")
+    st = ZarrStore.create(root, version=3)
+    st.create_array("g", shape=(16, 16), chunks=(4, 4), shards=(16, 16),
+                    dtype="float64", dims=("r", "c"))
+    st.write_array_numpy("g", np.arange(256, dtype="f8").reshape(16, 16))
+    path = os.path.join(root, st.array_meta("g").chunk_key((0, 0)))
+    os.remove(path)
+    os.mkdir(path)
+
+    st2 = ZarrStore.open(root)
+    with pytest.raises(IsADirectoryError):
+        st2.read_array("g")
+    with pytest.raises(IsADirectoryError):
+        st2.read_array("g", ranges={"r": (1, 3), "c": (1, 3)})
+
+
 def test_partial_shard_read_through_spark_scan(tmp_path, spark):
     """A chunk-pruned isel through the DSv2 reader over a sharded store
     returns exactly the sliced values (the partial-read path is what the
