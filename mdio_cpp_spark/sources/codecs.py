@@ -1,15 +1,13 @@
 """Per-chunk compression codecs.
 
-The reference accepts only Blosc (dataset_factory.h:295-297,344-346) because
-TensorStore ships it. This container has no blosc/numcodecs wheel, so the
-engine's own stores default to stdlib codecs (zlib/gzip). Blosc frames are
-handled in two tiers: the ``blosc`` wheel when importable, else a pure-Python
-blosc1 codec (sources/blosc1.py, public frame format) that covers
-ALL FIVE cnames with any shuffle: ``zlib`` (stdlib), ``lz4``
-(sources/lz4.py), ``blosclz`` (sources/blosclz.py), ``snappy``
-(sources/snappy.py) and ``zstd`` (sources/zstd.py, full RFC 8878
-decode) — every blosc configuration the reference accepts is readable
-with no wheel.
+The reference accepts only Blosc (dataset_factory.h:295-297,344-346) and
+runs it through c-blosc. Here every codec runs on one native tier: stdlib
+``zlib``/``gzip``, and pyarrow's ``lz4_raw``/``snappy``/``zstd`` kernels
+(pyarrow is already a hard dependency of the DSv2 source). Blosc frames go
+through sources/blosc1.py, which covers all five cnames with any shuffle
+(``blosclz``, c-blosc's own LZ77, is the one pure-Python kernel). The
+engine's own stores default to zlib. The pure-Python lz4/snappy/zstd
+codecs under tests/oracles/ check the native kernels differentially.
 
 Zarr v2 compressor JSON: ``null`` | {"id": "zlib"|"gzip"|"blosc", ...}.
 Zarr v3 codec chain: [{"name": "bytes", ...}, {"name": "gzip"|"zstd", ...}].
@@ -22,53 +20,7 @@ import struct
 import zlib
 from typing import Any
 
-try:  # optional, not in this container
-    import blosc as _blosc  # type: ignore
-except ImportError:  # pragma: no cover
-    _blosc = None
-
-# pure-Python blosc1 fallback (all five cnames, shuffle 0/1/2) from the
-# public frame formats — stores written with ANY of the reference's blosc
-# configs are readable with NO wheel
 from mdio_cpp_spark.sources import blosc1 as _blosc1
-
-# zstd is the de-facto default codec for externally-written Zarr v3 stores.
-# Python 3.14+ ships compression.zstd in the stdlib; earlier interpreters can
-# have the `zstandard` wheel. Neither is in this container (probe log in
-# tests/INTEROP_PROBE.md) — the pure-Python RFC 8878 decoder
-# (sources/zstd.py: full FSE + Huffman) covers DECODE wheel-free, and its
-# compressed-block encoder (Huffman literals + predefined-FSE sequences,
-# raw-block fallback) covers WRITE for spec-requested zstd chains. The
-# stdlib/wheel still takes priority when importable.
-_zstd_compress = _zstd_decompress = None
-try:  # pragma: no cover - stdlib on 3.14+
-    from compression import zstd as _stdlib_zstd  # type: ignore
-
-    def _zstd_compress(data: bytes, level: int) -> bytes:
-        return _stdlib_zstd.compress(data, level)
-
-    def _zstd_decompress(data: bytes) -> bytes:
-        return _stdlib_zstd.decompress(data)
-except ImportError:
-    try:  # pragma: no cover - optional wheel
-        import zstandard as _zstandard  # type: ignore
-
-        def _zstd_compress(data: bytes, level: int) -> bytes:
-            return _zstandard.ZstdCompressor(level=level).compress(data)
-
-        def _zstd_decompress(data: bytes) -> bytes:
-            return _zstandard.ZstdDecompressor().decompress(data)
-    except ImportError:
-        pass
-
-if _zstd_decompress is None:
-    from mdio_cpp_spark.sources import zstd as _pyzstd
-
-    def _zstd_compress(data: bytes, level: int) -> bytes:
-        return _pyzstd.compress(data, level)
-
-    def _zstd_decompress(data: bytes) -> bytes:
-        return _pyzstd.decompress(data)
 
 
 class CodecError(RuntimeError):
@@ -97,10 +49,46 @@ def crc32c(data: bytes) -> int:
 
 def _blosc_shuffle(val: Any) -> int:
     """Map a v3 blosc ``shuffle`` config (spec: ``noshuffle``/``shuffle``/
-    ``bitshuffle``, or a v2-style int) to the blosc wheel's int constant."""
+    ``bitshuffle``, or a v2-style int) to c-blosc's int constant."""
     if isinstance(val, int):
         return val
     return {"noshuffle": 0, "shuffle": 1, "bitshuffle": 2}.get(str(val), 1)
+
+
+def _blosc_compress(data: bytes, conf: dict) -> bytes:
+    """Encode one blosc frame from a v2 compressor or v3 codec config."""
+    try:
+        return _blosc1.compress(data, typesize=conf.get("typesize", 8) or 8,
+                                clevel=conf.get("clevel", 5),
+                                shuffle=_blosc_shuffle(conf.get("shuffle", 1)),
+                                cname=conf.get("cname", "lz4"))
+    except _blosc1.BloscFormatError as e:
+        raise CodecError(str(e)) from e
+
+
+def _blosc_decompress(data: bytes) -> bytes:
+    try:
+        return _blosc1.decompress(data)
+    except _blosc1.BloscFormatError as e:
+        raise CodecError(str(e)) from e
+
+
+def _zstd_frame_size(data: bytes) -> int:
+    """Frame_Content_Size from a zstd frame header (RFC 8878 §3.1.1.1)."""
+    if len(data) < 6 or data[:4] != b"\x28\xb5\x2f\xfd":
+        raise CodecError("zstd chunk: not a zstd frame")
+    fhd = data[4]
+    fcs_len = (0, 2, 4, 8)[fhd >> 6]
+    single = fhd & 0x20
+    if fcs_len == 0 and single:
+        fcs_len = 1
+    if fcs_len == 0:
+        raise CodecError("zstd chunk: frame declares no content size")
+    pos = 5 + (0 if single else 1) + (0, 1, 2, 4)[fhd & 0x3]
+    fcs = data[pos : pos + fcs_len]
+    if len(fcs) != fcs_len:
+        raise CodecError("zstd chunk: truncated frame header")
+    return int.from_bytes(fcs, "little") + (256 if fcs_len == 2 else 0)
 
 
 def compress_v2(data: bytes, compressor: dict | None) -> bytes:
@@ -112,24 +100,7 @@ def compress_v2(data: bytes, compressor: dict | None) -> bytes:
     if cid == "gzip":
         return gzip.compress(data, compresslevel=compressor.get("level", 5))
     if cid == "blosc":
-        cname = compressor.get("cname", "lz4")
-        if _blosc is not None:
-            return _blosc.compress(
-                data,
-                typesize=compressor.get("typesize", 8) or 8,
-                cname=cname,
-                clevel=compressor.get("clevel", 5),
-                shuffle=compressor.get("shuffle", 1),
-            )
-        if cname in ("zlib", "lz4", "blosclz", "snappy", "zstd"):
-            return _blosc1.compress(
-                data,
-                typesize=compressor.get("typesize", 8) or 8,
-                clevel=compressor.get("clevel", 5),
-                shuffle=compressor.get("shuffle", 1),
-                cname=cname,
-            )
-        raise CodecError(f"unknown blosc cname {cname!r}")
+        return _blosc_compress(data, compressor)
     raise CodecError(f"unsupported v2 compressor {cid!r}")
 
 
@@ -259,12 +230,7 @@ def decompress_v2(data: bytes, compressor: dict | None) -> bytes:
     if cid == "gzip":
         return gzip.decompress(data)
     if cid == "blosc":
-        if _blosc is not None:
-            return _blosc.decompress(data)
-        try:
-            return _blosc1.decompress(data)
-        except _blosc1.BloscFormatError as e:
-            raise CodecError(str(e)) from e
+        return _blosc_decompress(data)
     raise CodecError(f"unsupported v2 compressor {cid!r}")
 
 
@@ -285,21 +251,9 @@ def compress_v3(data: bytes, codecs: list[dict[str, Any]]) -> bytes:
         elif name == "zlib":
             data = zlib.compress(data, conf.get("level", 5))
         elif name == "zstd":
-            data = _zstd_compress(data, conf.get("level", 3))
+            data = _blosc1.zstd_compress(data, conf.get("level", 3))
         elif name == "blosc":
-            cname = conf.get("cname", "lz4")
-            if _blosc is not None:
-                data = _blosc.compress(data, typesize=conf.get("typesize", 8) or 8,
-                                       cname=cname,
-                                       clevel=conf.get("clevel", 5),
-                                       shuffle=_blosc_shuffle(conf.get("shuffle", "shuffle")))
-            elif cname in ("zlib", "lz4", "blosclz", "snappy", "zstd"):
-                data = _blosc1.compress(data, typesize=conf.get("typesize", 8) or 8,
-                                        clevel=conf.get("clevel", 5),
-                                        shuffle=_blosc_shuffle(conf.get("shuffle", "shuffle")),
-                                        cname=cname)
-            else:
-                raise CodecError(f"unknown blosc cname {cname!r}")
+            data = _blosc_compress(data, conf)
         elif name == "crc32c":
             data = data + struct.pack("<I", crc32c(data))
         else:
@@ -307,9 +261,13 @@ def compress_v3(data: bytes, codecs: list[dict[str, Any]]) -> bytes:
     return data
 
 
-def decompress_v3(data: bytes, codecs: list[dict[str, Any]]) -> bytes:
-    for codec in reversed(codecs):
-        name = codec.get("name")
+def decompress_v3(data: bytes, codecs: list[dict[str, Any]],
+                  raw_size: int | None = None) -> bytes:
+    """Undo a v3 codec chain. ``raw_size`` is the decoded chunk's byte size;
+    a zstd stage must decode to exactly it when it is the chain's first
+    bytes→bytes codec, else to its frame's declared content size."""
+    for k in range(len(codecs) - 1, -1, -1):
+        name = codecs[k].get("name")
         if name in ("bytes", "transpose"):
             continue  # transpose is array-level; applied by the chunk codec
         if name == "gzip":
@@ -317,18 +275,16 @@ def decompress_v3(data: bytes, codecs: list[dict[str, Any]]) -> bytes:
         elif name == "zlib":
             data = zlib.decompress(data)
         elif name == "zstd":
+            innermost = all(c.get("name") in ("bytes", "transpose")
+                            for c in codecs[:k])
+            size = raw_size if innermost and raw_size is not None \
+                else _zstd_frame_size(data)
             try:
-                data = _zstd_decompress(data)
-            except Exception as e:  # wheel and pure paths raise differently
+                data = _blosc1.zstd_decompress(data, size)
+            except _blosc1.BloscFormatError as e:
                 raise CodecError(f"zstd chunk: {e}") from e
         elif name == "blosc":
-            if _blosc is not None:
-                data = _blosc.decompress(data)
-            else:
-                try:
-                    data = _blosc1.decompress(data)
-                except _blosc1.BloscFormatError as e:
-                    raise CodecError(str(e)) from e
+            data = _blosc_decompress(data)
         elif name == "crc32c":
             if len(data) < 4:
                 raise CodecError("crc32c codec: payload shorter than checksum")

@@ -24,6 +24,7 @@ file handles or clients cross the serialization boundary.
 
 from __future__ import annotations
 
+import itertools
 import os
 import threading
 
@@ -121,6 +122,11 @@ class KVStore:
         raise NotImplementedError
 
 
+# process-wide sequence for temp file names: next() on a C counter is
+# atomic under the GIL, so no two writes of one process share a name
+_TMP_SEQ = itertools.count()
+
+
 class LocalKVStore(KVStore):
     def __init__(self, root: str):
         self.root = root
@@ -193,10 +199,11 @@ class LocalKVStore(KVStore):
     def write(self, key: str, data: bytes) -> None:
         path = self._path(key)
         os.makedirs(os.path.dirname(path) or self.root, exist_ok=True)
-        # Unique tmp name per writer: a speculative/zombie retry of the same
-        # chunk task must not interleave into a shared tmp file and publish a
-        # torn chunk. os.replace of a private tmp is last-writer-wins, atomic.
-        tmp = f"{path}.{os.getpid()}.{threading.get_ident() & 0xFFFFFF:x}.tmp"
+        # Unique tmp name per write: a speculative/zombie retry of the same
+        # chunk task, or another thread writing the same key, must not
+        # interleave into a shared tmp file and publish a torn chunk.
+        # os.replace of a private tmp is last-writer-wins, atomic.
+        tmp = f"{path}.{os.getpid()}.{next(_TMP_SEQ)}.tmp"
         try:
             with open(tmp, "wb") as f:
                 f.write(data)

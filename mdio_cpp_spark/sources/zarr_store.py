@@ -260,6 +260,12 @@ def _block_from_raw(meta: ZarrArrayMeta, raw: bytes, shape: tuple) -> np.ndarray
     return arr.reshape(shape, order=meta.order)
 
 
+def _raw_nbytes(meta: ZarrArrayMeta, shape: tuple) -> int:
+    """Decoded byte size of one chunk of ``shape`` (what its codec chain
+    must decompress to)."""
+    return int(np.prod(shape)) * (meta.stored_dtype or meta.np_dtype).itemsize
+
+
 def _raw_from_block(meta: ZarrArrayMeta, block: np.ndarray) -> bytes:
     """Serialize one typed block to chunk bytes (transpose-aware inverse
     of _block_from_raw)."""
@@ -301,7 +307,7 @@ def _decode_shard(meta: ZarrArrayMeta, raw: bytes) -> np.ndarray:
             f"shard for {meta.name!r} shorter ({len(raw)} B) than its "
             f"index ({isize} B)")
     enc_idx = raw[-isize:] if meta.shard["index_location"] == "end" else raw[:isize]
-    idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"])
+    idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"], n * 16)
     pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
     block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
     for k in range(n):
@@ -312,7 +318,8 @@ def _decode_shard(meta: ZarrArrayMeta, raw: bytes) -> np.ndarray:
             raise ValueError(
                 f"shard for {meta.name!r}: inner chunk {k} extent "
                 f"[{off}, {off + ln}) past shard end {len(raw)}")
-        sub_raw = _codecs.decompress_v3(raw[off : off + ln], meta.shard["codecs"])
+        sub_raw = _codecs.decompress_v3(raw[off : off + ln], meta.shard["codecs"],
+                                        _raw_nbytes(meta, inner))
         coords_in = np.unravel_index(k, grid)
         sl = tuple(
             slice(int(c) * i, (int(c) + 1) * i) for c, i in zip(coords_in, inner)
@@ -1121,7 +1128,8 @@ class ZarrStore:
                 if meta.filters:
                     raw = _codecs.decode_v2_filters(raw, meta.filters)
             else:
-                raw = _codecs.decompress_v3(raw, meta.v3_codecs)
+                raw = _codecs.decompress_v3(raw, meta.v3_codecs,
+                                            _raw_nbytes(meta, meta.chunks))
             block = _block_from_raw(meta, raw, meta.chunks)
         block.flags.writeable = False
         return block
@@ -1168,7 +1176,7 @@ class ZarrStore:
         if len(enc_idx) < isize:
             raise ValueError(
                 f"shard for {meta.name!r} shorter than its index ({isize} B)")
-        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"])
+        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"], n * 16)
         pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
         block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
         for coords_in in itertools.product(*rngs):
@@ -1181,7 +1189,8 @@ class ZarrStore:
                 raise ValueError(
                     f"shard for {meta.name!r}: range read of inner chunk "
                     f"{k} [{off}, {off + ln}) failed")
-            sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"])
+            sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"],
+                                            _raw_nbytes(meta, inner))
             sl = tuple(
                 slice(int(c) * i, (int(c) + 1) * i)
                 for c, i in zip(coords_in, inner)
@@ -1214,7 +1223,7 @@ class ZarrStore:
         if len(enc_idx) < isize:
             raise ValueError(
                 f"shard for {meta.name!r} shorter than its index ({isize} B)")
-        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"])
+        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"], n * 16)
         pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
         inner = meta.shard["chunk_shape"]
 
@@ -1232,7 +1241,8 @@ class ZarrStore:
                     raise ValueError(
                         f"shard for {meta.name!r}: range read of inner "
                         f"chunk {k} [{off}, {off + ln}) failed")
-                sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"])
+                sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"],
+                                                _raw_nbytes(meta, inner))
                 yield coords_in, _block_from_raw(meta, sub_raw, inner)
 
         return gen()

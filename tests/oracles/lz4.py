@@ -17,10 +17,11 @@ here. The block format is public and tiny
         offset < matchlength ⇒ overlapping copy (byte-serial semantics)
     The stream ends with a literals-only sequence (no offset follows).
 
-This is the correctness path for reading blosc-lz4 stores when no
-lz4/blosc wheel is installable (probe log tests/INTEROP_PROBE.md);
-callers prefer a wheel when importable. Decode is a per-sequence Python
-loop — fine for chunk-sized payloads, not a throughput path.
+TEST ORACLE: the engine decodes and encodes lz4 with pyarrow's native
+``lz4_raw`` kernel (sources/blosc1.py); this independent transcription
+checks it differentially (tests/test_native_codecs.py) and still decodes
+every stream the engine's earlier pure-Python encoder wrote. Decode is a
+per-sequence Python loop — fine for test payloads, not a throughput path.
 
 The compressor is a greedy single-entry-hash matcher producing valid,
 reasonably effective blocks (it exercises every decoder path: long

@@ -15,15 +15,14 @@ public and simple (snappy format_description.txt):
     11 COPY-4    length = (tag >> 2) + 1 (1..64), offset = u32 LE
   copies may overlap their output (byte-serial RLE semantics, like LZ4).
 
-DECODE is the interop surface (reading externally-written blosc-snappy
-stores, cname id 2 in blosc1.py's block dispatch); it enforces the
-declared length early (bomb bound, same posture as lz4.py/blosclz.py).
-The ENCODER is a greedy single-slot-hash matcher over 4-byte prefixes
-(the lz4.py pattern) emitting literal runs + COPY-2 elements — any
-spec-conforming decoder accepts its streams; it exists so the engine can
-honor spec-requested cname=snappy and so frames in tests exercise real
-copy elements. Handcrafted copy-element vectors pin the decode format
-since no wheel is installable here (tests/INTEROP_PROBE.md).
+TEST ORACLE: the engine runs snappy on pyarrow's native kernel
+(sources/blosc1.py); this module checks it differentially
+(tests/test_native_codecs.py). DECODE enforces the declared length early
+(bomb bound, same posture as lz4.py/blosclz.py). The ENCODER is a greedy
+single-slot-hash matcher over 4-byte prefixes (the lz4.py pattern)
+emitting literal runs + COPY-2 elements — any spec-conforming decoder
+accepts its streams. Handcrafted copy-element vectors pin the decode
+format (tests/test_snappy.py).
 """
 
 from __future__ import annotations

@@ -1,9 +1,10 @@
 """Pure-Python Zstandard decoder (RFC 8878) + a store-mode encoder.
 
-zstd is the de-facto default codec of externally-written Zarr v3 stores and
-the last blosc cname with no wheel-free path in this container (probe log
-tests/INTEROP_PROBE.md), so externally-written stores were unreadable. The
-format is public (RFC 8878); this module implements DECODE in full for the
+TEST ORACLE: the engine runs zstd on pyarrow's native kernel (libzstd;
+sources/blosc1.py ``zstd_compress``/``zstd_decompress``). This independent
+transcription of RFC 8878 checks it differentially
+(tests/test_native_codecs.py) and is the spec reader's zstd decoder
+(tests/spec_zarr_reader.py). It implements DECODE in full for the
 non-dictionary case:
 
   frames:     magic 0xFD2FB528, frame header (single-segment, all FCS field
@@ -29,11 +30,10 @@ except where the spec allows zero-fill (Huffman tails).
 ENCODE emits one compressed-block mode — greedy-LZ sequences over the
 PREDEFINED FSE tables + Huffman-compressed literals (direct 4-bit
 weights, package-merge length-limited codes) — with a per-block raw
-fallback whenever entropy coding does not shrink the chunk, so
-spec-requested v3 ``zstd`` chains actually compress wheel-free.
+fallback whenever entropy coding does not shrink the chunk.
 ``level <= 0`` keeps the round-7 store mode (raw blocks only). The
-encoder is pinned differentially: the independent spec reader
-(tests/spec_zarr_reader.py, zero engine imports) must decode its frames.
+encoder is pinned differentially: the spec reader's narrower decoder
+(tests/spec_zarr_reader.py ``_zstd_decode``) must decode its frames.
 
 Dictionaries (dictionary_ID != 0) are refused loudly — out of scope.
 """
@@ -783,10 +783,8 @@ def decompress(src: bytes, expected_size: int | None = None) -> bytes:
 # One compressed-block mode (RFC 8878 §3.1.1.3): Huffman-compressed
 # literals (direct 4-bit weights, 1- and 4-stream) + sequences over the
 # PREDEFINED FSE tables, with per-block raw fallback when entropy coding
-# does not shrink the chunk. The reference accepts cname=zstd
-# (dataset_factory.h:288-386); this makes spec-requested zstd chains
-# actually compress wheel-free. Pinned differentially: the independent
-# spec reader (tests/spec_zarr_reader.py, zero engine imports) must
+# does not shrink the chunk. Pinned differentially: the spec reader's
+# narrower decoder (tests/spec_zarr_reader.py ``_zstd_decode``) must
 # decode every frame this encoder emits.
 
 

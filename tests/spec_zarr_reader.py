@@ -16,6 +16,11 @@ container, see INTEROP_PROBE.md). Everything here is derived from:
 
 If our writer and this reader agree on every value, our bytes follow the
 spec as both implementations independently understand it.
+
+zstd chunks and blosc-zstd streams decode through the full RFC 8878
+oracle (tests/oracles/zstd.py, also engine-free): the engine writes them
+with libzstd, whose frames use every table mode. The narrower
+``_zstd_decode`` here pins that oracle's own encoder.
 """
 
 from __future__ import annotations
@@ -27,6 +32,8 @@ import os
 import zlib
 
 import numpy as np
+
+from tests.oracles import zstd as _oracle_zstd
 
 _V3_DTYPES = {
     "bool": "|b1",
@@ -212,7 +219,7 @@ def _blosc_decode(frame: bytes) -> bytes:
         if codec == 2:
             return _snappy_block_decode(raw)
         if codec == 4:
-            return _zstd_decode(raw)
+            return _oracle_zstd.decompress(raw)
         return _lz4_block_decode(raw)
 
     out = bytearray()
@@ -527,10 +534,6 @@ def _zstd_decode(src: bytes) -> bytes:
     return bytes(out)
 
 
-# backward-compatible alias (store-mode frames are a subset)
-_zstd_store_decode = _zstd_decode
-
-
 def _decompress(raw: bytes, compressor, v3_codecs) -> bytes:
     if compressor is not None:  # v2
         cid = compressor.get("id")
@@ -552,7 +555,7 @@ def _decompress(raw: bytes, compressor, v3_codecs) -> bytes:
         elif name == "blosc":
             raw = _blosc_decode(raw)
         elif name == "zstd":
-            raw = _zstd_store_decode(raw)
+            raw = _oracle_zstd.decompress(raw)
         else:
             raise ValueError(f"spec reader: unsupported v3 codec {name}")
     return raw

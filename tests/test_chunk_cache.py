@@ -244,6 +244,48 @@ def test_threads_share_the_cache_under_switching(tmp_path, monkeypatch):
     assert cache.nbytes <= zarr_store._CACHE_BYTES
 
 
+def test_all_threads_write_and_read_under_switching(tmp_path, monkeypatch):
+    """The all-writers variant: every thread rewrites chunks (same contents,
+    new objects) and reads them back, so several threads write one key at
+    once. Each write needs its own temp file, or one thread publishes
+    another's bytes or finds its temp file already renamed away."""
+    import random
+    import threading
+
+    monkeypatch.setattr(zarr_store, "_CACHE_BYTES", 6 * 512)
+    root, st, vals = _grid(tmp_path)
+    meta = st.array_meta("v")
+    errors: list = []
+
+    def work(seed: int) -> None:
+        rng = random.Random(seed)
+        try:
+            for _ in range(100):
+                i, j = rng.randrange(4), rng.randrange(4)
+                want = vals[8 * i:8 * i + 8, 8 * j:8 * j + 8]
+                st.write_chunk(meta, (i, j), want)
+                if not np.array_equal(st.decode_chunk(meta, (i, j)), want):
+                    errors.append((i, j))
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(k,))
+               for k in range(4 * (os.cpu_count() or 1))]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    leftovers = [f for _, _, fs in os.walk(root) for f in fs if f.endswith(".tmp")]
+    assert leftovers == []
+
+
 def test_read_in_child_forked_with_the_cache_lock_held(tmp_path):
     """The parent has filled the cache and one of its threads holds the
     lock at the fork. The child must read correct data with a cache of its

@@ -1,5 +1,5 @@
-"""Pure-Python LZ4 block codec + blosc-lz4 frames (sources/lz4.py,
-blosc1.py's lz4/split support).
+"""Pure-Python LZ4 block codec (the test oracle, tests/oracles/lz4.py) +
+blosc-lz4 frames (blosc1.py's lz4/split support over the native kernel).
 
 The decoder is the interop-critical direction (reading c-blosc lz4 stores
 with no wheel); it's pinned three ways: hand-built sequences straight from
@@ -17,7 +17,7 @@ import numpy as np
 import pytest
 
 from mdio_cpp_spark.sources import blosc1
-from mdio_cpp_spark.sources.lz4 import (
+from tests.oracles.lz4 import (
     LZ4FormatError,
     compress_block,
     decompress_block,

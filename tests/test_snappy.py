@@ -3,9 +3,9 @@ format (google/snappy format_description.txt — varint preamble, literal /
 copy-1 / copy-2 / copy-4 elements, overlapping-copy RLE semantics);
 round-trips cover the greedy encoder; frame-level tests cover blosc1
 integration (cname id 2; snappy is NOT in c-blosc's FORWARD_COMPAT split
-list so full blocks stay single-stream). With no snappy or blosc wheel
-installable (tests/INTEROP_PROBE.md) these vectors ARE the format
-contract."""
+list so full blocks stay single-stream). The block codec is the test
+oracle in tests/oracles/snappy.py; the frame-level tests run the engine's
+native (pyarrow) snappy kernel."""
 
 from __future__ import annotations
 
@@ -16,7 +16,7 @@ import numpy as np
 import pytest
 
 from mdio_cpp_spark.sources import blosc1
-from mdio_cpp_spark.sources.snappy import (
+from tests.oracles.snappy import (
     SnappyFormatError,
     compress_block,
     decompress_block,

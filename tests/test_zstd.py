@@ -2,9 +2,9 @@
 literals/sequences wire format; differential round-trips run against the
 INDEPENDENT spec-derived encoder (tests/zstd_ref_encoder.py — constructs
 FSE/Huffman bitstreams by walking the decode state machine backwards, no
-engine imports). With no zstd wheel installable (tests/INTEROP_PROBE.md)
-these vectors ARE the format contract, the same posture as
-blosclz/lz4/snappy."""
+engine imports). The decoder is the test oracle for the engine's native
+zstd kernel (tests/test_native_codecs.py); the blosc/v3 tests here run the
+engine's shipped path."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ import numpy as np
 import pytest
 
 from mdio_cpp_spark.sources import blosc1
-from mdio_cpp_spark.sources.zstd import (
+from tests.oracles.zstd import (
     ZstdFormatError,
     compress,
     decompress,

@@ -1,15 +1,16 @@
 """Compressed-block zstd ENCODE gates (round-8 task).
 
-The engine encoder (sources/zstd.py: Huffman literals + predefined-FSE
-sequences, raw-block fallback) is pinned two independent ways:
+The oracle encoder (tests/oracles/zstd.py: Huffman literals +
+predefined-FSE sequences, raw-block fallback) is pinned two independent
+ways:
 
-  1. engine encode -> engine decode (full RFC 8878 decoder, checksums on);
-  2. engine encode -> tests/spec_zarr_reader.py decode (ZERO engine
-     imports — the stand-in third-party reader).
+  1. oracle encode -> oracle decode (full RFC 8878 decoder, checksums on);
+  2. oracle encode -> tests/spec_zarr_reader.py ``_zstd_decode`` (ZERO
+     engine imports — the stand-in third-party reader).
 
-plus size gates: a compressible chunk must actually shrink (the round-7
-store mode never did), and the v3 ``zstd`` chain + blosc ``cname=zstd``
-write paths must produce smaller-than-raw objects end to end.
+plus size gates: a compressible chunk must actually shrink, and the
+engine's v3 ``zstd`` chain + blosc ``cname=zstd`` write paths (libzstd via
+pyarrow) must produce smaller-than-raw objects end to end.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import numpy as np
 import pytest
 
 from mdio_cpp_spark.sources import blosc1
-from mdio_cpp_spark.sources.zstd import (
+from tests.oracles.zstd import (
     ZstdFormatError,
     _encode_block,
     _huf_limited_lengths,

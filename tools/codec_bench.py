@@ -2,12 +2,15 @@
 
 Encodes and decodes synthetic chunks with each Zarr v2 compressor the engine
 carries — zlib, gzip, and blosc (byte shuffle) with the lz4, blosclz, snappy
-and zstd inner codecs, all pure Python apart from zlib/gzip — and reports
+and zstd inner codecs — and reports
 MB/s of raw (uncompressed) bytes, once with a plain loop on the calling
 thread and once through ``zarr_store.map_chunks``, the bounded thread pool
 that driver reads, driver writes and executor scans run their chunks on. The
 ratio of the two says which codecs gain from the pool: a codec that releases
-the GIL scales with threads, one that holds it does not.
+the GIL scales with threads, one that holds it does not. zlib/gzip (stdlib)
+and lz4/snappy/zstd (pyarrow) stream kernels are native and release the GIL;
+blosclz is pure Python, and blosc's per-block shuffle and frame loop run in
+Python under the GIL for every cname.
 
 The chunks are generated locally: band-limited float32 traces (a few
 sinusoids plus low noise, like migrated seismic), ``--chunk-kib`` each, a

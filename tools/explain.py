@@ -63,7 +63,7 @@ PICKS = {
     "ga05_label_prop_step": "ONE groupBy(src) with least(src, min(dst)) over the explode-mirrored edge list — the node-frame + left-join formulation (two extra exchanges + a persist) is gone; 4 exchanges total incl. the sort, 0 joins",
     "zarr112_sharded_lz4_pushdown": "sharded store + blosc-lz4 inner chain + DSv2: dim range consumed into the pruning box (partial range-GET shard reads), value predicate consumed by pushFilters (decoder-exact mask) — Filter above the scan only re-checks what the source already bounded",
     "zarr113_reshard_migration": "scan of the MIGRATED sharded store: chunk-pruned manifest over shard-grid coords, partial range-GET decode; the migration itself was a shuffle-free mapInPandas over destination shard ids",
-    "zarr111_zstd_store": "chunk-pruned scan over handcrafted zstd chunk objects; decode runs in the executor batch stage through the pure RFC 8878 decoder — plan identical in shape to the gzip store scans",
+    "zarr111_zstd_store": "chunk-pruned scan over handcrafted zstd chunk objects; decode runs in the executor batch stage through the native zstd kernel — plan identical in shape to the gzip store scans",
     "a11_grouped_mad": "duplicate-collapsing MAD: ONE partial-agg groupBy to the (group, value) run-length table (limit-probe bounded), both quantiles derived from it; the plan shows a single scan + hash aggregate, no window, no second pass (distributed two-pass fallback kicks in past the probe bound)",
     "zarr55_ffill": "gap fill with NO global data window: the in-chunk LOCF window partitions on the chunk id; the only global window is the one-row-per-chunk carry table (bounded by construction), joined back broadcast",
     "p11_epoch_shuffle": "deterministic epoch shuffle without a global row_number: 16 hash-digit bucket windows rank in parallel; positions = broadcast bucket offsets + in-bucket rank",
