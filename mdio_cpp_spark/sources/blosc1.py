@@ -113,6 +113,20 @@ def zstd_decompress(data: bytes, size: int) -> bytes:
         raise BloscFormatError(f"zstd stream: {e}") from e
 
 
+def inflate(data: bytes, size: int, wbits: int = 15) -> bytes:
+    """Inflate a zlib (``wbits`` 15) or gzip (31) stream into exactly
+    ``size`` bytes, else BloscFormatError (zlib.error if truncated). It
+    never inflates past ``size + 1`` bytes, so a small hostile stream
+    cannot make it allocate without bound."""
+    d = zlib.decompressobj(wbits)
+    got = d.decompress(data, size + 1)
+    if not d.eof and len(got) <= size:
+        raise zlib.error("incomplete or truncated stream")
+    if len(got) != size:
+        raise BloscFormatError(f"stream does not inflate to exactly {size} bytes")
+    return got
+
+
 def _snappy_length(raw: bytes) -> int:
     """The uncompressed length a snappy stream declares (varint32 preamble)."""
     n = shift = 0
@@ -129,8 +143,8 @@ def _decode_stream(codec: int, raw: bytes, want: int) -> bytes:
     if len(raw) == want:
         return bytes(raw)  # csize == uncompressed size → stored raw
     if codec == _ZLIB_ID:
-        got = zlib.decompress(raw)
-    elif codec == _BLOSCLZ_ID:
+        return inflate(raw, want)
+    if codec == _BLOSCLZ_ID:
         try:
             got = _blosclz.decompress_block(raw, want)
         except _blosclz.BloscLZFormatError as e:

@@ -73,6 +73,16 @@ def _blosc_decompress(data: bytes) -> bytes:
         raise CodecError(str(e)) from e
 
 
+def _inflate(data: bytes, wbits: int, size: int | None) -> bytes:
+    """A zlib (``wbits`` 15) or gzip (31) stage, held to ``size`` if known."""
+    if size is None:
+        return gzip.decompress(data) if wbits == 31 else zlib.decompress(data)
+    try:
+        return _blosc1.inflate(data, size, wbits)
+    except _blosc1.BloscFormatError as e:
+        raise CodecError(f"{'gzip' if wbits == 31 else 'zlib'} chunk: {e}") from e
+
+
 def _zstd_frame_size(data: bytes) -> int:
     """Frame_Content_Size from a zstd frame header (RFC 8878 §3.1.1.1)."""
     if len(data) < 6 or data[:4] != b"\x28\xb5\x2f\xfd":
@@ -221,14 +231,14 @@ def decode_v2_filters(raw: bytes, filters: list[dict] | tuple) -> bytes:
     return buf
 
 
-def decompress_v2(data: bytes, compressor: dict | None) -> bytes:
+def decompress_v2(data: bytes, compressor: dict | None,
+                  raw_size: int | None = None) -> bytes:
+    """Undo a v2 compressor; a zlib/gzip stream must inflate to ``raw_size``."""
     if compressor is None:
         return data
     cid = compressor.get("id")
-    if cid == "zlib":
-        return zlib.decompress(data)
-    if cid == "gzip":
-        return gzip.decompress(data)
+    if cid in ("zlib", "gzip"):
+        return _inflate(data, 31 if cid == "gzip" else 15, raw_size)
     if cid == "blosc":
         return _blosc_decompress(data)
     raise CodecError(f"unsupported v2 compressor {cid!r}")
@@ -264,23 +274,21 @@ def compress_v3(data: bytes, codecs: list[dict[str, Any]]) -> bytes:
 def decompress_v3(data: bytes, codecs: list[dict[str, Any]],
                   raw_size: int | None = None) -> bytes:
     """Undo a v3 codec chain. ``raw_size`` is the decoded chunk's byte size;
-    a zstd stage must decode to exactly it when it is the chain's first
-    bytes→bytes codec, else to its frame's declared content size."""
+    a zlib, gzip or zstd stage must decode to exactly it when it is the
+    chain's first bytes→bytes codec (a zstd stage elsewhere to its frame's
+    declared content size)."""
     for k in range(len(codecs) - 1, -1, -1):
         name = codecs[k].get("name")
         if name in ("bytes", "transpose"):
             continue  # transpose is array-level; applied by the chunk codec
-        if name == "gzip":
-            data = gzip.decompress(data)
-        elif name == "zlib":
-            data = zlib.decompress(data)
+        size = raw_size if all(c.get("name") in ("bytes", "transpose")
+                               for c in codecs[:k]) else None
+        if name in ("gzip", "zlib"):
+            data = _inflate(data, 31 if name == "gzip" else 15, size)
         elif name == "zstd":
-            innermost = all(c.get("name") in ("bytes", "transpose")
-                            for c in codecs[:k])
-            size = raw_size if innermost and raw_size is not None \
-                else _zstd_frame_size(data)
             try:
-                data = _blosc1.zstd_decompress(data, size)
+                data = _blosc1.zstd_decompress(
+                    data, _zstd_frame_size(data) if size is None else size)
             except _blosc1.BloscFormatError as e:
                 raise CodecError(f"zstd chunk: {e}") from e
         elif name == "blosc":

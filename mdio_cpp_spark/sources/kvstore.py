@@ -78,10 +78,10 @@ class KVStore:
         """A cheap stamp of the key's current version, comparable with
         ``==``, or None. A stamp that differs from an earlier one means the
         value may have changed; None means the key is absent or this
-        backend has no stamp, and tells ``ZarrStore.decode_chunk`` never to
-        cache the key. Only ``LocalKVStore`` stamps: HTTP, memory and
-        fsspec stores return None, so their reads are the same as without
-        a cache."""
+        backend has no stamp, and tells ``ZarrStore`` never to cache the
+        key's decoded chunk or parsed metadata. Only ``LocalKVStore``
+        stamps: HTTP, memory and fsspec stores return None, so their reads
+        are the same as without a cache."""
         return None
 
     def size(self, key: str) -> int | None:

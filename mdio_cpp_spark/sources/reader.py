@@ -339,9 +339,9 @@ def _fetch_blocks(
     coords_iter: Iterable[tuple[int, ...]],
 ) -> Iterator[tuple[tuple[int, ...], dict[str, np.ndarray | None]]]:
     """(coords, {variable: decoded block, None if absent}) per chunk, in
-    input order. Each chunk's fetch and decode run on ``map_chunks``'s
-    bounded pool: at object-store latency the GET round-trips overlap, and
-    the GIL-releasing decoders (zlib, gzip) overlap too. Each chunk in
+    input order. A chunk whose blocks are all cached is served on the
+    calling thread; the others fetch and decode on ``map_chunks``' pool,
+    where GET round-trips and the zlib/gzip decoders overlap. Each chunk in
     flight holds one block per variable, so a fused scan of N variables
     keeps ``max(1, _PREFETCH_DEPTH // N)`` chunks in flight: about
     ``_PREFETCH_DEPTH`` blocks per task whatever N is. Sharded arrays fetch
@@ -351,6 +351,7 @@ def _fetch_blocks(
         lambda c: {m.name: store.decode_chunk_box(m, c, box) for m in metas},
         coords_iter,
         max(1, _PREFETCH_DEPTH // len(metas)),
+        inline=lambda c: all(store.is_cached(m, c, box) for m in metas),
     )
 
 

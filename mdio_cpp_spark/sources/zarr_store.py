@@ -283,6 +283,23 @@ def _shard_grid(meta: ZarrArrayMeta) -> tuple[tuple[int, ...], int]:
     return grid, int(np.prod(grid))
 
 
+def _shard_box_ranges(
+    meta: ZarrArrayMeta, coords: tuple[int, ...], box: tuple[tuple[int, int], ...]
+) -> list[range] | None:
+    """Per dim, the inner chunks of shard ``coords`` that intersect ``box``;
+    None when the box misses the shard."""
+    inner = meta.shard["chunk_shape"]
+    rngs = []
+    for d in range(meta.ndim):
+        origin = coords[d] * meta.chunks[d]
+        lo = max(box[d][0], origin) - origin
+        hi = min(box[d][1], origin + meta.chunks[d]) - origin
+        if hi <= lo:
+            return None
+        rngs.append(range(lo // inner[d], (hi - 1) // inner[d] + 1))
+    return rngs
+
+
 def _shard_index_size(meta: ZarrArrayMeta, n: int) -> int:
     """Encoded index size: n (offset, nbytes) u64-LE pairs, +4 bytes per
     crc32c stage — every supported index codec is fixed-size (the spec
@@ -603,6 +620,7 @@ class ZarrStore:
         # pay one root GET per create). Reset when consolidate() publishes.
         # Valid under the same single-writer contract as consolidation itself.
         self._v3_no_consolidated = False
+        self._parsed: tuple | None = None  # (stamp, _doc_metas() result)
 
     # ------------------------------------------------------------- lifecycle
 
@@ -649,6 +667,7 @@ class ZarrStore:
     def _write_json(self, key: str, obj: Any) -> None:
         payload = json.dumps(obj, indent=2, allow_nan=False, default=_json_default)
         self._kv.write(key, payload.encode("utf-8"))
+        self._parsed = None  # the kept metadata parse may now be stale
 
     def _read_json(self, key: str) -> Any:
         raw = self._kv.read(key)
@@ -687,6 +706,7 @@ class ZarrStore:
                 "pick up the other writer's entries, then retry this "
                 "operation."
             ) from e
+        self._parsed = None
 
     def read_bytes(self, key: str) -> bytes | None:
         return self._kv.read(key)
@@ -698,25 +718,50 @@ class ZarrStore:
             _decoded_cache().drop((self._kv.root, key))
 
     def _read_root_attrs(self) -> dict:
-        if self.version == 2:
-            consolidated = self._consolidated()
-            if consolidated is not None and ".zattrs" in consolidated:
-                return consolidated[".zattrs"]
-            try:
-                return self._read_json(".zattrs")
-            except FileNotFoundError:
-                return {}
-        obj = self._read_json("zarr.json")
-        return dict(obj.get("attributes", {}))
+        attrs = self._doc_metas()[1]
+        if attrs is not None:
+            return dict(attrs)
+        if self.version != 2:
+            raise FileNotFoundError(f"{self.root}/zarr.json")
+        try:
+            return self._read_json(".zattrs")
+        except FileNotFoundError:
+            return {}
 
     # ------------------------------------------------------------- metadata
 
-    def _consolidated(self) -> dict | None:
+    def _doc_metas(self) -> tuple[dict | None, dict | None]:
+        """(array metas, root attrs) of ``.zmetadata`` (v2) or the root
+        ``zarr.json`` (v3), each None when that document does not hold it.
+        The parse is kept under the document's ``KVStore.generation`` stamp,
+        taken before the read, until the stamp moves or this store writes
+        metadata. Stores without a stamp parse on every call."""
+        key = ".zmetadata" if self.version == 2 else "zarr.json"
+        stamp = self._kv.generation(key)
+        kept = self._parsed
+        if stamp is not None and kept is not None and kept[0] == stamp:
+            return kept[1]
         try:
-            obj = self._read_json(".zmetadata")
+            doc = self._read_json(key)
         except FileNotFoundError:
-            return None
-        return obj.get("metadata")
+            doc = None
+        metas = attrs = None
+        if self.version == 2:
+            md = None if doc is None else doc.get("metadata")
+            if md is not None:
+                names = [k[: -len("/.zarray")] for k in md if k.endswith("/.zarray")]
+                metas = {n: _meta_from_v2(n, md[f"{n}/.zarray"], md.get(f"{n}/.zattrs", {}))
+                         for n in names}
+                attrs = md.get(".zattrs")
+        elif doc is not None:
+            md = self._consolidated_v3(doc)
+            if md is not None:
+                metas = {str(p): _meta_from_v3(str(p), obj) for p, obj in md.items()
+                         if isinstance(obj, dict) and obj.get("node_type") == "array"}
+            attrs = dict(doc.get("attributes", {}))
+        if stamp is not None:
+            self._parsed = (stamp, (metas, attrs))
+        return metas, attrs
 
     def _consolidated_v3(self, root_json: dict | None = None) -> dict | None:
         """The v3 consolidated-metadata map (zarr-python 3 layout: the root
@@ -738,40 +783,28 @@ class ZarrStore:
         return md if isinstance(md, dict) else None
 
     def arrays(self) -> dict[str, ZarrArrayMeta]:
-        """All arrays in the store. v2 prefers the consolidated .zmetadata
-        (one read — zarr_v2.h:467-482); v3 prefers the root zarr.json's
-        inline consolidated_metadata (zarr-python 3 layout, one read) and
-        falls back to walking child zarr.json files (zarr_v3.h:539-625)."""
+        """All arrays, in a new dict of shared metas (do not mutate them).
+        v2 prefers the consolidated .zmetadata (zarr_v2.h:467-482), v3 the
+        root zarr.json's inline consolidated_metadata (zarr-python 3), each
+        one read parsed once per stamp (``_doc_metas``); else it walks the
+        child documents on every call (zarr_v3.h:539-625)."""
+        metas = self._doc_metas()[0]
+        if metas is not None:
+            return dict(metas)
         out: dict[str, ZarrArrayMeta] = {}
-        if self.version == 2:
-            consolidated = self._consolidated()
-            if consolidated is not None:
-                for key, val in consolidated.items():
-                    if key.endswith("/.zarray"):
-                        name = key[: -len("/.zarray")]
-                        zattrs = consolidated.get(f"{name}/.zattrs", {})
-                        out[name] = _meta_from_v2(name, val, zattrs)
-                return out
-            for entry in self._kv.list_dir():
-                if self._kv.exists(f"{entry}/.zarray"):
-                    zarray = self._read_json(f"{entry}/.zarray")
-                    try:
-                        zattrs = self._read_json(f"{entry}/.zattrs")
-                    except FileNotFoundError:
-                        zattrs = {}
-                    out[entry] = _meta_from_v2(entry, zarray, zattrs)
-            return out
-        consolidated = self._consolidated_v3()
-        if consolidated is not None:
-            for path, obj in consolidated.items():
-                if isinstance(obj, dict) and obj.get("node_type") == "array":
-                    out[str(path)] = _meta_from_v3(str(path), obj)
-            return out
+        marker = ".zarray" if self.version == 2 else "zarr.json"
         for entry in self._kv.list_dir():
-            if self._kv.exists(f"{entry}/zarr.json"):
-                obj = self._read_json(f"{entry}/zarr.json")
-                if obj.get("node_type") == "array":
-                    out[entry] = _meta_from_v3(entry, obj)
+            if not self._kv.exists(f"{entry}/{marker}"):
+                continue
+            obj = self._read_json(f"{entry}/{marker}")
+            if self.version == 2:
+                try:
+                    zattrs = self._read_json(f"{entry}/.zattrs")
+                except FileNotFoundError:
+                    zattrs = {}
+                out[entry] = _meta_from_v2(entry, obj, zattrs)
+            elif obj.get("node_type") == "array":
+                out[entry] = _meta_from_v3(entry, obj)
         return out
 
     def array_meta(self, name: str) -> ZarrArrayMeta:
@@ -1099,7 +1132,9 @@ class ZarrStore:
         stamp, so an object replaced between the stamp and the read is
         re-read at its next use: a stale block is never returned. Stores
         with no stamp (HTTP, memory, fsspec) read and decode on every
-        call, as do absent chunks and blocks over the cache's cap."""
+        call, as do absent chunks and blocks over the cache's cap. A hit
+        costs one stamp and a lookup, so ``map_chunks`` runs the reads
+        ``is_cached`` expects to hit on the calling thread, not the pool."""
         key = meta.chunk_key(coords)
         stamp = self._kv.generation(key)
         cache = _decoded_cache()
@@ -1124,7 +1159,9 @@ class ZarrStore:
             block = _decode_shard(meta, raw)
         else:
             if meta.zarr_version == 2:
-                raw = _codecs.decompress_v2(raw, meta.compressor)
+                raw = _codecs.decompress_v2(
+                    raw, meta.compressor,
+                    None if meta.filters else _raw_nbytes(meta, meta.chunks))
                 if meta.filters:
                     raw = _codecs.decode_v2_filters(raw, meta.filters)
             else:
@@ -1133,6 +1170,18 @@ class ZarrStore:
             block = _block_from_raw(meta, raw, meta.chunks)
         block.flags.writeable = False
         return block
+
+    def is_cached(self, meta: ZarrArrayMeta, coords: tuple[int, ...],
+                  box: tuple | None = None) -> bool:
+        """Whether the decoded-chunk cache has an entry for the object that
+        ``decode_chunk_box(meta, coords, box)`` reads whole: a hint, with
+        no I/O, that the read will need none. Only the read checks the
+        entry's stamp. Partial shard reads are never cached."""
+        if meta.shard is not None and box is not None:
+            rngs = _shard_box_ranges(meta, coords, box)
+            if rngs is None or any(len(r) != g for r, g in zip(rngs, _shard_grid(meta)[0])):
+                return False
+        return (self._kv.root, meta.chunk_key(coords)) in _decoded_cache().entries
 
     def decode_chunk_box(
         self,
@@ -1153,18 +1202,26 @@ class ZarrStore:
             return self.decode_chunk(meta, coords)
         inner = meta.shard["chunk_shape"]
         grid, n = _shard_grid(meta)
-        origin = tuple(c * s for c, s in zip(coords, meta.chunks))
-        # inner-chunk ranges of the shard that intersect the box, per dim
-        rngs = []
-        for d in range(meta.ndim):
-            lo = max(box[d][0], origin[d]) - origin[d]
-            hi = min(box[d][1], origin[d] + meta.chunks[d]) - origin[d]
-            if hi <= lo:
-                return None  # no overlap: caller synthesizes fill
-            rngs.append(range(lo // inner[d], (hi - 1) // inner[d] + 1))
+        rngs = _shard_box_ranges(meta, coords, box)
+        if rngs is None:
+            return None  # no overlap: caller synthesizes fill
         if all(len(r) == g for r, g in zip(rngs, grid)):
             return self.decode_chunk(meta, coords)  # full shard needed
         key = meta.chunk_key(coords)
+        pairs = self._shard_index(meta, key)
+        if pairs is None:
+            return None  # absent shard
+        block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
+        for coords_in in itertools.product(*rngs):
+            sub = self._inner_block(meta, key, pairs, int(np.ravel_multi_index(coords_in, grid)))
+            if sub is not None:
+                block[tuple(slice(int(c) * i, (int(c) + 1) * i)
+                            for c, i in zip(coords_in, inner))] = sub
+        return block
+
+    def _shard_index(self, meta: ZarrArrayMeta, key: str) -> np.ndarray | None:
+        """A shard's (offset, nbytes) pairs, one ranged read; None if absent."""
+        n = _shard_grid(meta)[1]
         isize = _shard_index_size(meta, n)
         enc_idx = (
             self._kv.read_range(key, -isize, isize)
@@ -1172,31 +1229,27 @@ class ZarrStore:
             else self._kv.read_range(key, 0, isize)
         )
         if enc_idx is None:
-            return None  # absent shard
+            return None
         if len(enc_idx) < isize:
             raise ValueError(
                 f"shard for {meta.name!r} shorter than its index ({isize} B)")
         idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"], n * 16)
-        pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
-        block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
-        for coords_in in itertools.product(*rngs):
-            k = int(np.ravel_multi_index(coords_in, grid))
-            off, ln = int(pairs[k, 0]), int(pairs[k, 1])
-            if off == _SHARD_MISSING and ln == _SHARD_MISSING:
-                continue
-            raw = self._kv.read_range(key, off, ln)
-            if raw is None or len(raw) != ln:
-                raise ValueError(
-                    f"shard for {meta.name!r}: range read of inner chunk "
-                    f"{k} [{off}, {off + ln}) failed")
-            sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"],
-                                            _raw_nbytes(meta, inner))
-            sl = tuple(
-                slice(int(c) * i, (int(c) + 1) * i)
-                for c, i in zip(coords_in, inner)
-            )
-            block[sl] = _block_from_raw(meta, sub_raw, inner)
-        return block
+        return np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
+
+    def _inner_block(self, meta: ZarrArrayMeta, key: str, pairs: np.ndarray,
+                     k: int) -> np.ndarray | None:
+        """Inner chunk ``k`` of a shard, one ranged read; None if missing."""
+        off, ln = int(pairs[k, 0]), int(pairs[k, 1])
+        if off == _SHARD_MISSING and ln == _SHARD_MISSING:
+            return None
+        raw = self._kv.read_range(key, off, ln)
+        if raw is None or len(raw) != ln:
+            raise ValueError(
+                f"shard for {meta.name!r}: range read of inner chunk "
+                f"{k} [{off}, {off + ln}) failed")
+        inner = meta.shard["chunk_shape"]
+        sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"], _raw_nbytes(meta, inner))
+        return _block_from_raw(meta, sub_raw, inner)
 
     def shard_inner_blocks(
         self, meta: ZarrArrayMeta, coords: tuple[int, ...]
@@ -1211,41 +1264,13 @@ class ZarrStore:
         if meta.shard is None:
             raise ValueError(f"{meta.name!r} is not sharded")
         key = meta.chunk_key(coords)
-        grid, n = _shard_grid(meta)
-        isize = _shard_index_size(meta, n)
-        enc_idx = (
-            self._kv.read_range(key, -isize, isize)
-            if meta.shard["index_location"] == "end"
-            else self._kv.read_range(key, 0, isize)
-        )
-        if enc_idx is None:
+        pairs = self._shard_index(meta, key)
+        if pairs is None:
             return None
-        if len(enc_idx) < isize:
-            raise ValueError(
-                f"shard for {meta.name!r} shorter than its index ({isize} B)")
-        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"], n * 16)
-        pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
-        inner = meta.shard["chunk_shape"]
-
-        def gen() -> Iterator[tuple[tuple[int, ...], np.ndarray | None]]:
-            # C-order product == sequential ravel index into the pairs
-            for k, coords_in in enumerate(
-                itertools.product(*[range(g) for g in grid])
-            ):
-                off, ln = int(pairs[k, 0]), int(pairs[k, 1])
-                if off == _SHARD_MISSING and ln == _SHARD_MISSING:
-                    yield coords_in, None
-                    continue
-                raw = self._kv.read_range(key, off, ln)
-                if raw is None or len(raw) != ln:
-                    raise ValueError(
-                        f"shard for {meta.name!r}: range read of inner "
-                        f"chunk {k} [{off}, {off + ln}) failed")
-                sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"],
-                                                _raw_nbytes(meta, inner))
-                yield coords_in, _block_from_raw(meta, sub_raw, inner)
-
-        return gen()
+        grid = _shard_grid(meta)[0]
+        # C-order product == sequential ravel index into the pairs
+        return ((coords_in, self._inner_block(meta, key, pairs, k)) for k, coords_in
+                in enumerate(itertools.product(*[range(g) for g in grid])))
 
     def encode_chunk(self, meta: ZarrArrayMeta, block: np.ndarray) -> bytes:
         if tuple(block.shape) != meta.chunks:
@@ -1269,23 +1294,21 @@ class ZarrStore:
         """Materialize an array, or a half-open sliced box of it, on the
         driver — the Variable::Read analog: ``MdioVariable.read`` slices,
         dimension coordinates, header variables and the SEG-Y export tasks.
-        The touched chunks fetch and decode concurrently (``map_chunks``),
-        and the caller copies each block into the result in chunk order.
         A chunk decoded earlier in this process and unchanged since (same
-        ``KVStore.generation`` stamp) comes from the decoded-chunk cache
-        without a fetch or a decode (``decode_chunk``); the result is
-        always a fresh, writable array. Whole-volume scans go through the
-        Spark reader instead."""
+        ``KVStore.generation`` stamp) comes from the decoded-chunk cache on
+        the calling thread (``is_cached``), with no pool job; the others
+        fetch and decode concurrently (``map_chunks``). The caller copies
+        each block into a fresh, writable result in chunk order. Whole-volume
+        scans go through the Spark reader instead."""
         meta = self.array_meta(name)
         sel = _clamped_box(meta, ranges)
         out_shape = tuple(hi - lo for lo, hi in sel)
         out = np.full(out_shape, meta.fill_scalar(), dtype=meta.np_dtype)
-        # box-aware: a window read of a SHARDED array fetches the shard
-        # index + only the intersecting inner chunks (ranged GETs on object
-        # stores), never the whole shard object; plain chunks fall through
-        # to the whole-object path inside decode_chunk_box
+        # box-aware: a window read of a SHARDED array fetches the shard index
+        # and only the inner chunks it needs, never the whole shard object
         for coords, block in map_chunks(
-            lambda c: self.decode_chunk_box(meta, c, sel), chunks_overlapping(meta, sel)
+            lambda c: self.decode_chunk_box(meta, c, sel), chunks_overlapping(meta, sel),
+            inline=lambda c: self.is_cached(meta, c, sel),
         ):
             if block is None:
                 continue  # already fill-initialized
@@ -1481,19 +1504,22 @@ def _decode_signature(meta: ZarrArrayMeta) -> tuple:
 
 
 def map_chunks(
-    job: Callable[[Any], Any], items: Iterable[Any], depth: int = _PREFETCH_DEPTH
+    job: Callable[[Any], Any], items: Iterable[Any], depth: int = _PREFETCH_DEPTH,
+    inline: Callable[[Any], bool] | None = None,
 ) -> Iterator[tuple[Any, Any]]:
     """``(item, job(item))`` for each item, in input order — the one chunk
     pipeline behind driver reads, driver writes and executor scans. At
-    most ``depth`` jobs are in flight, so memory stays bounded by ``depth``
-    chunks and the output is deterministic. ``items`` is consumed lazily
-    on the calling thread. Jobs run on the process's chunk pool and on the
-    calling thread: while the next result is not ready, the caller runs the
-    earliest job in the window that no pool thread has started, and waits
-    only when all of them have started. So a call never idles behind a
-    pool thread the host has not scheduled yet. Byte fetches (and the
-    zlib/gzip decoders, which release the GIL) overlap across chunks; on
-    object stores this hides the GET round-trips.
+    most ``depth`` items are in the window, so memory stays bounded by
+    ``depth`` chunks and the output is deterministic. ``items`` is consumed
+    lazily on the calling thread. An item for which ``inline(item)`` is
+    true (a cache hit) runs there at once and enters the window resolved,
+    with no pool job; only the others become pool jobs. Jobs run on the
+    process's chunk pool and on the calling thread: while the next result
+    is not ready, the caller runs the earliest job in the window that no
+    pool thread has started, and waits only when all of them have started.
+    So a call never idles behind a pool thread the host has not scheduled
+    yet. Byte fetches (and the zlib/gzip decoders, which release the GIL)
+    overlap across chunks; on object stores this hides the GET round-trips.
 
     A job's exception re-raises here, in item order. When the caller stops
     (an exception, or closing the generator), jobs not yet started are
@@ -1505,7 +1531,7 @@ def map_chunks(
 
     pool = _chunk_pool()
     # (item, future, slot): a job the caller takes over cancels its future
-    # and leaves (result, error) in its slot
+    # and leaves (result, error) in its slot; an inline job has no future
     window: deque = deque()
 
     def run_here(item: Any, slot: list) -> None:
@@ -1537,15 +1563,20 @@ def map_chunks(
 
     try:
         for item in items:
-            window.append((item, pool.submit(job, item), []))
+            if inline is not None and inline(item):
+                window.append((item, None, []))
+                run_here(item, window[-1][2])
+            else:
+                window.append((item, pool.submit(job, item), []))
             if len(window) >= depth:
                 yield collect()
         while window:
             yield collect()
     finally:
-        for _, fut, _ in window:
+        futs = [fut for _, fut, _ in window if fut is not None]
+        for fut in futs:
             fut.cancel()
-        wait([fut for _, fut, _ in window])
+        wait(futs)
 
 
 def zone_of(v: "np.ndarray") -> list[float] | None:

@@ -258,3 +258,79 @@ def test_frame_corruption_fuzz_never_hangs_or_overallocates():
                 assert len(out) <= len(data) * 64
             except (blosc1.BloscFormatError, zlib.error):
                 pass
+
+
+def _deflate_zeros(mib: int, wbits: int = 15) -> bytes:
+    """A zlib (``wbits`` 15) or gzip (31) stream of ``mib`` MiB of zeros,
+    built a MiB at a time: about 1 KiB of stream per MiB of output."""
+    c = zlib.compressobj(9, zlib.DEFLATED, wbits)
+    zero = bytes(1 << 20)
+    return b"".join(c.compress(zero) for _ in range(mib)) + c.flush()
+
+
+def _peak_bytes(fn) -> int:
+    """Peak traced allocation while ``fn`` runs."""
+    import tracemalloc
+
+    tracemalloc.start()
+    try:
+        fn()
+        return tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def _raises(exc, fn, *args):
+    def call():
+        with pytest.raises(exc):
+            fn(*args)
+    return call
+
+
+def test_zlib_bomb_in_a_blosc_frame_raises_in_bounded_memory():
+    """A frame declaring one 1 KiB block whose zlib stream inflates to
+    64 MiB: the block's inflate stops one byte past 1 KiB and raises."""
+    stream = _deflate_zeros(64)
+    body = struct.pack("<ii", 20, len(stream)) + stream
+    header = bytes([blosc1.BLOSC_VERSION_FORMAT, 1, blosc1._ZLIB_ID << 5, 1])
+    frame = header + struct.pack("<iii", 1024, 1024, 16 + len(body)) + body
+    assert _peak_bytes(_raises(blosc1.BloscFormatError, blosc1.decompress, frame)) < 1 << 20
+
+
+@pytest.mark.parametrize("wbits,cid", [(15, "zlib"), (31, "gzip")])
+def test_zlib_gzip_chunk_bombs_raise_in_bounded_memory(wbits, cid):
+    """A v2 compressor or a v3 chain stage told the chunk's raw size
+    stops inflating one byte past it and raises CodecError."""
+    from mdio_cpp_spark.sources.codecs import decompress_v3
+
+    bomb = _deflate_zeros(64, wbits)
+    chain = [{"name": "bytes", "configuration": {"endian": "little"}}, {"name": cid}]
+    assert _peak_bytes(_raises(CodecError, decompress_v2, bomb, {"id": cid}, 1024)) < 1 << 20
+    assert _peak_bytes(_raises(CodecError, decompress_v3, bomb, chain, 1024)) < 1 << 20
+
+
+@pytest.mark.parametrize("wbits,cid", [(15, "zlib"), (31, "gzip")])
+def test_bounded_inflate_wants_exactly_the_raw_size(wbits, cid):
+    """Exact size decodes bit-identically to the unbounded inflate; one
+    byte short or long raises CodecError; a truncated stream still raises
+    zlib's own error."""
+    raw = (np.arange(4096) % 251).astype("<f8").tobytes()
+    enc = compress_v2(raw, {"id": cid, "level": 5})
+    assert decompress_v2(enc, {"id": cid}, len(raw)) == decompress_v2(enc, {"id": cid}) == raw
+    for size in (len(raw) - 1, len(raw) + 1):
+        with pytest.raises(CodecError):
+            decompress_v2(enc, {"id": cid}, size)
+    with pytest.raises(zlib.error):
+        decompress_v2(enc[: len(enc) // 2], {"id": cid}, len(raw))
+
+
+def test_zlib_bomb_chunk_in_a_store_raises_in_bounded_memory(tmp_path):
+    """The v2 read path passes the chunk's raw size, so a bomb written in
+    place of a zlib chunk raises on read without inflating it."""
+    from mdio_cpp_spark.sources.zarr_store import ZarrStore
+
+    st = ZarrStore.create(str(tmp_path / "bomb.zarr"), version=2)
+    st.create_array("v", shape=(8, 8), chunks=(8, 8), dtype="float64",
+                    dims=("a", "b"), compressor={"id": "zlib", "level": 5})
+    st.write_bytes("v/0.0", _deflate_zeros(64))
+    assert _peak_bytes(_raises(CodecError, st.read_array, "v")) < 1 << 20

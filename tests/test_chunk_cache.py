@@ -1,14 +1,18 @@
-"""The process-wide decoded-chunk cache behind ``ZarrStore.decode_chunk``.
+"""The process-wide decoded-chunk cache behind ``ZarrStore.decode_chunk``,
+and the per-store metadata parse behind ``ZarrStore.arrays``.
 
-A repeated read of an unchanged chunk makes no fetch and no decode; any
-change to the chunk object (through this store, another store, another
-process, an in-place rewrite, a delete) is seen at the next read, through
-the in-process write drop or the ``KVStore.generation`` stamp. The cache
-stays within its byte cap, hands out read-only blocks, and a forked child
-starts with a cache and lock of its own."""
+A repeated read of an unchanged chunk makes no fetch, no decode and no
+chunk-pool job; any change to the chunk object (through this store,
+another store, another process, an in-place rewrite, a delete) is seen at
+the next read, through the in-process write drop or the
+``KVStore.generation`` stamp. The cache stays within its byte cap, hands
+out read-only blocks, and a forked child starts with a cache and lock of
+its own. The consolidated metadata is parsed once per stamp of its
+document, and a change by any writer is seen at the next call."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import subprocess
 import sys
@@ -135,8 +139,7 @@ def test_other_metadata_over_same_objects_is_not_reused(tmp_path):
     metadata: the block is decoded again under the new signature."""
     root, st, vals = _grid(tmp_path)
     st.read_array("v", BOX)
-    meta = st.array_meta("v")
-    meta.np_dtype = np.dtype("<i8")
+    meta = dataclasses.replace(st.array_meta("v"), np_dtype=np.dtype("<i8"))
     assert np.array_equal(st.decode_chunk(meta, (0, 0)),
                           vals[:8, :8].view("<i8"))
 
@@ -318,3 +321,168 @@ def test_read_in_child_forked_with_the_cache_lock_held(tmp_path):
             pytest.fail("a read hung in a forked child")
         time.sleep(0.05)
     assert os.waitstatus_to_exitcode(status) == 0
+
+
+class _CountingPool:
+    """The chunk pool, counting the jobs submitted to it."""
+
+    def __init__(self, pool):
+        self.pool, self.submits = pool, 0
+
+    def submit(self, fn, *args):
+        self.submits += 1
+        return self.pool.submit(fn, *args)
+
+
+@pytest.fixture
+def pool(monkeypatch):
+    counting = _CountingPool(zarr_store._chunk_pool())
+    monkeypatch.setattr(zarr_store, "_chunk_pool", lambda: counting)
+    return counting
+
+
+def test_cached_read_array_skips_the_pool(tmp_path, pool):
+    """A cached 16-chunk read makes no chunk read and submits no job. After
+    another store rewrites one chunk (dropping its entry), exactly that
+    chunk is read, on one pool job. A chunk rewritten behind the cache's
+    back keeps a stale entry: its read runs on the calling thread, and the
+    stamp still makes it read the new bytes."""
+    root, st, vals = _grid(tmp_path, {"id": "zlib", "level": 5})
+    meta = st.array_meta("v")
+    reads = _chunk_reads(st)
+    pool.submits = 0
+    assert np.array_equal(st.read_array("v", BOX), vals)
+    assert (len(reads), pool.submits) == (16, 16)
+    reads.clear()
+    pool.submits = 0
+    assert np.array_equal(st.read_array("v", BOX), vals)
+    assert (reads, pool.submits) == ([], 0)
+    ZarrStore.open(root).write_chunk(meta, (2, 3), np.full((8, 8), -3.0))
+    vals[16:24, 24:32] = -3.0
+    assert np.array_equal(st.read_array("v", BOX), vals)
+    assert (reads, pool.submits) == (["v/2.3"], 1)
+    reads.clear()
+    pool.submits = 0
+    ZarrStore.open(root)._kv.write("v/0.1", st.encode_chunk(meta, np.full((8, 8), 9.0)))
+    vals[0:8, 8:16] = 9.0
+    assert np.array_equal(st.read_array("v", BOX), vals)
+    assert (reads, pool.submits) == (["v/0.1"], 0)
+
+
+def test_cached_fetch_blocks_skips_the_pool(tmp_path, pool):
+    """A cached single-variable executor fetch makes no chunk read and
+    submits no job."""
+    from mdio_cpp_spark.sources.reader import _fetch_blocks
+
+    root, st, vals = _grid(tmp_path)
+    meta = st.array_meta("v")
+    box = ((0, 32), (0, 32))
+    coords = [(i, j) for i in range(4) for j in range(4)]
+    assert len(list(_fetch_blocks(st, [meta], box, coords))) == 16
+    reads = _chunk_reads(st)
+    pool.submits = 0
+    got = list(_fetch_blocks(st, [meta], box, coords))
+    assert (reads, pool.submits) == ([], 0)
+    for (i, j), blocks in got:
+        assert np.array_equal(blocks["v"], vals[8 * i:8 * i + 8, 8 * j:8 * j + 8])
+
+
+def test_fetch_blocks_keeps_input_order_across_hits_and_misses(tmp_path, pool):
+    """Hits run on the calling thread and misses on the pool, in a
+    scrambled chunk order: the output keeps the input order, and only the
+    misses become jobs."""
+    import random
+
+    from mdio_cpp_spark.sources.reader import _fetch_blocks
+
+    root, st, vals = _grid(tmp_path)
+    meta = st.array_meta("v")
+    coords = [(i, j) for i in range(4) for j in range(4)]
+    random.Random(7).shuffle(coords)
+    for c in coords[::2]:
+        st.decode_chunk(meta, c)
+    pool.submits = 0
+    got = list(_fetch_blocks(st, [meta], ((0, 32), (0, 32)), coords))
+    assert [c for c, _ in got] == coords
+    assert pool.submits == 8
+    for (i, j), blocks in got:
+        assert np.array_equal(blocks["v"], vals[8 * i:8 * i + 8, 8 * j:8 * j + 8])
+
+
+def _consolidated_grid(tmp_path, version: int) -> tuple[str, ZarrStore]:
+    root = str(tmp_path / f"meta{version}.zarr")
+    st = ZarrStore.create(root, version=version)
+    st.create_array("v", shape=(16,), chunks=(8,), dtype="float64", dims=("a",))
+    st.write_array_numpy("v", np.arange(16.0))
+    st.consolidate()
+    return root, st
+
+
+@pytest.mark.parametrize("version", [2, 3])
+def test_metadata_rewritten_by_a_subprocess_is_seen(tmp_path, version):
+    """Another process updates an array's attributes and adds an array,
+    which republishes the consolidated document (``.zmetadata`` or the v3
+    root ``zarr.json``): a store opened before sees both at its next call."""
+    root, _ = _consolidated_grid(tmp_path, version)
+    st = ZarrStore.open(root)
+    assert st.array_meta("v").attrs.get("k") is None
+    assert st._parsed is not None  # the parse is kept
+    code = (
+        "import sys, numpy as np\n"
+        "from mdio_cpp_spark.sources.zarr_store import ZarrStore\n"
+        "st = ZarrStore.open(sys.argv[1])\n"
+        "st.patch_array_attrs('v', {'k': 1})\n"
+        "st.create_array('w', shape=(4,), chunks=(4,), dtype='float64', dims=('b',))\n"
+        "st.write_array_numpy('w', np.full(4, 7.0))\n"
+    )
+    subprocess.run([sys.executable, "-c", code, root], cwd=REPO, check=True,
+                   env={**os.environ, "PYTHONPATH": REPO})
+    assert st.array_meta("v").attrs["k"] == 1
+    assert np.array_equal(st.read_array("w"), np.full(4, 7.0))
+
+
+def test_walked_v3_metadata_is_never_kept(tmp_path):
+    """A v3 store without consolidated metadata is walked: the root
+    document's stamp does not cover the child documents, so an array
+    another store creates shows in the next ``arrays()``."""
+    root = str(tmp_path / "walk.zarr")
+    st = ZarrStore.create(root, version=3)
+    st.create_array("a", shape=(4,), chunks=(4,), dtype="float64", dims=("i",))
+    assert set(st.arrays()) == {"a"}
+    ZarrStore.open(root).create_array("b", shape=(4,), chunks=(4,),
+                                      dtype="float64", dims=("i",))
+    assert set(st.arrays()) == {"a", "b"}
+    assert st.array_meta("b").shape == (4,)
+
+
+@pytest.mark.parametrize("version", [2, 3])
+def test_arrays_returns_a_new_dict_each_call(tmp_path, version):
+    root, st = _consolidated_grid(tmp_path, version)
+    got = st.arrays()
+    got.pop("v")
+    got["x"] = None
+    assert list(st.arrays()) == ["v"]
+
+
+@pytest.mark.parametrize("version", [2, 3])
+def test_dataset_open_reads_the_consolidated_document_once(tmp_path, monkeypatch, version):
+    """``MdioDataset.open`` reads ``.zmetadata`` (or the v3 root
+    ``zarr.json``) once; its variables' reads parse nothing again."""
+    from mdio_cpp_spark.model import MdioDataset
+    from mdio_cpp_spark.sources import kvstore
+
+    root, _ = _consolidated_grid(tmp_path, version)
+    doc = ".zmetadata" if version == 2 else "zarr.json"
+    reads: list[str] = []
+    read = kvstore.LocalKVStore.read
+
+    def counted(self, key):
+        reads.append(key)
+        return read(self, key)
+
+    monkeypatch.setattr(kvstore.LocalKVStore, "read", counted)
+    ds = MdioDataset.open(root)
+    assert reads.count(doc) == 1
+    assert np.array_equal(ds.var("v").read(), np.arange(16.0))
+    assert np.array_equal(ds.var("v").read(), np.arange(16.0))
+    assert reads.count(doc) == 1

@@ -14,12 +14,18 @@ Python under the GIL for every cname.
 
 The chunks are generated locally: band-limited float32 traces (a few
 sinusoids plus low noise, like migrated seismic), ``--chunk-kib`` each, a
-different seed per chunk. Nothing is downloaded and nothing is written.
+different seed per chunk. Nothing is downloaded.
+
+A last line times the decoded-chunk cache's hit path: a 16-chunk
+``ZarrStore.read_array`` whose chunks are all cached, in µs per read, and
+the chunk-pool jobs each such read submits (0: hits are served on the
+calling thread). Its store is written to a temporary directory and removed.
 
     python tools/codec_bench.py                  # 8 chunks of 256 KiB, 5 reps
     python tools/codec_bench.py --chunks 16 --reps 3 --codecs zlib,blosc-lz4
 
-Prints one markdown table (median of ``--reps`` timings per cell).
+Prints one markdown table (median of ``--reps`` timings per cell) and the
+hit-path line.
 """
 
 from __future__ import annotations
@@ -29,14 +35,15 @@ import hashlib
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mdio_cpp_spark.sources import codecs  # noqa: E402
-from mdio_cpp_spark.sources.zarr_store import _POOL_THREADS, map_chunks  # noqa: E402
+from mdio_cpp_spark.sources import codecs, zarr_store  # noqa: E402
+from mdio_cpp_spark.sources.zarr_store import _POOL_THREADS, ZarrStore, map_chunks  # noqa: E402
 
 CODECS = {
     "zlib": {"id": "zlib", "level": 5},
@@ -121,6 +128,38 @@ def bench(name: str, raws: list[bytes], reps: int) -> dict:
     return row
 
 
+class _CountingPool:
+    """The chunk pool, counting the jobs submitted to it."""
+
+    def __init__(self, pool):
+        self.pool, self.submits = pool, 0
+
+    def submit(self, fn, *args):
+        self.submits += 1
+        return self.pool.submit(fn, *args)
+
+
+def cached_read(reps: int, reads: int = 200) -> tuple[float, float]:
+    """(µs per cached 16-chunk ``read_array``, chunk-pool submits per read):
+    the median of ``reps`` timings of ``reads`` reads of a 4×4 grid of
+    64×64 float32 zlib chunks, all cached by a first read."""
+    counting = _CountingPool(zarr_store._chunk_pool())
+    real = zarr_store._chunk_pool
+    with tempfile.TemporaryDirectory() as tmp:
+        st = ZarrStore.create(os.path.join(tmp, "hits.zarr"), version=2)
+        st.create_array("v", shape=(256, 256), chunks=(64, 64), dtype="float32",
+                        dims=("a", "b"), compressor=CODECS["zlib"])
+        st.write_array_numpy("v", np.arange(256 * 256, dtype="f4").reshape(256, 256))
+        st.consolidate()
+        st.read_array("v")
+        zarr_store._chunk_pool = lambda: counting
+        try:
+            s = _median_s(lambda: [st.read_array("v") for _ in range(reads)], reps)
+        finally:
+            zarr_store._chunk_pool = real
+    return 1e6 * s / reads, counting.submits / (reads * reps)
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--chunks", type=int, default=8, help="chunks per timing (default 8)")
@@ -149,6 +188,9 @@ def main(argv: list[str] | None = None) -> None:
               f"| {r['decode_map'] / r['decode_serial']:.2f}× "
               f"| {r['encode_serial']:.1f} | {r['encode_map']:.1f} "
               f"| {r['encode_map'] / r['encode_serial']:.2f}× |", flush=True)
+    us, submits = cached_read(args.reps)
+    print(f"\ncached 16-chunk read_array: {us:.1f} µs per read, "
+          f"{submits:.2f} chunk-pool submits per read")
 
 
 if __name__ == "__main__":
