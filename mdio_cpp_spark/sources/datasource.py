@@ -73,7 +73,7 @@ from mdio_cpp_spark.sources.reader import (
     scan_schema,
     task_count,
 )
-from mdio_cpp_spark.sources.zarr_store import CHUNK_STATS_ATTR, ZarrStore, _clamped_box, zone_of
+from mdio_cpp_spark.sources.zarr_store import ZarrStore, _clamped_box, chunk_zone
 
 
 class MdioChunkPartition(InputPartition):
@@ -450,7 +450,9 @@ class MdioArrowWriter(DataSourceArrowWriter):
 
     Each task accumulates (offset, value) per chunk across its Arrow
     batches, then RMWs each chunk exactly once at task end — one decode +
-    one encode per touched chunk regardless of row order."""
+    one encode per touched chunk regardless of row order — through
+    ``ZarrStore.rewrite_chunk``, the read-modify-write every writer shares.
+    The commit folds the tasks' zones through ``zonemap.fold_zones``."""
 
     def __init__(self, root: str, version: int, var: str, value_col: str):
         self.root, self.version, self.var, self.value_col = root, version, var, value_col
@@ -473,6 +475,11 @@ class MdioArrowWriter(DataSourceArrowWriter):
             cols = {name: batch.column(i).to_numpy(zero_copy_only=False)
                     for i, name in enumerate(batch.schema.names)}
             idx = [cols[d].astype(np.int64) for d in dims]
+            for d, i in enumerate(idx):  # else the row lands in another chunk's cell
+                if len(i) and (i.min() < 0 or i.max() >= meta.shape[d]):
+                    raise ValueError(
+                        f"row outside array domain {tuple(meta.shape)}: {dims[d]!r} "
+                        f"spans [{i.min()}, {i.max()}]")
             vals = cols[self.value_col]
             ckey = np.zeros(len(vals), dtype=np.int64)
             off = np.zeros(len(vals), dtype=np.int64)
@@ -486,36 +493,23 @@ class MdioArrowWriter(DataSourceArrowWriter):
                 m = ckey == k
                 per_chunk.setdefault(int(k), []).append((off[m], vals[m]))
         keys, zones = [], {}
-        from mdio_cpp_spark.sources import zonemap as _zm
-
-        has_manifest = (
-            (CHUNK_STATS_ATTR in meta.attrs or _zm.sidecar_info(meta) is not None)
-            and not meta.is_struct
-            and meta.np_dtype.kind in "biuf"
-        )
+        zoned = _zonemap.zone_form(meta) is not None
         grid = meta.grid_shape()
         for linear, parts in per_chunk.items():
             coords = tuple(int(c) for c in np.unravel_index(linear, grid))
-            block = store.decode_chunk(meta, coords)
-            flat = (
-                np.full(n_cells, meta.fill_scalar(), dtype=meta.np_dtype)
-                if block is None
-                else block.reshape(-1, order=meta.order).copy()
-            )
-            for off, vals in parts:
-                if len(off) and (off.min() < 0 or off.max() >= n_cells):
-                    raise ValueError(f"row outside chunk {coords}")
-                flat[off] = vals.astype(meta.np_dtype, copy=False)
-            shaped = flat.reshape(meta.chunks)
-            store.write_chunk(meta, coords, shaped)
+
+            def patch(block: np.ndarray) -> None:
+                flat = block.reshape(-1)
+                for off, vals in parts:
+                    if len(off) and (off.min() < 0 or off.max() >= n_cells):
+                        raise ValueError(f"row outside chunk {coords}")
+                    flat[off] = vals.astype(meta.np_dtype, copy=False)
+
+            block = store.rewrite_chunk(meta, coords, patch)
             key = ",".join(str(c) for c in coords)
             keys.append(key)
-            if has_manifest:
-                valid = tuple(
-                    slice(0, min(meta.chunks[d], meta.shape[d] - coords[d] * meta.chunks[d]))
-                    for d in range(meta.ndim)
-                )
-                zones[key] = zone_of(shaped[valid])
+            if zoned:
+                zones[key] = chunk_zone(meta, coords, block)
         import json
 
         return MdioCommitMessage(chunk_keys=keys, zones=json.dumps(zones) if zones else "")
@@ -534,22 +528,13 @@ class MdioArrowWriter(DataSourceArrowWriter):
                 "are UB in the reference too, USER_GUIDE 'Write')"
             )
         store = ZarrStore(self.root, self.version)
-        meta = store.array_meta(self.var)
         zones = {}
         for m in messages:
             if m and m.zones:
                 zones.update(json.loads(m.zones))
-        if zones and CHUNK_STATS_ATTR in meta.attrs:
-            manifest = dict(meta.attrs[CHUNK_STATS_ATTR])
-            manifest.update(zones)
-            store.update_array_attrs(self.var, {**meta.attrs, CHUNK_STATS_ATTR: manifest})
-        elif zones:
-            # sidecar manifest: fold the touched chunks' zones in via the
-            # sidecar RMW (commit messages are already driver-resident —
-            # the DSv2 commit contract — so this stays a driver-side fold)
-            from mdio_cpp_spark.sources import zonemap as _zm
-
-            _zm.apply_zone_updates(self.root, self.var, zones)
+        # commit messages are already driver-resident (the DSv2 commit
+        # contract), so both zone forms fold here
+        _zonemap.fold_zones(store, {self.var: zones})
         store.consolidate()
 
     def abort(self, messages) -> None:  # chunks are atomic (tmp+rename); a

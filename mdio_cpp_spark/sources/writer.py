@@ -11,6 +11,12 @@ read-modify-written so a partial-coverage write preserves previously-written
 cells (the reference's Variable::Write touches only the written region) —
 single-writer-per-chunk makes the RMW race-free.
 
+The read-modify-write is ``ZarrStore.rewrite_chunk``, the one chunk write of
+all three writers (this one, the DSv2 ``MdioArrowWriter`` and the driver's
+``write_array_numpy``): each task scatters its rows' C-order in-chunk offsets
+into the C-order block it hands back. Zone stats of the rewritten chunks fold
+through ``zonemap.fold_zones``, except the distributed sidecar pass below.
+
 Scale shape: one shuffle keyed by chunk id (dominated by data size, the
 theoretical minimum for a re-chunking write), then embarrassingly parallel
 chunk encodes. Skewed chunk occupancy is bounded by chunk volume, so no
@@ -28,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mdio_cpp_spark.sources import zonemap as _zonemap
-from mdio_cpp_spark.sources.zarr_store import zone_of as _zone_of, ZarrArrayMeta, ZarrStore
+from mdio_cpp_spark.sources.zarr_store import ZarrArrayMeta, ZarrStore, chunk_zone
 
 __all__ = ["write_array", "write_arrays", "dense_fill_frame"]
 
@@ -57,8 +63,11 @@ def _field_cols(meta: ZarrArrayMeta, value_cols: dict[str, str] | str) -> dict[s
     return {"__scalar__": value_cols if isinstance(value_cols, str) else next(iter(value_cols.values()))}
 
 
-def _scatter_into(meta: ZarrArrayMeta, flat: np.ndarray, off: np.ndarray,
+def _scatter_into(meta: ZarrArrayMeta, block: np.ndarray, off: np.ndarray,
                   pdf: pd.DataFrame, field_cols: dict[str, str]) -> None:
+    """Put ``pdf``'s values at the C-order cell offsets ``off`` of a
+    C-order chunk block (``ZarrStore.rewrite_chunk``'s patch)."""
+    flat = block.reshape(-1)
     if meta.is_struct:
         for fname, colname in field_cols.items():
             flat[fname][off] = _to_numpy_values(pdf[colname], meta.np_dtype.fields[fname][0])
@@ -145,9 +154,8 @@ def write_arrays(
         term = (F.col(dim) % F.lit(int(first.chunks[d]))) * F.lit(strides[d])
         off_expr = term if off_expr is None else off_expr + term
     value_src_cols = sorted({c for fc in fields_by_var.values() for c in fc.values()})
-    # a row outside the array domain must fail loudly (matching the DSv2
-    # writer's unravel check) instead of writing orphan chunks the scan can
-    # never plan. The guard rides the consumed __off column so Catalyst
+    # a row outside the array domain must fail loudly (as in the DSv2
+    # writer) instead of writing orphan chunks the scan can never plan. The guard rides the consumed __off column so Catalyst
     # cannot prune it away.
     in_domain = None
     for d, dim in enumerate(dim_names):
@@ -176,30 +184,12 @@ def write_arrays(
         [f"{c} long" for c in ckey_cols] + ["chunks long", "cells long", "zstats string"]
     )
     n_cells_chunk = int(np.prod(first.chunks))
-    # zone-map coherence: variables with a published chunk-stats manifest
-    # (sources/zonemap.py) get their touched chunks' [min,max] recomputed in
-    # the SAME write pass (the final chunk contents are already in hand) and
-    # the manifest republished — a write never leaves stats that could
-    # wrongly prune a later scan
-    stats_vars = [
-        v
-        for v, m in metas.items()
-        if _zonemap.STATS_KEY in m.attrs
-        and not m.is_struct
-        and m.np_dtype.kind in "biuf"
-    ]
-    # sidecar-manifest variables (the scale form): zones are folded back by
-    # a distributed RMW pass keyed on sidecar-chunk id — no per-chunk
-    # driver collect, so coherence holds past the attr-resident cap
-    side_vars = [
-        v
-        for v, m in metas.items()
-        if v not in stats_vars
-        and _zonemap.sidecar_info(m) is not None
-        and not m.is_struct
-        and m.np_dtype.kind in "biuf"
-    ]
-    zone_vars = set(stats_vars) | set(side_vars)
+    # zone-map coherence: the touched chunks' [min,max] is taken from the
+    # blocks as written, in the SAME pass, and folded into each variable's
+    # zone map (sources/zonemap.py) — a write never leaves stats that could
+    # wrongly prune a later scan. The form is decided here, on the driver
+    forms = {v: _zonemap.zone_form(m) for v, m in metas.items()}
+    zone_vars = {v for v, f in forms.items() if f is not None}
 
     def write_chunk_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         coords = tuple(int(k) for k in key)
@@ -207,23 +197,12 @@ def write_arrays(
         off = pdf["__off"].to_numpy(dtype=np.int64)
         if len(off) and (off.min() < 0 or off.max() >= n_cells_chunk):
             raise ValueError(f"row outside chunk {coords}")
-        zstats: dict[str, list[float]] = {}
+        zstats: dict[str, list[float] | None] = {}
         for var, meta in metas.items():
-            existing = task_store.decode_chunk(meta, coords)
-            if existing is None:
-                flat = np.full(n_cells_chunk, meta.fill_scalar(), dtype=meta.np_dtype)
-            else:
-                # partial-coverage overwrite keeps prior cells (RMW)
-                flat = existing.reshape(-1, order=meta.order).copy()
-            _scatter_into(meta, flat, off, pdf, fields_by_var[var])
-            block = flat.reshape(meta.chunks)
-            task_store.write_chunk(meta, coords, block)
+            block = task_store.rewrite_chunk(  # patch runs before the call returns
+                meta, coords, lambda b: _scatter_into(meta, b, off, pdf, fields_by_var[var]))
             if var in zone_vars:
-                valid = tuple(
-                    slice(0, min(meta.chunks[d], meta.shape[d] - coords[d] * meta.chunks[d]))
-                    for d in range(meta.ndim)
-                )
-                zstats[var] = _zone_of(block[valid])
+                zstats[var] = chunk_zone(meta, coords, block)
         return pd.DataFrame({
             **{c: [coords[d]] for d, c in enumerate(ckey_cols)},
             "chunks": [len(metas)], "cells": [len(pdf) * len(metas)],
@@ -231,33 +210,20 @@ def write_arrays(
         })
 
     per_chunk = keyed.groupBy(*ckey_cols).applyInPandas(write_chunk_group, schema=out_schema)
-    if stats_vars:
+    side_vars = [v for v, f in forms.items() if f == "sidecar"]
+    if "attr" in forms.values():
         # chunk-cardinality collect (bounded by the attr-resident manifest
-        # cap); fold the new zones into each manifest and republish
+        # cap); every variable's zones fold on the driver
         rows = per_chunk.collect()
-        chunks_total = sum(r["chunks"] or 0 for r in rows)
-        cells_total = sum(r["cells"] or 0 for r in rows)
-        from mdio_cpp_spark.model import MdioDataset
-
-        ds = MdioDataset.open(root_path)
-        for var in stats_vars:
-            manifest = dict(metas[var].attrs[_zonemap.STATS_KEY])
-            for r in rows:
-                st = json.loads(r["zstats"]) if r["zstats"] else {}
-                if var in st:
-                    key = ",".join(str(r[c]) for c in ckey_cols)
-                    manifest[key] = st[var]
-            ds.update_attrs(var, **{_zonemap.STATS_KEY: manifest})
-        ds.commit_metadata()
-        for var in side_vars:  # rare mixed case: rows are already driver-side
-            zones = {}
-            for r in rows:
-                st = json.loads(r["zstats"]) if r["zstats"] else {}
-                if var in st:
-                    zones[",".join(str(r[c]) for c in ckey_cols)] = st[var]
-            _zonemap.apply_zone_updates(root_path, var, zones)
-        report = {"chunks": chunks_total, "cells": cells_total}
-        consolidate = False  # commit_metadata above already consolidated
+        zones: dict[str, dict] = {v: {} for v in zone_vars}
+        for r in rows:
+            key = ",".join(str(r[c]) for c in ckey_cols)
+            for v, z in (json.loads(r["zstats"]) if r["zstats"] else {}).items():
+                zones[v][key] = z
+        if _zonemap.fold_zones(store, zones):
+            consolidate = True
+        report = {"chunks": sum(r["chunks"] or 0 for r in rows),
+                  "cells": sum(r["cells"] or 0 for r in rows)}
     elif side_vars:
         # fully distributed coherence: one tiny row per TOUCHED chunk
         # shuffles by sidecar-chunk id; each reduce task RMWs its own
@@ -267,17 +233,16 @@ def write_arrays(
         lin = F.lit(0).cast("long")
         for d, g in enumerate(first.grid_shape()):
             lin = lin * F.lit(int(g)) + F.col(ckey_cols[d])
-        _side_vars = list(side_vars)
 
         def update_side(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            zones_by_var: dict[str, dict] = {v: {} for v in _side_vars}
+            zones_by_var: dict[str, dict] = {v: {} for v in side_vars}
             ck = pdf[ckey_cols].astype(int).astype(str).agg(",".join, axis=1)
             for k, zs in zip(ck, pdf["zstats"]):
                 st = json.loads(zs) if zs else {}
-                for v in _side_vars:
+                for v in side_vars:
                     if v in st:
                         zones_by_var[v][k] = st[v]
-            for v in _side_vars:
+            for v in side_vars:
                 _zonemap.apply_zone_updates(root_path, v, zones_by_var[v])
             return pd.DataFrame(
                 {"chunks": [int(pdf["chunks"].sum())], "cells": [int(pdf["cells"].sum())]}

@@ -55,7 +55,7 @@ from mdio_cpp_spark.schema.types import (
 )
 
 # attrs key of the per-chunk [min,max] zone-map manifest (sources/zonemap.py
-# builds/publishes it; both writers keep it coherent on chunk writes)
+# builds/publishes it, and its fold_zones keeps it coherent on chunk writes)
 CHUNK_STATS_ATTR = "mdio:chunk_stats"
 
 # chunk jobs in flight per map_chunks call: the bound on a driver read's or
@@ -311,37 +311,71 @@ def _shard_index_size(meta: ZarrArrayMeta, n: int) -> int:
 _SHARD_MISSING = (1 << 64) - 1
 
 
-def _decode_shard(meta: ZarrArrayMeta, raw: bytes) -> np.ndarray:
-    """Parse one shard container (ZEP 2): fixed-size index locates each
-    encoded inner chunk; missing entries synthesize fill. Returns the full
-    shard-shaped block (array-edge clipping happens in the callers, same
-    as plain chunks)."""
-    inner = meta.shard["chunk_shape"]
-    grid, n = _shard_grid(meta)
+def _bytes_reader(raw: bytes) -> Callable[[int, int], bytes]:
+    """``read(offset, length)`` over a shard held in memory, with
+    ``KVStore.read_range``'s contract (a negative offset counts from the
+    end, clamped to the start), so a whole shard and ranged reads of a
+    stored one parse through the same functions."""
+    def read(off: int, length: int) -> bytes:
+        if off < 0:
+            off = max(0, len(raw) + off)
+        return raw[off : off + length]
+    return read
+
+
+def _shard_index(meta: ZarrArrayMeta, read: Callable[[int, int], Any]) -> np.ndarray | None:
+    """A shard's (offset, nbytes) pairs, one ``read`` of its fixed-size
+    index; None if the shard is absent."""
+    n = _shard_grid(meta)[1]
     isize = _shard_index_size(meta, n)
-    if len(raw) < isize:
+    enc_idx = read(-isize if meta.shard["index_location"] == "end" else 0, isize)
+    if enc_idx is None:
+        return None
+    if len(enc_idx) < isize:
         raise ValueError(
-            f"shard for {meta.name!r} shorter ({len(raw)} B) than its "
-            f"index ({isize} B)")
-    enc_idx = raw[-isize:] if meta.shard["index_location"] == "end" else raw[:isize]
+            f"shard for {meta.name!r} shorter than its index ({isize} B)")
     idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"], n * 16)
-    pairs = np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
+    return np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
+
+
+def _inner_block(meta: ZarrArrayMeta, read: Callable[[int, int], Any],
+                 pairs: np.ndarray, k: int) -> np.ndarray | None:
+    """Inner chunk ``k`` of a shard, one ``read``; None if missing."""
+    off, ln = int(pairs[k, 0]), int(pairs[k, 1])
+    if off == _SHARD_MISSING and ln == _SHARD_MISSING:
+        return None
+    raw = read(off, ln)
+    if raw is None or len(raw) != ln:
+        raise ValueError(
+            f"shard for {meta.name!r}: inner chunk {k} extent "
+            f"[{off}, {off + ln}) is not in the shard")
+    inner = meta.shard["chunk_shape"]
+    sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"], _raw_nbytes(meta, inner))
+    return _block_from_raw(meta, sub_raw, inner)
+
+
+def _inner_slice(inner: tuple, coords_in: tuple) -> tuple[slice, ...]:
+    """Where inner chunk ``coords_in`` sits in its shard's block."""
+    return tuple(slice(int(c) * i, (int(c) + 1) * i) for c, i in zip(coords_in, inner))
+
+
+def _read_shard(meta: ZarrArrayMeta, read: Callable[[int, int], Any],
+                rngs: list[range]) -> np.ndarray | None:
+    """Parse one shard container (ZEP 2) through ``read``: its index
+    locates each encoded inner chunk, and the inner chunks in ``rngs``
+    (per dim) are decoded into place in the shard-shaped block. Missing
+    and unlisted inner chunks are fill; array-edge clipping happens in the
+    callers, as for plain chunks. None when the shard is absent."""
+    pairs = _shard_index(meta, read)
+    if pairs is None:
+        return None
+    inner = meta.shard["chunk_shape"]
+    grid = _shard_grid(meta)[0]
     block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
-    for k in range(n):
-        off, ln = int(pairs[k, 0]), int(pairs[k, 1])
-        if off == _SHARD_MISSING and ln == _SHARD_MISSING:
-            continue
-        if off + ln > len(raw):
-            raise ValueError(
-                f"shard for {meta.name!r}: inner chunk {k} extent "
-                f"[{off}, {off + ln}) past shard end {len(raw)}")
-        sub_raw = _codecs.decompress_v3(raw[off : off + ln], meta.shard["codecs"],
-                                        _raw_nbytes(meta, inner))
-        coords_in = np.unravel_index(k, grid)
-        sl = tuple(
-            slice(int(c) * i, (int(c) + 1) * i) for c, i in zip(coords_in, inner)
-        )
-        block[sl] = _block_from_raw(meta, sub_raw, inner)
+    for coords_in in itertools.product(*rngs):
+        sub = _inner_block(meta, read, pairs, int(np.ravel_multi_index(coords_in, grid)))
+        if sub is not None:
+            block[_inner_slice(inner, coords_in)] = sub
     return block
 
 
@@ -372,11 +406,7 @@ def _encode_shard(meta: ZarrArrayMeta, block: np.ndarray) -> bytes:
     parts: list[bytes] = []
     cursor = isize if at_start else 0
     for k in range(n):
-        coords_in = np.unravel_index(k, grid)
-        sl = tuple(
-            slice(int(c) * i, (int(c) + 1) * i) for c, i in zip(coords_in, inner)
-        )
-        sub = block[sl]
+        sub = block[_inner_slice(inner, np.unravel_index(k, grid))]
         if meta.fill is not None and _all_fill(sub, fill):
             continue
         enc = _codecs.compress_v3(_raw_from_block(meta, sub), meta.shard["codecs"])
@@ -1156,7 +1186,8 @@ class ZarrStore:
         if raw is None:
             return None
         if meta.shard is not None:
-            block = _decode_shard(meta, raw)
+            block = _read_shard(meta, _bytes_reader(raw),
+                                [range(g) for g in _shard_grid(meta)[0]])
         else:
             if meta.zarr_version == 2:
                 raw = _codecs.decompress_v2(
@@ -1200,56 +1231,17 @@ class ZarrStore:
         whole-object path, ``decode_chunk``, and its cache."""
         if meta.shard is None or box is None:
             return self.decode_chunk(meta, coords)
-        inner = meta.shard["chunk_shape"]
-        grid, n = _shard_grid(meta)
         rngs = _shard_box_ranges(meta, coords, box)
         if rngs is None:
             return None  # no overlap: caller synthesizes fill
-        if all(len(r) == g for r, g in zip(rngs, grid)):
+        if all(len(r) == g for r, g in zip(rngs, _shard_grid(meta)[0])):
             return self.decode_chunk(meta, coords)  # full shard needed
+        return _read_shard(meta, self._shard_reader(meta, coords), rngs)
+
+    def _shard_reader(self, meta: ZarrArrayMeta, coords: tuple[int, ...]) -> Callable:
+        """``read(offset, length)`` as ranged reads of one stored shard."""
         key = meta.chunk_key(coords)
-        pairs = self._shard_index(meta, key)
-        if pairs is None:
-            return None  # absent shard
-        block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
-        for coords_in in itertools.product(*rngs):
-            sub = self._inner_block(meta, key, pairs, int(np.ravel_multi_index(coords_in, grid)))
-            if sub is not None:
-                block[tuple(slice(int(c) * i, (int(c) + 1) * i)
-                            for c, i in zip(coords_in, inner))] = sub
-        return block
-
-    def _shard_index(self, meta: ZarrArrayMeta, key: str) -> np.ndarray | None:
-        """A shard's (offset, nbytes) pairs, one ranged read; None if absent."""
-        n = _shard_grid(meta)[1]
-        isize = _shard_index_size(meta, n)
-        enc_idx = (
-            self._kv.read_range(key, -isize, isize)
-            if meta.shard["index_location"] == "end"
-            else self._kv.read_range(key, 0, isize)
-        )
-        if enc_idx is None:
-            return None
-        if len(enc_idx) < isize:
-            raise ValueError(
-                f"shard for {meta.name!r} shorter than its index ({isize} B)")
-        idx = _codecs.decompress_v3(enc_idx, meta.shard["index_codecs"], n * 16)
-        return np.frombuffer(idx, dtype=meta.shard.get("index_dtype", "<u8")).reshape(n, 2)
-
-    def _inner_block(self, meta: ZarrArrayMeta, key: str, pairs: np.ndarray,
-                     k: int) -> np.ndarray | None:
-        """Inner chunk ``k`` of a shard, one ranged read; None if missing."""
-        off, ln = int(pairs[k, 0]), int(pairs[k, 1])
-        if off == _SHARD_MISSING and ln == _SHARD_MISSING:
-            return None
-        raw = self._kv.read_range(key, off, ln)
-        if raw is None or len(raw) != ln:
-            raise ValueError(
-                f"shard for {meta.name!r}: range read of inner chunk "
-                f"{k} [{off}, {off + ln}) failed")
-        inner = meta.shard["chunk_shape"]
-        sub_raw = _codecs.decompress_v3(raw, meta.shard["codecs"], _raw_nbytes(meta, inner))
-        return _block_from_raw(meta, sub_raw, inner)
+        return lambda off, length: self._kv.read_range(key, off, length)
 
     def shard_inner_blocks(
         self, meta: ZarrArrayMeta, coords: tuple[int, ...]
@@ -1263,30 +1255,49 @@ class ZarrStore:
         Returns ``None`` when the shard OBJECT is absent."""
         if meta.shard is None:
             raise ValueError(f"{meta.name!r} is not sharded")
-        key = meta.chunk_key(coords)
-        pairs = self._shard_index(meta, key)
+        read = self._shard_reader(meta, coords)
+        pairs = _shard_index(meta, read)
         if pairs is None:
             return None
         grid = _shard_grid(meta)[0]
         # C-order product == sequential ravel index into the pairs
-        return ((coords_in, self._inner_block(meta, key, pairs, k)) for k, coords_in
+        return ((coords_in, _inner_block(meta, read, pairs, k)) for k, coords_in
                 in enumerate(itertools.product(*[range(g) for g in grid])))
 
     def encode_chunk(self, meta: ZarrArrayMeta, block: np.ndarray) -> bytes:
         if tuple(block.shape) != meta.chunks:
             raise ValueError(f"chunk block shape {block.shape} != chunk shape {meta.chunks}")
-        if meta.zarr_version == 3 and meta.shard is not None:
+        if meta.shard is not None:
             return _encode_shard(meta, np.asarray(block, dtype=meta.np_dtype))
+        raw = _raw_from_block(meta, block)
         if meta.zarr_version == 2:
-            disk_dtype = meta.stored_dtype or meta.np_dtype
-            raw = np.ascontiguousarray(block, dtype=disk_dtype).tobytes(order=meta.order)
             if meta.filters:
                 raw = _codecs.encode_v2_filters(raw, meta.filters)
             return _codecs.compress_v2(raw, meta.compressor)
-        return _codecs.compress_v3(_raw_from_block(meta, block), meta.v3_codecs)
+        return _codecs.compress_v3(raw, meta.v3_codecs)
 
     def write_chunk(self, meta: ZarrArrayMeta, coords: tuple[int, ...], block: np.ndarray) -> None:
         self.write_bytes(meta.chunk_key(coords), self.encode_chunk(meta, block))
+
+    def rewrite_chunk(
+        self, meta: ZarrArrayMeta, coords: tuple[int, ...],
+        patch: Callable[[np.ndarray], None],
+    ) -> np.ndarray:
+        """Read-modify-write of one chunk, the one chunk write of every
+        writer: the stored block (fill when the chunk is absent) as a
+        writable C-order copy, ``patch(block)`` in place, then
+        ``write_chunk``. Returns the block as written. C order holds
+        whatever the array's storage order, so a flat patch
+        (``block.reshape(-1)[off] = vals``) takes C-order offsets; an
+        exception in ``patch`` writes nothing."""
+        block = self.decode_chunk(meta, coords)
+        if block is None:
+            block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
+        else:
+            block = block.copy(order="C")
+        patch(block)
+        self.write_chunk(meta, coords, block)
+        return block
 
     # ----------------------------------------------- driver-side array reads
 
@@ -1344,64 +1355,38 @@ class ZarrStore:
                 f"write to {name!r} out of range: origin {origin} + block "
                 f"shape {arr.shape} does not fit the array's shape {meta.shape}"
             )
-        zone_eligible = not meta.is_struct and meta.np_dtype.kind in "biuf"
-        manifest = (
-            dict(meta.attrs[CHUNK_STATS_ATTR])
-            if CHUNK_STATS_ATTR in meta.attrs and zone_eligible
-            else None
-        )
-        side_zones: dict | None = None
-        if manifest is None and zone_eligible:
-            from mdio_cpp_spark.sources import zonemap as _zm  # lazy: avoids cycle
+        from mdio_cpp_spark.sources import zonemap as _zm  # lazy: avoids cycle
 
-            if _zm.sidecar_info(meta) is not None:
-                side_zones = {}
-        zones = manifest if manifest is not None else side_zones
-
+        zoned = _zm.zone_form(meta) is not None
         rewritten: dict[tuple[int, ...], list[float] | None] = {}
 
         def rewrite(coords: tuple[int, ...]) -> None:
             corigin = tuple(c * s for c, s in zip(coords, meta.chunks))
-            block = self.decode_chunk(meta, coords)
-            if block is None:
-                block = np.full(meta.chunks, meta.fill_scalar(), dtype=meta.np_dtype)
-            else:
-                block = block.copy()
             src_sel, dst_sel = [], []
             for d in range(meta.ndim):
                 lo = max(box[d][0], corigin[d])
                 hi = min(box[d][1], corigin[d] + meta.chunks[d])
                 dst_sel.append(slice(lo - corigin[d], hi - corigin[d]))
                 src_sel.append(slice(lo - box[d][0], hi - box[d][0]))
-            block[tuple(dst_sel)] = arr[tuple(src_sel)]
-            self.write_chunk(meta, coords, block)
-            if zones is None:
-                return
-            # zone-map coherence for the driver-side writer (mirrors the
-            # Spark writer): refresh the touched chunk's [min,max] over its
-            # valid extent so stale stats can never wrongly prune. The job
-            # records it, so a chunk that finishes after another chunk's
-            # job raised is not left with its old stats
-            valid = tuple(
-                slice(0, min(meta.chunks[d], meta.shape[d] - corigin[d]))
-                for d in range(meta.ndim)
-            )
-            rewritten[coords] = zone_of(block[valid])
+
+            def patch(block: np.ndarray) -> None:
+                block[tuple(dst_sel)] = arr[tuple(src_sel)]
+
+            block = self.rewrite_chunk(meta, coords, patch)
+            if zoned:
+                # the job records the zone, so a chunk that finishes after
+                # another chunk's job raised is not left with its old stats
+                rewritten[coords] = chunk_zone(meta, coords, block)
 
         try:
             for _ in map_chunks(rewrite, chunks_overlapping(meta, box)):
                 pass
         finally:
-            # map_chunks has waited for its running jobs; apply in chunk order
-            for coords in sorted(rewritten):
-                zones[",".join(str(c) for c in coords)] = rewritten[coords]
-            if rewritten and manifest is not None:
-                self.update_array_attrs(name, {**meta.attrs, CHUNK_STATS_ATTR: manifest})
+            # map_chunks has waited for its running jobs; fold in chunk order
+            zones = {",".join(str(c) for c in coords): rewritten[coords]
+                     for coords in sorted(rewritten)}
+            if _zm.fold_zones(self, {name: zones}):
                 self.consolidate()
-            elif rewritten:
-                from mdio_cpp_spark.sources import zonemap as _zm
-
-                _zm.apply_zone_updates(self.root, name, side_zones)
 
 
 # the process's chunk pool: (pid, executor), made on first use (see _chunk_pool)
@@ -1605,6 +1590,15 @@ def zone_of(v: "np.ndarray") -> list[float] | None:
     if int(fhi) < mx_i:
         fhi = float(np.nextafter(fhi, np.inf))
     return [flo, fhi]
+
+
+def chunk_zone(meta: ZarrArrayMeta, coords: tuple[int, ...],
+               block: np.ndarray) -> list[float] | None:
+    """``zone_of`` the part of chunk ``coords``'s block inside the array's
+    shape (edge chunks are padded past it)."""
+    return zone_of(block[tuple(
+        slice(0, min(c, n - i * c)) for c, n, i in zip(meta.chunks, meta.shape, coords)
+    )])
 
 
 def _clamped_box(

@@ -35,7 +35,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from mdio_cpp_spark.sources.zarr_store import CHUNK_STATS_ATTR, ZarrArrayMeta, ZarrStore, zone_of
+from mdio_cpp_spark.sources.zarr_store import (
+    CHUNK_STATS_ATTR,
+    ZarrArrayMeta,
+    ZarrStore,
+    chunk_zone,
+    zone_of,
+)
 
 STATS_KEY = CHUNK_STATS_ATTR
 
@@ -95,13 +101,7 @@ def _chunk_zone(ts, m, coords: tuple[int, ...]) -> list[float] | None:
                 vmin, vmax, seen = min(vmin, z[0]), max(vmax, z[1]), True
         return [vmin, vmax] if seen else None
     block = ts.decode_chunk(m, coords)
-    if block is None:
-        return None
-    valid = tuple(
-        slice(0, min(chunks[d], shape[d] - coords[d] * chunks[d]))
-        for d in range(len(shape))
-    )
-    return zone_of(block[valid])
+    return None if block is None else chunk_zone(m, coords, block)
 
 
 def compute_chunk_stats(
@@ -222,6 +222,51 @@ def chunk_compatible(
 
 def load_stats(meta: ZarrArrayMeta) -> dict | None:
     return meta.attrs.get(STATS_KEY)
+
+
+def zone_form(meta: ZarrArrayMeta) -> str | None:
+    """The zone map a write to ``meta`` must keep coherent: ``"attr"`` (a
+    manifest in the array's attributes, which wins when both exist, as in
+    ``open_zones``), ``"sidecar"`` (a marker valid for the current grid),
+    or None (no zone map, or a dtype zone maps do not cover). Every writer
+    asks this, and only this, which form to keep."""
+    if meta.is_struct or meta.np_dtype.kind not in "biuf":
+        return None
+    if STATS_KEY in meta.attrs:
+        return "attr"
+    if sidecar_info(meta) is not None:
+        return "sidecar"
+    return None
+
+
+def fold_zones(store: ZarrStore, zones_by_var: dict[str, dict]) -> bool:
+    """Fold the zones of rewritten chunks into each variable's zone map:
+    ``{var: {"c0,c1,...": [lo, hi] | None | "unknown"}}``, where None is a
+    fill-only chunk and ``"unknown"`` never prunes until stats are rebuilt.
+    An attribute manifest takes the zones into a new attribute document,
+    not yet republished (an ``"unknown"`` drops the key); a sidecar takes
+    them through its chunk read-modify-write. Returns True when an
+    attribute manifest changed: the caller then consolidates, once, after
+    all its metadata changes."""
+    changed = False
+    for var, zones in zones_by_var.items():
+        if not zones:
+            continue
+        meta = store.array_meta(var)
+        form = zone_form(meta)
+        if form == "attr":
+            manifest = dict(meta.attrs[STATS_KEY])
+            for key, z in zones.items():
+                if z == "unknown":
+                    manifest.pop(key, None)
+                else:
+                    manifest[key] = z
+            store.update_array_attrs(var, {**meta.attrs, STATS_KEY: manifest},
+                                     reconsolidate=False)
+            changed = True
+        elif form == "sidecar":
+            _fold_sidecar(store.root, var, sidecar_info(meta), zones)
+    return changed
 
 
 # --------------------------------------------------------------------------
@@ -558,13 +603,16 @@ def apply_zone_updates(root: str, var: str, zones: dict[str, list | None]) -> No
     by sidecar-chunk id to guarantee that; the driver-side writers are
     single-writer by contract. No-op when no valid sidecar exists."""
     store = ZarrStore.open(root)
-    meta = store.array_meta(var)
-    info = sidecar_info(meta)
-    if info is None or not zones:
-        return
+    info = sidecar_info(store.array_meta(var))
+    if info is not None and zones:
+        _fold_sidecar(store.root, var, info, zones)
+
+
+def _fold_sidecar(store_root: str, var: str, info: dict, zones: dict) -> None:
+    """``apply_zone_updates`` once the sidecar marker ``info`` is known."""
     grid = tuple(int(g) for g in info["grid"])
     sc = int(info.get("chunk", SIDECAR_CHUNK))
-    st = ZarrStore.open(_sidecar_root(store.root, var))
+    st = ZarrStore.open(_sidecar_root(store_root, var))
     mmin, mmax = st.array_meta("vmin"), st.array_meta("vmax")
     by_sid: dict[int, list] = {}
     for key, z in zones.items():

@@ -69,11 +69,7 @@ def _invalidate_boundary_zones(store, name, meta, new_shape) -> None:
 
     from mdio_cpp_spark.sources import zonemap
 
-    if meta.is_struct or meta.np_dtype.kind not in "biuf":
-        return
-    has_attr = zonemap.STATS_KEY in meta.attrs
-    has_side = zonemap.sidecar_info(meta) is not None
-    if not has_attr and not has_side:
+    if zonemap.zone_form(meta) is None:
         return
     grown = [
         d for d in range(meta.ndim)
@@ -87,15 +83,6 @@ def _invalidate_boundary_zones(store, name, meta, new_shape) -> None:
         b = meta.shape[d] // meta.chunks[d]
         ranges = [range(grid[k]) if k != d else (b,) for k in range(meta.ndim)]
         affected.update(itertools.product(*ranges))
-    if has_attr:
-        manifest = dict(meta.attrs[zonemap.STATS_KEY])
-        for coords in affected:
-            manifest.pop(",".join(str(c) for c in coords), None)  # → UNKNOWN
-        store.update_array_attrs(
-            name, {**meta.attrs, zonemap.STATS_KEY: manifest}, reconsolidate=False
-        )
-    else:
-        zonemap.apply_zone_updates(
-            store.root, name,
-            {",".join(str(c) for c in coords): "unknown" for coords in affected},
-        )
+    # grow_dataset consolidates once, after every array's new shape
+    zonemap.fold_zones(store, {name: {
+        ",".join(str(c) for c in coords): "unknown" for coords in affected}})

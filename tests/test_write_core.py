@@ -1,0 +1,201 @@
+"""One chunk-write core: the driver writer (``write_array_numpy``), the Spark
+writer (``write_arrays``) and the DSv2 writer (``format("mdio")``) all
+rewrite a chunk through ``ZarrStore.rewrite_chunk`` and fold zone stats
+through ``zonemap.fold_zones``. So the same cells written through any of
+them leave the same chunk bytes and the same zones."""
+
+from __future__ import annotations
+
+import json
+import os
+
+import numpy as np
+import pytest
+
+from mdio_cpp_spark.sources import zonemap
+from mdio_cpp_spark.sources.datasource import register, repartition_by_chunks
+from mdio_cpp_spark.sources.writer import write_array
+from mdio_cpp_spark.sources.zarr_store import CHUNK_STATS_ATTR, ZarrStore, zone_of
+from tests.spec_zarr_reader import read_zarr_array
+
+WRITERS = ("driver", "write_arrays", "dsv2")
+SHAPE, CHUNKS = (10, 14), (4, 6)  # 3 x 3 grid, edge chunks partial
+
+
+def _store(root: str, order: str = "C", data_rows: int = SHAPE[0]) -> np.ndarray:
+    """A v2 float64 array ``v`` over dims (a, b), rows [0, data_rows)
+    written and the rest left as absent (fill) chunks; returns the mirror."""
+    st = ZarrStore.create(root, version=2)
+    st.create_array("v", shape=SHAPE, chunks=CHUNKS, dtype="float64", dims=("a", "b"),
+                    fill=0.0, compressor={"id": "zlib", "level": 1})
+    if order != "C":
+        zarray = st._read_json("v/.zarray")
+        zarray["order"] = order
+        st._write_json("v/.zarray", zarray)
+    st.consolidate()
+    assert st.array_meta("v").order == order
+    mirror = np.zeros(SHAPE)
+    mirror[:data_rows] = np.arange(data_rows * SHAPE[1], dtype="f8").reshape(data_rows, -1) + 1
+    st.write_array_numpy("v", mirror[:data_rows])
+    return mirror
+
+
+def _write(spark, writer: str, root: str, origin: tuple[int, int], block: np.ndarray) -> None:
+    """Write ``block`` at ``origin`` through one of the three writers."""
+    if writer == "driver":
+        ZarrStore.open(root).write_array_numpy("v", block, origin)
+        return
+    rows = [(origin[0] + i, origin[1] + j, float(block[i, j]))
+            for i in range(block.shape[0]) for j in range(block.shape[1])]
+    df = spark.createDataFrame(rows, "a long, b long, value double")
+    if writer == "write_arrays":
+        write_array(df, root, "v")
+    else:
+        register(spark)
+        (repartition_by_chunks(df, root, "v").write.format("mdio")
+         .option("path", root).option("variable", "v").mode("append").save())
+
+
+def _chunk_objects(root: str) -> dict[str, bytes]:
+    d = os.path.join(root, "v")
+    out = {}
+    for name in sorted(os.listdir(d)):
+        if not name.startswith("."):
+            with open(os.path.join(d, name), "rb") as f:
+                out[name] = f.read()
+    return out
+
+
+@pytest.mark.parametrize("writer", WRITERS)
+def test_partial_write_into_f_order_chunk(spark, tmp_path, writer):
+    """A partial write into an existing chunk of an ``"order": "F"`` array
+    keeps the chunk's other cells where they were. The Spark writers used
+    to flatten the stored block in F order, scatter C-order offsets into
+    it and reshape it back in C order, which moved the other cells."""
+    root = str(tmp_path / f"f_{writer}.zarr")
+    mirror = _store(root, order="F")
+    origin, block = (1, 2), np.full((2, 3), -7.5)  # inside chunk (0, 0)
+    block[1, 2] = -8.5
+    _write(spark, writer, root, origin, block)
+    mirror[1:3, 2:5] = block
+    assert np.array_equal(ZarrStore.open(root).read_array("v"), mirror)
+    assert np.array_equal(read_zarr_array(root, "v"), mirror)  # spec reader
+
+
+def test_dsv2_rejects_a_row_outside_the_domain(spark, tmp_path):
+    """A row past the array's shape raises and writes nothing, as in
+    ``write_arrays``. The DSv2 writer used to fold it into the chunk
+    grid's linear id, so row (1, 18) of the 10 x 14 array landed in cell
+    (5, 0)."""
+    root = str(tmp_path / "dom.zarr")
+    mirror = _store(root)
+    with pytest.raises(Exception, match="row outside array domain"):
+        _write(spark, "dsv2", root, (1, 18), np.full((1, 1), 42.0))
+    assert np.array_equal(ZarrStore.open(root).read_array("v"), mirror)
+
+
+def _zones(root: str, form: str) -> dict:
+    """The variable's zones, keyed like the attribute manifest."""
+    meta = ZarrStore.open(root).array_meta("v")
+    if form == "attr":
+        return zonemap.load_stats(meta)
+    side = zonemap.SidecarZones(ZarrStore.open(root).root, "v", zonemap.sidecar_info(meta))
+    grid = meta.grid_shape()
+    return {",".join(str(c) for c in np.unravel_index(k, grid)): side.lookup_linear(k)
+            for k in range(meta.nchunks())}
+
+
+@pytest.mark.parametrize("form", ["attr", "sidecar"])
+def test_three_writers_leave_identical_chunks_and_zones(spark, tmp_path, form):
+    """The same cells written through the three writers into three
+    identical stores leave byte-identical chunk objects and identical
+    zones. The write covers partial chunks, edge chunks and the three
+    chunks of a chunk row that was absent before it."""
+    rng = np.random.default_rng(7)
+    origin = (2, 3)
+    block = rng.standard_normal((8, 11))  # rows 2..9, cols 3..13
+    results = {}
+    for writer in WRITERS:
+        root = str(tmp_path / f"{form}_{writer}.zarr")
+        mirror = _store(root, data_rows=6)  # chunk row 2 absent
+        if form == "attr":
+            zonemap.publish_chunk_stats(root, "v", zonemap.compute_chunk_stats(spark, root, "v"))
+        else:
+            zonemap.build_sidecar_stats(spark, root, "v")
+        _write(spark, writer, root, origin, block)
+        mirror[2:, 3:] = block
+        assert np.array_equal(ZarrStore.open(root).read_array("v"), mirror), writer
+        results[writer] = (_chunk_objects(root), _zones(root, form))
+
+    chunks, zones = results["driver"]
+    assert len(chunks) == 9  # the write created the three absent chunks
+    for writer in WRITERS[1:]:
+        assert results[writer][0] == chunks, writer
+        assert results[writer][1] == zones, writer
+    for key, z in zones.items():
+        i, j = (int(c) for c in key.split(","))
+        cell = mirror[4 * i: 4 * i + 4, 6 * j: 6 * j + 6]
+        want = zone_of(cell) if form == "attr" else (True, zone_of(cell))
+        assert z == want, key
+
+
+def test_driver_patch_publishes_consolidated_metadata_once(tmp_path):
+    """A driver patch write to an array with an attribute manifest folds
+    the new zone into the attributes and republishes ``.zmetadata`` once
+    (it used to publish an incremental refresh and then a full one)."""
+    root = str(tmp_path / "publish.zarr")
+    mirror = _store(root)
+    st = ZarrStore.open(root)
+    grid = st.array_meta("v").grid_shape()
+    manifest = {}
+    for i, j in np.ndindex(*grid):
+        manifest[f"{i},{j}"] = zone_of(mirror[4 * i: 4 * i + 4, 6 * j: 6 * j + 6])
+    st.update_array_attrs("v", {**st.array_meta("v").attrs, CHUNK_STATS_ATTR: manifest},
+                          reconsolidate=True)
+
+    writes: list[str] = []
+    write = st._kv.write
+
+    def counted(key, data):
+        writes.append(key)
+        return write(key, data)
+
+    st._kv.write = counted
+    st.write_array_numpy("v", np.full((2, 2), 99.0), origin=(1, 1))  # chunk (0, 0)
+    assert writes.count(".zmetadata") == 1
+    assert sorted(writes) == [".zmetadata", "v/.zattrs", "v/0.0"]
+    published = json.loads(st._kv.read(".zmetadata"))["metadata"]["v/.zattrs"]
+    assert published[CHUNK_STATS_ATTR]["0,0"] == [1.0, 99.0]
+    assert ZarrStore.open(root).array_meta("v").attrs[CHUNK_STATS_ATTR] == \
+        published[CHUNK_STATS_ATTR]
+
+    st.update_array_attrs("v", {}, reconsolidate=True)  # without a zone map
+    writes.clear()  # a patch write writes no metadata at all
+    st.write_array_numpy("v", np.full((2, 2), 5.0), origin=(1, 1))
+    assert writes == ["v/0.0"]
+
+
+def test_fold_zones_unknown_drops_attr_key_and_marks_sidecar(spark, tmp_path):
+    """``"unknown"`` removes a chunk from an attribute manifest and stores
+    the never-prune sentinel in a sidecar; a store without a zone map
+    takes nothing and asks for no consolidation."""
+    attr, side, plain = (str(tmp_path / f"{n}.zarr") for n in ("attr", "side", "plain"))
+    for root in (attr, side, plain):
+        _store(root)
+    zonemap.publish_chunk_stats(attr, "v", zonemap.compute_chunk_stats(spark, attr, "v"))
+    zonemap.build_sidecar_stats(spark, side, "v")
+    fold = {"v": {"0,1": "unknown", "1,1": None, "2,2": [1.0, 2.0]}}
+
+    st = ZarrStore.open(attr)
+    assert zonemap.fold_zones(st, fold) is True
+    st.consolidate()
+    stats = zonemap.load_stats(ZarrStore.open(attr).array_meta("v"))
+    assert "0,1" not in stats and stats["1,1"] is None and stats["2,2"] == [1.0, 2.0]
+
+    assert zonemap.fold_zones(ZarrStore.open(side), fold) is False
+    zones = _zones(side, "sidecar")
+    assert zones["0,1"] == (False, None)
+    assert zones["1,1"] == (True, None) and zones["2,2"] == (True, [1.0, 2.0])
+
+    assert zonemap.fold_zones(ZarrStore.open(plain), fold) is False
+    assert zonemap.zone_form(ZarrStore.open(plain).array_meta("v")) is None
