@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mdio_cpp_spark.functions import hashing, text, vectors
+from mdio_cpp_spark.session import local_frame
 
 
 def ensure_map_parallelism(df: DataFrame) -> DataFrame:
@@ -334,9 +335,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         schema = StructType([
             StructField("doc_id", id_type), StructField("cluster_id", id_type)
         ])
-        if not rows:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(sorted(rows), schema)
+        return local_frame(spark, sorted(rows), schema)
 
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))

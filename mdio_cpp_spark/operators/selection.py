@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mdio_cpp_spark.session import local_frame
+
 
 def isel_predicate(
     col: str | Column,
@@ -163,7 +165,7 @@ def sel_nearest(df: DataFrame, col: str, targets: Sequence, keys: Sequence[str])
     one tiny shuffle of |targets| rows, no window, no sort of the data."""
     spark = df.sparkSession
     ttype = df.schema[col].dataType.simpleString()
-    tgt = F.broadcast(spark.createDataFrame([(t,) for t in targets], f"target {ttype}"))
+    tgt = F.broadcast(local_frame(spark, [(t,) for t in targets], f"target {ttype}"))
     dist = F.abs(F.col(col).cast("double") - F.col("target").cast("double"))
     ordkey = F.struct(
         dist.alias("d"), *[F.col(k) for k in keys]

@@ -26,6 +26,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from mdio_cpp_spark.session import local_frame
 
 # grouped_percentiles: max (group × bucket) count rows the driver may hold
 # for the low-latency rank walk; beyond it the metadata stage stays
@@ -324,11 +327,14 @@ def grouped_percentiles(
             return _literal_pass3(
                 tagged, group, col, ps, _rnd, needed, offs_by_gb, tgt_rows
             )
-        tgt = spark.createDataFrame(tgt_rows, [group, "__name", "__rank", "__fl", "__ce"])
-        need_df = spark.createDataFrame(sorted(needed), [group, "__pid"])
-        off_df = spark.createDataFrame(
-            [(g, b, o) for (g, b), o in offs_by_gb.items()], [group, "__pid", "__off"]
-        )
+        def keyed(ddl: str) -> T.StructType:  # the group's own field, then ddl's
+            return T.StructType([base.schema[group], *T.StructType.fromDDL(ddl).fields])
+
+        tgt = local_frame(spark, tgt_rows,
+                          keyed("__name string, __rank double, __fl long, __ce long"))
+        need_df = local_frame(spark, sorted(needed), keyed("__pid long"))
+        off_df = local_frame(spark, [(g, b, o) for (g, b), o in offs_by_gb.items()],
+                             keyed("__pid long, __off long"))
     else:
         woff = Window.partitionBy(group).orderBy("__pid")
         offs = counts.withColumn("__off", F.sum("__s").over(woff) - F.col("__s"))
@@ -559,7 +565,6 @@ def grouped_mad(
     distributed, nothing ever buffers a group's raw values.
     """
     from pyspark.storagelevel import StorageLevel
-    from pyspark.sql import types as T
 
     spark = df.sparkSession
     base = df.select(group, col).where(
@@ -589,7 +594,7 @@ def grouped_mad(
                 devs[d] = devs.get(d, 0) + c
             mad = _quantile_cont(sorted(devs.items()), n, 0.5)
             rows.append((g, _round_half_up(med, round_to), _round_half_up(mad, round_to)))
-        return spark.createDataFrame(rows, out_schema)
+        return local_frame(spark, rows, out_schema)
 
     # distributed fallback: the two-pass composition. base is persisted
     # here, and dev is a map-side derivation of it, so both passes run
@@ -607,7 +612,7 @@ def grouped_mad(
     vmin, vmax = lo_hi[0], lo_hi[1]
     if vmin is None:  # empty input: schema-correct empty result
         base.unpersist()
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     med = grouped_percentiles(
         base, group, col, [(0.5, "med")], round_to=None,
         bounds=(vmin, vmax), input_cached=True,

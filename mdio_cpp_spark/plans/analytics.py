@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from mdio_cpp_spark.catalog import table
 from mdio_cpp_spark.plans.base import declared
-from mdio_cpp_spark.session import tune
+from mdio_cpp_spark.session import local_frame, tune
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -3930,7 +3930,7 @@ def ga06(spark: SparkSession, sf_dir: str) -> DataFrame:
     for lv in levels:
         lv.unpersist()
     e.unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @declared(

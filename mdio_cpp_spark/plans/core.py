@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from mdio_cpp_spark.catalog import table
 from mdio_cpp_spark.operators import joins, selection, sorting, stats
 from mdio_cpp_spark.plans.base import declared
-from mdio_cpp_spark.session import tune
+from mdio_cpp_spark.session import local_frame, tune
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -664,7 +664,7 @@ def j05(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed width_bucket key; overlapping genome-style intervals an
     interval tree. The broadcast NLJ is the general-purpose form.)"""
     li = _t(spark, sf_dir, "lineitem")
-    bins = spark.createDataFrame(_QTY_BINS, "b_id long, lo double, hi double")
+    bins = local_frame(spark, _QTY_BINS, "b_id long, lo double, hi double")
     return (
         li.join(
             F.broadcast(bins),

@@ -34,6 +34,7 @@ from mdio_cpp_spark.plans.zarr_queries import (
     CUBE_XL,
     ensure_stores,
 )
+from mdio_cpp_spark.session import local_frame
 
 # The grid's generating formula (see the cube-store build in
 # zarr_queries.ensure_stores): exact-integer doubles, re-derivable in SQL.
@@ -77,8 +78,8 @@ def _extent_corners(spark: SparkSession, ds: MdioDataset) -> DataFrame:
     exy = both.agg(
         F.min("easting").alias("x_min"), F.max("easting").alias("x_max"),
         F.min("northing").alias("y_min"), F.max("northing").alias("y_max"))
-    corners = spark.createDataFrame(
-        [("nw", 0, 1), ("ne", 1, 1), ("sw", 0, 0), ("se", 1, 0)],
+    corners = local_frame(
+        spark, [("nw", 0, 1), ("ne", 1, 1), ("sw", 0, 0), ("se", 1, 0)],
         "corner string, mx int, my int")
     return exy.crossJoin(corners).selectExpr(
         "corner",
@@ -313,7 +314,8 @@ def geo05(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _extent_corners(spark, _cube(spark, sf_dir))
     c = apply_utm_stages(pts).selectExpr(
         "corner", "ROUND(lat, 6) AS lat", "ROUND(lon, 6) AS lon")
-    ring = spark.createDataFrame(
+    ring = local_frame(
+        spark,
         [("nw-ne", "nw", "ne"), ("ne-se", "ne", "se"),
          ("se-sw", "se", "sw"), ("sw-nw", "sw", "nw")],
         "seg string, ca string, cb string")
@@ -375,7 +377,7 @@ def geo06(spark: SparkSession, sf_dir: str) -> DataFrame:
         "il", "xl", "ROUND(lat, 6) AS lat", "ROUND(lon, 6) AS lon"
     ).withColumn("cla", F.floor(F.col("lat") / _G6_CELL).cast("long")) \
      .withColumn("clo", F.floor(F.col("lon") / _G6_CELL).cast("long"))
-    q = spark.createDataFrame(_G6_QUERIES, "qid string, qlat double, qlon double")
+    q = local_frame(spark, _G6_QUERIES, "qid string, qlat double, qlon double")
     nb = q.select(
         "qid", "qlat", "qlon",
         (F.floor(F.col("qlat") / _G6_CELL).cast("long")).alias("qa"),

@@ -16,7 +16,7 @@ from mdio_cpp_spark.functions import hashing, text, vectors
 from mdio_cpp_spark.operators import dedup, similarity
 from mdio_cpp_spark.sources import multimodal
 from mdio_cpp_spark.plans.base import declared
-from mdio_cpp_spark.session import tune
+from mdio_cpp_spark.session import local_frame, tune
 from mdio_cpp_spark.streaming import events as ev
 
 
@@ -3335,8 +3335,8 @@ def ml10(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = similarity.lloyd_train(
         e, "vec_id", "embedding", k=_IVF_CELLS, iters=_LLOYD_ITERS
     )
-    cdf = spark.createDataFrame(
-        [(c, v) for c, v in cents], "cid long, cv array<double>"
+    cdf = local_frame(
+        spark, [(c, v) for c, v in cents], "cid long, cv array<double>"
     )
     return (
         similarity.ivf_assign_scored(e, "vec_id", "embedding", cdf)
@@ -5838,8 +5838,8 @@ def v17(spark: SparkSession, sf_dir: str) -> DataFrame:
                 best = (vid, mmr)
         picks.append((k, best[0], best[1]))
         chosen.append(best[0])
-    return spark.createDataFrame(
-        picks, "pick_order long, vec_id long, mmr double")
+    return local_frame(
+        spark, picks, "pick_order long, vec_id long, mmr double")
 
 
 # ------------------------------------------- training-export + tokenizer ops
@@ -6073,7 +6073,7 @@ def t28(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab.unpersist()
     rows = [(k, pat.replace("_ _", "+").replace("_", ""), freq)
             for k, (pat, _rep, freq) in enumerate(merges, start=1)]
-    return spark.createDataFrame(rows, "step long, merge_rule string, freq long")
+    return local_frame(spark, rows, "step long, merge_rule string, freq long")
 
 
 def _bpe_vocab(spark: SparkSession, sf_dir: str, keys: tuple[str, ...] = ()) -> DataFrame:

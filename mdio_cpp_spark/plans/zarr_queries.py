@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from mdio_cpp_spark.catalog import table
 from mdio_cpp_spark.model import MdioDataset
 from mdio_cpp_spark.plans.base import declared
-from mdio_cpp_spark.session import tune
+from mdio_cpp_spark.session import local_frame, tune
 from mdio_cpp_spark.sources import zonemap
 from mdio_cpp_spark.sources.writer import dense_fill_frame
 from mdio_cpp_spark.sources.zarr_store import ZarrStore
@@ -184,7 +184,7 @@ def ensure_stores(spark: SparkSession, sf_dir: str) -> str:
             "hdr": {"ck": "ck", "ok2": "ok2"},
             "u64": "u64v",
             "cpx": {"re": "price", "im": "im"},
-        }, consolidate=False)
+        })
         # string/datetime stored arrays (SURVEY §1.2 upgrade: the reference
         # treats numpy kinds U/M as header-only, zarr_v2.h:139-162; our scan
         # reads them natively) — created outside the MDIO spec (not MDIO
@@ -199,7 +199,7 @@ def ensure_stores(spark: SparkSession, sf_dir: str) -> str:
         write_arrays(
             ords.select("i", F.col("o_orderpriority").alias("prv"),
                         F.col("o_orderdate").alias("odv")),
-            main, {"pr": "prv", "od": "odv"}, consolidate=False,
+            main, {"pr": "prv", "od": "odv"},
         )
         # sparse: only even-numbered chunks written → odd chunks stay ABSENT
         # on disk and read as fill (kept out of the fused write on purpose —
@@ -256,6 +256,7 @@ def ensure_stores(spark: SparkSession, sf_dir: str) -> str:
         st3.create_array("hdr", shape=(n,), chunks=(CHUNK,), dtype={"fields": [
             {"name": "ck", "format": "int32"}, {"name": "ok2", "format": "int64"}]},
             dims=("i",), compressor={"id": "gzip", "level": 4})
+        st3.consolidate()
         _was(
             ords.select("i", F.col("o_totalprice").alias("price"),
                         F.col("o_custkey").cast("int").alias("ck"),
@@ -1023,6 +1024,7 @@ def _append_store(spark: SparkSession, sf_dir: str) -> str:
         st.create_array("val", shape=(max(n_half, 1),), chunks=(CHUNK,),
                         dtype="float64", dims=("i",),
                         compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         write_array(ords.filter(F.col("i") < n_half), path, "val", value_cols="v")
         grow_dataset(path, i=n)
         write_array(ords.filter(F.col("i") >= n_half), path, "val", value_cols="v")
@@ -1344,8 +1346,8 @@ def zarr33(spark: SparkSession, sf_dir: str) -> DataFrame:
     fast = zonemap.aggregate_from_manifest(meta, root)
     if fast is not None:
         cnt, vmin, vmax = fast
-        return spark.createDataFrame(
-            [(cnt, float(vmin), float(vmax))], "cnt long, min_v double, max_v double"
+        return local_frame(
+            spark, [(cnt, float(vmin), float(vmax))], "cnt long, min_v double, max_v double"
         )
     ds = MdioDataset.open(root)
     return ds.to_df(spark, "price", value_col="v").agg(
@@ -1444,6 +1446,7 @@ def _rmw_store(spark: SparkSession, sf_dir: str) -> str:
         st.create_array("val", shape=(n,), chunks=(CHUNK,),
                         dtype="float64", dims=("i",),
                         compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         write_array(ords, path, "val", value_cols="v")
         with open(marker, "w") as f:
             f.write("ok")
@@ -1867,6 +1870,7 @@ def _ts_store(spark: SparkSession, sf_dir: str) -> str:
         st.create_array("price", shape=(n,), chunks=(CHUNK,),
                         dtype="float64", dims=("t",),
                         compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         write_arrays(ords, path, {"t": "tv", "price": "v"})
         with open(marker, "w") as f:
             f.write("ok")
@@ -1972,6 +1976,7 @@ def _dtype_store(spark: SparkSession, sf_dir: str) -> str:
             st.create_array(name, shape=(n,), chunks=(CHUNK,),
                             dtype=np.dtype(dt), dims=("i",),
                             compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         write_arrays(ords, path, {"flag": "flagv", "i8": "i8v", "f2": "f2v"})
         with open(marker, "w") as f:
             f.write("ok")
@@ -2070,6 +2075,7 @@ def _rmw2d_store(spark: SparkSession, sf_dir: str) -> str:
             (F.col("i") % GRID_C).alias("col"),
             F.col("o_totalprice").alias("v"),
         )
+        st.consolidate()
         write_array(cells, path, "g", value_cols="v")
         with open(marker, "w") as f:
             f.write("ok")
@@ -2136,6 +2142,7 @@ def _evolve_store(spark: SparkSession, sf_dir: str) -> str:
         st.create_array("price", shape=(n,), chunks=(CHUNK,),
                         dtype="float64", dims=("i",),
                         compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         write_array(ords, path, "price", value_cols="v")
         with open(marker, "w") as f:
             f.write("ok")
@@ -2815,6 +2822,7 @@ def _ivf_store(spark: SparkSession, sf_dir: str) -> str:
         st.create_array("centroid", shape=(_IVF_CELLS, dim),
                         chunks=(_IVF_CELLS, dim), dtype="float64",
                         dims=("c", "d"), compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         write_array(
             assign.select(F.col("vec_id").alias("i"), F.col("cell").alias("v")),
             path, "cell", value_cols="v",
@@ -2961,6 +2969,7 @@ def _masked_store(spark: SparkSession, sf_dir: str) -> str:
         st = ZarrStore.create(path, version=2, attrs={"name": "masked_mdio"})
         st.create_array("val", shape=(n,), chunks=(CHUNK,), dtype="float64",
                         dims=("i",), compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         write_array(ords, path, "val", value_cols="v")
         ords.unpersist()
         with open(marker, "w") as f:
@@ -3104,6 +3113,7 @@ def _pyramid_store(spark: SparkSession, sf_dir: str, m: int) -> str:
         st = ZarrStore.create(path, version=2, attrs={"name": "pyramid_l1"})
         st.create_array("l1", shape=(m,), chunks=(CHUNK,), dtype="float64",
                         dims=("g",), compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         with open(marker, "w") as f:
             f.write("ok")
     return path
@@ -4484,8 +4494,6 @@ def zarr103(spark: SparkSession, sf_dir: str) -> DataFrame:
     C-order assembly → header/bytes → reload), not just the scan. Bounded
     by contract: .npy is a single driver buffer; volume-scale exports go
     per-chunk (mm09 shard shape) or via to_df + a distributed sink."""
-    import pandas as pd
-
     from mdio_cpp_spark.utils.npy import export_npy, import_npy
 
     base = ensure_stores(spark, sf_dir)
@@ -4496,10 +4504,9 @@ def zarr103(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = import_npy(path)
     assert arr.shape == shape == (4, 4, 8)
     idx = np.indices(arr.shape)
-    pdf = pd.DataFrame({
-        "il": (idx[0] + 2).ravel(), "xl": (idx[1] + 1).ravel(),
-        "t": (idx[2] + 4).ravel(), "v": arr.ravel()})
-    return spark.createDataFrame(pdf)
+    cols = ((idx[0] + 2).ravel(), (idx[1] + 1).ravel(), (idx[2] + 4).ravel(), arr.ravel())
+    return local_frame(spark, zip(*(c.tolist() for c in cols)),
+                       "il long, xl long, t long, v double")
 
 
 @declared(
@@ -4607,8 +4614,8 @@ def zarr105(spark: SparkSession, sf_dir: str) -> DataFrame:
     per cell map-side, and ONE partial agg keyed on (row, k) reduces —
     more frequencies grow the broadcast, never the scan count."""
     cells = _grid_cents(spark, sf_dir, 8)
-    trig = cells.sparkSession.createDataFrame(
-        _dft_trig_rows(), "k long, t long, cq long, sq long"
+    trig = local_frame(
+        cells.sparkSession, _dft_trig_rows(), "k long, t long, cq long, sq long"
     )
     j = cells.join(F.broadcast(trig), cells["col"] == trig["t"])
     g = j.groupBy("row", "k").agg(
@@ -4694,8 +4701,8 @@ def zarr106(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk count and trace length never multiply."""
     cells = _grid_cents(spark, sf_dir, 4)
     ss = cells.sparkSession
-    trig = ss.createDataFrame(
-        [r for r in _dft_trig_rows() if r[0] in _BP_BAND],
+    trig = local_frame(
+        ss, [r for r in _dft_trig_rows() if r[0] in _BP_BAND],
         "k long, t long, cq long, sq long",
     )
     fwd = (
@@ -4713,7 +4720,7 @@ def zarr106(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled = fwd.select(
         "row", "k", fdiv(F.col("re")).alias("re_s"), fdiv(F.col("im")).alias("im_s")
     )
-    itrig = ss.createDataFrame(_bp_itrig_rows(), "k long, t long, c2 long, s2 long")
+    itrig = local_frame(ss, _bp_itrig_rows(), "k long, t long, c2 long, s2 long")
     y = (
         scaled.join(F.broadcast(itrig), "k")
         .groupBy("row", "t")
@@ -4770,6 +4777,7 @@ def zarr107(spark: SparkSession, sf_dir: str) -> DataFrame:
             compressor={"id": "gzip", "level": 3},
             chunk_key_encoding="v2",
         )
+        st.consolidate()
         write_array(ords, path, "price", value_cols="v")
         assert os.path.exists(os.path.join(path, "price", "0")), (
             "v2-encoded chunk keys missing — writer fell back to default scheme"
@@ -4868,8 +4876,8 @@ def _trained_ivf_store(spark: SparkSession, sf_dir: str) -> str:
             e, "vec_id", "embedding", k=_IVF_CELLS, iters=_LLOYD_ITERS
         )
         dim = len(cents[0][1])
-        cdf = spark.createDataFrame(
-            [(c, v) for c, v in cents], "cid long, cv array<double>"
+        cdf = local_frame(
+            spark, [(c, v) for c, v in cents], "cid long, cv array<double>"
         )
         assign = similarity.ivf_assign(e, "vec_id", "embedding", cdf)
         st = ZarrStore.create(path, version=2, attrs={"name": "ivf_trained"})
@@ -4878,6 +4886,7 @@ def _trained_ivf_store(spark: SparkSession, sf_dir: str) -> str:
         st.create_array("centroid", shape=(_IVF_CELLS, dim),
                         chunks=(_IVF_CELLS, dim), dtype="float64",
                         dims=("c", "d"), compressor={"id": "zlib", "level": 1})
+        st.consolidate()
         write_array(
             assign.select(F.col("vec_id").alias("i"), F.col("cell").alias("v")),
             path, "cell", value_cols="v",
@@ -4887,7 +4896,7 @@ def _trained_ivf_store(spark: SparkSession, sf_dir: str) -> str:
             for c, v in cents for d, x in enumerate(v)
         ]
         write_array(
-            spark.createDataFrame(cent_rows, "c long, d long, v double"),
+            local_frame(spark, cent_rows, "c long, d long, v double"),
             path, "centroid", value_cols="v",
         )
         with open(marker, "w") as f:
@@ -5132,6 +5141,7 @@ def zarr112(spark: SparkSession, sf_dir: str) -> DataFrame:
             compressor={"id": "blosc", "cname": "lz4", "clevel": 5,
                         "shuffle": 1},
         )
+        st.consolidate()
         write_array(ords, path, "price", value_cols="v")
         with open(marker, "w") as f:
             f.write("1")

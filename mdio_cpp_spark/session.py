@@ -11,8 +11,10 @@ across hosts and match the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _RUNTIME_CONF = {
     # AQE: runtime coalescing + skew-join handling; essential at 100 TB where
@@ -84,3 +86,25 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on this build — ignore
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: StructType | str) -> DataFrame:
+    """A driver-built table (``rows`` of tuples, lists or Rows in the order
+    of ``schema``, a DDL string or a StructType) as a DataFrame that starts
+    no Python worker. Each row goes through the schema's ``toInternal``, the
+    conversion ``createDataFrame(rows, schema)`` applies, so nulls, dates
+    and timestamps mean the same; the rows then travel as one pyarrow table
+    that Spark decodes in the JVM. The list form would ship a pickled Python
+    RDD whose rows every action unpickles in a Python worker per partition."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*internal)) if internal else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

@@ -534,8 +534,8 @@ class MdioArrowWriter(DataSourceArrowWriter):
                 zones.update(json.loads(m.zones))
         # commit messages are already driver-resident (the DSv2 commit
         # contract), so both zone forms fold here
-        _zonemap.fold_zones(store, {self.var: zones})
-        store.consolidate()
+        if _zonemap.fold_zones(store, {self.var: zones}):
+            store.consolidate()
 
     def abort(self, messages) -> None:  # chunks are atomic (tmp+rename); a
         pass  # partial job leaves prior data intact for untouched chunks

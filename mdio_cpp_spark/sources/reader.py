@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from mdio_cpp_spark.schema.types import SCALAR_TYPES
+from mdio_cpp_spark.session import local_frame
 from mdio_cpp_spark.sources import zonemap as _zonemap
 from mdio_cpp_spark.sources.zarr_store import (
     _PREFETCH_DEPTH,
@@ -411,7 +412,7 @@ def _scan(
     ids = _zonemap.driver_survivors(per_dim, keep)
     n = grid_size(per_dim) if ids is None else len(ids)
     if n == 0:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     root, version = store.root, store.version
     task_keep = keep if ids is None else None
 

@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mdio_cpp_spark.session import local_frame
+
 TEXT_LEN = 3200
 BIN_LEN = 400
 TRACE_HEADER_LEN = 240
@@ -438,10 +440,12 @@ def ingest_to_store(
     the PostStack3D shape — traces place onto the (inline, crossline,
     sample) cube by their header values' sorted ranks, and the two
     coordinate arrays are stored alongside (sel by real inline numbers).
-    The coordinate vocabularies are grid-sized (thousands), so their
-    distinct-collect is driver-safe at any file size; the cell placement
-    itself is a broadcast-map join, and the store write is the standard
-    chunk-aligned shuffle."""
+    Both coordinate vocabularies come from ONE header-only scan (no sample
+    decode) and one ``collect_set`` aggregate; they are grid-sized
+    (thousands), so driver-safe at any file size. The value → rank tables
+    are Arrow-built local frames (``session.local_frame``, no Python
+    worker), the cell placement is a broadcast join on them, and the store
+    write is the standard chunk-aligned shuffle."""
     from mdio_cpp_spark.sources.writer import write_array
     from mdio_cpp_spark.sources.zarr_store import ZarrStore
 
@@ -504,9 +508,12 @@ def ingest_to_store(
         return {**report, "shape": list(shape)}
 
     il_name, xl_name = grid_by
-    # grid vocabularies: thousands of values, driver-safe by construction
-    il_vals = sorted(r[0] for r in traces.select(il_name).distinct().collect())
-    xl_vals = sorted(r[0] for r in traces.select(xl_name).distinct().collect())
+    # both grid vocabularies in ONE header-only job (no sample decode); each
+    # set is grid-axis sized (thousands), so driver-safe at any file size
+    grid_fields = [f for f in fields if f.name in grid_by]
+    vocab = (scan_traces(spark, segy_path, header_fields=grid_fields, with_samples=False)
+             .agg(F.collect_set(il_name), F.collect_set(xl_name)).first())
+    il_vals, xl_vals = sorted(vocab[0]), sorted(vocab[1])
     shape = (len(il_vals), len(xl_vals), ns)
     st.create_array(var, shape=shape,
                     chunks=chunks or (min(64, shape[0]), min(64, shape[1]), ns),
@@ -523,11 +530,10 @@ def ingest_to_store(
     # not a create_map literal: a survey-scale axis (10⁴-10⁵ values)
     # embedded as plan literals bloats every task's serialized plan; a
     # broadcast hash join is the shape that survives any grid
-    spark = traces.sparkSession
-    il_df = spark.createDataFrame(
-        [(int(v), i) for i, v in enumerate(il_vals)], f"{il_name} long, __il long")
-    xl_df = spark.createDataFrame(
-        [(int(v), i) for i, v in enumerate(xl_vals)], f"{xl_name} long, __xl long")
+    il_df = local_frame(spark, [(int(v), i) for i, v in enumerate(il_vals)],
+                        f"{il_name} long, __il long")
+    xl_df = local_frame(spark, [(int(v), i) for i, v in enumerate(xl_vals)],
+                        f"{xl_name} long, __xl long")
     cells = (
         long.join(F.broadcast(il_df), il_name)
         .join(F.broadcast(xl_df), xl_name)

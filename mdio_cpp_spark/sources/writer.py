@@ -84,7 +84,6 @@ def write_array(
     root: str,
     var: str,
     value_cols: dict[str, str] | str = "value",
-    consolidate: bool = True,
 ) -> dict[str, Any]:
     """Write a long-form DataFrame ``(dims..., value...)`` into an existing
     Zarr array, chunk-aligned.
@@ -96,7 +95,7 @@ def write_array(
     Returns a write report {chunks_written, cells_written}. The report
     aggregation is the action that drives the distributed write.
     """
-    report = write_arrays(df, root, {var: value_cols}, consolidate=consolidate)
+    report = write_arrays(df, root, {var: value_cols})
     return {"chunks_written": report["chunks_written"], "cells_written": report["cells_written"]}
 
 
@@ -104,7 +103,6 @@ def write_arrays(
     df: DataFrame,
     root: str,
     specs: dict[str, dict[str, str] | str],
-    consolidate: bool = True,
 ) -> dict[str, Any]:
     """Write SEVERAL variables sharing one dimension grid in ONE shuffle.
 
@@ -117,6 +115,9 @@ def write_arrays(
     the right plan).
 
     Cells absent from ``df`` keep the fill; existing chunks are RMW'd.
+    The consolidated metadata is republished only when the write changed
+    metadata (an attribute zone manifest); a chunk-only write leaves it as
+    it was, so a store's builder publishes it once after creating arrays.
     Returns {chunks_written, cells_written} (chunks counted once per
     (variable, chunk) pair; cells once per input row per variable).
     """
@@ -221,7 +222,7 @@ def write_arrays(
             for v, z in (json.loads(r["zstats"]) if r["zstats"] else {}).items():
                 zones[v][key] = z
         if _zonemap.fold_zones(store, zones):
-            consolidate = True
+            store.consolidate()
         report = {"chunks": sum(r["chunks"] or 0 for r in rows),
                   "cells": sum(r["cells"] or 0 for r in rows)}
     elif side_vars:
@@ -263,8 +264,6 @@ def write_arrays(
             F.sum("chunks").alias("chunks"), F.sum("cells").alias("cells")
         ).collect()[0]
         report = {"chunks": row["chunks"], "cells": row["cells"]}
-    if consolidate:
-        store.consolidate()
     return {"chunks_written": report["chunks"] or 0, "cells_written": report["cells"] or 0}
 
 

@@ -53,7 +53,7 @@ def stream_write_array(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        write_array(batch_df, root, var, value_cols=value_cols, consolidate=False)
+        write_array(batch_df, root, var, value_cols=value_cols)
 
     writer = (
         stream_df.writeStream.foreachBatch(_sink)

@@ -69,6 +69,7 @@ def rechunk_array(
             compressor=compressor if compressor is not None else meta.compressor,
             fill=meta.fill,
         )
+        dst.consolidate()
 
     if meta.is_struct:
         fields = list(meta.np_dtype.names)

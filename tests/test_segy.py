@@ -281,6 +281,53 @@ def test_ingest_poststack3d_cube(tmp_path, spark):
         assert r["v"] == cube[r["inline"], r["crossline"], r["sample"]]
 
 
+# jobs one grid ingest runs: one header-only vocabulary aggregate, then the
+# chunk write's three (AQE runs each shuffle-map stage as its own job)
+_GRID_INGEST_JOBS = 4
+
+
+def test_grid_ingest_places_unsorted_gapped_headers(tmp_path, spark):
+    """Traces in shuffled order, inline/crossline numbers repeated across
+    the file and gapped, two grid cells with no trace: every trace lands
+    where a numpy mirror of the rank placement puts it, the coordinate
+    arrays hold the sorted vocabularies, and the ingest runs a fixed
+    number of Spark jobs."""
+    from mdio_cpp_spark.sources.zarr_store import ZarrStore
+
+    rng = np.random.default_rng(11)
+    il_axis, xl_axis, ns = [19, 3, 11, 7], [140, 100, 104, 120, 101], 6
+    pairs = [(i, x) for i in il_axis for x in xl_axis][2:]  # two cells absent
+    order = rng.permutation(len(pairs))
+    il = np.array([pairs[k][0] for k in order])
+    xl = np.array([pairs[k][1] for k in order])
+    vals = rng.integers(-500, 500, (len(pairs), ns)).astype("f8")
+    path = str(tmp_path / "shuffled.sgy")
+    write_segy(path, vals, fmt=1, headers={189: il, 193: xl})
+    root = str(tmp_path / "shuffled.zarr")
+
+    sc = spark.sparkContext
+    gid = f"grid-ingest-{id(tmp_path)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", gid)
+    try:
+        rep = ingest_to_store(spark, path, root, grid_by=("inline", "crossline"),
+                              chunks=(3, 2, ns))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(gid)) == _GRID_INGEST_JOBS
+
+    il_vals, xl_vals = np.unique(il), np.unique(xl)
+    st = ZarrStore.open(root)
+    meta = st.array_meta("amplitude")
+    mirror = np.full((len(il_vals), len(xl_vals), ns), meta.fill_scalar(), dtype="f8")
+    mirror[np.searchsorted(il_vals, il), np.searchsorted(xl_vals, xl)] = vals
+    assert rep["shape"] == list(mirror.shape)
+    assert np.array_equal(st.read_array("amplitude"), mirror, equal_nan=True)
+    assert list(st.read_array("inline_coord")) == sorted(il_axis)
+    assert list(st.read_array("crossline_coord")) == sorted(xl_axis)
+
+
 # ---------------------------------------------------------------- export
 
 

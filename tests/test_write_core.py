@@ -175,6 +175,34 @@ def test_driver_patch_publishes_consolidated_metadata_once(tmp_path):
     assert writes == ["v/0.0"]
 
 
+def _generation(root: str) -> int:
+    with open(os.path.join(root, ".zmetadata")) as f:
+        return json.load(f)["generation"]
+
+
+@pytest.mark.parametrize("writer", WRITERS)
+def test_writers_publish_metadata_only_when_it_changed(spark, tmp_path, writer):
+    """A chunk-only write leaves the consolidated document as it was (the
+    Spark writers used to republish it after every write, with a full LIST
+    and GET walk); a write that folds zones into an attribute manifest
+    publishes it exactly once."""
+    root = str(tmp_path / f"gen_{writer}.zarr")
+    mirror = _store(root)
+    block = np.full((2, 3), -3.0)
+    gen = _generation(root)
+    _write(spark, writer, root, (1, 2), block)
+    assert _generation(root) == gen
+
+    zonemap.publish_chunk_stats(root, "v", zonemap.compute_chunk_stats(spark, root, "v"))
+    gen = _generation(root)
+    _write(spark, writer, root, (5, 7), block)
+    assert _generation(root) == gen + 1
+    mirror[1:3, 2:5] = mirror[5:7, 7:10] = block
+    meta = ZarrStore.open(root).array_meta("v")
+    assert zonemap.load_stats(meta)["1,1"] == zone_of(mirror[4:8, 6:12])
+    assert np.array_equal(ZarrStore.open(root).read_array("v"), mirror)
+
+
 def test_fold_zones_unknown_drops_attr_key_and_marks_sidecar(spark, tmp_path):
     """``"unknown"`` removes a chunk from an attribute manifest and stores
     the never-prune sentinel in a sidecar; a store without a zone map
