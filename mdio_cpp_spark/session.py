@@ -6,13 +6,19 @@ AQE on (runtime re-plan, skew-join splitting, partition coalescing), shuffle
 partitions sized to cores rather than the 200 default, Arrow enabled for the
 few Pandas-UDF paths, UTC session timezone so timestamp results are stable
 across hosts and match the DuckDB oracle.
+
+Every Spark Python worker that runs engine code imports this module, and the
+import installs the worker's zip-directory rule (``_stamp_zip_directories``).
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 from collections.abc import Iterable
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -108,3 +114,39 @@ def local_frame(spark: SparkSession, rows: Iterable, schema: StructType | str) -
     table = pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
     return spark.createDataFrame(table, schema)
+
+
+def _stamp_zip_directories() -> None:
+    """Make a Spark Python worker re-read a zip archive's directory only when
+    the archive changed.
+
+    Every task and data-source planner call runs ``importlib.invalidate_caches()``
+    (pyspark's ``worker_util.setup_spark_files``). Before CPython 3.13 that
+    makes each ``zipimporter`` re-read its whole archive directory in pure
+    Python, and workers import pyspark from ``pyspark.zip``: 15-17
+    importers re-read its 1,328 entries, 0.1-0.25 s per call. The wrapper
+    takes the archive's stamp before the re-read, as ``LocalKVStore`` does,
+    and skips the re-read while the stamp is the one of this importer's last
+    re-read. A failed ``stat`` falls through to the stdlib re-read, which
+    handles a vanished archive. Workers only: the driver is left as it is.
+    """
+    stdlib = zipimport.zipimporter.invalidate_caches
+    if (sys.version_info >= (3, 13) or not SparkFiles._is_running_on_worker
+            or getattr(stdlib, "stamped", False)):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_mdio_stamp", None):
+            stdlib(self)
+            self._mdio_stamp = stamp
+
+    invalidate_caches.stamped = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_stamp_zip_directories()
