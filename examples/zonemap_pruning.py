@@ -5,10 +5,11 @@ End-to-end demo of the round-4 scan-efficiency features:
   1. build a 1-D store and write it through ``df.write.format("mdio")``
      (the DSv2 Arrow writer; chunk-partitioned input, commit-checked
      exclusivity),
-  2. compute + publish a per-chunk [min, max] zone-map manifest,
+  2. build a per-chunk [min, max] zone map (a sidecar store next to the
+     array),
   3. run a selective value-filtered scan and show how many chunks the
-     manifest pruned before any byte was read,
-  4. overwrite a chunk and show the manifest staying coherent.
+     zone map pruned before any byte was read,
+  4. overwrite a chunk and show the zone map staying coherent.
 
 Run:  python examples/zonemap_pruning.py
 """
@@ -49,14 +50,13 @@ def main() -> None:
     )
     print(f"wrote {N} cells through df.write.format('mdio')")
 
-    # 2. build + publish the manifest — the canonical form is a SIDECAR
-    #    store (vmin/vmax arrays keyed by linear chunk id): no attr-size
-    #    cap, no per-chunk driver collect
+    # 2. build the zone map: a SIDECAR store (vmin/vmax arrays keyed by
+    #    linear chunk id), built with no per-chunk driver collect
     info = zonemap.ensure_chunk_stats(spark, root, "v")
     meta = ZarrStore.open(root).array_meta("v")
     zones = zonemap.open_zones(meta, root)
-    known0, zone0 = zones[1].lookup_coords((0,))
-    print(f"sidecar manifest over {info['nchunks']} chunks; chunk 0 zone → {zone0}")
+    _, zone0 = zones.lookup_coords((0,))
+    print(f"sidecar zone map over {info['nchunks']} chunks; chunk 0 zone → {zone0}")
 
     # 3. selective predicate: only the last chunk can satisfy it
     lit = float(N - 1000)
@@ -78,8 +78,8 @@ def main() -> None:
         "path", root
     ).option("variable", "v").mode("append").save()
     fresh = zonemap.open_zones(ZarrStore.open(root).array_meta("v"), root)
-    _, z0 = fresh[1].lookup_coords((0,))
-    print(f"after overwrite, chunk 0 zone → {z0} (manifest stayed coherent)")
+    _, z0 = fresh.lookup_coords((0,))
+    print(f"after overwrite, chunk 0 zone → {z0} (zone map stayed coherent)")
 
     shutil.rmtree(root, ignore_errors=True)
 

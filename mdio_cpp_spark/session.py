@@ -126,14 +126,19 @@ def _stamp_zip_directories() -> None:
     Python, and workers import pyspark from ``pyspark.zip``: 15-17
     importers re-read its 1,328 entries, 0.1-0.25 s per call. The wrapper
     takes the archive's stamp before the re-read, as ``LocalKVStore`` does,
-    and skips the re-read while the stamp is the one of this importer's last
-    re-read. A failed ``stat`` falls through to the stdlib re-read, which
-    handles a vanished archive. Workers only: the driver is left as it is.
+    and keeps one stamp per archive: while the stamp is the one of the
+    archive's last re-read, by any importer, the importer takes the
+    directory that re-read left in ``zipimport._zip_directory_cache``. So a
+    worker re-reads each archive once, not once per importer. A failed
+    ``stat`` falls through to the stdlib re-read, which handles a vanished
+    archive. Workers only: the driver is left as it is.
     """
     stdlib = zipimport.zipimporter.invalidate_caches
     if (sys.version_info >= (3, 13) or not SparkFiles._is_running_on_worker
             or getattr(stdlib, "stamped", False)):
         return
+
+    read_at: dict[str, tuple | None] = {}  # archive -> stamp of its last re-read
 
     def invalidate_caches(self):
         try:
@@ -141,9 +146,12 @@ def _stamp_zip_directories() -> None:
             stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
         except OSError:
             stamp = None
-        if stamp is None or stamp != getattr(self, "_mdio_stamp", None):
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and stamp == read_at.get(self.archive) and files is not None:
+            self._files = files
+        else:
             stdlib(self)
-            self._mdio_stamp = stamp
+            read_at[self.archive] = stamp
 
     invalidate_caches.stamped = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches

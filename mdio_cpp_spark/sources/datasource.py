@@ -430,11 +430,11 @@ def register(spark) -> None:
 @dataclass
 class MdioCommitMessage(WriterCommitMessage):
     """Per-task commit message: which chunks this task wrote (+ fresh zone
-    stats when the array has a published manifest). The driver-side commit
-    cross-checks exclusivity and folds the zones in."""
+    stats when the array is zoned). The driver-side commit cross-checks
+    exclusivity and folds the zones in."""
 
-    chunk_keys: list  # list[str]
-    zones: str        # JSON {chunk_key: [lo, hi]} ("" when no manifest)
+    chunk_ids: list  # linear chunk ids
+    zones: dict      # {linear chunk id: zone} (empty when not zoned)
 
 
 class MdioArrowWriter(DataSourceArrowWriter):
@@ -452,7 +452,8 @@ class MdioArrowWriter(DataSourceArrowWriter):
     batches, then RMWs each chunk exactly once at task end — one decode +
     one encode per touched chunk regardless of row order — through
     ``ZarrStore.rewrite_chunk``, the read-modify-write every writer shares.
-    The commit folds the tasks' zones through ``zonemap.fold_zones``."""
+    The commit folds the tasks' zones through ``zonemap.fold_zones``; it
+    republishes no metadata."""
 
     def __init__(self, root: str, version: int, var: str, value_col: str):
         self.root, self.version, self.var, self.value_col = root, version, var, value_col
@@ -492,8 +493,8 @@ class MdioArrowWriter(DataSourceArrowWriter):
             for k in np.unique(ckey):
                 m = ckey == k
                 per_chunk.setdefault(int(k), []).append((off[m], vals[m]))
-        keys, zones = [], {}
-        zoned = _zonemap.zone_form(meta) is not None
+        zones = {}
+        zoned = _zonemap.is_zoned(meta)
         grid = meta.grid_shape()
         for linear, parts in per_chunk.items():
             coords = tuple(int(c) for c in np.unravel_index(linear, grid))
@@ -506,36 +507,31 @@ class MdioArrowWriter(DataSourceArrowWriter):
                     flat[off] = vals.astype(meta.np_dtype, copy=False)
 
             block = store.rewrite_chunk(meta, coords, patch)
-            key = ",".join(str(c) for c in coords)
-            keys.append(key)
             if zoned:
-                zones[key] = chunk_zone(meta, coords, block)
-        import json
-
-        return MdioCommitMessage(chunk_keys=keys, zones=json.dumps(zones) if zones else "")
+                zones[linear] = chunk_zone(meta, coords, block)
+        return MdioCommitMessage(chunk_ids=list(per_chunk), zones=zones)
 
     def commit(self, messages) -> None:
-        import json
         from collections import Counter
 
-        counts = Counter(k for m in messages if m for k in m.chunk_keys)
+        counts = Counter(k for m in messages if m for k in m.chunk_ids)
         dupes = sorted(k for k, n in counts.items() if n > 1)
         if dupes:
+            grid = ZarrStore(self.root, self.version).array_meta(self.var).grid_shape()
+            coords = [tuple(int(c) for c in np.unravel_index(k, grid)) for k in dupes[:5]]
             raise RuntimeError(
-                f"chunk(s) {dupes[:5]} written by multiple tasks — the input "
+                f"chunk(s) {coords} written by multiple tasks — the input "
                 "frame was not chunk-partitioned; use repartition_by_chunks() "
                 "before .write.format('mdio') (concurrent unaligned writes "
                 "are UB in the reference too, USER_GUIDE 'Write')"
             )
-        store = ZarrStore(self.root, self.version)
         zones = {}
         for m in messages:
-            if m and m.zones:
-                zones.update(json.loads(m.zones))
+            if m:
+                zones.update(m.zones)
         # commit messages are already driver-resident (the DSv2 commit
-        # contract), so both zone forms fold here
-        if _zonemap.fold_zones(store, {self.var: zones}):
-            store.consolidate()
+        # contract), so the zones fold here
+        _zonemap.fold_zones(ZarrStore(self.root, self.version), {self.var: zones})
 
     def abort(self, messages) -> None:  # chunks are atomic (tmp+rename); a
         pass  # partial job leaves prior data intact for untouched chunks
@@ -613,7 +609,7 @@ class MdioStreamReader(DataSourceStreamReader):
     revisit them. Producers that need the stronger guarantee publish a
     watermark AFTER the cells land (``patch_array_attrs`` MERGES — using
     the wholesale-replace ``update_array_attrs`` here would silently drop
-    the array's other attrs, e.g. the zone-map manifest)::
+    the array's other attrs, e.g. the zone-map marker)::
 
         store.patch_array_attrs(var, {"frontier": n_written})
         store.consolidate()

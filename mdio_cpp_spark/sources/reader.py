@@ -248,14 +248,14 @@ def cluster_parallelism(spark: SparkSession | None = None) -> int:
 CHUNKS_PER_TASK = 4
 
 
-def task_count(n_chunks: int, chunks_per_task: int, par: int) -> int:
-    """Tasks for a scan of ``n_chunks``: ~chunks_per_task chunks each, but
+def task_count(n_chunks: int, per_task: int, par: int) -> int:
+    """Tasks for a scan of ``n_chunks``: ~``per_task`` chunks each, but
     never fewer tasks than cores while chunks remain (small scans should
     still use the whole cluster), and capped at 64× the cluster parallelism
     — a petascale array (~12M chunks) must not become millions of scheduler
     tasks; beyond the cap, tasks simply decode more chunks sequentially (the
     cap scales with the cluster, so a 1000-executor cluster still fans out)."""
-    n = max(1, -(-n_chunks // max(1, chunks_per_task)))
+    n = max(1, -(-n_chunks // max(1, per_task)))
     return min(max(n, min(n_chunks, par)), 64 * par)
 
 
@@ -398,7 +398,6 @@ def _scan(
     outputs: Outputs,
     box: tuple[tuple[int, int], ...],
     steps: tuple[int, ...],
-    chunks_per_task: int,
     value_col: str | None = None,
     value_filters: Sequence[tuple[str, Any]] = (),
 ) -> DataFrame:
@@ -426,7 +425,7 @@ def _scan(
             task_keep, value_col, value_filters,
         )
 
-    n_parts = task_count(n, chunks_per_task, cluster_parallelism(spark))
+    n_parts = task_count(n, CHUNKS_PER_TASK, cluster_parallelism(spark))
     return spark.range(0, n, numPartitions=n_parts).mapInPandas(decode, schema=schema)
 
 
@@ -437,7 +436,6 @@ def scan_array(
     ranges: dict[str, tuple] | None = None,
     fields: list[str] | None = None,
     value_col: str = "value",
-    chunks_per_task: int = CHUNKS_PER_TASK,
     value_filter: tuple[str, Any] | None = None,
 ) -> DataFrame:
     """Scan one Zarr array into a long-form DataFrame with chunk pruning.
@@ -464,7 +462,7 @@ def scan_array(
     box, steps = _normalize_ranges(meta, ranges)
     return _scan(
         spark, store, [(meta, _picks(meta, fields, value_col))], box, steps,
-        chunks_per_task, value_col, [value_filter] if value_filter else (),
+        value_col, [value_filter] if value_filter else (),
     )
 
 
@@ -473,7 +471,6 @@ def scan_arrays(
     root: str,
     specs: dict[str, str],
     ranges: dict[str, tuple] | None = None,
-    chunks_per_task: int = CHUNKS_PER_TASK,
 ) -> DataFrame:
     """FUSED aligned scan: decode N variables sharing one chunk grid in a
     single pass — one task reads every variable's chunk at the same coords
@@ -492,4 +489,4 @@ def scan_arrays(
     store = ZarrStore.open(root)
     outputs = fused_outputs(store.array_meta, specs.items())
     box, steps = _normalize_ranges(outputs[0][0], ranges)
-    return _scan(spark, store, outputs, box, steps, chunks_per_task)
+    return _scan(spark, store, outputs, box, steps)

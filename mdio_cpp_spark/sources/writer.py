@@ -15,7 +15,8 @@ The read-modify-write is ``ZarrStore.rewrite_chunk``, the one chunk write of
 all three writers (this one, the DSv2 ``MdioArrowWriter`` and the driver's
 ``write_array_numpy``): each task scatters its rows' C-order in-chunk offsets
 into the C-order block it hands back. Zone stats of the rewritten chunks fold
-through ``zonemap.fold_zones``, except the distributed sidecar pass below.
+through ``zonemap.fold_zones``, here in a distributed pass keyed by sidecar
+chunk.
 
 Scale shape: one shuffle keyed by chunk id (dominated by data size, the
 theoretical minimum for a re-chunking write), then embarrassingly parallel
@@ -115,10 +116,8 @@ def write_arrays(
     the right plan).
 
     Cells absent from ``df`` keep the fill; existing chunks are RMW'd.
-    The consolidated metadata is republished only when the write changed
-    metadata (an attribute zone manifest); a chunk-only write leaves it as
-    it was, so a store's builder publishes it once after creating arrays.
-    Returns {chunks_written, cells_written} (chunks counted once per
+    The write changes no metadata, so the consolidated metadata stays as
+    the store's builder published it after creating arrays. Returns {chunks_written, cells_written} (chunks counted once per
     (variable, chunk) pair; cells once per input row per variable).
     """
     store = ZarrStore.open(root)
@@ -181,16 +180,14 @@ def write_arrays(
     )
 
     root_path, version = store.root, store.version
-    out_schema = ", ".join(
-        [f"{c} long" for c in ckey_cols] + ["chunks long", "cells long", "zstats string"]
-    )
     n_cells_chunk = int(np.prod(first.chunks))
+    grid = first.grid_shape()
     # zone-map coherence: the touched chunks' [min,max] is taken from the
     # blocks as written, in the SAME pass, and folded into each variable's
     # zone map (sources/zonemap.py) — a write never leaves stats that could
-    # wrongly prune a later scan. The form is decided here, on the driver
-    forms = {v: _zonemap.zone_form(m) for v, m in metas.items()}
-    zone_vars = {v for v, f in forms.items() if f is not None}
+    # wrongly prune a later scan. Which variables are zoned is decided
+    # here, on the driver
+    zone_vars = [v for v, m in metas.items() if _zonemap.is_zoned(m)]
 
     def write_chunk_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         coords = tuple(int(k) for k in key)
@@ -205,66 +202,35 @@ def write_arrays(
             if var in zone_vars:
                 zstats[var] = chunk_zone(meta, coords, block)
         return pd.DataFrame({
-            **{c: [coords[d]] for d, c in enumerate(ckey_cols)},
+            "lin": [int(np.ravel_multi_index(coords, grid))],
             "chunks": [len(metas)], "cells": [len(pdf) * len(metas)],
             "zstats": [json.dumps(zstats) if zstats else ""],
         })
 
-    per_chunk = keyed.groupBy(*ckey_cols).applyInPandas(write_chunk_group, schema=out_schema)
-    side_vars = [v for v, f in forms.items() if f == "sidecar"]
-    if "attr" in forms.values():
-        # chunk-cardinality collect (bounded by the attr-resident manifest
-        # cap); every variable's zones fold on the driver
-        rows = per_chunk.collect()
-        zones: dict[str, dict] = {v: {} for v in zone_vars}
-        for r in rows:
-            key = ",".join(str(r[c]) for c in ckey_cols)
-            for v, z in (json.loads(r["zstats"]) if r["zstats"] else {}).items():
-                zones[v][key] = z
-        if _zonemap.fold_zones(store, zones):
-            store.consolidate()
-        report = {"chunks": sum(r["chunks"] or 0 for r in rows),
-                  "cells": sum(r["cells"] or 0 for r in rows)}
-    elif side_vars:
+    totals = keyed.groupBy(*ckey_cols).applyInPandas(
+        write_chunk_group, schema="lin long, chunks long, cells long, zstats string")
+    if zone_vars:
         # fully distributed coherence: one tiny row per TOUCHED chunk
         # shuffles by sidecar-chunk id; each reduce task RMWs its own
         # disjoint sidecar chunks and emits partial totals — the chunk
         # writes, the sidecar fold, and the report all ride ONE action,
         # with nothing per-chunk on the driver (works at any touched count)
-        lin = F.lit(0).cast("long")
-        for d, g in enumerate(first.grid_shape()):
-            lin = lin * F.lit(int(g)) + F.col(ckey_cols[d])
-
         def update_side(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            zones_by_var: dict[str, dict] = {v: {} for v in side_vars}
-            ck = pdf[ckey_cols].astype(int).astype(str).agg(",".join, axis=1)
-            for k, zs in zip(ck, pdf["zstats"]):
-                st = json.loads(zs) if zs else {}
-                for v in side_vars:
-                    if v in st:
-                        zones_by_var[v][k] = st[v]
-            for v in side_vars:
-                _zonemap.apply_zone_updates(root_path, v, zones_by_var[v])
+            zones_by_var: dict[str, dict] = {v: {} for v in zone_vars}
+            for lin, zs in zip(pdf["lin"], pdf["zstats"]):
+                for v, z in json.loads(zs).items():
+                    zones_by_var[v][int(lin)] = z
+            _zonemap.fold_zones(ZarrStore(root_path, version), zones_by_var)
             return pd.DataFrame(
                 {"chunks": [int(pdf["chunks"].sum())], "cells": [int(pdf["cells"].sum())]}
             )
 
-        totals = per_chunk.withColumn(
-            "__sid", F.floor(lin / F.lit(_zonemap.SIDECAR_CHUNK)).cast("long")
-        )
-        row = (
-            totals.groupBy("__sid")
+        totals = (
+            totals.groupBy(F.expr(f"lin div {_zonemap.SIDECAR_CHUNK}"))
             .applyInPandas(update_side, "chunks long, cells long")
-            .agg(F.sum("chunks").alias("chunks"), F.sum("cells").alias("cells"))
-            .collect()[0]
         )
-        report = {"chunks": row["chunks"], "cells": row["cells"]}
-    else:
-        row = per_chunk.agg(
-            F.sum("chunks").alias("chunks"), F.sum("cells").alias("cells")
-        ).collect()[0]
-        report = {"chunks": row["chunks"], "cells": row["cells"]}
-    return {"chunks_written": report["chunks"] or 0, "cells_written": report["cells"] or 0}
+    row = totals.agg(F.sum("chunks").alias("chunks"), F.sum("cells").alias("cells")).collect()[0]
+    return {"chunks_written": row["chunks"] or 0, "cells_written": row["cells"] or 0}
 
 
 def dense_fill_frame(

@@ -54,10 +54,6 @@ from mdio_cpp_spark.schema.types import (
     v3_dtype_name,
 )
 
-# attrs key of the per-chunk [min,max] zone-map manifest (sources/zonemap.py
-# builds/publishes it, and its fold_zones keeps it coherent on chunk writes)
-CHUNK_STATS_ATTR = "mdio:chunk_stats"
-
 # chunk jobs in flight per map_chunks call: the bound on a driver read's or
 # write's extra memory (fetched bytes + decoded block each). A fused scan of
 # N variables runs max(1, 4 // N) chunks at once, so a scan task also holds
@@ -1000,7 +996,7 @@ class ZarrStore:
         When the store carries consolidated metadata, it is refreshed by
         default — ``arrays()`` prefers the consolidated doc, so leaving it
         stale would make the new attrs invisible (and let zone pruning
-        trust an outdated manifest). Batch callers that consolidate once at
+        trust an outdated marker). Batch callers that consolidate once at
         the end (commit_metadata) pass ``reconsolidate=False``."""
         if self.version == 2:
             meta = self.array_meta(name)
@@ -1026,7 +1022,7 @@ class ZarrStore:
         (the reference's UserAttributes snapshot-swap contract) — a caller
         that only wants to advance one key (the stream frontier watermark,
         a status flag) through the replace form would silently drop every
-        OTHER attr: the zone-map manifest/sidecar marker, units, statsV1.
+        OTHER attr: the zone-map sidecar marker, units, statsV1.
         This helper is the single-key-update form that cannot."""
         self.update_array_attrs(name, {**self.array_meta(name).attrs, **attrs},
                                 reconsolidate)
@@ -1357,8 +1353,9 @@ class ZarrStore:
             )
         from mdio_cpp_spark.sources import zonemap as _zm  # lazy: avoids cycle
 
-        zoned = _zm.zone_form(meta) is not None
-        rewritten: dict[tuple[int, ...], list[float] | None] = {}
+        zoned = _zm.is_zoned(meta)
+        grid = meta.grid_shape()
+        rewritten: dict[int, list[float] | None] = {}
 
         def rewrite(coords: tuple[int, ...]) -> None:
             corigin = tuple(c * s for c, s in zip(coords, meta.chunks))
@@ -1376,17 +1373,15 @@ class ZarrStore:
             if zoned:
                 # the job records the zone, so a chunk that finishes after
                 # another chunk's job raised is not left with its old stats
-                rewritten[coords] = chunk_zone(meta, coords, block)
+                linear = int(np.ravel_multi_index(coords, grid))
+                rewritten[linear] = chunk_zone(meta, coords, block)
 
         try:
             for _ in map_chunks(rewrite, chunks_overlapping(meta, box)):
                 pass
         finally:
-            # map_chunks has waited for its running jobs; fold in chunk order
-            zones = {",".join(str(c) for c in coords): rewritten[coords]
-                     for coords in sorted(rewritten)}
-            if _zm.fold_zones(self, {name: zones}):
-                self.consolidate()
+            # map_chunks has waited for its running jobs
+            _zm.fold_zones(self, {name: rewritten})
 
 
 # the process's chunk pool: (pid, executor), made on first use (see _chunk_pool)

@@ -5,24 +5,29 @@ The parquet row-group statistics idea applied to the Zarr chunk grid. The
 reference stores whole-VARIABLE statsV1 (stats.h:229-335, schema
 dataset_schema.h) — one histogram/min/max per array; a zone map is the same
 contract at chunk granularity, which is what makes it a *pruning* structure
-rather than a summary. Stored in the array's attributes (travels with the
-store, readable by any zarr client as plain JSON) under ``mdio:chunk_stats``.
+rather than a summary.
+
+Storage: a sidecar — a private Zarr v2 store at ``<root>/.zonemap/<var>``
+holding ``vmin``/``vmax`` arrays indexed by linear chunk id — found through
+a marker attribute on the variable (layout below). This module is the only
+one that knows that layout: the other modules ask ``is_zoned``, fold fresh
+zones through ``fold_zones`` (keyed by linear chunk id), prune through
+``zone_keeper`` and copy attributes through ``without_zones``.
 
 Scale design:
-  * build — one distributed pass, one output row PER CHUNK (never per cell):
-    a 100 TB / 1 MB-chunk array yields ~100 M tiny rows at most; at that
-    size the manifest belongs in its own sidecar array, so ``build`` caps
-    attr-resident manifests and refuses beyond it (the honest gate).
+  * build — one distributed pass, one output row PER CHUNK (never per cell),
+    then one tiny shuffle keyed by sidecar chunk; nothing per-chunk reaches
+    the driver at any grid size.
   * prune — two tiers. Driver-side: when the (already range-pruned) chunk
     grid is small enough to enumerate, the surviving linear ids ship as the
     task list, so skipped chunks never even become work. Executor-side:
-    otherwise each task consults the manifest (already on every executor via
-    the meta closure — no extra I/O) and skips incompatible chunks BEFORE
-    the byte read — the decode, the decompress, and the kvstore GET all
-    disappear, which at cloud-storage latency is the entire cost.
+    otherwise each task consults the sidecar (lazily fetched ~256 KiB stats
+    chunks) and skips incompatible chunks BEFORE the byte read — the decode,
+    the decompress, and the kvstore GET all disappear, which at
+    cloud-storage latency is the entire cost.
 
-Fill-only chunks (no stored bytes) carry ``null`` stats; the reader's
-existing fill-vs-predicate logic handles them.
+Fill-only chunks (no stored bytes) carry NaN stats; the reader's existing
+fill-vs-predicate logic handles them.
 """
 
 from __future__ import annotations
@@ -36,17 +41,11 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from mdio_cpp_spark.sources.zarr_store import (
-    CHUNK_STATS_ATTR,
     ZarrArrayMeta,
     ZarrStore,
     chunk_zone,
     zone_of,
 )
-
-STATS_KEY = CHUNK_STATS_ATTR
-
-# attr-resident manifest cap: beyond this, stats belong in a sidecar array
-MAX_ATTR_CHUNKS = 262_144
 
 _FLOAT_MAX = float(np.finfo(np.float64).max)
 
@@ -54,9 +53,8 @@ _FLOAT_MAX = float(np.finfo(np.float64).max)
 # skip does the same work without a driver loop)
 MAX_DRIVER_ENUM = 65_536
 
-
-def _coords_key(coords: tuple[int, ...]) -> str:
-    return ",".join(str(c) for c in coords)
+# chunks one task of the sidecar build decodes
+_BUILD_CHUNKS_PER_TASK = 8
 
 
 def _chunk_zone(ts, m, coords: tuple[int, ...]) -> list[float] | None:
@@ -104,69 +102,10 @@ def _chunk_zone(ts, m, coords: tuple[int, ...]) -> list[float] | None:
     return None if block is None else chunk_zone(m, coords, block)
 
 
-def compute_chunk_stats(
-    spark: SparkSession, root: str, var: str, chunks_per_task: int = 8
-) -> dict[str, list[float] | None]:
-    """Distributed per-chunk [min, max] over the VALID extent of each chunk
-    (edge padding excluded). One Spark job, one row per chunk."""
-    store = ZarrStore.open(root)
-    meta = store.array_meta(var)
-    if meta.is_struct or meta.np_dtype.kind not in "biuf":
-        raise ValueError("zone maps apply to scalar numeric/bool arrays only")
-    if meta.nchunks() > MAX_ATTR_CHUNKS:
-        raise ValueError(
-            f"{meta.nchunks()} chunks exceeds the attr-resident manifest cap "
-            f"({MAX_ATTR_CHUNKS}); store the manifest as a sidecar array instead"
-        )
-    grid = meta.grid_shape()
-    shape, chunks = meta.shape, meta.chunks
-    root_path, version = store.root, store.version
-    par = max(1, spark.sparkContext.defaultParallelism)
-    n_parts = min(max(1, math.ceil(meta.nchunks() / max(1, chunks_per_task))), 64 * par)
-
-    def stat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ts = ZarrStore(root_path, version)
-        m = ts.array_meta(var)
-        for pdf in batches:
-            rows = []
-            for linear in pdf["id"].to_numpy():
-                coords = tuple(int(c) for c in np.unravel_index(int(linear), grid))
-                z = _chunk_zone(ts, m, coords)
-                key = _coords_key(coords)
-                rows.append((key, None, None) if z is None else (key, z[0], z[1]))
-            yield pd.DataFrame(rows, columns=["key", "vmin", "vmax"])
-
-    rows = (
-        spark.range(meta.nchunks(), numPartitions=n_parts)
-        .mapInPandas(stat, "key string, vmin double, vmax double")
-        .collect()
-    )
-    return {
-        r["key"]: (None if r["vmin"] is None else [r["vmin"], r["vmax"]]) for r in rows
-    }
-
-
-def publish_chunk_stats(root: str, var: str, stats: dict) -> None:
-    """Attach the manifest to the array's attributes and republish metadata
-    (the reference's PublishMetadata shape, variable.h:1522-1614)."""
-    from mdio_cpp_spark.model import MdioDataset
-
-    ds = MdioDataset.open(root)
-    ds.update_attrs(var, **{STATS_KEY: stats})
-    ds.commit_metadata()
-
-
 def ensure_chunk_stats(spark: SparkSession, root: str, var: str) -> dict:
-    """Build+publish the manifest once; reopen-safe and idempotent.
-
-    The canonical build is the SIDECAR form (no attr-size cap, no per-chunk
-    driver collect — see build_sidecar_stats below); a pre-existing
-    attr-resident manifest (legacy form) is honored as-is."""
-    meta = ZarrStore.open(root).array_meta(var)
-    existing = meta.attrs.get(STATS_KEY)
-    if existing is not None:
-        return existing
-    info = sidecar_info(meta)
+    """Build+publish the sidecar once; reopen-safe and idempotent. Returns
+    the sidecar marker (see build_sidecar_stats)."""
+    info = sidecar_info(ZarrStore.open(root).array_meta(var))
     if info is not None:
         return info
     return build_sidecar_stats(spark, root, var)
@@ -220,64 +159,14 @@ def chunk_compatible(
     return True  # unknown op: never prune
 
 
-def load_stats(meta: ZarrArrayMeta) -> dict | None:
-    return meta.attrs.get(STATS_KEY)
-
-
-def zone_form(meta: ZarrArrayMeta) -> str | None:
-    """The zone map a write to ``meta`` must keep coherent: ``"attr"`` (a
-    manifest in the array's attributes, which wins when both exist, as in
-    ``open_zones``), ``"sidecar"`` (a marker valid for the current grid),
-    or None (no zone map, or a dtype zone maps do not cover). Every writer
-    asks this, and only this, which form to keep."""
-    if meta.is_struct or meta.np_dtype.kind not in "biuf":
-        return None
-    if STATS_KEY in meta.attrs:
-        return "attr"
-    if sidecar_info(meta) is not None:
-        return "sidecar"
-    return None
-
-
-def fold_zones(store: ZarrStore, zones_by_var: dict[str, dict]) -> bool:
-    """Fold the zones of rewritten chunks into each variable's zone map:
-    ``{var: {"c0,c1,...": [lo, hi] | None | "unknown"}}``, where None is a
-    fill-only chunk and ``"unknown"`` never prunes until stats are rebuilt.
-    An attribute manifest takes the zones into a new attribute document,
-    not yet republished (an ``"unknown"`` drops the key); a sidecar takes
-    them through its chunk read-modify-write. Returns True when an
-    attribute manifest changed: the caller then consolidates, once, after
-    all its metadata changes."""
-    changed = False
-    for var, zones in zones_by_var.items():
-        if not zones:
-            continue
-        meta = store.array_meta(var)
-        form = zone_form(meta)
-        if form == "attr":
-            manifest = dict(meta.attrs[STATS_KEY])
-            for key, z in zones.items():
-                if z == "unknown":
-                    manifest.pop(key, None)
-                else:
-                    manifest[key] = z
-            store.update_array_attrs(var, {**meta.attrs, STATS_KEY: manifest},
-                                     reconsolidate=False)
-            changed = True
-        elif form == "sidecar":
-            _fold_sidecar(store.root, var, sidecar_info(meta), zones)
-    return changed
-
-
 # --------------------------------------------------------------------------
-# Sidecar manifest: the scale form of the zone map.
+# Sidecar layout.
 #
-# The attr-resident manifest above caps at MAX_ATTR_CHUNKS because array
-# attributes are one JSON document read on every open. At the 100-TB design
-# point (~12M chunks of 8 MiB) the manifest must live OUTSIDE the metadata
-# hot path and be built WITHOUT a per-chunk driver collect. The sidecar is
-# the reference's own consolidated-metadata idea (zarr_v2.h:221-309) applied
-# to stats: metadata stays O(1), stats scale in chunks.
+# Array attributes are one JSON document read on every open, so the stats
+# live OUTSIDE the metadata hot path: at the 100-TB design point (~12M
+# chunks of 8 MiB) metadata stays O(1) and stats scale in chunks — the
+# reference's own consolidated-metadata idea (zarr_v2.h:221-309) applied
+# to stats.
 #
 # Layout: a private Zarr v2 store at ``<root>/.zonemap/<var>`` holding two
 # 1-D float64 arrays ``vmin``/``vmax`` of length n_chunks, indexed by the
@@ -313,13 +202,70 @@ def _sidecar_root(store_root: str, var: str) -> str:
 
 def sidecar_info(meta: ZarrArrayMeta) -> dict | None:
     """The variable's sidecar marker, validated against the CURRENT chunk
-    grid (a resize/trim/re-chunk scrambles linear ids → marker invalid)."""
+    grid (a resize/trim/re-chunk scrambles linear ids → marker invalid)
+    and dtype (zone maps cover scalar numeric/bool arrays only)."""
     info = meta.attrs.get(SIDECAR_ATTR)
-    if not isinstance(info, dict):
+    if not isinstance(info, dict) or meta.is_struct or meta.np_dtype.kind not in "biuf":
         return None
     if list(info.get("grid", [])) != [int(g) for g in meta.grid_shape()]:
         return None
     return info
+
+
+def is_zoned(meta: ZarrArrayMeta) -> bool:
+    """Does ``meta`` carry a zone map a write must keep coherent? Every
+    writer asks this, on the driver, before it takes zones."""
+    return sidecar_info(meta) is not None
+
+
+def without_zones(attrs: dict) -> dict:
+    """``attrs`` without zone-map state: what an array copied onto another
+    store or chunk grid carries, since its sidecar does not come along."""
+    return {k: v for k, v in attrs.items() if k != SIDECAR_ATTR}
+
+
+def fold_zones(store: ZarrStore, zones_by_var: dict[str, dict]) -> None:
+    """Fold the zones of rewritten chunks into each variable's sidecar:
+    ``{var: {linear_chunk_id: [lo, hi] | None | "unknown"}}``, where None is
+    a fill-only chunk and ``"unknown"`` never prunes until stats are
+    rebuilt. A read-modify-write of the touched sidecar chunks; safe from
+    concurrent tasks as long as each sidecar chunk's ids come from one
+    caller (``write_arrays`` groups by sidecar-chunk id to guarantee it; the
+    driver-side writers are single-writer by contract). Metadata is never
+    touched; a variable without a valid sidecar takes nothing."""
+    for var, zones in zones_by_var.items():
+        if not zones:
+            continue
+        info = sidecar_info(store.array_meta(var))
+        if info is None:
+            continue
+        sc = int(info.get("chunk", SIDECAR_CHUNK))
+        st = ZarrStore.open(_sidecar_root(store.root, var))
+        mmin, mmax = st.array_meta("vmin"), st.array_meta("vmax")
+        by_sid: dict[int, list] = {}
+        for linear, z in zones.items():
+            sid, off = divmod(int(linear), sc)
+            by_sid.setdefault(sid, []).append((off, z))
+        for sid, entries in sorted(by_sid.items()):
+            bmin = st.decode_chunk(mmin, (sid,))
+            bmax = st.decode_chunk(mmax, (sid,))
+            if bmin is None or bmax is None:
+                bmin = np.full(sc, np.inf)
+                bmax = np.full(sc, -np.inf)
+            else:
+                bmin, bmax = bmin.copy(), bmax.copy()
+            for off, z in entries:
+                if z == "unknown":
+                    # explicit UNKNOWN sentinel (e.g. a grow exposed new
+                    # cells in this chunk): never prune until stats are
+                    # recomputed
+                    bmin[off], bmax[off] = np.inf, -np.inf
+                elif z is None:
+                    bmin[off] = bmax[off] = np.nan
+                else:
+                    bmin[off], bmax[off] = float(z[0]), float(z[1])
+            st.write_chunk(mmin, (sid,), bmin)
+            st.write_chunk(mmax, (sid,), bmax)
 
 
 class SidecarZones:
@@ -380,48 +326,31 @@ class SidecarZones:
         return self.lookup_linear(linear)
 
 
-def open_zones(meta: ZarrArrayMeta, store_root: str):
-    """Uniform zone source for the scan: the attr manifest when present
-    (legacy form), else a validated sidecar reader, else None."""
-    stats = load_stats(meta)
-    if stats is not None:
-        return ("dict", stats)
+def open_zones(meta: ZarrArrayMeta, store_root: str) -> SidecarZones | None:
+    """The variable's zone source for a scan: a reader over its validated
+    sidecar, or None when it has no zone map."""
     info = sidecar_info(meta)
-    if info is not None:
-        return ("side", SidecarZones(store_root, meta.name, info))
-    return None
+    return None if info is None else SidecarZones(store_root, meta.name, info)
 
 
-def zone_keep(zone_src, coords: tuple[int, ...], op: str, lit: Any, fill: Any,
-              float_kind: bool) -> bool:
-    """Shared keep/prune decision over either zone-source form."""
-    if zone_src is None:
+def zone_keep(zones: SidecarZones | None, coords: tuple[int, ...], op: str, lit: Any,
+              fill: Any, float_kind: bool) -> bool:
+    """Keep/prune decision for one chunk; an UNKNOWN zone never prunes."""
+    if zones is None:
         return True
-    kind, src = zone_src
-    if kind == "dict":
-        key = _coords_key(coords)
-        if key not in src:
-            # absent from the manifest = UNKNOWN (e.g. a chunk created by a
-            # later resize) — never prune on unknown
-            return True
-        zone = src[key]
-    else:
-        known, zone = src.lookup_coords(coords)
-        if not known:
-            return True
-    return chunk_compatible(zone, op, lit, fill, float_kind=float_kind)
+    known, zone = zones.lookup_coords(coords)
+    return not known or chunk_compatible(zone, op, lit, fill, float_kind=float_kind)
 
 
-def build_sidecar_stats(
-    spark: SparkSession, root: str, var: str, chunks_per_task: int = 8
-) -> dict:
+def build_sidecar_stats(spark: SparkSession, root: str, var: str) -> dict:
     """Build the sidecar manifest fully distributed and publish the marker.
 
     Stage 1 (map): decode each chunk once, emit (id, vmin, vmax) — one tiny
     row per CHUNK, never per cell. Stage 2 (reduce): shuffle those rows by
     sidecar-chunk id; each task assembles and writes whole sidecar chunks.
     The driver sees only the final row-count (build-completeness check) —
-    no per-chunk collect at any size, no attr-size cap."""
+    no per-chunk collect at any size. Returns the marker
+    {grid, chunk, nchunks}."""
     from pyspark.sql import functions as F
 
     store = ZarrStore.open(root)
@@ -446,7 +375,7 @@ def build_sidecar_stats(
     root_path, version = store.root, store.version
 
     par = max(1, spark.sparkContext.defaultParallelism)
-    n_parts = min(max(1, math.ceil(n / max(1, chunks_per_task))), 64 * par)
+    n_parts = min(max(1, math.ceil(n / _BUILD_CHUNKS_PER_TASK)), 64 * par)
 
     def stat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ts = ZarrStore(root_path, version)
@@ -503,14 +432,14 @@ def zone_keeper(
 ) -> Callable[[tuple[int, ...]], bool] | None:
     """callable(chunk_coords) -> keep?, for the value predicates
     ``[(op, lit)]`` — the comparisons, "in" (tuple literal), "isnull" /
-    "notnull" — over the array's zone stats (attr manifest or sidecar);
-    None when there is nothing to prune with. Cheap to build and picklable,
-    so it is built wherever it runs: the driver for enumeration, each task
-    for the streamed skip."""
+    "notnull" — over the array's sidecar zone stats; None when there is
+    nothing to prune with. Cheap to build and picklable, so it is built
+    wherever it runs: the driver for enumeration, each task for the
+    streamed skip."""
     if not value_filters:
         return None
-    zone_src = open_zones(meta, store_root)
-    if zone_src is None:
+    zones = open_zones(meta, store_root)
+    if zones is None:
         return None
     try:
         fill = meta.fill_scalar()
@@ -525,12 +454,12 @@ def zone_keeper(
                 # a chunk survives if ANY member could live in its zone;
                 # big lists skip the per-member walk (keep — sound)
                 if len(lit) <= 64 and not any(
-                    zone_keep(zone_src, coords, "==", v, fill, float_kind) for v in lit
+                    zone_keep(zones, coords, "==", v, fill, float_kind) for v in lit
                 ):
                     return False
             elif op in ("isnull", "notnull"):
                 continue  # zones track [min,max], not NaN presence
-            elif not zone_keep(zone_src, coords, op, lit, fill, float_kind):
+            elif not zone_keep(zones, coords, op, lit, fill, float_kind):
                 return False
         return True
 
@@ -556,7 +485,7 @@ def pruning_report(
 ) -> dict:
     """Observability: how much would the zone map prune for this predicate?
     Returns {"planned": range-pruned chunk count, "kept": zone-compatible
-    count, "pruned": the difference, "source": "attr"|"sidecar"|None} —
+    count, "pruned": the difference, "source": "sidecar"|None} —
     the number a 100-TB operator wants BEFORE paying for a scan. Driver
     enumeration for grids ≤ MAX_DRIVER_ENUM; a distributed judge pass
     beyond (requires ``spark``; one tiny row per chunk, nothing decoded)."""
@@ -568,10 +497,9 @@ def pruning_report(
     keep = zone_keeper(meta, store.root, [value_filter])
     if keep is None or n == 0:
         return {"planned": n, "kept": n, "pruned": 0, "source": None}
-    source = "attr" if load_stats(meta) is not None else "sidecar"
     ids = driver_survivors(per_dim, keep)
     if ids is not None:
-        return {"planned": n, "kept": len(ids), "pruned": n - len(ids), "source": source}
+        return {"planned": n, "kept": len(ids), "pruned": n - len(ids), "source": "sidecar"}
     if spark is None:
         raise ValueError(
             f"{n} chunks exceeds the driver enumeration cap; pass a "
@@ -593,77 +521,18 @@ def pruning_report(
         .collect()[0][0]
         or 0
     )
-    return {"planned": n, "kept": kept, "pruned": n - kept, "source": source}
-
-
-def apply_zone_updates(root: str, var: str, zones: dict[str, list | None]) -> None:
-    """Fold fresh zones for TOUCHED chunks into the sidecar (write-coherence
-    RMW; zones keyed 'c0,c1,...'). Safe from concurrent tasks as long as
-    each sidecar chunk's ids come from one caller — the writer paths group
-    by sidecar-chunk id to guarantee that; the driver-side writers are
-    single-writer by contract. No-op when no valid sidecar exists."""
-    store = ZarrStore.open(root)
-    info = sidecar_info(store.array_meta(var))
-    if info is not None and zones:
-        _fold_sidecar(store.root, var, info, zones)
-
-
-def _fold_sidecar(store_root: str, var: str, info: dict, zones: dict) -> None:
-    """``apply_zone_updates`` once the sidecar marker ``info`` is known."""
-    grid = tuple(int(g) for g in info["grid"])
-    sc = int(info.get("chunk", SIDECAR_CHUNK))
-    st = ZarrStore.open(_sidecar_root(store_root, var))
-    mmin, mmax = st.array_meta("vmin"), st.array_meta("vmax")
-    by_sid: dict[int, list] = {}
-    for key, z in zones.items():
-        coords = tuple(int(c) for c in key.split(","))
-        linear = 0
-        for g, c in zip(grid, coords):
-            linear = linear * g + c
-        sid, off = divmod(linear, sc)
-        by_sid.setdefault(sid, []).append((off, z))
-    for sid, entries in sorted(by_sid.items()):
-        bmin = st.decode_chunk(mmin, (sid,))
-        bmax = st.decode_chunk(mmax, (sid,))
-        if bmin is None or bmax is None:
-            bmin = np.full(sc, np.inf)
-            bmax = np.full(sc, -np.inf)
-        else:
-            bmin, bmax = bmin.copy(), bmax.copy()
-        for off, z in entries:
-            if z == "unknown":
-                # explicit UNKNOWN sentinel (e.g. a grow exposed new cells
-                # in this chunk): never prune until stats are recomputed
-                bmin[off], bmax[off] = np.inf, -np.inf
-            elif z is None:
-                bmin[off] = bmax[off] = np.nan
-            else:
-                bmin[off], bmax[off] = float(z[0]), float(z[1])
-        st.write_chunk(mmin, (sid,), bmin)
-        st.write_chunk(mmax, (sid,), bmax)
+    return {"planned": n, "kept": kept, "pruned": n - kept, "source": "sidecar"}
 
 
 def aggregate_from_manifest(
-    meta: ZarrArrayMeta, root: str | None = None
+    meta: ZarrArrayMeta, root: str
 ) -> tuple[int, float, float] | None:
-    """Answer (count, min, max) of a FULLY-WRITTEN array from its manifest
+    """Answer (count, min, max) of a FULLY-WRITTEN array from its sidecar
     alone — zero chunk reads (the stats-only aggregate every warehouse
-    pulls from footer metadata). Tries the attr manifest, then (given
-    ``root``) the sidecar: streamed vectorized min/max over the sidecar
-    chunks, O(n_chunks/SIDECAR_CHUNK) reads. Returns None when the manifest
-    is absent, stale, incomplete, or any chunk is fill-only/unknown (fill
-    values — often NaN — need real decode semantics)."""
-    stats = load_stats(meta)
-    if stats is not None:
-        if len(stats) != meta.nchunks():
-            return None
-        zones = list(stats.values())
-        if any(z is None for z in zones):
-            return None
-        count = int(np.prod(meta.shape))
-        return count, min(z[0] for z in zones), max(z[1] for z in zones)
-    if root is None:
-        return None
+    pulls from footer metadata): streamed vectorized min/max over the
+    sidecar chunks, O(n_chunks/SIDECAR_CHUNK) reads. Returns None when the
+    sidecar is absent, stale, incomplete, or any chunk is fill-only/unknown
+    (fill values — often NaN — need real decode semantics)."""
     info = sidecar_info(meta)
     if info is None or int(info["nchunks"]) != meta.nchunks():
         return None

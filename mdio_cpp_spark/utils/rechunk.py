@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession
 from mdio_cpp_spark.sources.reader import scan_array
 from mdio_cpp_spark.sources.writer import write_array
 from mdio_cpp_spark.sources.zarr_store import ZarrStore
+from mdio_cpp_spark.sources.zonemap import without_zones
 
 
 def rechunk_array(
@@ -38,8 +39,9 @@ def rechunk_array(
 ) -> dict[str, Any]:
     """Copy ``src_root/var`` into ``dst_root/dst_var`` with ``new_chunks``.
 
-    Destination keeps the source's shape, dtype, dims, attrs, and fill;
-    the compressor may be swapped (rechunk + recompress in one pass).
+    Destination keeps the source's shape, dtype, dims, attrs (less the
+    zone-map marker: the sidecar stays with the source), and fill; the
+    compressor may be swapped (rechunk + recompress in one pass).
     Returns the write report {chunks_written, cells_written}.
     """
     src = ZarrStore.open(src_root)
@@ -65,7 +67,7 @@ def rechunk_array(
             chunks=tuple(int(c) for c in new_chunks),
             dtype=dtype,
             dims=meta.dims,
-            attrs=dict(meta.attrs),
+            attrs=without_zones(meta.attrs),
             compressor=compressor if compressor is not None else meta.compressor,
             fill=meta.fill,
         )

@@ -42,14 +42,13 @@ def grow_dataset(path: str, **new_sizes: int) -> dict:
                     )
                 new_shape[d] = ns
         # Zone-map coherence: a grow that stays WITHIN an existing partial
-        # boundary chunk leaves the chunk grid unchanged, so neither the
-        # attr manifest nor the sidecar's grid fingerprint invalidates —
-        # but the boundary chunk's zone was computed over the OLD valid
-        # extent, and the newly-exposed cells decode as FILL (the writer
-        # pads blocks with fill). A stale-narrow zone could then wrongly
-        # prune a `== fill` scan. Mark every chunk that gains cells as
-        # UNKNOWN (attr: drop the key; sidecar: inf/-inf sentinel) BEFORE
-        # publishing the new shape.
+        # boundary chunk leaves the chunk grid unchanged, so the sidecar's
+        # grid fingerprint does not invalidate — but the boundary chunk's
+        # zone was computed over the OLD valid extent, and the newly-exposed
+        # cells decode as FILL (the writer pads blocks with fill). A
+        # stale-narrow zone could then wrongly prune a `== fill` scan. Mark
+        # every chunk that gains cells as UNKNOWN BEFORE publishing the new
+        # shape.
         _invalidate_boundary_zones(store, name, meta, new_shape)
         if store.version == 2:
             zarray = store._read_json(f"{name}/.zarray")
@@ -67,9 +66,11 @@ def grow_dataset(path: str, **new_sizes: int) -> dict:
 def _invalidate_boundary_zones(store, name, meta, new_shape) -> None:
     import itertools
 
+    import numpy as np
+
     from mdio_cpp_spark.sources import zonemap
 
-    if zonemap.zone_form(meta) is None:
+    if not zonemap.is_zoned(meta):
         return
     grown = [
         d for d in range(meta.ndim)
@@ -83,6 +84,5 @@ def _invalidate_boundary_zones(store, name, meta, new_shape) -> None:
         b = meta.shape[d] // meta.chunks[d]
         ranges = [range(grid[k]) if k != d else (b,) for k in range(meta.ndim)]
         affected.update(itertools.product(*ranges))
-    # grow_dataset consolidates once, after every array's new shape
     zonemap.fold_zones(store, {name: {
-        ",".join(str(c) for c in coords): "unknown" for coords in affected}})
+        int(np.ravel_multi_index(coords, grid)): "unknown" for coords in affected}})

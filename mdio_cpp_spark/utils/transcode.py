@@ -24,6 +24,10 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from mdio_cpp_spark.sources.zarr_store import ZarrArrayMeta, ZarrStore
+from mdio_cpp_spark.sources.zonemap import without_zones
+
+# source chunks one transcode task copies
+_CHUNKS_PER_TASK = 8
 
 
 def _block_is_fill(block: np.ndarray, fill) -> bool:
@@ -50,16 +54,14 @@ def _prepare_existing_destination(
     want_shard_of,
 ) -> ZarrArrayMeta:
     """Validate a PRE-EXISTING destination array against the requested
-    layout and strip its zone-map metadata.
+    layout and strip its zone-map marker.
 
-    A silently-reused destination was the round-7 advice's medium finding:
-    the caller's layout was ignored, and chunk stats written by a prior
-    population would go stale (write_chunk bypasses zone-map maintenance)
-    and could wrongly prune later scans. Mismatched layouts now raise;
-    matching ones get their zone manifest/sidecar marker dropped (rebuild
-    with zonemap.ensure_chunk_stats after the migration if wanted)."""
-    from mdio_cpp_spark.sources.zonemap import SIDECAR_ATTR, STATS_KEY
-
+    A silently-reused destination ignored the caller's layout, and chunk
+    stats written by a prior population would go stale (write_chunk
+    bypasses zone-map maintenance) and could wrongly prune later scans.
+    Mismatched layouts raise; matching ones get their zone-map marker
+    dropped (rebuild with zonemap.ensure_chunk_stats after the migration if
+    wanted)."""
     dmeta = dst.array_meta(var)
     if tuple(dmeta.shape) != tuple(want_shape):
         raise ValueError(
@@ -85,11 +87,9 @@ def _prepare_existing_destination(
     elif dmeta.shard is not None:
         raise ValueError(f"destination {var!r} exists SHARDED; transcode "
                          f"writes a plain chunk grid")
-    if STATS_KEY in dmeta.attrs or SIDECAR_ATTR in dmeta.attrs:
-        dst.update_array_attrs(var, {
-            k: v for k, v in dmeta.attrs.items()
-            if k not in (STATS_KEY, SIDECAR_ATTR)
-        })
+    attrs = without_zones(dmeta.attrs)
+    if attrs != dmeta.attrs:
+        dst.update_array_attrs(var, attrs)
         dmeta = dst.array_meta(var)
     return dmeta
 
@@ -100,12 +100,12 @@ def transcode_array(
     dst_root: str,
     var: str,
     compressor: dict | None,
-    chunks_per_task: int = 8,
 ) -> dict:
     """Copy ``var`` from ``src_root`` into ``dst_root`` re-encoded with
     ``compressor`` (v2 compressor JSON; None = raw). The destination store
     is created if absent; the array is declared with the source's shape /
-    chunks / dtype / dims / fill / attrs. Returns
+    chunks / dtype / dims / fill / attrs, less the zone-map marker (the
+    sidecar stays with the source). Returns
     {chunks_total, chunks_copied} — the difference is fill-only chunks
     that cost nothing on either side."""
     src = ZarrStore.open(src_root)
@@ -117,7 +117,7 @@ def transcode_array(
     if var not in dst.arrays():
         dst.create_array(
             var, shape=meta.shape, chunks=meta.chunks, dtype=meta.np_dtype,
-            dims=meta.dims, attrs=dict(meta.attrs), compressor=compressor,
+            dims=meta.dims, attrs=without_zones(meta.attrs), compressor=compressor,
             fill=meta.fill,
         )
         dst.consolidate()
@@ -150,7 +150,7 @@ def transcode_array(
             yield pd.DataFrame({"n": [len(pdf)], "copied": [copied]})
 
     par = max(1, spark.sparkContext.defaultParallelism)
-    n_parts = min(max(1, math.ceil(n / max(1, chunks_per_task))), 64 * par)
+    n_parts = min(max(1, math.ceil(n / _CHUNKS_PER_TASK)), 64 * par)
     row = (
         spark.range(n, numPartitions=n_parts)
         .mapInPandas(copy, "n long, copied long")
@@ -186,15 +186,13 @@ def reshard_array(
     shards are elided entirely (the destination synthesizes fill), and
     all-fill INNER chunks inside a written shard cost index-only bytes
     (MISSING entries), so sparsity survives the migration. The source
-    zone maps (attr manifest AND sidecar marker) are dropped — they index
-    the OLD chunk grid; rebuild with zonemap.ensure_chunk_stats if pruning
-    is wanted on the new grid.
+    zone-map marker is dropped — the sidecar indexes the OLD chunk grid;
+    rebuild with zonemap.ensure_chunk_stats if pruning is wanted on the
+    new grid.
 
     ``inner_chunks`` defaults to the source chunk shape (so existing read
     patterns keep their granularity); ``shards`` must be an element-wise
     multiple of it. Returns {shards_total, shards_written}."""
-    from mdio_cpp_spark.sources.zonemap import SIDECAR_ATTR, STATS_KEY
-
     src = ZarrStore.open(src_root)
     meta = src.array_meta(var)
     inner = tuple(int(x) for x in (inner_chunks or meta.chunks))
@@ -204,12 +202,9 @@ def reshard_array(
     except FileNotFoundError:
         dst = ZarrStore.create(dst_root, version=3, attrs=dict(src.attrs))
     if var not in dst.arrays():
-        # both zone forms index the OLD chunk grid — neither survives
-        attrs = {k: v for k, v in meta.attrs.items()
-                 if k not in (STATS_KEY, SIDECAR_ATTR)}
         dst.create_array(
             var, shape=meta.shape, chunks=inner, shards=shards,
-            dtype=meta.np_dtype, dims=meta.dims, attrs=attrs,
+            dtype=meta.np_dtype, dims=meta.dims, attrs=without_zones(meta.attrs),
             compressor=compressor, fill=meta.fill,
         )
         dmeta = dst.array_meta(var)  # dmeta.chunks == shard shape

@@ -134,7 +134,8 @@ def test_datasource_write_roundtrip(spark, tmp_path):
 
 
 def test_datasource_write_updates_manifest(spark, tmp_path):
-    """DSv2 writes fold fresh zones into a published manifest at commit."""
+    """DSv2 writes fold fresh zones into the sidecar at commit, and
+    republish no metadata."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -148,7 +149,9 @@ def test_datasource_write_updates_manifest(spark, tmp_path):
     st.create_array("v", shape=(400,), chunks=(100,), dtype="float64", dims=("i",), fill=0.0)
     st.consolidate()
     st.write_array_numpy("v", np.arange(400.0))
-    zonemap.publish_chunk_stats(root, "v", zonemap.compute_chunk_stats(spark, root, "v"))
+    zonemap.build_sidecar_stats(spark, root, "v")
+    with open(f"{root}/.zmetadata") as f:
+        published = f.read()
 
     df = spark.range(200, 300).select(F.col("id").alias("i"), F.lit(99999.0).alias("value"))
     (
@@ -156,9 +159,11 @@ def test_datasource_write_updates_manifest(spark, tmp_path):
         .write.format("mdio").option("path", root).option("variable", "v")
         .mode("append").save()
     )
-    stats = zonemap.load_stats(ZarrStore.open(root).array_meta("v"))
-    assert stats["2"] == [99999.0, 99999.0]
-    assert stats["0"] == [0.0, 99.0]
+    zones = zonemap.open_zones(ZarrStore.open(root).array_meta("v"), root)
+    assert zones.lookup_linear(2) == (True, [99999.0, 99999.0])
+    assert zones.lookup_linear(0) == (True, [0.0, 99.0])
+    with open(f"{root}/.zmetadata") as f:
+        assert f.read() == published
 
 
 def test_datasource_stream_write(spark, tmp_path):

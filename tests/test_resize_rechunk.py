@@ -122,3 +122,24 @@ def test_rechunk_scan_prunes_on_new_grid(spark):
     df = scan_array(spark, dst, "v", ranges={"i": (25, 35)})
     got = sorted(r["value"] for r in df.collect())
     assert got == [float(x) for x in range(25, 35)]
+
+
+def test_rechunk_same_grid_shape_leaves_zone_map_behind(spark):
+    """Rechunking (64,) from 8-cell to 9-cell chunks keeps an 8-chunk grid,
+    so a copied zone-map marker would still validate against it while the
+    sidecar stays with the source: the write job raised FileNotFoundError.
+    The destination is created unzoned and scans correctly."""
+    from mdio_cpp_spark.sources import zonemap
+
+    src = _fresh("rck5_src")
+    st = _make_1d(src, n=64, chunk=8)
+    st.consolidate()
+    zonemap.build_sidecar_stats(spark, src, "v")
+    dst = _fresh("rck5_dst")
+    report = rechunk_array(spark, src, "v", dst, (9,))
+    assert report == {"chunks_written": 8, "cells_written": 64}
+    meta = ZarrStore.open(dst).array_meta("v")
+    assert meta.grid_shape() == (8,) and not zonemap.is_zoned(meta)
+    np.testing.assert_array_equal(ZarrStore.open(dst).read_array("v"), np.arange(64.0))
+    got = scan_array(spark, dst, "v", value_filter=(">=", 60.0)).collect()
+    assert sorted(r["i"] for r in got) == [60, 61, 62, 63]

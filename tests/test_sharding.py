@@ -523,9 +523,7 @@ def test_reshard_migration_v2_to_sharded_v3(tmp_path, spark):
     vals[20:40, 0:20] = 0.0  # a quarter of the array is pure fill
     st.write_array_numpy("v", vals)
     zonemap.ensure_chunk_stats(spark, src, "v")
-    src_attrs = ZarrStore.open(src).array_meta("v").attrs
-    assert (zonemap.STATS_KEY in src_attrs
-            or zonemap.SIDECAR_ATTR in src_attrs)
+    assert zonemap.is_zoned(ZarrStore.open(src).array_meta("v"))
 
     dst = str(tmp_path / "sharded.zarr")
     report = reshard_array(
@@ -538,9 +536,8 @@ def test_reshard_migration_v2_to_sharded_v3(tmp_path, spark):
     dm = d.array_meta("v")
     assert dm.shard is not None and dm.chunks == (20, 20)
     assert dm.shard["chunk_shape"] == (5, 5)
-    # old-grid zone maps dropped (both the attr manifest and the sidecar
-    # marker index the 8x8 source grid, meaningless on the 2x2 shard grid)
-    assert zonemap.STATS_KEY not in dm.attrs
+    # old-grid zone map dropped (the sidecar indexes the 8x8 source grid,
+    # meaningless on the 2x2 shard grid)
     assert zonemap.SIDECAR_ATTR not in dm.attrs
     assert np.array_equal(d.read_array("v"), vals)
     assert np.array_equal(specr.read_zarr_array(dst, "v"), vals)
@@ -654,8 +651,7 @@ def test_reshard_existing_destination_validated_and_cleaned(tmp_path, spark):
 
     # (b) zone stats built on the destination between migrations go stale
     zonemap.ensure_chunk_stats(spark, dst, "v")
-    dm = ZarrStore.open(dst).array_meta("v")
-    assert zonemap.STATS_KEY in dm.attrs or zonemap.SIDECAR_ATTR in dm.attrs
+    assert zonemap.is_zoned(ZarrStore.open(dst).array_meta("v"))
 
     # source changes: second half becomes pure fill
     st.write_array_numpy("v", np.zeros(16, dtype="f8"), origin=(16,))
@@ -663,7 +659,6 @@ def test_reshard_existing_destination_validated_and_cleaned(tmp_path, spark):
     assert r2 == {"shards_total": 2, "shards_written": 1}
     d = ZarrStore.open(dst)
     dm = d.array_meta("v")
-    assert zonemap.STATS_KEY not in dm.attrs
     assert zonemap.SIDECAR_ATTR not in dm.attrs
     # (c) the stale second-shard object is gone, not shadowing fill
     assert d.read_bytes(dm.chunk_key((1,))) is None

@@ -1,6 +1,7 @@
 """The zip-directory rule ``session._stamp_zip_directories`` installs in
 Spark Python workers: ``zipimporter.invalidate_caches`` re-reads an
-archive's directory only when the archive's stamp changed, so the
+archive's directory only when the archive's stamp changed, and once per
+archive however many importers share it, so the
 ``importlib.invalidate_caches()`` each task and planner call makes stops
 re-reading ``pyspark.zip``. Installed on CPython < 3.13 in workers only."""
 
@@ -61,18 +62,21 @@ SCRIPT = textwrap.dedent(r'''
 
     zipimport._read_directory = counted
     top = sys.path_importer_cache[archive]
+    sharing = [f for f in sys.path_importer_cache.values()
+               if isinstance(f, zipimport.zipimporter) and f.archive == archive]
+    assert len(sharing) == 2, sharing  # the archive's and its package's
     for _ in range(5):
         top.invalidate_caches()
-    assert reads.count(archive) <= 1, reads
-    importlib.invalidate_caches()
-    first = reads.count(archive)
+    assert reads.count(archive) == 1, reads
+    importlib.invalidate_caches()  # the package's importer takes that read
+    assert reads.count(archive) == 1, reads
     for _ in range(5):
         importlib.invalidate_caches()
-    assert reads.count(archive) == first, reads
+    assert reads.count(archive) == 1, reads
 
     build(["one", "two"])
     importlib.invalidate_caches()
-    assert reads.count(archive) > first, "a rewritten archive was not re-read"
+    assert reads.count(archive) == 2, "a rewritten archive is re-read once"
     import zpkg.two
     assert zpkg.two.NAME == "two"
 

@@ -2,7 +2,8 @@
 writer (``write_arrays``) and the DSv2 writer (``format("mdio")``) all
 rewrite a chunk through ``ZarrStore.rewrite_chunk`` and fold zone stats
 through ``zonemap.fold_zones``. So the same cells written through any of
-them leave the same chunk bytes and the same zones."""
+them leave the same chunk bytes and the same zones, and none of them
+republishes metadata."""
 
 from __future__ import annotations
 
@@ -14,8 +15,9 @@ import pytest
 
 from mdio_cpp_spark.sources import zonemap
 from mdio_cpp_spark.sources.datasource import register, repartition_by_chunks
+from mdio_cpp_spark.sources.kvstore import LocalKVStore
 from mdio_cpp_spark.sources.writer import write_array
-from mdio_cpp_spark.sources.zarr_store import CHUNK_STATS_ATTR, ZarrStore, zone_of
+from mdio_cpp_spark.sources.zarr_store import ZarrStore, zone_of
 from tests.spec_zarr_reader import read_zarr_array
 
 WRITERS = ("driver", "write_arrays", "dsv2")
@@ -94,23 +96,20 @@ def test_dsv2_rejects_a_row_outside_the_domain(spark, tmp_path):
     assert np.array_equal(ZarrStore.open(root).read_array("v"), mirror)
 
 
-def _zones(root: str, form: str) -> dict:
-    """The variable's zones, keyed like the attribute manifest."""
+def _zones(root: str) -> dict:
+    """The variable's sidecar zones, keyed by chunk coordinates."""
     meta = ZarrStore.open(root).array_meta("v")
-    if form == "attr":
-        return zonemap.load_stats(meta)
-    side = zonemap.SidecarZones(ZarrStore.open(root).root, "v", zonemap.sidecar_info(meta))
-    grid = meta.grid_shape()
-    return {",".join(str(c) for c in np.unravel_index(k, grid)): side.lookup_linear(k)
+    side = zonemap.open_zones(meta, root)
+    return {tuple(int(c) for c in np.unravel_index(k, meta.grid_shape())): side.lookup_linear(k)
             for k in range(meta.nchunks())}
 
 
-@pytest.mark.parametrize("form", ["attr", "sidecar"])
+@pytest.mark.parametrize("form", ["sidecar", "unzoned"])
 def test_three_writers_leave_identical_chunks_and_zones(spark, tmp_path, form):
     """The same cells written through the three writers into three
-    identical stores leave byte-identical chunk objects and identical
-    zones. The write covers partial chunks, edge chunks and the three
-    chunks of a chunk row that was absent before it."""
+    identical stores leave byte-identical chunk objects and, with a zone
+    map, identical zones. The write covers partial chunks, edge chunks and
+    the three chunks of a chunk row that was absent before it."""
     rng = np.random.default_rng(7)
     origin = (2, 3)
     block = rng.standard_normal((8, 11))  # rows 2..9, cols 3..13
@@ -118,59 +117,45 @@ def test_three_writers_leave_identical_chunks_and_zones(spark, tmp_path, form):
     for writer in WRITERS:
         root = str(tmp_path / f"{form}_{writer}.zarr")
         mirror = _store(root, data_rows=6)  # chunk row 2 absent
-        if form == "attr":
-            zonemap.publish_chunk_stats(root, "v", zonemap.compute_chunk_stats(spark, root, "v"))
-        else:
+        if form == "sidecar":
             zonemap.build_sidecar_stats(spark, root, "v")
         _write(spark, writer, root, origin, block)
         mirror[2:, 3:] = block
         assert np.array_equal(ZarrStore.open(root).read_array("v"), mirror), writer
-        results[writer] = (_chunk_objects(root), _zones(root, form))
+        results[writer] = (_chunk_objects(root), _zones(root) if form == "sidecar" else {})
 
     chunks, zones = results["driver"]
     assert len(chunks) == 9  # the write created the three absent chunks
     for writer in WRITERS[1:]:
         assert results[writer][0] == chunks, writer
         assert results[writer][1] == zones, writer
-    for key, z in zones.items():
-        i, j = (int(c) for c in key.split(","))
-        cell = mirror[4 * i: 4 * i + 4, 6 * j: 6 * j + 6]
-        want = zone_of(cell) if form == "attr" else (True, zone_of(cell))
-        assert z == want, key
+    assert len(zones) == (9 if form == "sidecar" else 0)
+    for (i, j), z in zones.items():
+        assert z == (True, zone_of(mirror[4 * i: 4 * i + 4, 6 * j: 6 * j + 6])), (i, j)
 
 
-def test_driver_patch_publishes_consolidated_metadata_once(tmp_path):
-    """A driver patch write to an array with an attribute manifest folds
-    the new zone into the attributes and republishes ``.zmetadata`` once
-    (it used to publish an incremental refresh and then a full one)."""
+def test_driver_patch_writes_chunk_and_sidecar_only(spark, tmp_path, monkeypatch):
+    """A driver patch write to a zoned array writes the chunk and the
+    sidecar chunks it folds into, and no metadata; without a zone map it
+    writes the chunk alone."""
     root = str(tmp_path / "publish.zarr")
-    mirror = _store(root)
-    st = ZarrStore.open(root)
-    grid = st.array_meta("v").grid_shape()
-    manifest = {}
-    for i, j in np.ndindex(*grid):
-        manifest[f"{i},{j}"] = zone_of(mirror[4 * i: 4 * i + 4, 6 * j: 6 * j + 6])
-    st.update_array_attrs("v", {**st.array_meta("v").attrs, CHUNK_STATS_ATTR: manifest},
-                          reconsolidate=True)
-
+    _store(root)
+    zonemap.build_sidecar_stats(spark, root, "v")
     writes: list[str] = []
-    write = st._kv.write
+    write = LocalKVStore.write
 
-    def counted(key, data):
-        writes.append(key)
-        return write(key, data)
+    def counted(self, key, data):
+        writes.append(os.path.relpath(self._path(key), root))
+        return write(self, key, data)
 
-    st._kv.write = counted
+    monkeypatch.setattr(LocalKVStore, "write", counted)
+    st = ZarrStore.open(root)
     st.write_array_numpy("v", np.full((2, 2), 99.0), origin=(1, 1))  # chunk (0, 0)
-    assert writes.count(".zmetadata") == 1
-    assert sorted(writes) == [".zmetadata", "v/.zattrs", "v/0.0"]
-    published = json.loads(st._kv.read(".zmetadata"))["metadata"]["v/.zattrs"]
-    assert published[CHUNK_STATS_ATTR]["0,0"] == [1.0, 99.0]
-    assert ZarrStore.open(root).array_meta("v").attrs[CHUNK_STATS_ATTR] == \
-        published[CHUNK_STATS_ATTR]
+    assert sorted(writes) == [".zonemap/v/vmax/0", ".zonemap/v/vmin/0", "v/0.0"]
+    assert _zones(root)[0, 0] == (True, [1.0, 99.0])
 
-    st.update_array_attrs("v", {}, reconsolidate=True)  # without a zone map
-    writes.clear()  # a patch write writes no metadata at all
+    st.update_array_attrs("v", {})  # without a zone map
+    writes.clear()
     st.write_array_numpy("v", np.full((2, 2), 5.0), origin=(1, 1))
     assert writes == ["v/0.0"]
 
@@ -182,10 +167,10 @@ def _generation(root: str) -> int:
 
 @pytest.mark.parametrize("writer", WRITERS)
 def test_writers_publish_metadata_only_when_it_changed(spark, tmp_path, writer):
-    """A chunk-only write leaves the consolidated document as it was (the
-    Spark writers used to republish it after every write, with a full LIST
-    and GET walk); a write that folds zones into an attribute manifest
-    publishes it exactly once."""
+    """A write changes no metadata, so it leaves the consolidated document
+    as it was (the Spark writers used to republish it after every write,
+    with a full LIST and GET walk), also when it folds zones into a
+    sidecar."""
     root = str(tmp_path / f"gen_{writer}.zarr")
     mirror = _store(root)
     block = np.full((2, 3), -3.0)
@@ -193,37 +178,37 @@ def test_writers_publish_metadata_only_when_it_changed(spark, tmp_path, writer):
     _write(spark, writer, root, (1, 2), block)
     assert _generation(root) == gen
 
-    zonemap.publish_chunk_stats(root, "v", zonemap.compute_chunk_stats(spark, root, "v"))
+    zonemap.build_sidecar_stats(spark, root, "v")
     gen = _generation(root)
+    with open(os.path.join(root, "v", ".zattrs")) as f:
+        attrs = f.read()
     _write(spark, writer, root, (5, 7), block)
-    assert _generation(root) == gen + 1
+    assert _generation(root) == gen
+    with open(os.path.join(root, "v", ".zattrs")) as f:
+        assert f.read() == attrs
     mirror[1:3, 2:5] = mirror[5:7, 7:10] = block
-    meta = ZarrStore.open(root).array_meta("v")
-    assert zonemap.load_stats(meta)["1,1"] == zone_of(mirror[4:8, 6:12])
+    assert _zones(root)[1, 1] == (True, zone_of(mirror[4:8, 6:12]))
     assert np.array_equal(ZarrStore.open(root).read_array("v"), mirror)
 
 
-def test_fold_zones_unknown_drops_attr_key_and_marks_sidecar(spark, tmp_path):
-    """``"unknown"`` removes a chunk from an attribute manifest and stores
-    the never-prune sentinel in a sidecar; a store without a zone map
-    takes nothing and asks for no consolidation."""
-    attr, side, plain = (str(tmp_path / f"{n}.zarr") for n in ("attr", "side", "plain"))
-    for root in (attr, side, plain):
+def test_fold_zones_unknown_marks_sidecar(spark, tmp_path):
+    """``fold_zones`` takes zones keyed by linear chunk id: ``"unknown"``
+    stores the never-prune sentinel, None a fill-only chunk, a pair its
+    zone; a store without a zone map takes nothing."""
+    side, plain = (str(tmp_path / f"{n}.zarr") for n in ("side", "plain"))
+    for root in (side, plain):
         _store(root)
-    zonemap.publish_chunk_stats(attr, "v", zonemap.compute_chunk_stats(spark, attr, "v"))
     zonemap.build_sidecar_stats(spark, side, "v")
-    fold = {"v": {"0,1": "unknown", "1,1": None, "2,2": [1.0, 2.0]}}
+    before = _zones(side)
+    fold = {"v": {1: "unknown", 4: None, 8: [1.0, 2.0]}}  # chunks (0,1) (1,1) (2,2)
 
-    st = ZarrStore.open(attr)
-    assert zonemap.fold_zones(st, fold) is True
-    st.consolidate()
-    stats = zonemap.load_stats(ZarrStore.open(attr).array_meta("v"))
-    assert "0,1" not in stats and stats["1,1"] is None and stats["2,2"] == [1.0, 2.0]
+    assert zonemap.fold_zones(ZarrStore.open(side), fold) is None
+    zones = _zones(side)
+    assert zones[0, 1] == (False, None)
+    assert zones[1, 1] == (True, None) and zones[2, 2] == (True, [1.0, 2.0])
+    assert {k: z for k, z in zones.items() if k not in ((0, 1), (1, 1), (2, 2))} == \
+        {k: z for k, z in before.items() if k not in ((0, 1), (1, 1), (2, 2))}
 
-    assert zonemap.fold_zones(ZarrStore.open(side), fold) is False
-    zones = _zones(side, "sidecar")
-    assert zones["0,1"] == (False, None)
-    assert zones["1,1"] == (True, None) and zones["2,2"] == (True, [1.0, 2.0])
-
-    assert zonemap.fold_zones(ZarrStore.open(plain), fold) is False
-    assert zonemap.zone_form(ZarrStore.open(plain).array_meta("v")) is None
+    zonemap.fold_zones(ZarrStore.open(plain), fold)
+    assert not zonemap.is_zoned(ZarrStore.open(plain).array_meta("v"))
+    assert not os.path.exists(os.path.join(plain, ".zonemap"))

@@ -518,7 +518,7 @@ def test_write_outside_domain_raises_before_any_chunk():
     assert (st.read_array("a")[64:, 64:] == 0).all()
 
 
-def test_chunk_map_failure_semantics():
+def test_chunk_map_failure_semantics(spark):
     """A truncated zlib stream in one of a 16-chunk slice's chunks: the
     read raises the codec's own error; a write over it raises too; neither
     leaves a chunk job running when it returns (the chunk pool's threads
@@ -529,12 +529,8 @@ def test_chunk_map_failure_semantics():
     import time
     import zlib
 
-    from mdio_cpp_spark.sources.zarr_store import (
-        _POOL_THREADS,
-        _PREFETCH_DEPTH,
-        CHUNK_STATS_ATTR,
-        zone_of,
-    )
+    from mdio_cpp_spark.sources import zonemap
+    from mdio_cpp_spark.sources.zarr_store import _POOL_THREADS, _PREFETCH_DEPTH, zone_of
 
     root = _fresh("trunc")
     st = ZarrStore.create(root, version=2)
@@ -542,8 +538,7 @@ def test_chunk_map_failure_semantics():
                     compressor={"id": "zlib", "level": 5})
     vals = np.arange(160, dtype="f8")
     st.write_array_numpy("v", vals)
-    st.update_array_attrs("v", {**st.array_meta("v").attrs, CHUNK_STATS_ATTR: {
-        str(k): zone_of(vals[10 * k: 10 * k + 10]) for k in range(16)}})
+    zonemap.build_sidecar_stats(spark, root, "v")
     bad = 2
     path = os.path.join(root, "v", str(bad))
     with open(path, "rb") as f:
@@ -592,11 +587,11 @@ def test_chunk_map_failure_semantics():
         elif k >= bad + _PREFETCH_DEPTH:  # never submitted
             assert after[key] == before[key], k
     assert after[os.path.join("v", str(bad))] == before[os.path.join("v", str(bad))]
-    zones = ZarrStore.open(root).array_meta("v").attrs[CHUNK_STATS_ATTR]
+    zones = zonemap.open_zones(ZarrStore.open(root).array_meta("v"), root)
     for k in range(16):
         key = os.path.join("v", str(k))
         new = vals[10 * k: 10 * k + 10] + (1000.0 if after[key] != before[key] else 0.0)
-        assert zones[str(k)] == zone_of(new), k
+        assert zones.lookup_linear(k) == (True, zone_of(new)), k
 
 
 def test_fused_scan_bounds_blocks_in_flight():
@@ -1419,6 +1414,37 @@ def test_transcode_array_codec_migration(spark, tmp_path):
     assert np.array_equal(got, expect)
     raw = d.read_bytes(dm.chunk_key((0,)))
     assert _zlib.decompress(raw)  # plain zlib stream, not a blosc frame
+
+
+def test_transcode_into_new_store_leaves_zone_map_behind(spark, tmp_path):
+    """A transcoded array does not carry its source's zone-map marker into
+    the new store, whose sidecar was never copied: the destination reads
+    as unzoned, so a value-filtered scan, the metadata-only aggregate and a
+    driver write work on it (they raised FileNotFoundError on the missing
+    sidecar), and ``ensure_chunk_stats`` builds it a sidecar of its own."""
+    from mdio_cpp_spark.sources import zonemap
+    from mdio_cpp_spark.utils.transcode import transcode_array
+
+    src = str(tmp_path / "src.zarr")
+    st = ZarrStore.create(src, version=2)
+    st.create_array("v", shape=(64,), chunks=(8,), dtype="float64", dims=("i",),
+                    attrs={"units": "m"})
+    st.consolidate()
+    st.write_array_numpy("v", np.arange(64.0))
+    zonemap.build_sidecar_stats(spark, src, "v")
+
+    dst = str(tmp_path / "dst.zarr")
+    transcode_array(spark, src, dst, "v", {"id": "zlib", "level": 5})
+    got = scan_array(spark, dst, "v", value_filter=(">=", 60.0)).collect()
+    assert sorted(r["i"] for r in got) == [60, 61, 62, 63]
+    dm = ZarrStore.open(dst).array_meta("v")
+    assert zonemap.aggregate_from_manifest(dm, dst) is None
+    ZarrStore.open(dst).write_array_numpy("v", np.full(8, 100.0), origin=(8,))
+    assert not zonemap.is_zoned(dm) and dm.attrs["units"] == "m"
+
+    zonemap.ensure_chunk_stats(spark, dst, "v")
+    assert zonemap.aggregate_from_manifest(ZarrStore.open(dst).array_meta("v"), dst) \
+        == (64, 0.0, 100.0)
 
 
 def test_sel_distributed_translation_matches_driver(spark, tmp_path, monkeypatch):

@@ -1,9 +1,6 @@
-"""Sidecar zone-map manifest: the scale form of chunk [min,max] stats.
-
-The attr-resident manifest caps at 262,144 chunks and collects one row per
-chunk to the driver at build time; the sidecar form must (a) give the same
-pruning decisions, (b) build with NO per-chunk driver collect, (c) keep
-working PAST the old cap with executor-side pruning only, and (d) stay
+"""Sidecar zone map: chunk [min,max] stats in a private store next to the
+array. It must (a) build with NO per-chunk driver collect, (b) keep
+working at grid sizes where only executor-side pruning runs, and (c) stay
 write-coherent through every writer path. Pruning proofs use corrupted
 chunk bytes: if a pruned chunk were ever read, the scan would throw."""
 
@@ -25,22 +22,6 @@ def _mk_store(tmp_path, n=1000, chunk=100):
     vals = np.arange(n, dtype=np.float64)
     st.write_array_numpy("v", vals[: n - chunk])  # last chunk fill-only
     return root, vals
-
-
-def test_sidecar_matches_attr_stats(spark, tmp_path):
-    """The sidecar must encode exactly the zones the attr builder computes —
-    including fill-only chunks (NaN) and edge-chunk valid extents."""
-    root, _ = _mk_store(tmp_path)
-    attr_stats = zonemap.compute_chunk_stats(spark, root, "v")
-    info = zonemap.build_sidecar_stats(spark, root, "v")
-    assert info["nchunks"] == 10 and info["grid"] == [10]
-    meta = ZarrStore.open(root).array_meta("v")
-    assert zonemap.sidecar_info(meta) is not None
-    sz = zonemap.SidecarZones(ZarrStore.open(root).root, "v", info)
-    for k in range(10):
-        known, zone = sz.lookup_linear(k)
-        assert known
-        assert zone == attr_stats[str(k)]
 
 
 def test_sidecar_scan_equals_plain_scan(spark, tmp_path):
@@ -75,11 +56,11 @@ def test_sidecar_actually_prunes(spark, tmp_path):
 
 
 def test_sidecar_prunes_past_attr_cap_executor_side(spark, tmp_path):
-    """>262,144 chunks: the attr builder refuses outright; the sidecar must
-    build distributed and prune EXECUTOR-side (the grid is beyond
+    """>262,144 chunks (the cap of the old attribute manifest): the sidecar
+    must build distributed and prune EXECUTOR-side (the grid is beyond
     MAX_DRIVER_ENUM, so the driver never enumerates chunk ids). Corrupted
     incompatible chunks again prove the skip."""
-    n_chunks = 300_000  # > MAX_ATTR_CHUNKS (262,144) and > MAX_DRIVER_ENUM
+    n_chunks = 300_000  # > 262,144 and > MAX_DRIVER_ENUM
     chunk = 2
     root = str(tmp_path / "big.zarr")
     st = ZarrStore.create(root, version=2)
@@ -96,9 +77,6 @@ def test_sidecar_prunes_past_attr_cap_executor_side(spark, tmp_path):
     cold = [7, 70_000, 250_000]
     for k in cold:
         st.write_array_numpy("v", np.array([1.0, 2.0]), origin=(k * chunk,))
-
-    with pytest.raises(ValueError, match="attr-resident manifest cap"):
-        zonemap.compute_chunk_stats(spark, root, "v")
 
     info = zonemap.build_sidecar_stats(spark, root, "v")
     assert info["nchunks"] == n_chunks
@@ -240,25 +218,21 @@ def test_sidecar_survives_fresh_unwritten_chunks_unknown(spark, tmp_path):
     assert got == list(range(750, 900))
 
 
-@pytest.mark.parametrize("form", ["attr", "sidecar"])
-def test_grow_within_chunk_invalidates_boundary_zone(spark, tmp_path, form):
-    """A grow that stays inside the partial boundary chunk changes NEITHER
-    the grid nor the attr keys — but the new cells decode as fill, so the
-    boundary chunk's stale-narrow zone must be invalidated or a `== fill`
-    scan would wrongly prune the fresh rows."""
+def test_grow_within_chunk_invalidates_boundary_zone(spark, tmp_path):
+    """A grow that stays inside the partial boundary chunk does not change
+    the grid, so the sidecar marker stays valid — but the new cells decode
+    as fill, so the boundary chunk's stale-narrow zone must be invalidated
+    or a `== fill` scan would wrongly prune the fresh rows."""
     from mdio_cpp_spark.utils.resize import grow_dataset
 
-    root = str(tmp_path / f"grow_{form}.zarr")
+    root = str(tmp_path / "grow.zarr")
     st = ZarrStore.create(root, version=2)
     # shape 250, chunk 100 → chunk 2 is half-valid; fill = 0.0
     st.create_array("v", shape=(250,), chunks=(100,), dtype="float64",
                     dims=("i",), fill=0.0)
     st.consolidate()
     st.write_array_numpy("v", np.arange(1000.0, 1250.0))  # no zeros anywhere
-    if form == "attr":
-        zonemap.publish_chunk_stats(root, "v", zonemap.compute_chunk_stats(spark, root, "v"))
-    else:
-        zonemap.build_sidecar_stats(spark, root, "v")
+    zonemap.build_sidecar_stats(spark, root, "v")
 
     grow_dataset(root, i=290)  # still chunk 2: grid unchanged (3 chunks)
     meta = ZarrStore.open(root).array_meta("v")
@@ -383,8 +357,8 @@ def _mk_sharded(tmp_path, spark, fill=0.0, n=8000, written=5000):
 
 
 def test_sidecar_decode_pass_partial_reads_on_sharded_store(spark, tmp_path):
-    """Round-8 gate: the sidecar builder's per-chunk decode (_chunk_zone,
-    shared by BOTH manifest builders) stats-scans a SHARDED store through
+    """The sidecar builder's per-chunk decode (_chunk_zone) stats-scans a
+    SHARDED store through
     partial shard reads — one ranged index GET + one ranged GET per
     PRESENT inner chunk, ZERO whole-object reads — mirroring
     test_sharded_lz4_dsv2_pushdown_fetches_only_touched_ranges for the
