@@ -2,19 +2,12 @@
 xarray ``ffill(dim, limit)`` / ``bfill(dim, limit)`` re-expressed with NO
 global data window.
 
-Scale design (the zarr24 prefix-sum shape, applied to carries):
-
-  1. Rows bucket by ``index div bucket_size`` (for stored arrays the chunk
-     size is the natural bucket — chunk-local work stays chunk-local).
-  2. In-bucket carry: ``last(value, ignorenulls)`` (and the carried SOURCE
-     index, for the limit) over a window partitioned by bucket — thousands
-     of parallel partitions, never one.
-  3. Cross-bucket carry: each bucket's last non-null (value, index) — ONE
-     row per bucket — cumulates over a buckets-only window and joins back
-     broadcast. That window is global but sees |buckets| rows, bounded by
-     construction (the documented-bounded exception class).
-  4. fill = coalesce(in-bucket, previous-bucket) — masked to NULL when the
-     donor row is farther than ``limit`` positions away.
+Rows bucket by ``index div bucket_size`` (for stored arrays the chunk size
+is the natural bucket — chunk-local work stays chunk-local), and the donor
+— the last non-null (index, value) at or before each row — is
+``bucketed_prefix``'s running last non-null over (bucket, index). The fill
+is masked to NULL when the donor row is farther than ``limit`` positions
+away.
 
 ``direction='backward'`` (NOCB) mirrors the index axis (negation), reusing
 the identical machinery — the same trick as the forward as-of join.
@@ -22,8 +15,10 @@ the identical machinery — the same trick as the forward as-of join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mdio_cpp_spark.operators.prefix import bucketed_prefix
 
 __all__ = ["fill_gaps"]
 
@@ -63,36 +58,16 @@ def fill_gaps(
         F.col("__gx").alias("x"), F.col(value_col).alias("v")
     ))
     work = work.withColumn("__gsrc", src)
-
-    w_in = Window.partitionBy("__gb").orderBy("__gx").rowsBetween(
-        Window.unboundedPreceding, 0
+    out = bucketed_prefix(
+        work, "__gdonor", "last", buckets=["__gb"], order=["__gx"], value="__gsrc"
     )
-    carried = work.withColumn(
-        "__g_in", F.last("__gsrc", ignorenulls=True).over(w_in)
-    )
-
-    # one row per bucket: its last non-null (x, v); cumulated over strictly
-    # earlier buckets (|buckets| rows — bounded by construction)
-    b_last = work.groupBy("__gb").agg(F.max("__gsrc").alias("__g_last"))
-    w_b = Window.orderBy("__gb").rowsBetween(Window.unboundedPreceding, -1)
-    carry = b_last.select(
-        "__gb", F.last("__g_last", ignorenulls=True).over(w_b).alias("__g_prev")
-    )
-
-    donor = F.coalesce(F.col("__g_in"), F.col("__g_prev"))
+    donor = F.col("__gdonor")
     filled = donor.getField("v")
     if limit is not None:
         filled = F.when(
             F.col("__gx") - donor.getField("x") <= F.lit(int(limit)), donor.getField("v")
         )
-    # carry is one row per bucket — broadcast-sized for any store a single
-    # query touches, but NOT forced: at ~12M chunks (100 TB) AQE falls back
-    # to a shuffle join keyed on __gb, co-partitioned with the window above
-    out = (
-        carried.join(carry, "__gb", "left")
-        .withColumn("__g_fill", F.coalesce(F.col(value_col), filled))
-    )
     return out.select(
         *[F.col(c) for c in keep_cols if c != out_col],
-        F.col("__g_fill").alias(out_col),
+        F.coalesce(F.col(value_col), filled).alias(out_col),
     )

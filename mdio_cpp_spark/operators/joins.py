@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mdio_cpp_spark.operators.prefix import bucketed_prefix
+
 
 def dim_align_join(
     fact: DataFrame,
@@ -73,22 +75,15 @@ def asof_join(
     NULL values. All carried values come from the SAME right row (they are
     carried as one struct, never per-column).
 
-    Scale design — no single-partition window, even keyless:
-
-      1. Tag and union both sides; assign each row a coarse time bucket
-         ``floor(ts / bucket_seconds)``.
-      2. In-bucket carry: window partitioned by (keys, bucket) — thousands
-         of parallel partitions instead of one. Right rows order before left
-         rows at equal timestamps (inclusive match).
-      3. Cross-bucket carry: the latest right struct per (keys, bucket) —
-         a tiny aggregate, |buckets| rows — is cumulated over a
-         buckets-only window (rowsBetween up to -1 → strictly earlier
-         buckets) and joined back on (keys, bucket). That window sees one
-         row per bucket, so even the keyless case is trivially small.
-      4. Result = coalesce(in-bucket carry, previous-bucket carry).
+    Scale design — no data-sized single-partition window, even keyless:
+    tag and union both sides, assign each row a coarse time bucket
+    ``floor(ts / bucket_seconds)``, and carry the right struct with
+    ``bucketed_prefix``'s running last non-null per key over (bucket, ts).
+    Right rows order before left rows at equal timestamps (inclusive
+    match); the value struct itself breaks ties between right rows.
 
     Cost: one full shuffle of left ∪ right on (keys, bucket) + one tiny
-    boundary shuffle — the distributed as-of at its minimum data movement.
+    carry shuffle — the distributed as-of at its minimum data movement.
     """
     keys = list(partition_keys)
     lcols = [c for c in left.columns]
@@ -119,40 +114,10 @@ def asof_join(
         .withColumn("__us", us)
         .withColumn("__b", F.floor(F.col("__us") / F.lit(bucket_seconds * 1_000_000)))
     )
-
-    # 2. in-bucket carry (parallel across buckets; deterministic tie-break on
-    #    the value struct itself for equal (ts, side))
-    w_in = (
-        Window.partitionBy(*keys, "__b")
-        .orderBy(F.col("__us").asc(), F.col("__side").asc(), F.col("__rv").asc_nulls_first())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carried = u.select(
-        *lcols, "__side", "__b",
-        F.last("__rv", ignorenulls=True).over(w_in).alias("__rv_in"),
-    )
-
-    # 3. boundary table: latest right struct per bucket, cumulated across
-    #    strictly-earlier buckets (|buckets| rows — tiny by construction)
-    buckets = u.select(*keys, "__b").distinct()
-    b_last = (
-        u.filter(F.col("__side") == 0)
-        .groupBy(*keys, "__b")
-        .agg(F.max_by("__rv", F.struct(F.col("__us"), F.col("__rv"))).alias("__rv_last"))
-    )
-    w_b = Window.partitionBy(*keys).orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        buckets.join(b_last, on=keys + ["__b"], how="left")
-        .select(*keys, "__b", F.last("__rv_last", ignorenulls=True).over(w_b).alias("__rv_prev"))
-    )
-
-    # 4. merge; the big side is already hash-partitioned by (keys, __b) from
-    #    the window, so AQE reuses the exchange; carry side is tiny
-    out = (
-        carried.filter(F.col("__side") == 1)
-        .join(carry, on=keys + ["__b"], how="left")
-        .withColumn("__rv_final", F.coalesce(F.col("__rv_in"), F.col("__rv_prev")))
-    )
+    out = bucketed_prefix(
+        u, "__rv_final", "last", buckets=["__b"], order=["__us", "__side", "__rv"],
+        keys=keys, value="__rv",
+    ).filter(F.col("__side") == 1)
     if how == "inner":
         out = out.filter(F.col("__rv_final").isNotNull())
     elif how != "left":

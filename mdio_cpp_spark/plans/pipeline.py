@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from mdio_cpp_spark.catalog import table
 from mdio_cpp_spark.functions import hashing, text, vectors
 from mdio_cpp_spark.operators import dedup, similarity
+from mdio_cpp_spark.operators.prefix import bucketed_prefix
 from mdio_cpp_spark.sources import multimodal
 from mdio_cpp_spark.plans.base import declared
 from mdio_cpp_spark.session import local_frame, tune
@@ -2329,27 +2330,18 @@ def p11(spark: SparkSession, sf_dir: str) -> DataFrame:
     order every data loader needs — order by md5(seed‖id) (engine-portable,
     seed swaps give independent epochs) and assign contiguous positions
     WITHOUT a global row_number window: rows bucket by the hash's first hex
-    digit (16 parallel in-bucket rank windows), bucket sizes cumulate into
-    broadcast offsets (a 16-row driver-free table), position = offset +
-    in-bucket rank. Scale shape: one hash-keyed exchange for the windows +
-    one tiny broadcast — never a single-partition stage over the corpus."""
-    from pyspark.sql import Window
-
+    digit and the position is ``bucketed_prefix``'s running count (16
+    parallel in-bucket windows, a 16-row carry table). Scale shape: one
+    hash-keyed exchange for the windows + one tiny carry join — never a
+    single-partition stage over the corpus."""
     d = _t(spark, sf_dir, "documents").select("doc_id")
     keyed = d.select(
         "doc_id",
         F.md5(F.concat(F.lit(_EPOCH_SEED), F.col("doc_id").cast("string"))).alias("__k"),
     ).withColumn("__b", F.substring("__k", 1, 1))
-    w_in = Window.partitionBy("__b").orderBy("__k", "doc_id")
-    ranked = keyed.withColumn("__r", F.row_number().over(w_in))
-    sizes = keyed.groupBy("__b").agg(F.count(F.lit(1)).alias("__n"))
-    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sizes.select(
-        "__b", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off")
-    )
     return (
-        ranked.join(F.broadcast(offs), "__b")
-        .select((F.col("__off") + F.col("__r") - 1).alias("pos"), "doc_id")
+        bucketed_prefix(keyed, "pos", "count", buckets=["__b"], order=["__k", "doc_id"])
+        .select((F.col("pos") - 1).alias("pos"), "doc_id")
         .orderBy("pos")
     )
 
@@ -3620,11 +3612,10 @@ def p14(spark: SparkSession, sf_dir: str) -> DataFrame:
     random-but-reproducible order. Quartile cuts come from the exact
     distributed percentile operator (p06's machinery, one constant group);
     banding is a broadcast of three literals; positions use the bucketed
-    rank pattern — (band, first hex digit) in-bucket windows plus
-    cumulative broadcast offsets — NO global row_number window anywhere.
-    At 100 TB: two passes over scores (cheap map-side arithmetic), one
-    hash-keyed exchange for the rank windows, 64 offset rows."""
-    from pyspark.sql import Window
+    rank pattern — ``bucketed_prefix`` over (band, first hex digit) —
+    NO global row_number window anywhere. At 100 TB: two passes over
+    scores (cheap map-side arithmetic), one hash-keyed exchange for the
+    rank windows, 64 carry rows."""
     from mdio_cpp_spark.operators import stats as _stats
 
     d = dedup.ensure_map_parallelism(_t(spark, sf_dir, "documents"))
@@ -3650,16 +3641,11 @@ def p14(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("__b", F.substring("__k", 1, 1))
     ).persist()  # the rank window AND the bucket-size agg both read this
-    w_in = Window.partitionBy("band", "__b").orderBy("__k", "doc_id")
-    ranked = keyed.withColumn("__r", F.row_number().over(w_in))
-    sizes = keyed.groupBy("band", "__b").agg(F.count(F.lit(1)).alias("__n"))
-    w_off = Window.orderBy("band", "__b").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sizes.select(
-        "band", "__b", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off")
-    )
     return (
-        ranked.join(F.broadcast(offs), ["band", "__b"])
-        .select((F.col("__off") + F.col("__r") - 1).alias("pos"), "doc_id", "band", "score")
+        bucketed_prefix(
+            keyed, "pos", "count", buckets=["band", "__b"], order=["__k", "doc_id"]
+        )
+        .select((F.col("pos") - 1).alias("pos"), "doc_id", "band", "score")
         .orderBy("pos")
     )
 
@@ -4214,32 +4200,18 @@ def mm09(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign documents, in stable doc_id order, to fixed-capacity shards by
     the cumulative payload size BEFORE each doc — byte-offset sharding,
     not count sharding, so shards stay IO-balanced when document sizes are
-    wildly skewed. The running sum is the zarr24 two-level prefix shape:
+    wildly skewed. The running sum is ``bucketed_prefix`` over
     deterministic doc_id range buckets whose WIDTH scales with the corpus
-    (≤4096 buckets at any size — the offset cumulation stays a
-    constant-bounded window), per-bucket totals cumulate into broadcast
-    offsets, and the data-sized window partitions on the bucket — no
+    (≤4096 buckets at any size, so the carry table stays bounded) — no
     global window over data, exact integers end-to-end. Output is the
     shard manifest a downstream packer executes (mm02/mm05 consume
     payloads per shard); only metadata ever shuffles."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    from pyspark.sql import Window
-
     width = max(1, -(-d.count() // 4096))
     tagged = d.withColumn("__pid", F.expr(f"doc_id div {width}"))
-    sizes = tagged.groupBy("__pid").agg(F.sum("n_chars").alias("__n"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sizes.select(
-        "__pid", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off")
-    )
-    w_in = Window.partitionBy("__pid").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    a = (
-        tagged.join(F.broadcast(offs), "__pid")
-        .withColumn("cum", F.sum("n_chars").over(w_in) + F.col("__off"))
-        .withColumn("shard", F.expr(f"(cum - n_chars) div {_SHARD_CHARS}"))
-    )
+    a = bucketed_prefix(
+        tagged, "cum", "sum", buckets=["__pid"], order=["doc_id"], value="n_chars"
+    ).withColumn("shard", F.expr(f"(cum - n_chars) div {_SHARD_CHARS}"))
     return (
         a.groupBy("shard")
         .agg(
@@ -5262,11 +5234,10 @@ def p18(spark: SparkSession, sf_dir: str) -> DataFrame:
     the report carries total tokens, retained tokens (tail tokens past the
     last full block always survive), dropped-block count, and the dropped
     fraction. Scale shape: blocks shuffle as (doc_id, 32-char hash) pairs
-    only; the shared set is an aggregate on the SAME bh key, so the
-    back-join is co-partitioned (exchange reuse, no extra shuffle); a
-    left-semi keeps per-occurrence rows without materializing widths. At
-    100 TB ubiquitous boilerplate hashes are exactly the keys AQE's
-    skew-join splits. Exact integer token accounting; one rounded ratio."""
+    only; a block is shared iff min(doc_id) != max(doc_id) over a window
+    partitioned by its hash (one exchange, no back-join), and the per-doc
+    dropped counts left-join the report. At 100 TB ubiquitous boilerplate
+    hashes are the window's hot partitions. Exact integer token accounting; one rounded ratio."""
     d = dedup.ensure_map_parallelism(_t(spark, sf_dir, "documents"))
     # ONE tokenize pass: the plan consumes the corpus three times (shared-set
     # aggregate, per-doc dropped count, final per-doc report) and this
@@ -5592,9 +5563,9 @@ def d17(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, span_start, span_end, span_tokens).
 
     Scale shape: the shuffle carries (hash, doc_id, pos) triples — window
-    TEXT never leaves the map side; the repeated-hash set is an aggregate
-    on the SAME key as the back-join (exchange reuse, no second shuffle);
-    islands partition by doc_id (high cardinality). Ubiquitous boilerplate
+    TEXT never leaves the map side; repeated hashes are found by a count
+    window partitioned by the hash (one exchange, no back-join); islands
+    partition by doc_id (high cardinality). Ubiquitous boilerplate
     hashes are skewed keys — exactly what AQE skew-join splits. W=5 and
     md5 are shared literals with the oracle; exact integer output."""
     d = dedup.ensure_map_parallelism(_t(spark, sf_dir, "documents"))
@@ -6282,11 +6253,13 @@ def p20(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight are the resampled picks (the paper adds Gumbel noise — this is
     the deterministic top-k variant so the oracle agrees bit-for-bit).
 
-    Scale shape: TWO passes over the hashed feature stream and nothing
-    data-sized anywhere else — pass 1 is one map-side-combined groupBy
-    producing the 256-row bucket table (target and raw counts as ONE
-    conditional aggregate, not two scans), pass 2 joins the BROADCAST
-    256-row log-ratio table back onto the features and reduces per doc.
+    Scale shape: the corpus is tokenised ONCE into a persisted hashed
+    feature stream (doc_id, lang, bucket); two reads of that cache do the
+    rest and nothing data-sized happens anywhere else — the first is one
+    map-side-combined groupBy producing the 256-row bucket table (target
+    and raw counts as ONE conditional aggregate), the second joins the
+    BROADCAST 256-row log-ratio table back onto the features and reduces
+    per doc.
     The final top-K is a TakeOrdered, never a global sort. At 100 TB the
     shuffle carries (bucket) partials and (doc_id, weight) rows only;
     document bodies stay where the scan put them."""

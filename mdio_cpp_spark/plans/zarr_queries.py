@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from mdio_cpp_spark.catalog import table
 from mdio_cpp_spark.model import MdioDataset
+from mdio_cpp_spark.operators.prefix import bucketed_prefix
 from mdio_cpp_spark.plans.base import declared
 from mdio_cpp_spark.session import local_frame, tune
 from mdio_cpp_spark.sources import zonemap
@@ -39,7 +40,7 @@ from mdio_cpp_spark.sources.zarr_store import ZarrStore
 from mdio_cpp_spark.utils.trim import trim_dataset
 
 CACHE_ROOT = "/root/repo/.zarr_cache"
-BUILD_TAG = "v6"  # bump to invalidate cached stores after builder changes
+BUILD_TAG = "v7"  # bump to invalidate cached stores after builder changes
 CHUNK = 2048
 GRID_C = 64       # grid2d column count; rows adapt to sf (cap 128)
 CUBE_IL, CUBE_XL, CUBE_T = 8, 8, 16   # 3-D cube dims (zarr90/91); 8 chunk boxes of 4x4x8
@@ -56,22 +57,15 @@ def _base(sf_dir: str) -> str:
 
 def _zip_index(df: DataFrame, sort_keys: list[str], bucket_expr, out_col: str) -> DataFrame:
     """Global dense 0-based index ordered by ``sort_keys`` with NO
-    single-partition window — the DataFrame form of zipWithIndex.
+    data-sized global window — the DataFrame form of zipWithIndex.
 
-    ONE light job + a lazy plan: (1) approx-quantile boundaries of
+    ONE light job + a lazy plan: approx-quantile boundaries of
     ``bucket_expr`` (a numeric expression order-consistent with the sort
-    keys) — collected once, baked into the plan as literals, so the
-    partition assignment is deterministic across the later jobs with no
-    persist; (2) per-bucket counts cumulate IN-PLAN over the ≤nparts-row
-    count table (bounded by cluster parallelism, never by data — the
-    constant partition key makes that boundedness explicit) and broadcast
-    back; (3) row_number over a PARTITIONED window + the broadcast offset
-    join. Until round 12 step (2) was a driver ``collect()`` — a full
-    stop-the-world job per call, paid per run by zarr09/zarr35/zarr49/a16;
-    folding it into the plan removes the barrier and one job while keeping
-    the arithmetic identical (offset of bucket p = Σ counts of buckets
-    < p). Every stage is parallel, so this survives the 100× scale-up that
-    a global ``Window.orderBy`` (single-partition WindowExec) would not."""
+    keys) are collected once and baked into the plan as literals, so the
+    bucket assignment is deterministic across the later jobs with no
+    persist; the index is then ``bucketed_prefix``'s running count over
+    (bucket, sort keys), minus one — the bucket offsets cumulate in-plan
+    over the ≤nparts-row bucket table, never on the driver."""
     spark = df.sparkSession
     nparts = max(1, spark.sparkContext.defaultParallelism)
     tagged = df.withColumn("__k", bucket_expr.cast("double"))
@@ -83,20 +77,10 @@ def _zip_index(df: DataFrame, sort_keys: list[str], bucket_expr, out_col: str) -
     for b in bounds:
         pid = pid + (F.col("__k") > F.lit(float(b))).cast("int")
     tagged = tagged.withColumn("__pid", pid)
-    cnt = tagged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    woff = (
-        Window.partitionBy(F.lit(0)).orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off_df = cnt.select(
-        "__pid",
-        F.coalesce(F.sum("__n").over(woff), F.lit(0)).cast("long").alias("__off"),
-    )
-    w = Window.partitionBy("__pid").orderBy(*sort_keys)
     return (
-        tagged.join(F.broadcast(off_df), "__pid")
-        .withColumn(out_col, (F.row_number().over(w) - 1 + F.col("__off")).cast("long"))
-        .drop("__k", "__pid", "__off")
+        bucketed_prefix(tagged, out_col, "count", buckets=["__pid"], order=sort_keys)
+        .withColumn(out_col, F.col(out_col) - 1)
+        .drop("__k", "__pid")
     )
 
 
@@ -544,13 +528,13 @@ def zarr09(spark: SparkSession, sf_dir: str) -> DataFrame:
     ds = MdioDataset.open(store)
     li = table(spark, sf_dir, "lineitem")
     # take-ordered limit (parallel partial sort) BEFORE numbering; the index
-    # itself comes from _zip_index — partitioned windows only, no WindowExec
-    # single-partition warning anywhere in the build
+    # itself comes from _zip_index — no data-sized global window in the build
     sub = (
         li.select("l_orderkey", "l_linenumber", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber")
         .limit(10000)
-        .persist()  # _zip_index runs three actions over this frame; without
+        .persist()  # _zip_index reads this frame three times (its
+        # approxQuantile action plus two lazy reads in the write); without
         # the cache each one re-executes the global take-ordered
     )
     # l_linenumber is 1..7, so okey*10+line is order-consistent and unique
@@ -948,32 +932,18 @@ def zarr23(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def zarr24(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running aggregate over a stored array with NO data-sized global
-    window: the array's chunk grid is the natural prefix-sum bucketing.
-    Per-chunk sums stay a DataFrame — the cross-chunk offsets cumulate in a
-    window over that ONE-ROW-PER-CHUNK carry table (zarr55's gap-fill
-    allowance: bounded by the chunk count, never by the data; nothing is
-    ever driver-resident, unlike a collect-and-rebroadcast which holds
-    n_chunks scalars on the driver — ~12M at 100 TB), and the running sum
-    is a chunk-PARTITIONED window plus its joined bucket offset — the
-    offset join keys on the chunk id, so AQE broadcasts it while it fits
-    and shuffle-joins beyond that. (Rounding is safe: sums of 2-decimal
-    prices have 2 exact decimals, and both offset folds accumulate in the
-    same chunk order, so fp drift never crosses a rounding boundary.)"""
+    window: the array's chunk grid is the natural prefix-sum bucketing, so
+    the running sum is ``bucketed_prefix`` over the chunk id — nothing is
+    driver-resident, unlike a collect-and-rebroadcast of n_chunks offsets
+    (~12M at 100 TB). (Rounding is safe: sums of 2-decimal prices have 2
+    exact decimals, and both offset folds accumulate in the same chunk
+    order, so fp drift never crosses a rounding boundary.)"""
     ds = MdioDataset.open(_main_store(spark, sf_dir))
     scan = ds.isel(i=(0, 8192)).to_df(spark, "price", value_col="v")
-    bucket = (F.col("i") / F.lit(CHUNK)).cast("long")
-    tagged = scan.withColumn("__b", bucket)
-    wg = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    off_df = (
-        tagged.groupBy("__b")
-        .agg(F.sum("v").alias("__s"))
-        .select("__b", F.coalesce(F.sum("__s").over(wg), F.lit(0.0)).alias("__off"))
-    )
-    w = Window.partitionBy("__b").orderBy("i")
+    tagged = scan.withColumn("__b", (F.col("i") / F.lit(CHUNK)).cast("long"))
     return (
-        tagged.join(off_df, "__b")
-        .withColumn("run_sum", F.round(F.sum("v").over(w) + F.col("__off"), 2))
-        .select("i", "run_sum")
+        bucketed_prefix(tagged, "run_sum", "sum", buckets=["__b"], order=["i"], value="v")
+        .select("i", F.round("run_sum", 2).alias("run_sum"))
         .orderBy("i")
     )
 
@@ -2549,28 +2519,13 @@ def zarr58(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def zarr59(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running MAX over a stored array (xarray ``cummax``) — zarr24's
-    prefix shape with max as the monoid: per-chunk maxima stay a DataFrame
-    and their prefix maxima cumulate in a window over the one-row-per-chunk
-    carry table (the zarr55 allowance — bounded by chunk count, nothing
-    driver-resident); the running max is a chunk-PARTITIONED window
-    combined with its bucket's joined prefix — every stage parallel, exact
-    (max has no accumulation-order drift at all)."""
+    chunk-bucketed ``bucketed_prefix`` with max as the monoid; exact (max
+    has no accumulation-order drift at all)."""
     ds = MdioDataset.open(_main_store(spark, sf_dir))
     scan = ds.isel(i=(0, 8192)).to_df(spark, "price", value_col="v")
     tagged = scan.withColumn("__b", (F.col("i") / F.lit(CHUNK)).cast("long"))
-    wg = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    off_df = (
-        tagged.groupBy("__b")
-        .agg(F.max("v").alias("__m"))
-        .select("__b", F.max("__m").over(wg).alias("__pmax"))
-    )
-    w = Window.partitionBy("__b").orderBy("i")
     return (
-        tagged.join(off_df, "__b")
-        .withColumn(
-            "run_max",
-            F.greatest(F.max("v").over(w), F.coalesce("__pmax", F.col("v"))),
-        )
+        bucketed_prefix(tagged, "run_max", "max", buckets=["__b"], order=["i"], value="v")
         .select("i", "run_max")
         .orderBy("i")
     )

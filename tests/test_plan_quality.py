@@ -10,105 +10,111 @@ bracket separators. A partitioned window with NO ordering (e.g. an
 unbounded ``SUM OVER (PARTITION BY k)``) also prints two brackets, but
 its trailing spec holds partition exprs, not ``ASC``/``DESC`` sort
 orders — that shape is hash-partitioned and fine.
+
+Every global window of every query is judged on its own. It is bounded
+by shape when
+
+1. its only output is ``operators.prefix.CARRY``: the carry of
+   ``bucketed_prefix``, whose input is one row per bucket; or
+2. going down through Sort, ``Exchange SinglePartition`` and Project
+   reaches a ``TakeOrderedAndProject``: the limit bounds its input.
+
+Any other global window needs a ``_BOUNDED_WINDOWS`` entry naming its
+query, its order columns and why its input is small; an entry that
+matches no window fails. A window over an aggregate keyed on its own
+order column is deliberately not accepted by shape: a per-user aggregate
+followed by a global rank has exactly that shape and is data-sized.
 """
 
 from __future__ import annotations
 
-import pytest
+import re
 
+import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from mdio_cpp_spark.operators.prefix import CARRY, bucketed_prefix
 from mdio_cpp_spark.plans import REGISTRY
 
-# documented-bounded global windows (tiny-by-construction inputs):
-#  - asof01/02/05: the keyless as-of boundary table — |time buckets| rows —
-#    is cumulated globally by design (operators/joins.py step 3); the BIG
-#    window partitions on the bucket (asof05 runs the machinery twice:
-#    backward + forward).
-#  - zarr09: row_number over a ≤10,000-row take-ordered sample (documented
-#    in plans/zarr_queries.py).
-#  - zarr55/zarr57: the gap-fill cross-chunk carry — ONE row per chunk
-#    (operators/gapfill.py, zarr24's prefix-sum shape) — cumulates
-#    globally; the BIG window partitions on the chunk id.
-#  - p11: the epoch-shuffle bucket-offset cumulation — EXACTLY 16 rows
-#    (one per hex digit); the corpus-sized rank windows partition on the
-#    bucket.
-#  - t16/ev07: the rank window runs AFTER an ORDER BY + LIMIT
-#    (TakeOrdered) — input is ≤500 (t16) / ≤10 (ev07) rows by
-#    construction (plans/pipeline.py t16, plans/analytics.py ev07).
-#  - zarr73: the island rank runs over the SPARSE threshold-hit set
-#    (pushdown + zone maps already dropped non-matching cells; |hits| ≪
-#    |cells| by the query's nature — dense hits would take zarr24's
-#    chunk-bucketed two-level rank instead, per the docstring).
-#  - p14: the curriculum bucket-offset cumulation — ≤ 4 bands × 16 hex
-#    digits = 64 rows (p11's offset idiom, two-level key); the
-#    corpus-sized rank windows partition on (band, bucket).
-#  - zarr86: the CDF cumulation over the 64-bin HISTOGRAM — constant-size
-#    by construction; the data-sized remap is a broadcast join.
-#  - mm09: the shard-offset cumulation over per-bucket totals — bucket
-#    width scales with the corpus so the window input is ≤4096 rows at
-#    any size; the data-sized running sum partitions on the bucket.
-#  - s10: the rank runs AFTER TakeOrdered(16) — t16/ev07's bounded shape.
-#  - t26/v16: the rk assignment runs AFTER ORDER BY + LIMIT
-#    (TakeOrdered 15 / 10 rows; v16's two input lists are themselves
-#    ≤50-row TakeOrdered results) — t16/ev07's bounded shape
-#    (plans/pipeline.py _bm25_ranked, v16).
-#  - ev19: the at-risk prefix and the KM log-product cumulate over the
-#    |durations|-row lifetime grid — bounded by the observation window in
-#    hours, never by users or events (plans/analytics.py ev19 docstring).
-#  - ml15: the PR sweep's suffix sums cumulate over the (6dp-score)
-#    COUNT lattice — bounded by the score range, never corpus rows
-#    (plans/pipeline.py ml15 docstring; ml12's lattice discipline).
-#  - ml14: the split-candidate prefix sums cumulate over the feature
-#    VALUE LATTICE (≤ |distinct quantity| ≈ 50 rows by construction —
-#    plans/analytics.py ml14 docstring); no data-sized window exists.
-#  - w15: the rolling frame runs over the |days|-row per-day aggregate —
-#    the asof-boundary allowance (|time buckets|, not data); a multi-
-#    series variant partitions per series pair (docstring).
-#  - zarr24/zarr59: the cross-chunk prefix offsets — ONE row per chunk —
-#    cumulate globally (the zarr55 carry shape, previously a driver
-#    collect); the data-sized running window partitions on the chunk id.
-#  - a16: _zip_index's bucket-offset cumulation — ONE row per quantile
-#    bucket (≤ cluster parallelism, never data; round 12 folded the old
-#    per-call driver collect into the plan); the data-sized rank window
-#    partitions on the bucket id.
-_ALLOW_GLOBAL = {
-    "a16_gini",
-    "asof01_event_order", "asof02_left", "asof05_nearest", "zarr09_write_roundtrip",
-    "zarr24_prefix_sum", "zarr59_cummax",
-    "zarr55_ffill", "zarr57_bfill_limit", "p11_epoch_shuffle",
-    "t16_zipf_slope", "ev07_top_paths", "zarr73_threshold_runs",
-    "p14_curriculum", "zarr86_hist_equalize", "mm09_shard_plan",
-    "s10_priority_sample", "w15_rolling_corr",
-    "t26_bm25", "v16_hybrid_rrf", "ev19_survival_km", "ml14_decision_stump",
-    "ml15_pr_curve",
+# (query, order columns) -> why that global window's input is bounded
+_BOUNDED_WINDOWS = {
+    ("ml14_decision_stump", ("x",)): "prefix sums over the ≤50-value feature lattice",
+    ("ml15_pr_curve", ("cc",)): "suffix sums over the 6dp-score count lattice",
+    ("ev19_survival_km", ("t",)): "KM cumulation over the |durations|-hour lifetime grid",
+    ("zarr86_hist_equalize", ("bin",)): "CDF cumulation over the 64-bin histogram",
+    ("w15_rolling_corr", ("day",)): "rolling frame over the |days|-row per-day aggregate",
+    ("zarr73_threshold_runs", ("i",)): "island rank over the sparse threshold-hit set",
+    ("asof05_nearest", ("__b",)): "asof_nearest_us's carry over one row per time bucket",
 }
 
+_PASS_THROUGH = ("Sort ", "Exchange SinglePartition", "Project ")
 
-def _global_window_lines(plan: str) -> list[str]:
-    bad = []
-    for line in plan.splitlines():
-        s = line.strip().lstrip("+-: ").strip()
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _judge(plan: str, entries: set[tuple[str, ...]]):
+    """(global windows neither bounded by shape nor in ``entries``,
+    entries that matched no window) for one executed-plan string."""
+    lines = [line.strip().lstrip("+-: ").strip() for line in plan.splitlines()]
+    bad, used = [], set()
+    for i, s in enumerate(lines):
         if not s.startswith("Window ") or s.count("], [") >= 2:
             continue
         tail = s.rsplit("], [", 1)[-1] if "], [" in s else ""
         # two-bracket form: global IFF the trailing spec is a sort order
         # (ASC/DESC); partition exprs there mean partitioned-unordered.
-        if " ASC" in tail or " DESC" in tail or "], [" not in s:
-            bad.append(line.strip())
-    return bad
+        if "], [" in s and " ASC" not in tail and " DESC" not in tail:
+            continue
+        if set(re.findall(r" AS (\w+)#\d+", s)) == {CARRY}:
+            continue
+        below = next((t for t in lines[i + 1:] if not t.startswith(_PASS_THROUGH)), "")
+        if below.startswith("TakeOrderedAndProject"):
+            continue
+        order = tuple(re.findall(r"([\w$.]+)#\d+L? (?:ASC|DESC)", tail))
+        if order in entries:
+            used.add(order)
+        else:
+            bad.append(s)
+    return bad, entries - used
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_global_window(name, spark, sf_dir):
-    df = REGISTRY[name].spark(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(REGISTRY[name].spark(spark, sf_dir))
     # a CartesianProduct (both sides data-sized, no key) is never acceptable
     # in a declared plan — broadcast nested loops over bounded sides print
     # as BroadcastNestedLoopJoin and are fine
     assert "CartesianProduct" not in plan, f"{name} plans a CartesianProduct"
-    bad = _global_window_lines(plan)
-    if name in _ALLOW_GLOBAL:
-        return  # bounded by construction; see module docstring
+    bad, stale = _judge(plan, {o for q, o in _BOUNDED_WINDOWS if q == name})
     assert not bad, f"{name} plans a global window:\n" + "\n".join(bad)
+    assert not stale, f"{name}: _BOUNDED_WINDOWS entries match no window: {stale}"
+
+
+def test_gate_rejects_data_sized_window_beside_a_carry(spark):
+    """A global rank over a per-key aggregate next to an operator carry:
+    the carry passes, the rank does not (a16's shape before _zip_index)."""
+    per_key = spark.range(1000).groupBy((F.col("id") % 97).alias("k")).count()
+    ranked = bucketed_prefix(
+        per_key.withColumn("b", F.col("k") % 4), "pos", "count", buckets=["b"], order=["k"]
+    ).withColumn("r", F.row_number().over(Window.orderBy("count", "k")))
+    plan = _plan(ranked)
+    assert CARRY in plan
+    bad, _ = _judge(plan, set())
+    assert len(bad) == 1 and "row_number()" in bad[0], bad
+
+
+def test_gate_accepts_window_over_take_ordered(spark):
+    top = spark.range(1000).orderBy(F.col("id").desc()).limit(10)
+    plan = _plan(top.withColumn("r", F.row_number().over(Window.orderBy(F.col("id").desc()))))
+    assert _judge(plan, set()) == ([], set())
+
+
+def test_gate_fails_an_entry_that_matches_nothing(spark):
+    plan = _plan(spark.range(10).withColumn("r", F.lit(1)))
+    assert _judge(plan, {("x",)}) == ([], {("x",)})
 
 
 # targeted physical-plan contracts: the property each plan exists to
@@ -144,20 +150,33 @@ _PLAN_CONTRACTS = {
     # zarr105: the trig basis must be the broadcast build side of the scan
     # fan-out — the scan never shuffles before the (row, k) reduce
     "zarr105_dft_spectrum": ["BroadcastHashJoin"],
+    # p20: the tokenised feature stream is persisted, so the corpus is
+    # featurised once and both consumers read the cache
+    "p20_dsir_resample": ["InMemoryTableScan"],
+}
+
+# shapes that must stay OUT of the executed plan
+_PLAN_ABSENT = {
+    # d17/p18: repeated hashes come from a window partitioned by the hash,
+    # not an aggregate plus a semi back-join over a second corpus pass
+    "d17_substring_spans": ["LeftSemi"],
+    "p18_boilerplate_strip": ["LeftSemi"],
 }
 
 
-@pytest.mark.parametrize("name", sorted(_PLAN_CONTRACTS))
+@pytest.mark.parametrize("name", sorted(set(_PLAN_CONTRACTS) | set(_PLAN_ABSENT)))
 def test_plan_contract(name, spark, sf_dir):
-    plan = REGISTRY[name].spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    for needle in _PLAN_CONTRACTS[name]:
+    plan = _plan(REGISTRY[name].spark(spark, sf_dir))
+    for needle in _PLAN_CONTRACTS.get(name, []):
         assert needle in plan, f"{name}: expected {needle!r} in the executed plan"
+    for needle in _PLAN_ABSENT.get(name, []):
+        assert needle not in plan, f"{name}: {needle!r} must not be in the executed plan"
 
 
 def test_zarr40_shift_roll_zero_shuffle(spark, sf_dir):
     """The shift/roll remap must stay shuffle-free: the ONLY exchange in
     the plan is the gate's output range-sort."""
-    plan = REGISTRY["zarr40_shift_roll"].spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(REGISTRY["zarr40_shift_roll"].spark(spark, sf_dir))
     exchanges = [l for l in plan.splitlines() if "Exchange" in l]
     # pre-execution AQE plans may elide the output-sort exchange entirely;
     # what must NEVER appear is a hash (data-shuffling) exchange

@@ -113,7 +113,7 @@ PICKS = {
     "segy01_ingest": "the cube scan plans only the isel box's chunks; aggregate is partial-then-final over the pruned scan — ingest (trace-index-parallel read + chunk-keyed write shuffle) happens once at build, never in the measured query",
     "t26_bm25": "tf is term-filtered BEFORE its exchange (the shuffled frame is ≤|terms|x|docs| integers); idf and corpus stats broadcast back; rank = TakeOrderedAndProject then a ≤15-row window — no corpus-sized single-partition stage",
     "v16_hybrid_rrf": "two independent top-50 lists (BM25 pipeline + broadcast-query cosine scan that never shuffles corpus vectors) meet in a full-outer join of two 50-row frames; everything after the lists is constant-size",
-    "d17_substring_spans": "window hashes are md5'd MAP-SIDE so the one exchange carries (hash, doc, pos) triples; the repeated-hash agg and the semi back-join share the hash key (exchange reuse); islands window partitions by doc_id",
+    "d17_substring_spans": "window hashes are md5'd MAP-SIDE so the one exchange carries (hash, doc, pos) triples; repeats come from an h-partitioned count window (no back-join); islands window partitions by doc_id",
     "u07_schema_evolution": "schema-evolution MERGE keeps u01's shape: the widened target NEVER shuffles (BroadcastHashJoin LeftOuter + broadcast semi/anti inserts); the added column is a NULL literal projection, not a join",
     "dq10_psi_drift": "one partial-aggregatable scan reduces to a |years|x|bins| frame; the baseline year is a 1-row broadcast; the six PSI terms are fixed-column expressions — nothing data-sized past the first agg",
     "segy06_rev2_le": "the rev2 little-endian file reads through the same trace-index-partitioned DSv2 scan (byte order is metadata resolved once from the header mark, not a plan change); per-inline rollup is partial-then-final",
@@ -122,7 +122,7 @@ PICKS = {
     "u08_deletion_vectors": "merge-on-read probe = BroadcastHashJoin LeftAnti on (file, pos) — the base table never exchanges; DV stats (cardinality + bitmap extent) come from the delete-side agg in the same frame",
     "d18_incremental_minhash": "delta band keys BROADCAST onto the base band table (BroadcastHashJoin, no base exchange, no base-vs-base pairs) — the incremental-ingest asymmetry d02 cannot express",
     "zarr115_resize_append": "grow is one metadata PUT; the append shuffles only appended rows chunk-keyed (boundary-chunk RMW); the scan-back plans fill synthesis for the virgin tail",
-    "p20_dsir_resample": "the hashed feature stream is scanned twice (bucket counts as ONE conditional agg, then scoring); the 256-row log-ratio model is built off spark.range and BROADCAST back — the doc-side join is BroadcastHashJoin, the top-K is TakeOrderedAndProject, no global sort, no text in any exchange",
+    "p20_dsir_resample": "the corpus is tokenised once into a persisted hashed feature stream, read twice (bucket counts as ONE conditional agg, then scoring); the 256-row log-ratio model is built off spark.range and BROADCAST back — the doc-side join is BroadcastHashJoin, the top-K is TakeOrderedAndProject, no global sort, no text in any exchange",
     "v18_jl_grid": "the 2x64 plane matrix is a plan literal — projection is codegen'd zip_with/aggregate column math; both aggs (cell-label, cell rollup) are map-side combined into the bounded grid; the majority-label window partitions by cell over the grid-sized frame, never the corpus",
     "p21_perplexity_buckets": "LM scoring reuses t17's skew-split joins; the band cuts come from a cumulative window over the per-(lang, 4dp-score) COUNT lattice (bounded by score range x 1e4, not docs) and band assignment is a broadcast join of the |langs|-row cut table",
     "ml11_embedding_cov": "each row expands its dim-squared upper-triangle products IN PLACE (higher-order transform — no self-join, no vector shuffle); partial agg collapses to <=2080 rows per map partition regardless of corpus size; the 64-row mean table broadcasts onto the sum frame",

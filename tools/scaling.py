@@ -52,7 +52,7 @@ PICKS = [
     ("zarr105_dft_spectrum", "integer-quantized DFT over stored traces"),
     ("d16_fuzzy_split_leakage", "cross-split LSH candidates + exact verify"),
     ("ga05_label_prop_step", "label-prop step: one groupBy(src) over mirrored edges"),
-    ("p18_boilerplate_strip", "block-hash strip: co-keyed agg + semi join, exchange reuse"),
+    ("p18_boilerplate_strip", "block-hash strip: min/max window over the block hash"),
     ("zarr112_sharded_lz4_pushdown", "sharded + compressed + DSv2 pushdown partial reads"),
     ("zarr114_reshard_struct", "struct reshard migration + SelectField pruned scan"),
     ("segy01_ingest", "SEG-Y trace-parallel ingest -> cube -> pruned isel box"),
@@ -67,7 +67,7 @@ PICKS = [
     ("d18_incremental_minhash", "delta-vs-base near-dup (delta bands broadcast)"),
     ("zarr115_resize_append", "metadata-only grow + boundary-chunk RMW append"),
     ("zarr116_multiscale", "overview routed to the stored pyramid level (4x fewer GETs)"),
-    ("p20_dsir_resample", "DSIR: two feature passes + 256-row broadcast log-ratio model"),
+    ("p20_dsir_resample", "DSIR: one cached feature pass + 256-row broadcast log-ratio model"),
     ("p21_perplexity_buckets", "CCNet bands: LM scoring join + value-lattice cum window"),
     ("t31_kneser_ney", "KN bigram LM: all model stats off the vocab-sized type table"),
     ("t30_c4_filters", "C4 rule audit: one scan, 8 counters per source"),
