@@ -31,6 +31,7 @@ Usage:
 from __future__ import annotations
 
 import itertools
+import math
 from dataclasses import dataclass
 from typing import Any, Iterator
 
@@ -60,9 +61,9 @@ from pyspark.sql.types import StructType
 
 from mdio_cpp_spark.sources import zonemap as _zonemap
 from mdio_cpp_spark.sources.reader import (
-    CHUNKS_PER_TASK,
     _dim_names,
     _picks,
+    chunk_bytes,
     chunk_coords,
     cluster_parallelism,
     decode_frames,
@@ -71,7 +72,7 @@ from mdio_cpp_spark.sources.reader import (
     grid_size,
     plan_grid,
     scan_schema,
-    task_count,
+    task_spans,
 )
 from mdio_cpp_spark.sources.zarr_store import ZarrStore, _clamped_box, chunk_zone
 
@@ -214,7 +215,7 @@ class MdioDataSource(DataSource):
 
     def streamReader(self, schema: StructType) -> "MdioStreamReader":
         store, meta = self._meta()
-        return MdioStreamReader(store.root, store.version, meta.name, self.options)
+        return MdioStreamReader(store.root, store.version, meta.name, self.options, self.parallelism)
 
 
 class MdioReader(DataSourceReader):
@@ -365,13 +366,10 @@ class MdioReader(DataSourceReader):
         starts = tuple(r.start if isinstance(r, range) else 0 for r in per_dim)
         lens = tuple(len(r) for r in per_dim)
         dim_chunks = tuple(tuple(r) for r in per_dim) if members else None
-        k = task_count(n, CHUNKS_PER_TASK, self.parallelism)
-        spans = [(i * n // k, (i + 1) * n // k) for i in range(k)]
-        if ids is not None:
-            return [MdioChunkPartition(0, 0, starts, lens, ids=ids[lo:hi], dim_chunks=dim_chunks)
-                    for lo, hi in spans]
-        return [MdioChunkPartition(lo, hi, starts, lens, dim_chunks=dim_chunks)
-                for lo, hi in spans]
+        return [
+            MdioChunkPartition(lo, hi, starts, lens, None if ids is None else ids[lo:hi], dim_chunks)
+            for lo, hi in task_spans(n, chunk_bytes(m for m, _ in self.outputs), self.parallelism)
+        ]
 
     def _zone_keeper(self):
         """callable(chunk_coords) -> keep?, from the pushed value filters and
@@ -640,7 +638,7 @@ class MdioStreamReader(DataSourceStreamReader):
     (utils/trim.h's inverse), rows land per-slab.
     """
 
-    def __init__(self, root: str, version: int, var: str, options):
+    def __init__(self, root: str, version: int, var: str, options, parallelism: int | None = None):
         self.root = root
         self.version = version
         self.var = var
@@ -656,8 +654,11 @@ class MdioStreamReader(DataSourceStreamReader):
         self.axis = self.dims.index(append_dim)
         fields = options.get("fields")
         self.fields = fields.split(",") if fields else None
-        self.dim = append_dim
         self.chunk = int(meta.chunks[self.axis])
+        # decoded bytes of one chunk-deep slab across every other dimension
+        self.slab_bytes = chunk_bytes([meta]) * math.prod(
+            g for d, g in enumerate(meta.grid_shape()) if d != self.axis)
+        self.parallelism = parallelism or cluster_parallelism()
         self.start_latest = options.get("starting_offset", "earliest") == "latest"
         cap = options.get("max_cells_per_trigger")
         self.max_cells = int(cap) if cap else None
@@ -697,15 +698,13 @@ class MdioStreamReader(DataSourceStreamReader):
             self._last_end = lo
         if hi <= lo:
             return [MdioTailPartition(lo, lo)]  # empty batch — read yields nothing
-        # chunk-aligned slices: every interior split point is a chunk
+        # spans of whole chunk slabs: every interior split point is a chunk
         # boundary, so no two tasks decode the same chunk
-        out: list[MdioTailPartition] = []
-        b = lo
-        while b < hi:
-            nxt = min(((b // self.chunk) + 1) * self.chunk, hi)
-            out.append(MdioTailPartition(b, nxt))
-            b = nxt
-        return out
+        c, first = self.chunk, lo // self.chunk
+        return [
+            MdioTailPartition(max(lo, (first + a) * c), min(hi, (first + b) * c))
+            for a, b in task_spans(-(-hi // c) - first, self.slab_bytes, self.parallelism)
+        ]
 
     # ------------------------------------------------------------- execute
 

@@ -19,7 +19,8 @@ fused and stream reads (sources/datasource.py), and
     of linear ids within the pruned grid (a ``spark.range`` here, id ranges
     in DSv2 partitions) and each task unravels its ids with ``chunk_coords``.
     At 100 TB (~12M chunks of 8 MiB) the manifest stays a lazy range.
-    ``task_count`` sizes the task list for every front end.
+    ``task_count`` sizes the task list, by decoded bytes per task, for every
+    front end and every other Spark job over chunks, shards or traces.
   * Executors run ``decode_frames``: chunks fetch and decode concurrently
     on ``zarr_store.map_chunks``, the bounded in-order pool the driver's
     ``read_array`` and ``write_array_numpy`` also use (sharded arrays by
@@ -245,18 +246,33 @@ def cluster_parallelism(spark: SparkSession | None = None) -> int:
     return max(1, spark.sparkContext.defaultParallelism) if spark else 1
 
 
-CHUNKS_PER_TASK = 4
+# decoded (or read) bytes one Spark task of a chunk, shard or trace job
+# works through: the role spark.sql.files.maxPartitionBytes plays for files
+TASK_BYTES = 32 << 20
 
 
-def task_count(n_chunks: int, per_task: int, par: int) -> int:
-    """Tasks for a scan of ``n_chunks``: ~``per_task`` chunks each, but
-    never fewer tasks than cores while chunks remain (small scans should
-    still use the whole cluster), and capped at 64× the cluster parallelism
-    — a petascale array (~12M chunks) must not become millions of scheduler
-    tasks; beyond the cap, tasks simply decode more chunks sequentially (the
-    cap scales with the cluster, so a 1000-executor cluster still fans out)."""
-    n = max(1, -(-n_chunks // max(1, per_task)))
-    return min(max(n, min(n_chunks, par)), 64 * par)
+def task_count(n_units: int, unit_bytes: int, par: int) -> int:
+    """Tasks for a job over ``n_units`` chunks, shards or traces of
+    ``unit_bytes`` each: ~``TASK_BYTES`` per task, but never fewer tasks
+    than cores while units remain (small jobs should still use the whole
+    cluster), and capped at 64× the cluster parallelism — a petascale array
+    (~12M chunks) must not become millions of scheduler tasks; beyond the
+    cap, tasks simply work through more units (the cap scales with the
+    cluster, so a 1000-executor cluster still fans out)."""
+    n = -(-n_units * unit_bytes // TASK_BYTES)
+    return min(max(n, min(n_units, par)), 64 * par)
+
+
+def task_spans(n_units: int, unit_bytes: int, par: int) -> list[tuple[int, int]]:
+    """``task_count``'s tasks as even half-open spans of ``range(n_units)``."""
+    k = task_count(n_units, unit_bytes, par)
+    return [(i * n_units // k, (i + 1) * n_units // k) for i in range(k)]
+
+
+def chunk_bytes(metas: Iterable[ZarrArrayMeta]) -> int:
+    """Decoded bytes of one chunk (a shard, if sharded) of every distinct
+    array in ``metas``: the unit a chunk job passes to ``task_count``."""
+    return sum(math.prod(m.chunks) * m.np_dtype.itemsize for m in {m.name: m for m in metas}.values())
 
 
 # ------------------------------------------------------------------- execute
@@ -425,8 +441,10 @@ def _scan(
             task_keep, value_col, value_filters,
         )
 
-    n_parts = task_count(n, CHUNKS_PER_TASK, cluster_parallelism(spark))
-    return spark.range(0, n, numPartitions=n_parts).mapInPandas(decode, schema=schema)
+    unit = chunk_bytes(m for m, _ in outputs)
+    return spark.range(
+        0, n, numPartitions=task_count(n, unit, cluster_parallelism(spark))
+    ).mapInPandas(decode, schema=schema)
 
 
 def scan_array(

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mdio_cpp_spark.session import local_frame
+from mdio_cpp_spark.sources.reader import cluster_parallelism, task_count, task_spans
 
 TEXT_LEN = 3200
 BIN_LEN = 400
@@ -380,7 +381,6 @@ def scan_traces(
     path: str,
     header_fields: list[HeaderField] | None = None,
     with_samples: bool = True,
-    traces_per_task: int = 2048,
 ) -> DataFrame:
     """Distributed SEG-Y trace scan → one row per trace:
     (trace, <header fields...>, samples array<double>).
@@ -388,17 +388,12 @@ def scan_traces(
     Partitions the trace index space; each task does ONE contiguous read
     of its slice and parses it with numpy strided views — per-task memory
     is its slice, the driver sees nothing but the plan."""
-    import math
-
     geo = file_geometry(path)
     n, tb, start, fmt = (geo["n_traces"], geo["trace_bytes"],
                          geo["data_start"], geo["format"])
     endian = geo["endianness"]
     fields = list(header_fields or [])
     _validate_fields(fields)
-
-    par = max(1, spark.sparkContext.defaultParallelism)
-    n_parts = min(max(1, math.ceil(n / max(1, traces_per_task))), 64 * par)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         kv, key = _file_kv(path)  # rebuilt per task from the string
@@ -417,7 +412,9 @@ def scan_traces(
     schema = "trace long" + "".join(f", {f.name} long" for f in fields)
     if with_samples:
         schema += ", samples array<double>"
-    return spark.range(n, numPartitions=n_parts).mapInPandas(parse, schema)
+    return spark.range(
+        n, numPartitions=task_count(n, tb, cluster_parallelism(spark))
+    ).mapInPandas(parse, schema)
 
 
 # ---------------------------------------------------------------- ingest
@@ -569,7 +566,6 @@ def export_segy(
     out_path: str,
     fmt: int = 1,
     text: str = "C 1 exported by mdio-spark",
-    rows_per_task: int = 64,
     endian: str = "big",
 ) -> dict:
     """Store → SEG-Y rev1 file, the reverse of ingest_to_store — the step
@@ -654,10 +650,8 @@ def export_segy(
     n0 = lead[0]
     rest = int(np.prod(lead[1:])) if len(lead) > 1 else 1
     root_path, version = st.root, st.version
-    import math
-
-    par = max(1, spark.sparkContext.defaultParallelism)
-    n_parts = min(max(1, math.ceil(n0 / max(1, rows_per_task))), 64 * par)
+    # decoded bytes of one first-dimension slab, the unit a task reads
+    slab_bytes = rest * ns * meta.np_dtype.itemsize
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         s = ZarrStore(root_path, version)
@@ -691,7 +685,7 @@ def export_segy(
             yield pd.DataFrame({"n": [vals.shape[0]]})
 
     total = (
-        spark.range(n0, numPartitions=n_parts)
+        spark.range(n0, numPartitions=task_count(n0, slab_bytes, cluster_parallelism(spark)))
         .mapInPandas(emit, "n long")
         .groupBy()
         .sum("n")
@@ -760,10 +754,13 @@ class SegyDataSource(DataSource):
 
     Options: ``path``; ``header_fields`` = "name:byte[:format],…" (byte is
     1-based in the 240-byte trace header, the standard's convention);
-    ``with_samples`` = true|false; ``traces_per_task``;
+    ``with_samples`` = true|false;
     ``starting_offset`` = earliest|latest (streaming);
     ``max_traces_per_trigger`` (streaming cap; the first batch of a run
     is uncapped — same contract as the mdio tail source)."""
+
+    # the registering session's defaultParallelism (see ``register_segy``)
+    parallelism: int | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -794,11 +791,11 @@ class SegyDataSource(DataSource):
 
     def reader(self, schema) -> "SegyReader":
         path, fields, with_samples = self._parsed()
-        return SegyReader(path, fields, with_samples, self.options)
+        return SegyReader(path, fields, with_samples, self.parallelism)
 
     def streamReader(self, schema) -> "SegyStreamReader":
         path, fields, with_samples = self._parsed()
-        return SegyStreamReader(path, fields, with_samples, self.options)
+        return SegyStreamReader(path, fields, with_samples, self.options, self.parallelism)
 
 
 @dataclass
@@ -812,7 +809,7 @@ class SegyTracePartition(InputPartition):
 class _SegyReadCore:
     """Shared geometry + per-partition execute for batch and stream."""
 
-    def __init__(self, path, fields, with_samples, options, lenient=False):
+    def __init__(self, path, fields, with_samples, parallelism=None, lenient=False):
         geo = file_geometry(path, lenient=lenient)
         self.path = path
         self.fields = fields
@@ -822,16 +819,11 @@ class _SegyReadCore:
         self.fmt = geo["format"]
         self.endian = geo["endianness"]
         self.n_traces = geo["n_traces"]
-        self.per_task = int(options.get("traces_per_task", 2048) or 2048)
+        self.parallelism = parallelism or cluster_parallelism()
 
     def _slices(self, lo: int, hi: int) -> list[SegyTracePartition]:
-        out = []
-        b = lo
-        while b < hi:
-            nxt = min(b + self.per_task, hi)
-            out.append(SegyTracePartition(b, nxt))
-            b = nxt
-        return out
+        return [SegyTracePartition(lo + a, lo + b)
+                for a, b in task_spans(hi - lo, self.tb, self.parallelism)]
 
     def read(self, partition: SegyTracePartition):
         import pyarrow as pa
@@ -851,9 +843,9 @@ class SegyReader(_SegyReadCore, DataSourceReader):
 
 
 class SegyStreamReader(_SegyReadCore, DataSourceStreamReader):
-    def __init__(self, path, fields, with_samples, options):
+    def __init__(self, path, fields, with_samples, options, parallelism=None):
         # lenient: a tailed file may end mid-record between triggers
-        super().__init__(path, fields, with_samples, options, lenient=True)
+        super().__init__(path, fields, with_samples, parallelism, lenient=True)
         self.start_latest = options.get("starting_offset", "earliest") == "latest"
         cap = options.get("max_traces_per_trigger")
         self.max_traces = int(cap) if cap else None
@@ -889,8 +881,11 @@ class SegyStreamReader(_SegyReadCore, DataSourceStreamReader):
 
 
 def register_segy(spark) -> None:
-    """Register the segy format on a session (idempotent)."""
-    spark.dataSource.register(SegyDataSource)
+    """Register the segy format on a session (idempotent), carrying its
+    defaultParallelism as ``datasource.register`` does."""
+    spark.dataSource.register(
+        type("SegyDataSource", (SegyDataSource,), {"parallelism": cluster_parallelism(spark)})
+    )
 
 
 def apply_coord_scalar(coord, scalar):

@@ -7,7 +7,7 @@ oriented reads) means exactly this copy. Layout migration is a first-class
 operation for any array store serving mixed workloads.
 
 Distributed shape, designed for the 100 TB case:
-scan (chunk-pruned, a few source chunks per task, no driver manifest)
+scan (chunk-pruned, tasks sized by ``reader.task_count``, no driver manifest)
 → ONE shuffle keyed on the DESTINATION chunk id (inside write_array)
 → independent single-writer chunk encodes.
 Nothing ever materializes on the driver; wall-clock scales with

@@ -16,18 +16,15 @@ dataset_factory.h:295-346); migrating means a full app-side rewrite.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
+from mdio_cpp_spark.sources.reader import chunk_bytes, cluster_parallelism, task_count
 from mdio_cpp_spark.sources.zarr_store import ZarrArrayMeta, ZarrStore
 from mdio_cpp_spark.sources.zonemap import without_zones
-
-# source chunks one transcode task copies
-_CHUNKS_PER_TASK = 8
 
 
 def _block_is_fill(block: np.ndarray, fill) -> bool:
@@ -149,10 +146,8 @@ def transcode_array(
                 copied += 1
             yield pd.DataFrame({"n": [len(pdf)], "copied": [copied]})
 
-    par = max(1, spark.sparkContext.defaultParallelism)
-    n_parts = min(max(1, math.ceil(n / _CHUNKS_PER_TASK)), 64 * par)
     row = (
-        spark.range(n, numPartitions=n_parts)
+        spark.range(n, numPartitions=task_count(n, chunk_bytes([meta]), cluster_parallelism(spark)))
         .mapInPandas(copy, "n long, copied long")
         .groupBy()
         .sum("n", "copied")
@@ -169,7 +164,6 @@ def reshard_array(
     shards: tuple[int, ...],
     inner_chunks: tuple[int, ...] | None = None,
     compressor: dict | None = None,
-    shards_per_task: int = 2,
 ) -> dict:
     """Migrate ``var`` into a ZEP-2 SHARDED v3 layout — the move a legacy
     store makes to become object-store friendly (millions of tiny chunk
@@ -244,10 +238,8 @@ def reshard_array(
                 written += 1
             yield pd.DataFrame({"n": [len(pdf)], "written": [written]})
 
-    par = max(1, spark.sparkContext.defaultParallelism)
-    n_parts = min(max(1, math.ceil(n / max(1, shards_per_task))), 64 * par)
     row = (
-        spark.range(n, numPartitions=n_parts)
+        spark.range(n, numPartitions=task_count(n, chunk_bytes([dmeta]), cluster_parallelism(spark)))
         .mapInPandas(copy, "n long, written long")
         .groupBy()
         .sum("n", "written")

@@ -206,8 +206,8 @@ def test_scan_traces_all_formats(tmp_path, spark, fmt):
     il = 100 + np.arange(n) // 8
     write_segy(path, vals, fmt=fmt, headers={189: il})
     df = scan_traces(spark, path,
-                     header_fields=[HeaderField("inline", 189)],
-                     traces_per_task=10)
+                     header_fields=[HeaderField("inline", 189)])
+    assert df.rdd.getNumPartitions() > 1
     rows = {r["trace"]: r for r in df.collect()}
     assert len(rows) == n
     for t in range(n):
@@ -281,9 +281,11 @@ def test_ingest_poststack3d_cube(tmp_path, spark):
         assert r["v"] == cube[r["inline"], r["crossline"], r["sample"]]
 
 
-# jobs one grid ingest runs: one header-only vocabulary aggregate, then the
-# chunk write's three (AQE runs each shuffle-map stage as its own job)
-_GRID_INGEST_JOBS = 4
+# jobs one grid ingest of a file read in more than one trace task runs (AQE
+# runs each shuffle-map stage as its own job): the header-only vocabulary
+# aggregate's map and result jobs, one job per broadcast rank table, and the
+# chunk write's chunk-key shuffle, chunk-write and total jobs
+_GRID_INGEST_JOBS = 7
 
 
 def test_grid_ingest_places_unsorted_gapped_headers(tmp_path, spark):
@@ -292,6 +294,7 @@ def test_grid_ingest_places_unsorted_gapped_headers(tmp_path, spark):
     where a numpy mirror of the rank placement puts it, the coordinate
     arrays hold the sorted vocabularies, and the ingest runs a fixed
     number of Spark jobs."""
+    from mdio_cpp_spark.sources.reader import task_count
     from mdio_cpp_spark.sources.zarr_store import ZarrStore
 
     rng = np.random.default_rng(11)
@@ -315,6 +318,8 @@ def test_grid_ingest_places_unsorted_gapped_headers(tmp_path, spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tb = file_geometry(path)["trace_bytes"]
+    assert task_count(len(pairs), tb, sc.defaultParallelism) > 1
     assert len(sc.statusTracker().getJobIdsForGroup(gid)) == _GRID_INGEST_JOBS
 
     il_vals, xl_vals = np.unique(il), np.unique(xl)
@@ -359,7 +364,21 @@ def test_ieee_to_ibm_engine_matches_independent_encoder():
     assert engine_enc(np.array([1e-100]))[0] == 0
 
 
-def test_export_roundtrip_cube(tmp_path, spark):
+def _planned_tasks(monkeypatch) -> list[int]:
+    """The task counts ``export_segy`` plans from here on, in call order."""
+    from mdio_cpp_spark.sources import segy
+
+    planned, rule = [], segy.task_count
+
+    def spy(*args):
+        planned.append(rule(*args))
+        return planned[-1]
+
+    monkeypatch.setattr(segy, "task_count", spy)
+    return planned
+
+
+def test_export_roundtrip_cube(tmp_path, spark, monkeypatch):
     """store → SEG-Y → scan_traces closes the loop: the exported file's
     headers carry the REAL inline/crossline numbers and the samples
     regenerate the cube exactly (IBM-exact integer fixture)."""
@@ -377,7 +396,9 @@ def test_export_roundtrip_cube(tmp_path, spark):
     ingest_to_store(spark, path, root, grid_by=("inline", "crossline"))
 
     out = str(tmp_path / "exported.sgy")
-    rep = export_segy(spark, root, "amplitude", out, fmt=1, rows_per_task=2)
+    planned = _planned_tasks(monkeypatch)
+    rep = export_segy(spark, root, "amplitude", out, fmt=1)
+    assert planned[0] > 1
     assert rep["n_traces"] == n and rep["samples_per_trace"] == ns
     geo = file_geometry(out)
     assert geo["format"] == 1 and geo["n_traces"] == n
@@ -394,7 +415,7 @@ def test_export_roundtrip_cube(tmp_path, spark):
 
 
 @pytest.mark.parametrize("fmt", [2, 3, 5, 8])
-def test_export_formats_2d(tmp_path, spark, fmt):
+def test_export_formats_2d(tmp_path, spark, fmt, monkeypatch):
     """(trace, sample) export in every non-IBM format, re-read by the
     independent scan path."""
     from mdio_cpp_spark.sources.segy import export_segy
@@ -410,7 +431,9 @@ def test_export_formats_2d(tmp_path, spark, fmt):
     st.consolidate()
     st.write_array_numpy("v", vals)
     out = str(tmp_path / f"v{fmt}.sgy")
-    export_segy(spark, root, "v", out, fmt=fmt, rows_per_task=3)
+    planned = _planned_tasks(monkeypatch)
+    export_segy(spark, root, "v", out, fmt=fmt)
+    assert planned[0] > 1
     got = {r["trace"]: np.asarray(r["samples"])
            for r in scan_traces(spark, out).collect()}
     for t in range(n):
@@ -473,14 +496,16 @@ def test_segy_stream_tail_exactly_once(tmp_path, spark):
     write_segy(path, base, fmt=1)
     ckpt = str(tmp_path / "ckpt")
 
+    parts = []
+
     def drain():
         got = {}
 
         def sink(bdf, _bid):
+            parts.append(bdf.rdd.getNumPartitions())
             got.update({r["trace"]: list(r["samples"]) for r in bdf.collect()})
 
-        q = (spark.readStream.format("segy").option("path", path)
-             .option("traces_per_task", "4").load()
+        q = (spark.readStream.format("segy").option("path", path).load()
              .writeStream.foreachBatch(sink)
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
@@ -490,6 +515,7 @@ def test_segy_stream_tail_exactly_once(tmp_path, spark):
     first = drain()
     assert sorted(first) == list(range(10))
     assert first[7] == list(base[7])
+    assert parts[0] > 1
 
     # append 5 whole records + one RAGGED partial record
     delta = np.arange(100, 115, dtype="f8").reshape(5, ns)
@@ -516,7 +542,7 @@ def test_segy_stream_cap_and_latest(tmp_path, spark):
     ns = 2
     write_segy(path, np.zeros((9, ns)), fmt=5)
     r = SegyStreamReader(path, [], True,
-                         {"max_traces_per_trigger": "4"})
+                         {"max_traces_per_trigger": "4"}, parallelism=1)
     assert r.initialOffset() == {"trace": 0}
     assert r.latestOffset() == {"trace": 4}  # capped
     parts = r.partitions({"trace": 0}, {"trace": 4})
@@ -707,8 +733,8 @@ def test_segy_over_http_distributed_ingest(tmp_path, spark):
         geo = file_geometry(url)
         assert geo["n_traces"] == n
         srv.clear_log()
-        df = scan_traces(spark, url, [HeaderField("inline", 189)],
-                         traces_per_task=16)
+        df = scan_traces(spark, url, [HeaderField("inline", 189)])
+        assert df.rdd.getNumPartitions() > 1
         rows = df.orderBy("trace").collect()
         assert [r["inline"] for r in rows] == [100 + t for t in range(n)]
         got = np.array([r["samples"] for r in rows])
@@ -744,14 +770,16 @@ def test_segy_stream_tail_over_http(tmp_path, spark):
     with LoopbackHttpServer(str(tmp_path)) as srv:
         url = f"{srv.url}/grow.sgy"
 
+        parts = []
+
         def drain():
             got = {}
 
             def sink(bdf, _bid):
+                parts.append(bdf.rdd.getNumPartitions())
                 got.update({r["trace"]: list(r["samples"]) for r in bdf.collect()})
 
-            q = (spark.readStream.format("segy").option("path", url)
-                 .option("traces_per_task", "4").load()
+            q = (spark.readStream.format("segy").option("path", url).load()
                  .writeStream.foreachBatch(sink)
                  .option("checkpointLocation", ckpt)
                  .trigger(availableNow=True).start())
@@ -761,6 +789,7 @@ def test_segy_stream_tail_over_http(tmp_path, spark):
         first = drain()
         assert sorted(first) == list(range(10))
         assert first[7] == list(base[7])
+        assert parts[0] > 1
         delta = np.arange(100, 115, dtype="f8").reshape(5, ns)
         _append_traces(local, delta, ns)
         second = drain()
