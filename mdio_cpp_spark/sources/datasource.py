@@ -31,7 +31,6 @@ Usage:
 from __future__ import annotations
 
 import itertools
-import math
 from dataclasses import dataclass
 from typing import Any, Iterator
 
@@ -361,8 +360,6 @@ class MdioReader(DataSourceReader):
         per_dim = plan_grid(self.meta, self._box(), members)
         ids = _zonemap.driver_survivors(per_dim, self._zone_keeper())
         n = grid_size(per_dim) if ids is None else len(ids)
-        if n == 0:
-            return []
         starts = tuple(r.start if isinstance(r, range) else 0 for r in per_dim)
         lens = tuple(len(r) for r in per_dim)
         dim_chunks = tuple(tuple(r) for r in per_dim) if members else None
@@ -656,8 +653,7 @@ class MdioStreamReader(DataSourceStreamReader):
         self.fields = fields.split(",") if fields else None
         self.chunk = int(meta.chunks[self.axis])
         # decoded bytes of one chunk-deep slab across every other dimension
-        self.slab_bytes = chunk_bytes([meta]) * math.prod(
-            g for d, g in enumerate(meta.grid_shape()) if d != self.axis)
+        self.slab_bytes = chunk_bytes([meta]) * int(np.prod(np.delete(meta.grid_shape(), self.axis)))
         self.parallelism = parallelism or cluster_parallelism()
         self.start_latest = options.get("starting_offset", "earliest") == "latest"
         cap = options.get("max_cells_per_trigger")
@@ -696,15 +692,14 @@ class MdioStreamReader(DataSourceStreamReader):
         # the engine's batch start is an authoritative baseline for the cap
         if self._last_end is None or lo > self._last_end:
             self._last_end = lo
-        if hi <= lo:
-            return [MdioTailPartition(lo, lo)]  # empty batch — read yields nothing
         # spans of whole chunk slabs: every interior split point is a chunk
-        # boundary, so no two tasks decode the same chunk
+        # boundary, so no two tasks decode the same chunk; an empty batch is
+        # one empty partition (read yields nothing)
         c, first = self.chunk, lo // self.chunk
         return [
             MdioTailPartition(max(lo, (first + a) * c), min(hi, (first + b) * c))
             for a, b in task_spans(-(-hi // c) - first, self.slab_bytes, self.parallelism)
-        ]
+        ] or [MdioTailPartition(lo, lo)]
 
     # ------------------------------------------------------------- execute
 

@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from mdio_cpp_spark.schema.types import SCALAR_TYPES
-from mdio_cpp_spark.session import local_frame
 from mdio_cpp_spark.sources import zonemap as _zonemap
 from mdio_cpp_spark.sources.zarr_store import (
     _PREFETCH_DEPTH,
@@ -250,17 +249,22 @@ def cluster_parallelism(spark: SparkSession | None = None) -> int:
 # works through: the role spark.sql.files.maxPartitionBytes plays for files
 TASK_BYTES = 32 << 20
 
+# bytes below which a job is not split further to fill the cores, the role
+# spark.sql.files.openCostInBytes plays: on local[4] a 1 MiB chunk or trace
+# scan ran faster as one task than as four, a 4 MiB one as fast or faster
+MIN_TASK_BYTES = 1 << 20
+
 
 def task_count(n_units: int, unit_bytes: int, par: int) -> int:
     """Tasks for a job over ``n_units`` chunks, shards or traces of
-    ``unit_bytes`` each: ~``TASK_BYTES`` per task, but never fewer tasks
-    than cores while units remain (small jobs should still use the whole
-    cluster), and capped at 64× the cluster parallelism — a petascale array
-    (~12M chunks) must not become millions of scheduler tasks; beyond the
-    cap, tasks simply work through more units (the cap scales with the
-    cluster, so a 1000-executor cluster still fans out)."""
-    n = -(-n_units * unit_bytes // TASK_BYTES)
-    return min(max(n, min(n_units, par)), 64 * par)
+    ``unit_bytes`` each, split as Spark splits files: ~``TASK_BYTES`` each,
+    spread over every core while each keeps ``MIN_TASK_BYTES``, never more
+    tasks than units, and at most 64 per core — a petascale array (~12M
+    chunks) must not become millions of scheduler tasks, and the cap scales
+    with the cluster, so a 1000-executor cluster still fans out."""
+    total = n_units * unit_bytes
+    split = min(TASK_BYTES, max(MIN_TASK_BYTES, -(-total // par)))
+    return min(max(1, -(-total // split)), n_units, 64 * par)
 
 
 def task_spans(n_units: int, unit_bytes: int, par: int) -> list[tuple[int, int]]:
@@ -426,8 +430,6 @@ def _scan(
     keep = _zonemap.zone_keeper(meta, store.root, value_filters)
     ids = _zonemap.driver_survivors(per_dim, keep)
     n = grid_size(per_dim) if ids is None else len(ids)
-    if n == 0:
-        return local_frame(spark, [], schema)
     root, version = store.root, store.version
     task_keep = keep if ids is None else None
 

@@ -360,6 +360,11 @@ def _parse_trace_matrix(
     return pd.DataFrame(cols)
 
 
+def _trace_unit(tb: int, ns: int, with_samples: bool) -> int:
+    """A trace job's ``task_count`` unit: the record plus its float64 samples."""
+    return tb + (8 * ns if with_samples else 0)
+
+
 def _read_trace_range(
     path: str, lo: int, hi: int, tb: int, start: int,
     fields: list[HeaderField], fmt: int, with_samples: bool,
@@ -412,8 +417,9 @@ def scan_traces(
     schema = "trace long" + "".join(f", {f.name} long" for f in fields)
     if with_samples:
         schema += ", samples array<double>"
+    unit = _trace_unit(tb, geo["samples_per_trace"], with_samples)
     return spark.range(
-        n, numPartitions=task_count(n, tb, cluster_parallelism(spark))
+        n, numPartitions=task_count(n, unit, cluster_parallelism(spark))
     ).mapInPandas(parse, schema)
 
 
@@ -650,8 +656,8 @@ def export_segy(
     n0 = lead[0]
     rest = int(np.prod(lead[1:])) if len(lead) > 1 else 1
     root_path, version = st.root, st.version
-    # decoded bytes of one first-dimension slab, the unit a task reads
-    slab_bytes = rest * ns * meta.np_dtype.itemsize
+    # one first-dimension slab: the traces a task encodes and writes
+    slab_bytes = rest * _trace_unit(tb, ns, True)
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         s = ZarrStore(root_path, version)
@@ -819,11 +825,14 @@ class _SegyReadCore:
         self.fmt = geo["format"]
         self.endian = geo["endianness"]
         self.n_traces = geo["n_traces"]
+        self.unit = _trace_unit(self.tb, geo["samples_per_trace"], with_samples)
         self.parallelism = parallelism or cluster_parallelism()
 
     def _slices(self, lo: int, hi: int) -> list[SegyTracePartition]:
+        # an empty range is one empty partition (read yields nothing)
         return [SegyTracePartition(lo + a, lo + b)
-                for a, b in task_spans(hi - lo, self.tb, self.parallelism)]
+                for a, b in task_spans(hi - lo, self.unit, self.parallelism)
+                ] or [SegyTracePartition(lo, lo)]
 
     def read(self, partition: SegyTracePartition):
         import pyarrow as pa
@@ -839,7 +848,7 @@ class _SegyReadCore:
 
 class SegyReader(_SegyReadCore, DataSourceReader):
     def partitions(self) -> list[SegyTracePartition]:
-        return self._slices(0, self.n_traces) or [SegyTracePartition(0, 0)]
+        return self._slices(0, self.n_traces)
 
 
 class SegyStreamReader(_SegyReadCore, DataSourceStreamReader):
@@ -872,8 +881,6 @@ class SegyStreamReader(_SegyReadCore, DataSourceStreamReader):
         lo, hi = int(start["trace"]), int(end["trace"])
         if self._last_end is None or lo > self._last_end:
             self._last_end = lo
-        if hi <= lo:
-            return [SegyTracePartition(lo, lo)]  # empty batch
         return self._slices(lo, hi)
 
     def commit(self, end: dict) -> None:

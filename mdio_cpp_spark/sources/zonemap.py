@@ -410,7 +410,7 @@ def build_sidecar_stats(spark: SparkSession, root: str, var: str) -> dict:
         .groupBy("sid")
         .applyInPandas(write_side, "sid long, n long")
     )
-    total = written.agg(F.sum("n").alias("n")).collect()[0]["n"]
+    total = written.agg(F.sum("n").alias("n")).collect()[0]["n"] or 0
     if total != n:
         raise RuntimeError(f"sidecar build incomplete: {total}/{n} chunk stats written")
 

@@ -537,34 +537,37 @@ def _batch_scan_partitions(df) -> list[int]:
 def test_dsv2_task_count_follows_cluster(spark, tmp_path):
     """format('mdio') plans its partitions in Spark's Python planning worker,
     which has no active session: the task count must still follow the
-    scan_array rule with THIS cluster's parallelism (16 chunks of 800 B on
+    scan_array rule with THIS cluster's parallelism (16 chunks of 256 KiB on
     local[4] → 4 tasks, not one per chunk and not one for the whole scan)."""
     from mdio_cpp_spark.sources.reader import task_count
 
     register(spark)
-    root = _vf_store(tmp_path, "tc", [float(x) for x in range(1600)], chunk=100)
+    chunk = 1 << 15
+    root = _vf_store(tmp_path, "tc", np.arange(16 * chunk, dtype="f8"), chunk=chunk)
     par = spark.sparkContext.defaultParallelism
     df = spark.read.format("mdio").option("path", root).option("variable", "v").load()
-    assert _batch_scan_partitions(df) == [task_count(16, 800, par)]
+    assert _batch_scan_partitions(df) == [task_count(16, 8 * chunk, par)]
     fused = spark.read.format("mdio").option("path", root).option("variables", "v").load()
-    assert _batch_scan_partitions(fused.filter("i < 800")) == [task_count(8, 800, par)]
-    assert task_count(8, 800, par) > 1
-    assert df.count() == 1600
+    assert _batch_scan_partitions(fused.filter(f"i < {8 * chunk}")) == [task_count(8, 8 * chunk, par)]
+    assert task_count(8, 8 * chunk, par) > 1
+    assert df.count() == 16 * chunk
 
 
 def test_segy_source_task_count_follows_cluster(spark, tmp_path):
     """format('segy') plans in the same session-less worker: a 40-trace
-    batch read follows the trace rule with THIS cluster's parallelism."""
+    batch read (128 KB traces) follows the trace rule with THIS cluster's
+    parallelism."""
     from mdio_cpp_spark.sources.reader import task_count
-    from mdio_cpp_spark.sources.segy import file_geometry, register_segy
+    from mdio_cpp_spark.sources.segy import _trace_unit, file_geometry, register_segy
     from tests.test_segy import write_segy
 
     register_segy(spark)
     path = str(tmp_path / "tc.sgy")
-    write_segy(path, np.arange(40 * 6, dtype="f8").reshape(40, 6), fmt=5)
+    ns = 32_000
+    write_segy(path, np.arange(40 * ns, dtype="f8").reshape(40, ns), fmt=5)
     par = spark.sparkContext.defaultParallelism
     df = spark.read.format("segy").option("path", path).load()
-    want = task_count(40, file_geometry(path)["trace_bytes"], par)
+    want = task_count(40, _trace_unit(file_geometry(path)["trace_bytes"], ns, True), par)
     assert _batch_scan_partitions(df) == [want] and want > 1
     assert df.count() == 40
 

@@ -14,6 +14,7 @@ import struct
 import numpy as np
 import pytest
 
+from mdio_cpp_spark.sources.reader import MIN_TASK_BYTES
 from mdio_cpp_spark.sources.segy import (
     HeaderField,
     SegyFormatError,
@@ -191,7 +192,9 @@ def test_geometry_rejects_malformed(tmp_path):
 @pytest.mark.parametrize("fmt", [1, 2, 3, 5, 8])
 def test_scan_traces_all_formats(tmp_path, spark, fmt):
     rng = np.random.RandomState(fmt)
-    n, ns = 37, 11
+    # two tasks' minimum of trace bytes, so the scan runs several tasks
+    n = 160
+    ns = 2 * MIN_TASK_BYTES // (n * {1: 4, 2: 4, 3: 2, 5: 4, 8: 1}[fmt])
     if fmt == 1:
         vals = rng.randint(-10000, 10000, (n, ns)).astype("f8")
     elif fmt == 2:
@@ -281,11 +284,11 @@ def test_ingest_poststack3d_cube(tmp_path, spark):
         assert r["v"] == cube[r["inline"], r["crossline"], r["sample"]]
 
 
-# jobs one grid ingest of a file read in more than one trace task runs (AQE
-# runs each shuffle-map stage as its own job): the header-only vocabulary
-# aggregate's map and result jobs, one job per broadcast rank table, and the
-# chunk write's chunk-key shuffle, chunk-write and total jobs
-_GRID_INGEST_JOBS = 7
+# jobs one grid ingest of a small file runs: the header-only vocabulary
+# aggregate, one job per broadcast rank table, and the chunk write (a file
+# read in one trace task needs neither the vocabulary exchange nor the
+# chunk-key shuffle)
+_GRID_INGEST_JOBS = 4
 
 
 def test_grid_ingest_places_unsorted_gapped_headers(tmp_path, spark):
@@ -318,8 +321,10 @@ def test_grid_ingest_places_unsorted_gapped_headers(tmp_path, spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tb = file_geometry(path)["trace_bytes"]
-    assert task_count(len(pairs), tb, sc.defaultParallelism) > 1
+    from mdio_cpp_spark.sources.segy import _trace_unit
+
+    unit = _trace_unit(file_geometry(path)["trace_bytes"], ns, True)
+    assert task_count(len(pairs), unit, sc.defaultParallelism) == 1
     assert len(sc.statusTracker().getJobIdsForGroup(gid)) == _GRID_INGEST_JOBS
 
     il_vals, xl_vals = np.unique(il), np.unique(xl)
@@ -385,8 +390,9 @@ def test_export_roundtrip_cube(tmp_path, spark, monkeypatch):
     from mdio_cpp_spark.sources.segy import export_segy
 
     path = str(tmp_path / "cube.sgy")
-    n_il, n_xl, ns = 5, 4, 6
+    n_il, n_xl = 5, 4
     n = n_il * n_xl
+    ns = 2 * MIN_TASK_BYTES // (n * 8)  # enough decoded bytes for several export tasks
     il = 10 + 2 * (np.arange(n) // n_xl)
     xl = 300 + (np.arange(n) % n_xl)
     cube = np.fromfunction(lambda i, x, s: i * 1000 + x * 10 + s,
@@ -421,7 +427,8 @@ def test_export_formats_2d(tmp_path, spark, fmt, monkeypatch):
     from mdio_cpp_spark.sources.segy import export_segy
     from mdio_cpp_spark.sources.zarr_store import ZarrStore
 
-    n, ns = 13, 5
+    ns = 1024
+    n = 2 * MIN_TASK_BYTES // (ns * 8) + 4  # enough decoded bytes for several export tasks
     lim = {2: 2**30, 3: 30000, 5: 1000, 8: 120}[fmt]
     vals = (np.random.RandomState(fmt).randint(-lim, lim, (n, ns))).astype("f8")
     root = str(tmp_path / "v.zarr")
@@ -438,6 +445,30 @@ def test_export_formats_2d(tmp_path, spark, fmt, monkeypatch):
            for r in scan_traces(spark, out).collect()}
     for t in range(n):
         assert np.array_equal(got[t], vals[t]), (fmt, t)
+
+
+def test_zero_trace_file_and_empty_array_plan_no_tasks(tmp_path, spark):
+    """A header-only SEG-Y file (no traces) scans to an empty frame on both
+    routes, and an array with no traces exports as a header-only file."""
+    from mdio_cpp_spark.sources.segy import export_segy, register_segy
+    from mdio_cpp_spark.sources.zarr_store import ZarrStore
+
+    path = str(tmp_path / "empty.sgy")
+    write_segy(path, np.zeros((0, 4)), fmt=5)
+    df = scan_traces(spark, path, header_fields=[HeaderField("inline", 189)])
+    assert df.rdd.getNumPartitions() == 0
+    assert df.collect() == []
+    register_segy(spark)
+    assert spark.read.format("segy").option("path", path).load().collect() == []
+
+    root = str(tmp_path / "empty.zarr")
+    st = ZarrStore.create(root, version=2)
+    st.create_array("v", shape=(0, 4), chunks=(4, 4), dtype="float64",
+                    dims=("trace", "sample"))
+    st.consolidate()
+    out = str(tmp_path / "empty_out.sgy")
+    assert export_segy(spark, root, "v", out, fmt=5)["n_traces"] == 0
+    assert file_geometry(out)["n_traces"] == 0
 
 
 # ------------------------------------------------- DSv2 source (format segy)
@@ -491,8 +522,8 @@ def test_segy_stream_tail_exactly_once(tmp_path, spark):
 
     register_segy(spark)
     path = str(tmp_path / "grow.sgy")
-    ns = 3
-    base = np.arange(30, dtype="f8").reshape(10, ns)
+    ns = 32_000  # 10 traces of 128 KB: more than one task's minimum
+    base = np.arange(10 * ns, dtype="f8").reshape(10, ns)
     write_segy(path, base, fmt=1)
     ckpt = str(tmp_path / "ckpt")
 
@@ -518,7 +549,7 @@ def test_segy_stream_tail_exactly_once(tmp_path, spark):
     assert parts[0] > 1
 
     # append 5 whole records + one RAGGED partial record
-    delta = np.arange(100, 115, dtype="f8").reshape(5, ns)
+    delta = np.arange(100, 100 + 5 * ns, dtype="f8").reshape(5, ns)
     _append_traces(path, delta, ns)
     with open(path, "ab") as f:
         f.write(b"\x00" * 100)  # in-flight partial trace
@@ -532,7 +563,7 @@ def test_segy_stream_tail_exactly_once(tmp_path, spark):
         f.write(b"\x00" * (rec_bytes - 100))
     third = drain()
     assert sorted(third) == [15]
-    assert third[15] == [0.0, 0.0, 0.0]
+    assert third[15] == [0.0] * ns
 
 
 def test_segy_stream_cap_and_latest(tmp_path, spark):
@@ -724,7 +755,8 @@ def test_segy_over_http_distributed_ingest(tmp_path, spark):
     from tests.spec_zarr_reader import read_zarr_array
 
     local = str(tmp_path / "h.sgy")
-    n, ns = 64, 8
+    n = 64
+    ns = 2 * MIN_TASK_BYTES // (n * 4)  # enough bytes for several scan tasks
     vals = (np.arange(n * ns, dtype="f8") % 977).reshape(n, ns)
     write_segy(local, vals, fmt=5, headers={189: 100 + np.arange(n)})
     with LoopbackHttpServer(str(tmp_path)) as srv:
@@ -762,8 +794,8 @@ def test_segy_stream_tail_over_http(tmp_path, spark):
 
     register_segy(spark)
     local = str(tmp_path / "grow.sgy")
-    ns = 3
-    base = np.arange(30, dtype="f8").reshape(10, ns)
+    ns = 32_000  # 10 traces of 128 KB: more than one task's minimum
+    base = np.arange(10 * ns, dtype="f8").reshape(10, ns)
     write_segy(local, base, fmt=1)  # _append_traces writes IBM records
     ckpt = str(tmp_path / "ckpt")
 
@@ -790,7 +822,7 @@ def test_segy_stream_tail_over_http(tmp_path, spark):
         assert sorted(first) == list(range(10))
         assert first[7] == list(base[7])
         assert parts[0] > 1
-        delta = np.arange(100, 115, dtype="f8").reshape(5, ns)
+        delta = np.arange(100, 100 + 5 * ns, dtype="f8").reshape(5, ns)
         _append_traces(local, delta, ns)
         second = drain()
         assert sorted(second) == list(range(10, 15))  # delta only, no replay

@@ -199,21 +199,44 @@ def test_tail_latest_and_rate_cap(tmp_path, spark):
     # subsequent batch and never regress)
     from mdio_cpp_spark.sources.datasource import MdioStreamReader
 
-    r = MdioStreamReader(path, 2, "v", {"max_cells_per_trigger": "700"})
+    r = MdioStreamReader(path, 2, "v", {"max_cells_per_trigger": "700"}, parallelism=4)
     assert r.latestOffset() == {"cell": N0}, "no baseline yet -> uncapped"
     assert r.initialOffset() == {"cell": 0}
     assert r.latestOffset() == {"cell": 700}, "baseline 0 -> capped at 700"
     parts = r.partitions({"cell": 0}, {"cell": 700})
-    assert [(p.lo, p.hi) for p in parts] == [(0, 512), (512, 700)]
+    # two 4 KiB chunk slabs: below the minimum task size, one task
+    assert [(p.lo, p.hi) for p in parts] == [(0, 700)]
     r.commit({"cell": 700})
     assert r.latestOffset() == {"cell": N0}, "remaining 500 < cap"
 
     # restored checkpoint: partitions() start is an authoritative baseline
-    r2 = MdioStreamReader(path, 2, "v", {"max_cells_per_trigger": "300"})
+    r2 = MdioStreamReader(path, 2, "v", {"max_cells_per_trigger": "300"}, parallelism=4)
     assert r2.latestOffset() == {"cell": N0}, "restart probe -> uncapped"
     r2.partitions({"cell": 800}, {"cell": N0})
     r2.commit({"cell": N0})
     assert r2.latestOffset() == {"cell": N0}, "cap never regresses below baseline"
+
+
+def test_stream_batch_spans_are_chunk_aligned(tmp_path):
+    """A micro-batch big enough for several tasks splits only at chunk
+    boundaries (no two tasks decode one chunk), with the rule's task count."""
+    import numpy as np
+
+    from mdio_cpp_spark.sources.datasource import MdioStreamReader
+    from mdio_cpp_spark.sources.reader import task_count
+
+    chunk = 1 << 17  # 1 MiB of float64
+    path = os.path.join(str(tmp_path), "wide.zarr")
+    st = ZarrStore.create(path, version=2)
+    st.create_array("v", shape=(6 * chunk,), chunks=(chunk,), dtype="float64", dims=("i",))
+    st.consolidate()
+    st.write_array_numpy("v", np.arange(6 * chunk, dtype="f8"))
+    r = MdioStreamReader(path, 2, "v", {}, parallelism=4)
+    lo, hi = 100, 5 * chunk + 7  # touches chunk slabs 0..5
+    spans = [(p.lo, p.hi) for p in r.partitions({"cell": lo}, {"cell": hi})]
+    assert len(spans) == task_count(6, 8 * chunk, 4) == 4
+    assert spans[0][0] == lo and spans[-1][1] == hi
+    assert all(p[1] == q[0] and p[1] % chunk == 0 for p, q in zip(spans, spans[1:]))
 
 
 def test_tail_composes_with_streaming_agg_batch_parity(tmp_path, spark):
